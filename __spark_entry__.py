@@ -1191,7 +1191,7 @@ def q06_blocking_quality(spark: SparkSession, sf_dir: str) -> DataFrame:
     operators/pairs.py); the gold set is an eval-scale exact quadratic
     join (gold labels are an input at production scale, reference
     lib/evaluate.py:20-34)."""
-    from semantic_entity_matching_spark.operators.dedup import _distinct_tokens
+    from semantic_entity_matching_spark.operators.tokensets import _distinct_tokens
     from semantic_entity_matching_spark.operators.evaluate import (
         blocking_quality,
     )

@@ -15,8 +15,7 @@ test_services_search_service_integration.py:188-202):
 
 identical text => identical vector (cosine 1.0); distinct text =>
 quasi-random vector.  A real sentence-embedding model is a drop-in
-replacement behind the same interface (it is not installed in this
-container, so ``SentenceEmbeddingProvider`` raises NotImplementedError).
+replacement behind the same interface.
 """
 
 from __future__ import annotations
@@ -398,30 +397,10 @@ class RandomProjectionEmbeddingProvider(EmbeddingProvider):
         return out
 
 
-class SentenceEmbeddingProvider(EmbeddingProvider):
-    """Placeholder for a real sentence-transformer model.
-
-    The model libraries are not available in this container; on a real
-    cluster this would load the model once per executor python worker and
-    run Arrow-batched inference.  The Spark-side plumbing (schema, UDF
-    signature, batching) is identical to HashEmbeddingProvider.
-    """
-
-    name = "sentence-transformer"
-
-    def embed_batch(self, texts: pd.Series) -> np.ndarray:
-        raise NotImplementedError(
-            "sentence-transformer weights are not available in this "
-            "environment; use HashEmbeddingProvider (deterministic) or plug "
-            "a model-backed provider in on the cluster"
-        )
-
-
 PROVIDERS: dict[str, type[EmbeddingProvider]] = {
     HashEmbeddingProvider.name: HashEmbeddingProvider,
     TokenHashEmbeddingProvider.name: TokenHashEmbeddingProvider,
     RandomProjectionEmbeddingProvider.name: RandomProjectionEmbeddingProvider,
-    SentenceEmbeddingProvider.name: SentenceEmbeddingProvider,
 }
 
 

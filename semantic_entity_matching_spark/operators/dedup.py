@@ -1,13 +1,17 @@
 """Deduplication operators for training-data pipelines.
 
-Five dedup families, each returning DataFrames with stable, aliased columns
+Every operator returns DataFrames with stable, aliased columns
 (driver-contract friendly):
 
 * exact          — md5/xxhash64 group on normalized text (one shuffle)
-* minhash-LSH    — shingle → MinHash → band keys → bucket join (near-dup)
+* token-set      — MinHash-LSH, cross-corpus and containment near-dup plus
+                   the n-gram Jaccard verifier, all on the token-set kernel
+                   (operators/tokensets.py: token sets, rarest-first order,
+                   overlap verify)
 * simhash        — 64-bit simhash + hamming-ball grouping via band keys
-* ngram-jaccard  — token n-gram Jaccard verification on candidate pairs
-* embedding      — cosine near-dup over an embedding column
+* embedding      — cosine near-dup and SemDeDup over an embedding column
+* lines / spans  — C4-style line dedup and exact-substring window stats
+* survivors      — one keep-best representative per duplicate cluster
 
 Scale shape: every family is (cheap per-row keying in one pass) →
 (equi-join on key) → (verify/aggregate).  No cross joins, no driver loops.
@@ -22,7 +26,6 @@ import pandas as pd
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from semantic_entity_matching_spark.functions.similarity import cosine_udf
 from semantic_entity_matching_spark.functions.textops import (
     fingerprint_hex,
     whitespace_tokens,
@@ -34,6 +37,13 @@ from semantic_entity_matching_spark.operators.blocking import (
 from semantic_entity_matching_spark.operators.pairs import (
     PairGenConfig,
     generate_candidate_pairs,
+)
+from semantic_entity_matching_spark.operators.tokensets import (
+    _distinct_tokens,
+    _size_ratio_keep,
+    jaccard,
+    overlap_verify,
+    token_sets,
 )
 
 
@@ -86,31 +96,6 @@ def drop_exact_duplicates(
 # MinHash-LSH near-dup
 # ---------------------------------------------------------------------------
 
-def _distinct_tokens(text_col: str) -> Column:
-    """THE tokenization every jaccard path shares (verify arrays, ratio
-    counts, the q21 oracle): distinct lowercased ``\\s+`` tokens, empties
-    removed.  Null text propagates to a NULL array (and NULL ``size`` —
-    Spark 4 ANSI semantics, there is no -1 sentinel)."""
-    return F.array_distinct(
-        F.array_remove(F.split(F.lower(F.col(text_col)), r"\s+"), "")
-    )
-
-
-def _size_ratio_keep(ca: Column, cb: Column, threshold: float) -> Column:
-    """Keep-condition of the EXACT size-ratio bound: jaccard >= t requires
-    min(|A|,|B|)/max(|A|,|B|) >= t (|A∩B| <= min, |A∪B| >= max), so a pair
-    failing it can be pruned with zero recall loss.  Both-empty pairs stay
-    (their jaccard is 1.0); NULL counts (null text, jaccard 0) propagate
-    to NULL and the enclosing ``where`` drops the pair — correct for any
-    threshold > 0."""
-    t = F.lit(float(threshold))
-    return ((ca == 0) & (cb == 0)) | (
-        (ca > 0)
-        & (cb > 0)
-        & (F.least(ca, cb).cast("double") / F.greatest(ca, cb).cast("double") >= t)
-    )
-
-
 def minhash_near_duplicates(
     df: DataFrame,
     id_col: str = "doc_id",
@@ -127,7 +112,7 @@ def minhash_near_duplicates(
     the block self-join as annotations and provably-below-threshold pairs
     are pruned BEFORE the pair-dedup shuffle ever carries them (at sf0.1:
     5.7M -> 2.9M rows) and before any token array is joined — zero recall
-    loss."""
+    loss.  Eager at construction: see :func:`tokensets.token_sets`."""
     lsh = lsh or LSHConfig()
     # single-split corpora would run the signature pass (and the shared
     # tokenization below) in one task; no-op when the scan is parallel
@@ -145,41 +130,28 @@ def minhash_near_duplicates(
     # the cached RDD (freed by the ContextCleaner when the plan dies).
     # run_pipeline gets the same effect from its stage checkpoints.
     blocks = blocks.localCheckpoint(eager=True)
-    # ONE tokenization pass serves everything downstream: the per-doc
-    # distinct-token counts ride the pair self-join as annotations (both
-    # sides) and the hashed token arrays feed the verify joins (both
-    # sides) — without the shared checkpoint the corpus was tokenized
-    # FOUR times per query.  ~16 bytes/token cached; freed with the plan.
-    toks = (
-        df.select(
-            F.col(id_col),
-            F.transform(
-                _distinct_tokens(text_col), lambda x: F.xxhash64(x)
-            ).alias("_tok"),
-        )
-        .withColumn("_ntok", F.size("_tok"))
-        .localCheckpoint(eager=True)
-    )
+    # ONE token-set table serves the size annotations on both pair sides
+    # and both verify sides
+    sets = token_sets(df, id_col, _distinct_tokens(text_col))
+    prune = {}
     if jaccard_threshold > 0.0:
-        counts = toks.select(F.col(id_col), F.col("_ntok"))
-        pairs = generate_candidate_pairs(
-            blocks, id_col=id_col, config=pairgen,
-            annotations=counts,
+        # no pruning is sound at threshold 0
+        prune = dict(
+            annotations=sets.select(
+                F.col("_id").alias(id_col), F.col("_n").alias("_ntok")
+            ),
             pair_filter=_size_ratio_keep(
                 F.col("_ntok_a"), F.col("_ntok_b"), jaccard_threshold
             ),
-            keep_block_key=False,
         )
-    else:
-        pairs = generate_candidate_pairs(
-            blocks, id_col=id_col, config=pairgen, keep_block_key=False
-        )
-    # pairs are already ratio-pruned above (or the threshold is 0 and no
-    # pruning is sound), so the verifier runs without its own prefilter
-    verified = ngram_jaccard_verify(
-        pairs, df, id_col=id_col, text_col=text_col, n=1, tokens=toks
+    pairs = generate_candidate_pairs(
+        blocks, id_col=id_col, config=pairgen, keep_block_key=False, **prune
     )
-    return verified.where(F.col("jaccard") >= jaccard_threshold)
+    return (
+        overlap_verify(pairs, sets)
+        .select("id_a", "id_b", jaccard().alias("jaccard"))
+        .where(F.col("jaccard") >= jaccard_threshold)
+    )
 
 
 # ---------------------------------------------------------------------------
@@ -218,11 +190,10 @@ def cross_corpus_near_duplicates(
     size-ratio bound prunes candidates AT the block join, before the
     (corpus_id, ref_id) dedup exchange.
 
-    Verification attaches TRUE unigram Jaccard (hashed-token
-    ``array_intersect``, all JVM-side) exactly as
-    :func:`ngram_jaccard_verify`; banding is candidate generation only,
-    so at recall-1 thresholds the output is the exact cross-corpus
-    near-dup set.
+    Verification is the kernel's true unigram Jaccard
+    (:func:`tokensets.overlap_verify`); banding is candidate generation
+    only, so at recall-1 thresholds the output is the exact cross-corpus
+    near-dup set.  Eager at construction: see :func:`tokensets.token_sets`.
     """
     lsh = lsh or LSHConfig()
     cfg = pairgen or PairGenConfig()
@@ -236,9 +207,8 @@ def cross_corpus_near_duplicates(
     reference = ensure_min_parallelism(reference)
 
     # each side's key table feeds its Zipf-head aggregate AND the block
-    # join; each side's token table feeds the ratio counts AND the verify
-    # join — cut lineage once per side so the Python signature pass and
-    # the tokenization run once, not once per consumer
+    # join — cut lineage once per side so the Python signature pass runs
+    # once, not once per consumer
     cb = (
         minhash_block_keys(
             corpus, id_col=corpus_id, text_col=text_col, config=lsh
@@ -296,22 +266,12 @@ def cross_corpus_near_duplicates(
             .drop("_cn", "_rn")
         )
 
-    # ONE tokenization pass per side: the hashed arrays serve the verify
-    # joins below and their sizes serve the ratio-bound annotations here
-    # (id-keyed hash joins, corpus-side tables never force-broadcast)
-    def toks(df: DataFrame, idc: str, tc: str, alias: str) -> DataFrame:
-        return df.select(
-            F.col(idc).alias(alias),
-            F.transform(_distinct_tokens(tc), lambda x: F.xxhash64(x)).alias(
-                f"_t{alias}"
-            ),
-            F.size(_distinct_tokens(tc)).alias(f"_n{alias}"),
-        )
-
-    ta = toks(corpus, corpus_id, text_col, "_ida").localCheckpoint(eager=True)
-    tb = toks(reference, ref_id, rtext, "_idb").localCheckpoint(eager=True)
-    ca = ta.select(F.col("_ida"), F.col("_n_ida").alias("_ntok_a"))
-    rcounts = tb.select(F.col("_idb"), F.col("_n_idb").alias("_ntok_b"))
+    # one token-set table per side: its sizes serve the ratio-bound
+    # annotations here and its sets the verify joins below
+    ta = token_sets(corpus, corpus_id, _distinct_tokens(text_col))
+    tb = token_sets(reference, ref_id, _distinct_tokens(rtext))
+    ca = ta.select(F.col("_id").alias("_ida"), F.col("_n").alias("_ntok_a"))
+    rcounts = tb.select(F.col("_id").alias("_idb"), F.col("_n").alias("_ntok_b"))
     left = (
         annotate(cb)
         .join(ca, "_ida")
@@ -343,29 +303,17 @@ def cross_corpus_near_duplicates(
                 F.col("_ntok_a"), F.col("_ntok_b"), jaccard_threshold
             )
         )
-    cand = cand.select("_ida", "_idb").dropDuplicates(["_ida", "_idb"])
-
-    # two-frame unigram verify over the SAME checkpointed token tables:
-    # same hashed-token JVM set algebra and null/empty semantics as
-    # ngram_jaccard_verify(n=1)
-    inter = F.size(F.array_intersect(F.col("_t_ida"), F.col("_t_idb")))
-    union = F.col("_n_ida") + F.col("_n_idb") - inter
-    jac = (
-        F.when(F.col("_t_ida").isNull() | F.col("_t_idb").isNull(), F.lit(0.0))
-        .when((F.col("_n_ida") == 0) & (F.col("_n_idb") == 0), F.lit(1.0))
-        .when((F.col("_n_ida") == 0) | (F.col("_n_idb") == 0), F.lit(0.0))
-        .otherwise(inter.cast("double") / union.cast("double"))
-    )
+    cand = cand.select(
+        F.col("_ida").alias("id_a"), F.col("_idb").alias("id_b")
+    ).dropDuplicates(["id_a", "id_b"])
     return (
-        cand.join(ta, "_ida")
-        .join(tb, "_idb")
-        .withColumn("jaccard", jac)
-        .where(F.col("jaccard") >= jaccard_threshold)
+        overlap_verify(cand, ta, tb)
         .select(
-            F.col("_ida").alias(corpus_id),
-            F.col("_idb").alias(ref_id),
-            "jaccard",
+            F.col("id_a").alias(corpus_id),
+            F.col("id_b").alias(ref_id),
+            jaccard().alias("jaccard"),
         )
+        .where(F.col("jaccard") >= jaccard_threshold)
     )
 
 
@@ -383,7 +331,8 @@ def cross_corpus_dedup(
     """Corpus rows that are NOT near-duplicates of any reference row
     (schema = the corpus schema, untouched).  Matches -> one distinct id
     projection -> LEFT ANTI join; null/blank corpus rows emit no band
-    keys, match nothing, and survive."""
+    keys, match nothing, and survive.  Eager at construction: see
+    :func:`tokensets.token_sets`."""
     matches = cross_corpus_near_duplicates(
         corpus,
         reference,
@@ -413,16 +362,11 @@ def _ascii_tokens(text: str) -> list[str]:
     return [t for t in re.split(r"\s+", str(text), flags=re.ASCII) if t]
 
 
-def _token_ngrams(text: str, n: int) -> set[str]:
-    toks = _ascii_tokens(str(text).lower())
-    if n <= 1:
-        return set(toks)
-    return {" ".join(toks[i : i + n]) for i in range(len(toks) - n + 1)}
-
-
-def jaccard_py(a: str, b: str, n: int = 1) -> float:
-    """Pure-Python oracle (shared with tests)."""
-    sa, sb = _token_ngrams(a, n), _token_ngrams(b, n)
+def jaccard_py(a: str, b: str) -> float:
+    """Pure-Python oracle of :func:`tokensets.jaccard` (shared with tests)."""
+    if a is None or b is None:
+        return 0.0
+    sa, sb = (set(_ascii_tokens(x.lower())) for x in (a, b))
     if not sa and not sb:
         return 1.0
     if not sa or not sb:
@@ -435,115 +379,38 @@ def ngram_jaccard_verify(
     records: DataFrame,
     id_col: str = "doc_id",
     text_col: str = "text",
-    n: int = 1,
     min_jaccard: float | None = None,
-    tokens: DataFrame | None = None,
 ) -> DataFrame:
-    """Attach true token-ngram Jaccard to candidate (id_a, id_b) pairs.
+    """Attach true token-set Jaccard to candidate (id_a, id_b) pairs: the
+    kernel's :func:`tokensets.overlap_verify` over the records' token
+    sets, tokenized ONCE PER DOCUMENT (not per pair).  Semantics identical
+    to :func:`jaccard_py` (both-empty => 1.0, one-empty/null => 0.0).
 
-    ``tokens`` (unigram path only): a precomputed ``(id, _tok, _ntok)``
-    table — hashed distinct-token arrays plus their sizes, exactly as
-    built below — so a caller that already materialized it (the minhash
-    operator tokenizes once for counts AND verify) avoids re-tokenizing
-    the corpus per join side.
-
-    Unigrams (the default): tokenization happens ONCE PER DOCUMENT (not per
-    pair), tokens are hashed to ``array<bigint>`` (``xxhash64``) so the
-    per-pair payload is fixed-width integers instead of strings, and the
-    per-pair set algebra is JVM-side ``array_intersect`` inside whole-stage
-    codegen — no Python and no ``array_union`` in the per-pair hot path
-    (union size is ``|A| + |B| - |A∩B|`` from per-doc distinct counts
-    computed once).  n>1 keeps the Arrow-batched pandas UDF (ngram sets are
-    heavier to precompute as columns).  Semantics identical to
-    :func:`jaccard_py` (both-empty => 1.0, one-empty/null => 0.0) — token
-    identity via 64-bit hash, a ~1e-11 collision probability at web-corpus
-    vocabulary sizes.
-
-    ``min_jaccard`` enables the EXACT size-ratio prefilter: jaccard >= t
-    requires min(|A|,|B|)/max(|A|,|B|) >= t (|A∩B| <= min, |A∪B| >= max),
-    so pairs failing the bound are pruned using only the cheap per-doc
-    counts — their arrays are never joined, and no pair with
-    jaccard >= min_jaccard is ever lost.  Pairs at or above the bound get
-    their true jaccard as usual.  The pruned pairs are simply absent from
-    the output (they could only ever carry jaccard < min_jaccard)."""
-    if n <= 1:
-        toks = tokens
-        if toks is None:
-            toks = records.select(
-                F.col(id_col),
-                F.transform(
-                    _distinct_tokens(text_col), lambda x: F.xxhash64(x)
-                ).alias("_tok"),
-            ).withColumn("_ntok", F.size("_tok"))  # null text -> NULL (ANSI)
-
-        if min_jaccard is not None and min_jaccard > 0.0:
-            # counts-only prefilter join: (id, _ntok) is a handful of bytes
-            # per doc — prune before any array ships (NULL counts = null
-            # text = jaccard 0, dropped by the keep-condition's NULL)
-            counts = toks.select(F.col(id_col), F.col("_ntok"))
-            pairs = (
-                pairs.join(
-                    counts.select(
-                        F.col(id_col).alias("id_a"), F.col("_ntok").alias("_ca")
-                    ),
-                    "id_a",
-                )
-                .join(
-                    counts.select(
-                        F.col(id_col).alias("id_b"), F.col("_ntok").alias("_cb")
-                    ),
-                    "id_b",
-                )
-                .where(_size_ratio_keep(F.col("_ca"), F.col("_cb"), min_jaccard))
-                .drop("_ca", "_cb")
+    ``min_jaccard`` enables the EXACT size-ratio prefilter
+    (:func:`_size_ratio_keep`): pairs failing the bound are pruned using
+    only the cheap per-doc counts — their arrays are never joined, and no
+    pair with jaccard >= min_jaccard is ever lost.  The pruned pairs are
+    simply absent from the output (they could only ever carry jaccard <
+    min_jaccard).  Eager at construction: see :func:`tokensets.token_sets`."""
+    sets = token_sets(records, id_col, _distinct_tokens(text_col))
+    if min_jaccard is not None and min_jaccard > 0.0:
+        # counts-only prefilter join: (id, _n) is a handful of bytes per
+        # doc — prune before any array ships
+        def counts(s: str) -> DataFrame:
+            return sets.select(
+                F.col("_id").alias(f"id_{s}"), F.col("_n").alias(f"_c{s}")
             )
 
-        a = toks.select(
-            F.col(id_col).alias("id_a"),
-            F.col("_tok").alias("_ta"),
-            F.col("_ntok").alias("_na"),
+        pairs = (
+            pairs.join(counts("a"), "id_a")
+            .join(counts("b"), "id_b")
+            .where(_size_ratio_keep(F.col("_ca"), F.col("_cb"), min_jaccard))
+            .drop("_ca", "_cb")
         )
-        b = toks.select(
-            F.col(id_col).alias("id_b"),
-            F.col("_tok").alias("_tb"),
-            F.col("_ntok").alias("_nb"),
-        )
-        inter = F.size(F.array_intersect(F.col("_ta"), F.col("_tb")))
-        union = F.col("_na") + F.col("_nb") - inter
-        jac = (
-            F.when(F.col("_ta").isNull() | F.col("_tb").isNull(), F.lit(0.0))
-            .when((F.col("_na") == 0) & (F.col("_nb") == 0), F.lit(1.0))
-            .when((F.col("_na") == 0) | (F.col("_nb") == 0), F.lit(0.0))
-            .otherwise(inter.cast("double") / union.cast("double"))
-        )
-        return (
-            pairs.join(a, "id_a")
-            .join(b, "id_b")
-            .withColumn("jaccard", jac)
-            .drop("_ta", "_tb", "_na", "_nb")
-        )
-
-    from pyspark.sql.functions import pandas_udf
-    from pyspark.sql.types import DoubleType
-
-    @pandas_udf(DoubleType())
-    def _jac(a: pd.Series, b: pd.Series) -> pd.Series:
-        out = np.empty(len(a), dtype=np.float64)
-        for i, (x, y) in enumerate(zip(a, b)):
-            if x is None or y is None:
-                out[i] = 0.0
-            else:
-                out[i] = jaccard_py(x, y, n)
-        return pd.Series(out)
-
-    feat = records.select(F.col(id_col), F.col(text_col))
-    a = feat.select(F.col(id_col).alias("id_a"), F.col(text_col).alias("_ta"))
-    b = feat.select(F.col(id_col).alias("id_b"), F.col(text_col).alias("_tb"))
     return (
-        pairs.join(a, "id_a")
-        .join(b, "id_b")
-        .withColumn("jaccard", _jac(F.col("_ta"), F.col("_tb")))
-        .drop("_ta", "_tb")
+        overlap_verify(pairs, sets)
+        .withColumn("jaccard", jaccard())
+        .drop("_inter", "_na", "_nb")
     )
 
 
@@ -1253,19 +1120,17 @@ def containment_near_duplicates(
     tokens are missing from B, so by pigeonhole at least one of A's first
     ``floor((1-t)·|A|)+1`` tokens (its PREFIX) appears in B.  Joining
     (prefix token -> doc) against the full inverted index therefore finds
-    every qualifying pair; each candidate is then verified with the true
-    hashed-token ``array_intersect`` (same JVM set algebra and null/empty
-    semantics as :func:`ngram_jaccard_verify`).  Rarest-first ordering is
+    every qualifying pair; each candidate is then verified exactly by the
+    kernel's :func:`tokensets.overlap_verify`.  Rarest-first ordering is
     what makes the probe side cheap: prefix tokens are the doc's rarest,
     so per-token candidate lists stay short.
 
     Scale shape (no cross join, no Window):
 
-    * token DF = one (token) hash aggregate over exploded distinct tokens
-      — the n-gram-census shape (functions/textops.py corpus n-grams);
-    * per-doc rarest-first ordering = ``array_sort`` over collected
-      (df, token) structs inside a doc-keyed aggregate — group size is
-      bounded by doc length, never corpus-shaped;
+    * token DF and the per-doc rarest-first order are the kernel's
+      (:func:`tokensets.token_sets` with ``rarest_first``): one token hash
+      aggregate and one doc-keyed ``array_sort`` aggregate whose group
+      size is bounded by doc length, never corpus-shaped;
     * the probe×index token join carries the same Zipf-head discipline as
       ``pairs.block_pair_stream``: each row KNOWS its token's df, so hot
       tokens (df > hot_token_threshold) split the big INDEX side across
@@ -1280,7 +1145,8 @@ def containment_near_duplicates(
       full vocabulary (the oracle-comparable form).
 
     Token-empty docs (blank text, or fully stopword under the cap) emit no
-    keys and never pair — the q21 oracle convention.
+    keys and never pair — the q21 oracle convention.  Eager at
+    construction: see :func:`tokensets.token_sets`.
     """
     t = float(containment_threshold)
     if not 0.0 < t <= 1.0:
@@ -1288,65 +1154,42 @@ def containment_near_duplicates(
             f"containment_threshold must be in (0, 1], got {containment_threshold}"
         )
 
-    toks = df.select(
-        F.col(id_col),
-        F.transform(_distinct_tokens(text_col), lambda x: F.xxhash64(x)).alias(
-            "_tok"
-        ),
-    )
-    exploded = toks.select(F.col(id_col), F.explode("_tok").alias("_t"))
-    dfreq = exploded.groupBy("_t").agg(F.count(F.lit(1)).alias("_df"))
-    if max_token_df is not None:
-        dfreq = dfreq.where(F.col("_df") <= int(max_token_df))
-
-    # rarest-first (df asc, token-hash asc — deterministic) per-doc order;
-    # the inner join doubles as the vocabulary filter when max_token_df is
-    # set.  Group size = doc's distinct-token count: bounded, splittable.
-    ranked = (
-        exploded.join(dfreq, "_t")
-        .groupBy(id_col)
-        .agg(
-            F.array_sort(
-                F.collect_list(
-                    F.struct(F.col("_df").alias("df"), F.col("_t").alias("tok"))
-                )
-            ).alias("_st")
-        )
-        .withColumn("_ntok", F.size("_st"))
-        # three consumers (probe, index, verify sets) would each re-run
-        # the tokenize->explode->df->join->agg chain: cut lineage once
-        .localCheckpoint(eager=True)
+    # three consumers (probe, index, verify) read the one rarest-first
+    # token-set table
+    sets = token_sets(
+        df, id_col, _distinct_tokens(text_col),
+        rarest_first=True, max_token_df=max_token_df,
     )
     # floor((1-t)·n)+1, guarded against float-low rounding (an undersized
     # prefix breaks the pigeonhole guarantee; oversized only costs work)
     prefix_len = F.least(
-        (F.floor((1.0 - t) * F.col("_ntok") + 1e-9) + 1).cast("int"),
-        F.col("_ntok"),
+        (F.floor((1.0 - t) * F.col("_n") + 1e-9) + 1).cast("int"),
+        F.col("_n"),
     )
+
+    def postings(id_out: str, upto: Column) -> DataFrame:
+        # (id, token, token df) for the first `upto` rarest-first tokens
+        return sets.select(
+            F.col("_id").alias(id_out),
+            F.explode(F.slice(F.arrays_zip("_tok", "_dfs"), 1, upto)).alias("_e"),
+        ).select(id_out, F.col("_e._tok").alias("_t"), F.col("_e._dfs").alias("_df"))
+
     nsalts = F.when(
-        F.col("_e.df") > int(hot_token_threshold), F.lit(int(n_salts))
+        F.col("_df") > int(hot_token_threshold), F.lit(int(n_salts))
     ).otherwise(F.lit(1))
-    probe = (
-        ranked.select(
-            F.col(id_col).alias("id_p"),
-            F.explode(F.slice("_st", F.lit(1), prefix_len)).alias("_e"),
-        )
-        .select(
-            "id_p",
-            F.col("_e.tok").alias("_t"),
-            F.explode(F.sequence(F.lit(0), nsalts - 1)).alias("_salt"),
-        )
+    probe = postings("id_p", prefix_len).select(
+        "id_p", "_t", F.explode(F.sequence(F.lit(0), nsalts - 1)).alias("_salt")
     )
-    index = ranked.select(
-        F.col(id_col).alias("id_i"),
-        F.explode("_st").alias("_e"),
-    ).select(
+    index = postings("id_i", F.col("_n")).select(
         "id_i",
-        F.col("_e.tok").alias("_t"),
+        "_t",
         F.pmod(F.xxhash64(F.col("id_i")), nsalts).cast("int").alias("_salt"),
     )
+    # the probe side (prefixes only) builds; the corpus-cardinality index
+    # streams and is never broadcast
     cand = (
-        probe.join(index, ["_t", "_salt"])
+        probe.hint("shuffle_hash")
+        .join(index, ["_t", "_salt"])
         .where(F.col("id_p") != F.col("id_i"))
         .select(
             F.least("id_p", "id_i").alias("id_a"),
@@ -1354,34 +1197,16 @@ def containment_near_duplicates(
         )
         .dropDuplicates(["id_a", "id_b"])
     )
-
-    sets = ranked.select(
-        F.col(id_col),
-        F.transform("_st", lambda s: s["tok"]).alias("_tk"),
-        F.col("_ntok"),
+    containment = F.col("_inter").cast("double") / F.least("_na", "_nb").cast(
+        "double"
     )
-    a = sets.select(
-        F.col(id_col).alias("id_a"),
-        F.col("_tk").alias("_ta"),
-        F.col("_ntok").alias("_na"),
-    )
-    b = sets.select(
-        F.col(id_col).alias("id_b"),
-        F.col("_tk").alias("_tb"),
-        F.col("_ntok").alias("_nb"),
-    )
-    inter = F.size(F.array_intersect(F.col("_ta"), F.col("_tb")))
-    union = F.col("_na") + F.col("_nb") - inter
-    containment = inter.cast("double") / F.least("_na", "_nb").cast("double")
-    jac = inter.cast("double") / union.cast("double")
     return (
-        cand.join(a, "id_a")
-        .join(b, "id_b")
+        overlap_verify(cand, sets)
         .select(
             "id_a",
             "id_b",
             containment.alias("containment"),
-            jac.alias("jaccard"),
+            jaccard().alias("jaccard"),
         )
         .where(F.col("containment") >= t)
     )

@@ -25,16 +25,17 @@ The reference has no exact-join analog — its candidate generation is ANN
 rerank stage IS an exact verifier over candidates
 (reference lib/rerank.py:15-74); these operators fuse the two roles.
 
-Scale shape, by construction:
+Both run on the token-set kernel (operators/tokensets.py): its hashed
+token / q-gram sets, its global rarest-first order and, for the Jaccard
+join, its overlap verify.  Scale shape, by construction:
 * Join keys are the RAREST tokens/grams in the corpus (lowest df under the
   global order), so the signature join's key distribution is the inverse of
   the Zipf head — hot boilerplate tokens never become join keys.  This is
   the opposite failure mode of naive token blocking and the reason the
   prefix join needs no salting.
-* The df ranking table is vocabulary-cardinality and is joined with a plain
-  shuffle join — NEVER broadcast (same rule as the BM25 IDF table,
-  operators/search.py).
-* Verification joins fetch full token arrays by id AFTER candidate dedup,
+* Every vocabulary- or corpus-cardinality join is pinned shuffle-hash —
+  NEVER broadcast (same rule as the BM25 IDF table, operators/search.py).
+* Verification joins fetch full token sets by id AFTER candidate dedup,
   so the wide payload crosses the wire once per surviving pair side.
 * Everything is DataFrame built-ins + ``F.levenshtein`` — zero Python.
 """
@@ -44,31 +45,13 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from semantic_entity_matching_spark.operators.dedup import _distinct_tokens
-
-
-def _df_ordered_tokens(
-    toks: DataFrame, id_out: str = "_id"
-) -> DataFrame:
-    """(id, tok array) -> (id, tokens ordered by (global df asc, token asc),
-    size).  The order is the one global total order every prefix-filter
-    proof requires; ties broken lexically so both engines agree."""
-    ex = toks.select(id_out, F.explode("_tok").alias("_t"))
-    df_tab = ex.groupBy("_t").agg(F.count(F.lit(1)).alias("_df"))
-    # vocabulary-cardinality table: pinned to a shuffle hash join —
-    # Catalyst would broadcast it off small-scale stats, and at web
-    # scale the vocabulary cannot broadcast (the BM25 IDF rule; the
-    # plan audit asserts no BroadcastExchange survives in q104)
-    ranked = ex.join(df_tab.hint("shuffle_hash"), "_t")
-    return (
-        ranked.groupBy(id_out)
-        .agg(F.array_sort(F.collect_list(F.struct("_df", "_t"))).alias("_o"))
-        .select(
-            id_out,
-            F.transform("_o", lambda s: s["_t"]).alias("_ord"),
-            F.size("_o").alias("_n"),
-        )
-    )
+from semantic_entity_matching_spark.operators.tokensets import (
+    _distinct_tokens,
+    _size_ratio_keep,
+    jaccard,
+    overlap_verify,
+    token_sets,
+)
 
 
 def prefix_filter_jaccard_join(
@@ -84,32 +67,29 @@ def prefix_filter_jaccard_join(
     threshold > 0 can never admit them against a non-empty set, and the
     empty-vs-empty pair is degenerate for dedup purposes).
 
-    Tokenization is the engine-wide :func:`_distinct_tokens` so results are
-    directly comparable with the MinHash path (q21) at the same threshold.
+    Tokenization, order and verification are the token-set kernel's, so
+    results are directly comparable with the MinHash path (q21) at the
+    same threshold.  Eager at construction: see
+    :func:`tokensets.token_sets`.
     """
     if not 0.0 < threshold <= 1.0:
         raise ValueError(f"threshold must be in (0, 1], got {threshold}")
-    toks = (
-        df.select(
-            F.col(id_col).alias("_id"), _distinct_tokens(text_col).alias("_tok")
-        )
-        .where(F.size("_tok") > 0)
-    )
-    # four consumers (both prefix sides, both verify sides) would each
-    # re-run the tokenize->df->order chain: cut lineage once
-    ordered = _df_ordered_tokens(toks).localCheckpoint(eager=True)
+    t = float(threshold)
+    sets = token_sets(df, id_col, _distinct_tokens(text_col), rarest_first=True)
     # prefix length |x| - ceil(t|x|) + 1: the rarest tokens whose absence
-    # from the other side would already cap jaccard below t
+    # from the other side would already cap jaccard below t (the 1e-9
+    # slack keeps float ceil from over-rounding t|x| — 0.56·25 is
+    # 14.000000000000002 — into a prefix one token short)
     plen = (
         F.col("_n")
-        - F.ceil(F.lit(float(threshold)) * F.col("_n")).cast("int")
+        - F.ceil(F.lit(t) * F.col("_n") - F.lit(1e-9)).cast("int")
         + F.lit(1)
     )
     # posexplode: each prefix token carries its 0-based position in the
     # doc's df-ordered token list — the input to PPJoin's positional
     # filter below
-    pref = ordered.select(
-        "_id", "_n", F.posexplode(F.slice("_ord", F.lit(1), plen)).alias("_p", "_t")
+    pref = sets.select(
+        "_id", "_n", F.posexplode(F.slice("_tok", F.lit(1), plen)).alias("_p", "_t")
     )
     a = pref.select(
         F.col("_id").alias("id_a"), F.col("_n").alias("_na"),
@@ -132,9 +112,7 @@ def prefix_filter_jaccard_join(
     #   (the 1e-9 slack keeps float ceil from over-rounding the
     #   requirement; under-rounding only admits extra candidates).
     required = F.ceil(
-        F.lit(float(threshold) / (1.0 + float(threshold)))
-        * (F.col("a._na") + F.col("b._nb"))
-        - F.lit(1e-9)
+        F.lit(t / (1.0 + t)) * (F.col("a._na") + F.col("b._nb")) - F.lit(1e-9)
     )
     pos_bound = (
         F.least("a._pa", "b._pb")
@@ -145,42 +123,23 @@ def prefix_filter_jaccard_join(
         )
     )
     # signature self-join: both sides are exploded corpus prefixes —
-    # pinned shuffle_hash for the same reason as the df table
+    # pinned shuffle_hash like every kernel join
     cand = (
         a.alias("a")
         .join(
             b.alias("b").hint("shuffle_hash"),
             (F.col("a._t") == F.col("b._t"))
             & (F.col("a.id_a") < F.col("b.id_b"))
-            & (
-                F.least("a._na", "b._nb")
-                >= F.lit(float(threshold)) * F.greatest("a._na", "b._nb")
-            )
+            & _size_ratio_keep(F.col("a._na"), F.col("b._nb"), t)
             & (pos_bound >= required),
         )
         .select("id_a", "id_b")
         .distinct()
     )
-    full = ordered.select("_id", "_ord", "_n")
-    va = full.select(
-        F.col("_id").alias("id_a"),
-        F.col("_ord").alias("_ta"),
-        F.col("_n").alias("_na"),
-    )
-    vb = full.select(
-        F.col("_id").alias("id_b"),
-        F.col("_ord").alias("_tb"),
-        F.col("_n").alias("_nb"),
-    )
-    inter = F.size(F.array_intersect("_ta", "_tb"))
-    jac = inter.cast("double") / (
-        F.col("_na") + F.col("_nb") - inter
-    ).cast("double")
     return (
-        cand.join(va.hint("shuffle_hash"), "id_a")
-        .join(vb.hint("shuffle_hash"), "id_b")
-        .select("id_a", "id_b", jac.alias("jaccard"))
-        .where(F.col("jaccard") >= float(threshold))
+        overlap_verify(cand, sets)
+        .select("id_a", "id_b", jaccard().alias("jaccard"))
+        .where(F.col("jaccard") >= t)
     )
 
 
@@ -226,7 +185,8 @@ def edit_distance_join(
     levenshtein verification prunes), but the stratum's join cost is
     bounded by the alphabet only for the first population; a corpus heavy
     in long repetitive strings pays |stratum| x |±k length window| in
-    candidates there.
+    candidates there.  Eager at construction: see
+    :func:`tokensets.token_sets`.
     """
     if k < 0:
         raise ValueError(f"k must be >= 0, got {k}")
@@ -235,18 +195,15 @@ def edit_distance_join(
     strs = df.select(
         F.col(id_col).alias("_id"), F.col(text_col).alias("_s")
     ).where(F.col("_s").isNotNull())
-    toks = strs.select(
-        "_id", _qgram_set(F.col("_s"), q).alias("_tok")
-    ).where(F.size("_tok") > 0)
-    # three consumers (both prefix sides + the short-string stratum)
-    # would each re-run the gram->df->order chain: cut lineage once
-    ordered = _df_ordered_tokens(toks).localCheckpoint(eager=True)
+    # three consumers (both prefix sides + the short-string stratum) read
+    # the one rarest-first q-gram set table
+    ordered = token_sets(strs, "_id", _qgram_set(F.col("_s"), q), rarest_first=True)
     lens = strs.select("_id", F.length("_s").alias("_len"))
     pref = (
         ordered.where(F.col("_n") > k * q)
         .select(
             "_id",
-            F.explode(F.slice("_ord", F.lit(1), F.lit(k * q + 1))).alias("_g"),
+            F.explode(F.slice("_tok", F.lit(1), F.lit(k * q + 1))).alias("_g"),
         )
         .join(lens.hint("shuffle_hash"), "_id")
     )

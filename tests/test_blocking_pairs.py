@@ -342,20 +342,35 @@ def test_simhash_blank_docs_do_not_pair(spark):
 
 def test_jaccard_py_matches_jvm_on_unicode_whitespace(spark):
     """ASCII-\\s tokenization keeps the pure-Python oracle consistent with
-    the JVM array path on text containing non-breaking spaces."""
+    the JVM array path on text containing non-breaking spaces — and the
+    two agree on the null/empty semantics too (null -> 0.0, blank vs
+    blank -> 1.0, blank vs non-blank -> 0.0)."""
     from semantic_entity_matching_spark.operators.dedup import (
         jaccard_py,
         ngram_jaccard_verify,
     )
 
-    a = "foo bar baz"   # U+00A0 is NOT whitespace to Java/RE2 \s
-    b = "foo bar baz"
+    texts = {
+        1: "foo bar baz",  # U+00A0 is NOT whitespace to Java/RE2 \s
+        2: "foo bar baz",
+        3: None,
+        4: "   ",
+        5: "",
+    }
     df = spark.createDataFrame(
-        [(1, a), (2, b)], "doc_id bigint, text string"
+        list(texts.items()), "doc_id bigint, text string"
     )
-    pairs = spark.createDataFrame([(1, 2)], "id_a bigint, id_b bigint")
-    jvm = ngram_jaccard_verify(pairs, df, id_col="doc_id").first()["jaccard"]
-    assert abs(jvm - jaccard_py(a, b)) < 1e-12
+    want = {(1, 2): None, (2, 3): 0.0, (3, 3): 0.0, (4, 5): 1.0, (2, 4): 0.0}
+    pairs = spark.createDataFrame(list(want), "id_a bigint, id_b bigint")
+    got = {
+        (r["id_a"], r["id_b"]): r["jaccard"]
+        for r in ngram_jaccard_verify(pairs, df, id_col="doc_id").collect()
+    }
+    assert set(got) == set(want)
+    for (a, b), j in got.items():
+        assert abs(j - jaccard_py(texts[a], texts[b])) < 1e-12
+        if want[(a, b)] is not None:
+            assert j == want[(a, b)]
 
 
 def test_banding_recall_is_1_on_fixture(spark):

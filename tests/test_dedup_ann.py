@@ -48,11 +48,16 @@ def test_jaccard_oracle():
     assert jaccard_py("a b c d", "a b c x") == pytest.approx(3 / 5)
     assert jaccard_py("", "") == 1.0
     assert jaccard_py("a b c", "b c a") == 1.0  # order-insensitive
+    assert jaccard_py(None, "a") == jaccard_py(None, None) == 0.0  # null text
 
 
 def test_minhash_near_duplicates(spark):
     pairs = minhash_near_duplicates(_docs(spark), jaccard_threshold=0.6).collect()
     got = {(r["id_a"], r["id_b"]) for r in pairs}
+    text = dict(DOCS)
+    for r in pairs:  # the verified score is the oracle's, above threshold
+        assert abs(r["jaccard"] - jaccard_py(text[r["id_a"]], text[r["id_b"]])) < 1e-12
+        assert r["jaccard"] >= 0.6
     assert (0, 1) in got  # normalization-identical
     assert (0, 2) in got or (1, 2) in got  # near-dup via one-token change
     assert (3, 4) in got

@@ -9,7 +9,6 @@ from pyspark.sql import functions as F
 
 from semantic_entity_matching_spark.functions.embed import (
     HashEmbeddingProvider,
-    SentenceEmbeddingProvider,
     get_provider,
     with_embedding,
 )
@@ -58,8 +57,6 @@ def test_provider_registry():
     assert get_provider("random-projection", dim=16).dim == 16
     with pytest.raises(KeyError):
         get_provider("nope")
-    with pytest.raises(NotImplementedError):
-        SentenceEmbeddingProvider(dim=8).embed_batch(pd.Series(["x"]))
 
 
 def test_random_projection_provider():

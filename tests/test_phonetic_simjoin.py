@@ -101,7 +101,7 @@ def test_prefix_jaccard_join_equals_bruteforce(spark, threshold):
         for r in prefix_filter_jaccard_join(docs, "id", "text", threshold).collect()
     }
     # brute force in Spark over the same tokenization
-    from semantic_entity_matching_spark.operators.dedup import _distinct_tokens
+    from semantic_entity_matching_spark.operators.tokensets import _distinct_tokens
 
     toks = docs.select(
         F.col("id"), _distinct_tokens("text").alias("tok")
@@ -122,6 +122,25 @@ def test_prefix_jaccard_join_equals_bruteforce(spark, threshold):
     assert got == want
     if threshold <= 0.8:
         assert want, "degenerate test: brute force found no pairs"
+
+
+def test_prefix_jaccard_join_keeps_pair_at_exact_threshold(spark):
+    # jaccard 14/25 = 0.56 exactly, and 0.56 * 25 rounds UP to
+    # 14.000000000000002 in float: a product-form length filter or an
+    # unguarded ceil in the prefix length drops this pair at t = 0.56
+    shared = [f"s{i}" for i in range(14)]
+    docs = spark.createDataFrame(
+        [
+            (1, " ".join(shared + [f"u{i}" for i in range(11)])),
+            (2, " ".join(shared)),
+        ],
+        "id long, text string",
+    )
+    got = [
+        (r["id_a"], r["id_b"], r["jaccard"])
+        for r in prefix_filter_jaccard_join(docs, "id", "text", 0.56).collect()
+    ]
+    assert got == [(1, 2, 14 / 25)]
 
 
 def test_prefix_jaccard_join_rejects_bad_threshold(spark):

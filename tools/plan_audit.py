@@ -596,17 +596,18 @@ def main() -> None:
         else "update_components plan grew a Window or Cartesian node",
     )
 
-    # 23. lossless similarity joins (q104 prefix-filter Jaccard, q105
-    # qgram edit-distance): every annotation table in these plans —
-    # the DF/vocabulary table (one row per distinct token), the
-    # token-set / length / string side tables (one row per record) —
+    # 23. token-set prefix joins (q104 prefix-filter Jaccard, q105
+    # qgram edit-distance, q84 containment): every annotation table in
+    # these plans — the DF/vocabulary table (one row per distinct token),
+    # the token-set / length / string side tables (one row per record) —
     # is corpus- or vocabulary-cardinality and must NEVER broadcast.
     # Catalyst would happily broadcast them off small-scale stats, so
-    # the operator pins shuffle_hash; assert no BroadcastHashJoin (or
-    # BroadcastNLJ/Cartesian) survives in either plan.
+    # the token-set kernel and the operators pin shuffle_hash; assert no
+    # BroadcastHashJoin (or BroadcastNLJ/Cartesian) survives in any plan.
     for qname, fn in (
         ("q104", E.q104_simjoin_jaccard),
         ("q105", E.q105_edit_distance_join),
+        ("q84", E.q84_containment_neardup),
     ):
         e_sj = explained_of(fn(spark, SF)).lower()
         ok_sj = (

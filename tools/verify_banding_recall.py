@@ -57,7 +57,7 @@ def main() -> int:
     )
     truth = (
         ngram_jaccard_verify(
-            all_pairs, docs, id_col="doc_id", text_col="text", n=1,
+            all_pairs, docs, id_col="doc_id", text_col="text",
             min_jaccard=threshold,
         )
         .where(F.col("jaccard") >= threshold)
