@@ -1938,9 +1938,7 @@ def q76_meta_blocking(spark: SparkSession, sf_dir: str) -> DataFrame:
         text_col="text",
         scheme="cbs",
         prune="wnp",
-        config=PairGenConfig(
-            max_block_size=50, hot_block_threshold=20, n_salts=8
-        ),
+        config=PairGenConfig(max_block_size=50, hot_block_threshold=20),
     )
 
 

@@ -21,9 +21,11 @@ from __future__ import annotations
 from typing import Any
 
 import pandas as pd
+import pyarrow as pa
+import pyarrow.compute as pc
 from pyspark.sql import Column
 from pyspark.sql import functions as F
-from pyspark.sql.functions import pandas_udf
+from pyspark.sql.functions import arrow_udf, pandas_udf
 from pyspark.sql.types import StringType
 
 EMBEDDING_COLUMN_SUFFIX = "_embedding"  # reference lib/vectorize_columns.py:34
@@ -77,48 +79,59 @@ def is_skippable_query(text: str) -> bool:
 # ---------------------------------------------------------------------------
 
 
+def _render(arr: pa.Array) -> pa.Array:
+    """``str(v)`` of each value of one Arrow column, null where
+    :func:`is_valid_value` is false — rendered from the column's Arrow
+    type, so a batch's nulls never change how its other rows render."""
+    t = arr.type
+    if pa.types.is_string(t) or pa.types.is_large_string(t):
+        return arr.cast(pa.string())
+    if pa.types.is_integer(t):
+        return pc.cast(arr, pa.string())
+    if pa.types.is_boolean(t):
+        return pc.if_else(arr, "True", "False")
+    if pa.types.is_list(t) or pa.types.is_large_list(t):
+        return pa.array(
+            [None if v is None else str(v) for v in arr.to_pylist()], pa.string()
+        )
+    # floats (NaN is invalid) and the rest: pandas renders str(v)
+    s = arr.to_pandas()
+    return pa.array(s.astype(str).where(s.notna(), None), pa.string())
+
+
 def canonical_text_udf(columns: list[str]) -> Column:
     """Column expression producing ``canonical_entity_text`` over the named
     columns (in order — dict insertion order == column order in the
     reference's `_source`).
 
-    Implemented as one Arrow-batched pandas UDF over a struct of the columns
-    so all values cross the JVM→Python boundary in a single Arrow batch.
+    Implemented as one Arrow UDF over a struct of the columns, so all
+    values cross the JVM→Python boundary in a single Arrow batch and keep
+    their Arrow types.
 
     The body is a VECTORIZED twin of :func:`canonical_entity_text` (which
-    stays the per-record oracle shared with pytest): per column,
-    ``astype(str)`` renders exactly the values ``str(v)`` renders for the
-    same pandas batch (ints, floats-with-NaN, lists, arrays), ``notna``
-    matches ``is_valid_value`` (None/NaN invalid, list/array cells
-    not-null), and rows accumulate ``"k: v"`` segments joined by newline
-    in column order.  Byte-identity is pinned by
-    tests/test_extract.py::test_canonical_text_udf_matches_python.  The
-    old ``to_dict(orient="records")`` + per-row join was the single most
-    expensive Python stage of the flagship pipeline (measured 1.8 s vs
-    0.9 s for the dim-256 embed UDF at sf0.1).
+    stays the per-record oracle shared with pytest) applied to the Spark
+    row: per column, :func:`_render` gives ``str(v)`` of each valid value
+    (ints and booleans as Python prints them, arrays as Python lists,
+    None/NaN invalid, empty arrays valid), and rows accumulate ``"k: v"``
+    segments joined by newline in column order.  Rendering by Arrow type
+    matters for nullable ints: a pandas batch turns an int column with a
+    null into floats, so ``3`` printed as ``3.0`` in some batches only.
+    Byte-identity is pinned by
+    tests/test_extract.py::test_canonical_text_udf_matches_python.
     """
 
-    @pandas_udf(StringType())
-    def _extract(batch: pd.DataFrame) -> pd.Series:
-        n = len(batch)
-        acc = pd.Series([None] * n, dtype=object)
-        for c in batch.columns:
-            if c.endswith(EMBEDDING_COLUMN_SUFFIX):
+    @arrow_udf(StringType())
+    def _extract(batch: pa.Array) -> pa.Array:
+        acc = pa.nulls(len(batch), pa.string())
+        for i, field in enumerate(batch.type):
+            if field.name.endswith(EMBEDDING_COLUMN_SUFFIX):
                 continue
-            s = batch[c]
-            valid = s.notna().to_numpy()
-            if not valid.any():
-                continue
-            rendered = (c + ": ") + s.astype(str)
-            has = acc.notna().to_numpy()
-            both = valid & has
-            first = valid & ~has
-            if both.any():
-                acc[both] = acc[both] + "\n" + rendered[both]
-            if first.any():
-                acc[first] = rendered[first]
+            seg = pc.binary_join_element_wise(
+                field.name + ": ", _render(batch.field(i)), ""
+            )
+            acc = pc.coalesce(pc.binary_join_element_wise(acc, seg, "\n"), acc, seg)
         # a row with no valid cell renders as "\n".join([]) == ""
-        return acc.fillna("")
+        return pc.fill_null(acc, "")
 
     return _extract(F.struct(*[F.col(c) for c in columns]))
 

@@ -37,6 +37,7 @@ from semantic_entity_matching_spark.operators.blocking import (
 from semantic_entity_matching_spark.operators.pairs import (
     PairGenConfig,
     generate_candidate_pairs,
+    salted_join,
 )
 from semantic_entity_matching_spark.operators.tokensets import (
     _distinct_tokens,
@@ -184,11 +185,14 @@ def cross_corpus_near_duplicates(
     ``pairs.block_pair_stream``): per-key sizes are computed per SIDE;
     only keys over the threshold on EITHER side ride a (full-outer,
     broadcast-hinted) head table — a key is dropped when either side
-    exceeds ``max_block_size`` (boilerplate bands), salted ``n_salts``
-    ways when either side exceeds ``hot_block_threshold``.  Cold keys
-    (absent from the head) never ride any annotation join.  The exact
-    size-ratio bound prunes candidates AT the block join, before the
-    (corpus_id, ref_id) dedup exchange.
+    exceeds ``max_block_size`` (boilerplate bands), and the A×B join is
+    :func:`pairs.salted_join` with the larger side's size: a key over
+    ``hot_block_threshold`` spreads its corpus rows across
+    ``pairs.salt_count`` reducers and replicates its reference rows to
+    each.  Cold keys (absent from the head) never ride any annotation
+    join and take one salt.  The exact size-ratio bound prunes
+    candidates AT the block join, before the (corpus_id, ref_id) dedup
+    exchange.
 
     Verification is the kernel's true unigram Jaccard
     (:func:`tokensets.overlap_verify`); banding is candidate generation
@@ -237,15 +241,17 @@ def cross_corpus_near_duplicates(
     )
     # keys needing annotation = the union of the two Zipf heads (bounded
     # by side_rows/threshold each); everything else is cold on BOTH sides
-    head = c_head.join(r_head, "block_key", "full").select(
-        "block_key",
-        F.coalesce(F.col("_cn"), F.lit(0)).alias("_cn"),
-        F.coalesce(F.col("_rn"), F.lit(0)).alias("_rn"),
+    head = F.broadcast(
+        c_head.join(r_head, "block_key", "full").select(
+            "block_key",
+            F.coalesce(F.col("_cn"), F.lit(0)).alias("_cn"),
+            F.coalesce(F.col("_rn"), F.lit(0)).alias("_rn"),
+        )
     )
-    if cfg.broadcast_hot_sizes:
-        head = F.broadcast(head)
 
     def annotate(side: DataFrame) -> DataFrame:
+        # keep keys within the cap on both sides; the salted join reads
+        # the larger side's size (null = cold)
         return (
             side.join(head, "block_key", "left")
             .where(
@@ -255,14 +261,7 @@ def cross_corpus_near_duplicates(
                     & (F.col("_rn") <= cfg.max_block_size)
                 )
             )
-            .withColumn(
-                "_nsalts",
-                F.when(
-                    F.greatest(F.col("_cn"), F.col("_rn"))
-                    > cfg.hot_block_threshold,
-                    F.lit(cfg.n_salts),
-                ).otherwise(F.lit(1)),
-            )
+            .withColumn("_size", F.greatest("_cn", "_rn"))
             .drop("_cn", "_rn")
         )
 
@@ -272,31 +271,11 @@ def cross_corpus_near_duplicates(
     tb = token_sets(reference, ref_id, _distinct_tokens(rtext))
     ca = ta.select(F.col("_id").alias("_ida"), F.col("_n").alias("_ntok_a"))
     rcounts = tb.select(F.col("_id").alias("_idb"), F.col("_n").alias("_ntok_b"))
-    left = (
-        annotate(cb)
-        .join(ca, "_ida")
-        .select(
-            "block_key",
-            "_ida",
-            F.pmod(F.xxhash64(F.col("_ida")), F.col("_nsalts"))
-            .cast("int")
-            .alias("_salt"),
-            "_ntok_a",
-        )
+    cand = salted_join(
+        annotate(cb).join(ca, "_ida"),
+        annotate(rb).join(rcounts, "_idb"),
+        "block_key", "_ida", "_size", cfg.hot_block_threshold,
     )
-    right = (
-        annotate(rb)
-        .join(rcounts, "_idb")
-        .select(
-            "block_key",
-            "_idb",
-            F.explode(F.sequence(F.lit(0), F.col("_nsalts") - 1)).alias(
-                "_salt"
-            ),
-            "_ntok_b",
-        )
-    )
-    cand = left.join(right, ["block_key", "_salt"])
     if jaccard_threshold > 0.0:
         cand = cand.where(
             _size_ratio_keep(
@@ -1098,8 +1077,6 @@ def containment_near_duplicates(
     text_col: str = "text",
     containment_threshold: float = 0.9,
     max_token_df: int | None = None,
-    hot_token_threshold: int = 20,
-    n_salts: int = 8,
 ) -> DataFrame:
     """Pairs where the SMALLER token set is mostly inside the larger one:
     ``containment = |A∩B| / min(|A|,|B|) >= threshold`` -> (id_a, id_b,
@@ -1131,11 +1108,12 @@ def containment_near_duplicates(
       (:func:`tokensets.token_sets` with ``rarest_first``): one token hash
       aggregate and one doc-keyed ``array_sort`` aggregate whose group
       size is bounded by doc length, never corpus-shaped;
-    * the probe×index token join carries the same Zipf-head discipline as
-      ``pairs.block_pair_stream``: each row KNOWS its token's df, so hot
-      tokens (df > hot_token_threshold) split the big INDEX side across
-      ``n_salts`` reducers via ``pmod(xxhash64(id), s)`` while the small
-      probe side replicates — no size-table join needed at all;
+    * the probe×index token join is :func:`pairs.salted_join`, the same
+      salted join as ``pairs.block_pair_stream``: each row KNOWS its
+      token's df, which is the key size, so no size-table join is needed.
+      A token in more than ``pairs.HOT_KEY_THRESHOLD`` docs spreads the
+      big INDEX side across ``pairs.salt_count`` reducers while the small
+      probe side replicates to each;
     * ``max_token_df`` is the vocabulary cap for web scale: tokens in more
       than that many docs (stopwords/boilerplate) are removed from the
       UNIVERSE — sets, prefixes, index and the verify step all see the
@@ -1174,22 +1152,14 @@ def containment_near_duplicates(
             F.explode(F.slice(F.arrays_zip("_tok", "_dfs"), 1, upto)).alias("_e"),
         ).select(id_out, F.col("_e._tok").alias("_t"), F.col("_e._dfs").alias("_df"))
 
-    nsalts = F.when(
-        F.col("_df") > int(hot_token_threshold), F.lit(int(n_salts))
-    ).otherwise(F.lit(1))
-    probe = postings("id_p", prefix_len).select(
-        "id_p", "_t", F.explode(F.sequence(F.lit(0), nsalts - 1)).alias("_salt")
-    )
-    index = postings("id_i", F.col("_n")).select(
-        "id_i",
-        "_t",
-        F.pmod(F.xxhash64(F.col("id_i")), nsalts).cast("int").alias("_salt"),
-    )
     # the probe side (prefixes only) builds; the corpus-cardinality index
     # streams and is never broadcast
     cand = (
-        probe.hint("shuffle_hash")
-        .join(index, ["_t", "_salt"])
+        salted_join(
+            postings("id_i", F.col("_n")),
+            postings("id_p", prefix_len).hint("shuffle_hash"),
+            "_t", "id_i", "_df",
+        )
         .where(F.col("id_p") != F.col("id_i"))
         .select(
             F.least("id_p", "id_i").alias("id_a"),

@@ -8,10 +8,16 @@ key, with:
 * **block-size cap** — keys whose block exceeds ``max_block_size`` are
   dropped (boilerplate mega-blocks at web scale produce O(n^2) garbage
   pairs; the drop is logged via the returned audit).
-* **explicit salting** for hot keys (north_rule): the probe side gets
-  ``salt = pmod(xxhash64(id), s)`` and the build side is replicated across
-  all s salts, so one hot key fans out over s reducers instead of one.
-  AQE skew-join remains on as a second line of defense.
+* **explicit salting** for hot keys (north_rule) through
+  :func:`salted_join`, the one salted hot-key join of the engine (the
+  cross-corpus and containment near-dup joins use it too).  A key of
+  ``size`` rows gets ``least(ceil(size / threshold), defaultParallelism)``
+  salts (:func:`salt_count`): 1 at or below the threshold, more as the
+  key grows, never more than the session has cores to spread it over.
+  One side keeps one salt per row, the other is replicated across all of
+  its key's salts, so a hot key fans out over that many reducers.  The
+  salt count never changes the pair set: each unordered pair meets
+  exactly once.  AQE skew-join remains on as a second line of defense.
 * **canonical ordering** id_a < id_b (J5) — suppresses self-pairs and
   (a,b)/(b,a) duplicates before the cross-key dropDuplicates.
 
@@ -29,8 +35,12 @@ from __future__ import annotations
 
 from dataclasses import dataclass
 
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
+
+# Keys with more rows than this are salted (the containment join uses it
+# as is; PairGenConfig.hot_block_threshold defaults to it).
+HOT_KEY_THRESHOLD = 20
 
 
 @dataclass(frozen=True)
@@ -44,30 +54,56 @@ class PairGenConfig:
     # copies of one page) are caught by the exact-fingerprint dedup path,
     # not pairwise LSH.
     max_block_size: int = 50
-    hot_block_threshold: int = 20  # salt keys with blocks larger than this
-    n_salts: int = 8
-    # MEASURED salting (closes the skew loop the round-5 verdict flagged:
-    # operators/stats.py's recommended_salts was computed but nothing
-    # consumed it).  When set, each hot key derives its OWN salt count
-    # from the block-size table the generator already joins:
-    # ceil(block_size / salt_rows_target), clamped to [n_salts, max_salts]
-    # — a 10k-row block fans out over ~10k/target reducers instead of a
-    # static 8, while mildly-hot keys keep the static floor.  The pair
-    # SET is identical for any salt count >= 1 (each unordered pair meets
-    # exactly once; pytest-pinned), so this is purely a skew/latency knob.
-    # None = static n_salts for every hot key (the historical behavior).
-    salt_rows_target: int | None = None
-    max_salts: int = 256
-    # Hint-broadcast the FILTERED (block_size > min(hot, max)) size table in
-    # the annotation join.  The full size table is corpus-cardinality (one
-    # row per distinct key, ~35 keys/doc on the webtext corpus — 3.5e13 rows
-    # at 1e12 docs) and must NEVER be broadcast; the filtered subset is
-    # bounded by total_block_rows / threshold (a >=21x reduction at the
-    # defaults) and in Zipf-shaped corpora is the short head of boilerplate
-    # keys — typically thousands of rows.  Set False for corpora where even
-    # the head is too big to broadcast: the annotation becomes a plain
-    # left hash join and AQE picks the strategy.
-    broadcast_hot_sizes: bool = True
+    # Salt keys with blocks larger than this, one salt per started
+    # threshold-sized slice of the block, capped at the session's default
+    # parallelism (salt_count).  The salt count is derived per key from
+    # the measured block size; nothing else about salting is settable.
+    hot_block_threshold: int = HOT_KEY_THRESHOLD
+
+    def __post_init__(self) -> None:
+        # salt_count divides by the threshold: reject 0 here rather than
+        # mid-job under ANSI mode
+        for name in ("max_block_size", "hot_block_threshold"):
+            if getattr(self, name) < 1:
+                raise ValueError(f"{name} must be >= 1, got {getattr(self, name)}")
+
+
+def salt_count(size: Column, threshold: int, parallelism: int) -> Column:
+    """Salts for a key of ``size`` rows: ``least(ceil(size / threshold),
+    parallelism)``.  That is 1 for keys at or below ``threshold`` and for
+    a null size (a key absent from a hot-key head table), which counts as
+    one row: ``least`` skips nulls, so a null must not reach it."""
+    rows = F.coalesce(size, F.lit(1))
+    return F.least(F.ceil(rows / F.lit(threshold)), F.lit(parallelism)).cast("int")
+
+
+def salted_join(
+    own: DataFrame,
+    rep: DataFrame,
+    key: str,
+    own_id: str,
+    size: str,
+    threshold: int = HOT_KEY_THRESHOLD,
+) -> DataFrame:
+    """Inner join of ``own`` and ``rep`` on ``key``, salted per key.
+
+    Both sides carry the key's measured row count in column ``size``
+    (null = cold).  Each ``own`` row takes the one salt
+    ``pmod(xxhash64(own_id), n)`` and each ``rep`` row is replicated to
+    all ``n`` salts of its key (``n`` = :func:`salt_count`), so every
+    (own, rep) row pair of a key meets in exactly one ``(key, _salt)``
+    group: the result is the plain join's, for any salt count.  ``size``
+    and ``_salt`` are dropped from the output.  Put the side that should
+    spread across reducers as ``own``; a join hint on ``rep`` carries over.
+    """
+    n = salt_count(
+        F.col(size), threshold, own.sparkSession.sparkContext.defaultParallelism
+    )
+    own = own.withColumn(
+        "_salt", F.pmod(F.xxhash64(F.col(own_id)), n).cast("int")
+    ).drop(size)
+    rep = rep.withColumn("_salt", F.explode(F.sequence(F.lit(0), n - 1))).drop(size)
+    return own.join(rep, [key, "_salt"]).drop("_salt")
 
 
 def block_sizes(blocks: DataFrame, id_col: str = "url") -> DataFrame:
@@ -157,72 +193,32 @@ def block_pair_stream(
     # total_block_rows / threshold and is the table a broadcast hint is
     # actually safe on.  Keys absent from the head are cold: kept, salt=1.
     annot_threshold = min(cfg.hot_block_threshold, cfg.max_block_size)
-    hot_sizes = sizes.where(F.col("block_size") > annot_threshold)
-    if cfg.broadcast_hot_sizes:
-        hot_sizes = F.broadcast(hot_sizes)
+    hot_sizes = F.broadcast(sizes.where(F.col("block_size") > annot_threshold))
     annotated = blocks.join(hot_sizes, "block_key", "left").where(
         F.col("block_size").isNull()
         | (F.col("block_size") <= cfg.max_block_size)
     )
 
-    # Per-key DYNAMIC salt count: 1 for cold keys, n_salts for hot ones.
-    # Cold and hot keys then go through ONE self-join on (block_key, _salt)
-    # — a cold key's rows all carry _salt=0 on both sides, so its block
-    # lands on one reducer exactly as an unsalted join would, while a hot
-    # key fans out over n_salts reducers.  The earlier cold/hot formulation
-    # ran TWO separate self-joins (four side exchanges + a union); this one
-    # halves the exchange count for identical output.  (NULL block_size —
-    # a cold key — falls to the otherwise() branch: salt=1.)
-    if cfg.salt_rows_target is not None:
-        hot_salts = F.least(
-            F.greatest(
-                F.ceil(
-                    F.col("block_size") / F.lit(float(cfg.salt_rows_target))
-                ).cast("int"),
-                F.lit(cfg.n_salts),
-            ),
-            F.lit(cfg.max_salts),
+    extra_cols = []
+    if annotations is not None:
+        annotated = annotated.join(annotations, id_col)
+        extra_cols = [c for c in annotations.columns if c != id_col]
+
+    def side(id_alias: str, suffix: str) -> DataFrame:
+        return annotated.select(
+            "block_key",
+            F.col(id_col).alias(id_alias),
+            "block_size",
+            *[F.col(c).alias(f"{c}_{suffix}") for c in extra_cols],
         )
-    else:
-        hot_salts = F.lit(cfg.n_salts)
-    annotated = annotated.withColumn(
-        "_nsalts",
-        F.when(
-            F.col("block_size") > cfg.hot_block_threshold, hot_salts
-        ).otherwise(F.lit(1)),
-    )
 
-    extra_cols = (
-        [c for c in annotations.columns if c != id_col] if annotations is not None
-        else []
-    )
-
-    def side_cols(suffix: str):
-        return [F.col(c).alias(f"{c}_{suffix}") for c in extra_cols]
-
-    side = annotated if annotations is None else annotated.join(annotations, id_col)
-    # left row keeps its own salt; right row is replicated to every salt of
-    # its key — each unordered pair meets exactly once under the
-    # (id_a < id_b) filter below.
-    left = side.select(
-        F.col("block_key"),
-        F.col(id_col).alias("id_a"),
-        F.pmod(F.xxhash64(F.col(id_col)), F.col("_nsalts")).cast("int").alias(
-            "_salt"
-        ),
-        *side_cols("a"),
-    )
-    right = side.select(
-        F.col("block_key"),
-        F.col(id_col).alias("id_b"),
-        F.explode(F.sequence(F.lit(0), F.col("_nsalts") - 1)).alias("_salt"),
-        *side_cols("b"),
-    )
-    pairs = (
-        left.join(right, ["block_key", "_salt"])
-        .drop("_salt")
-        .where(F.col("id_a") < F.col("id_b"))
-    )
+    # cold and hot keys go through ONE self-join on (block_key, _salt): a
+    # cold key (block_size null) has one salt, so its block lands on one
+    # reducer exactly as an unsalted join would
+    pairs = salted_join(
+        side("id_a", "a"), side("id_b", "b"), "block_key", "id_a",
+        "block_size", cfg.hot_block_threshold,
+    ).where(F.col("id_a") < F.col("id_b"))
     if pair_filter is not None:
         pairs = pairs.where(pair_filter)
     return pairs

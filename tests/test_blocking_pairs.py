@@ -1,6 +1,7 @@
 from __future__ import annotations
 
 import numpy as np
+import pytest
 from pyspark.sql import functions as F
 
 from semantic_entity_matching_spark.operators.blocking import (
@@ -15,6 +16,7 @@ from semantic_entity_matching_spark.operators.pairs import (
     PairGenConfig,
     dropped_blocks_audit,
     generate_candidate_pairs,
+    salt_count,
 )
 
 
@@ -100,73 +102,65 @@ def test_candidate_pairs_basic(spark):
     assert counts == 0
 
 
-def test_candidate_pairs_salting_is_lossless(spark):
-    # the same block generated with and without salting yields identical pairs
-    members = [(f"hot", f"u{i:03d}") for i in range(30)]
-    blocks = spark.createDataFrame(members, "block_key string, url string")
-    unsalted = generate_candidate_pairs(
-        blocks, config=PairGenConfig(hot_block_threshold=1000, n_salts=1)
-    )
-    salted = generate_candidate_pairs(
-        blocks, config=PairGenConfig(hot_block_threshold=5, n_salts=4)
-    )
-    a = {(r["id_a"], r["id_b"]) for r in unsalted.collect()}
-    b = {(r["id_a"], r["id_b"]) for r in salted.collect()}
-    assert a == b and len(a) == 30 * 29 // 2
+def _quad(block_members):
+    return {(a, b) for m in block_members for a in m for b in m if a < b}
 
 
-def test_measured_salting_identical_pairs(spark):
-    """salt_rows_target derives per-key salt counts from measured block
-    sizes; the pair SET must be identical to static salting on a skewed
-    fixture (one mega-block, one mildly hot block, cold tail)."""
+@pytest.mark.parametrize(
+    "hot_block_threshold",
+    [
+        pytest.param(1000, id="unsalted"),  # every key cold: one salt each
+        pytest.param(100, id="mixed"),  # mega 2 salts, warm/cold 1
+        pytest.param(1, id="clamped"),  # mega/warm capped at parallelism
+    ],
+)
+def test_salting_pair_set_identity(spark, hot_block_threshold):
+    """The derived salt count never changes the pair set: on a skewed
+    fixture (one mega-block, one mildly hot block, cold tail) every
+    threshold yields exactly the quadratic pairs of each block, each
+    unordered pair once."""
+    mega = [f"m{i:04d}" for i in range(200)]
+    warm = [f"w{i:02d}" for i in range(25)]
     rows = (
-        [("mega", f"m{i:04d}") for i in range(200)]
-        + [("warm", f"w{i:02d}") for i in range(25)]
+        [("mega", u) for u in mega]
+        + [("warm", u) for u in warm]
         + [("cold", "c1"), ("cold", "c2"), ("x", "c9")]
     )
     blocks = spark.createDataFrame(rows, "block_key string, url string")
-    static = generate_candidate_pairs(
+    pairs = generate_candidate_pairs(
         blocks,
         config=PairGenConfig(
-            max_block_size=10_000, hot_block_threshold=20, n_salts=8
+            max_block_size=10_000, hot_block_threshold=hot_block_threshold
         ),
+        keep_block_key=False,
     )
-    measured = generate_candidate_pairs(
-        blocks,
-        config=PairGenConfig(
-            max_block_size=10_000,
-            hot_block_threshold=20,
-            n_salts=8,
-            salt_rows_target=16,  # mega -> ceil(200/16)=13 salts, warm -> floor 8
-            max_salts=64,
-        ),
-    )
-    a = {(r["id_a"], r["id_b"]) for r in static.collect()}
-    b = {(r["id_a"], r["id_b"]) for r in measured.collect()}
-    assert a == b
-    assert len(a) == 200 * 199 // 2 + 25 * 24 // 2 + 1
+    got = sorted((r["id_a"], r["id_b"]) for r in pairs.collect())
+    assert got == sorted(_quad([mega, warm, ["c1", "c2"]]))
 
 
-def test_measured_salting_clamps(spark):
-    # max_salts caps the fan-out; n_salts is the hot floor — both clamp
-    # ends still produce the exact pair set
-    rows = [("huge", f"h{i:05d}") for i in range(500)]
-    blocks = spark.createDataFrame(rows, "block_key string, url string")
-    capped = generate_candidate_pairs(
-        blocks,
-        config=PairGenConfig(
-            max_block_size=10_000, hot_block_threshold=20, n_salts=4,
-            salt_rows_target=1, max_salts=8,   # wants 500 salts, capped at 8
-        ),
-    )
-    assert capped.count() == 500 * 499 // 2
+def test_salt_count_per_key_at_default_threshold(spark):
+    """ceil(size / 20) salts, capped at the session's default parallelism;
+    a cold key and a key absent from the hot head (null size) get 1."""
+    par = spark.sparkContext.defaultParallelism
+    sizes = [5, 20, 21, 30, 44, 500, None]
+    df = spark.createDataFrame([(s,) for s in sizes], "size bigint")
+    got = {
+        r["size"]: r["n"]
+        for r in df.select(
+            "size", salt_count(F.col("size"), 20, par).alias("n")
+        ).collect()
+    }
+    assert got == {
+        5: 1, 20: 1, 21: 2, 30: 2, 44: 3, 500: par, None: 1,
+    }
+    assert par < 500 / 20  # the 500-row key really hits the cap
 
 
 def test_candidate_pairs_mixed_hot_cold_one_join(spark):
     """The fused dynamic-salt path: one call carrying a hot block (salted
-    n ways) AND cold blocks (salt count 1) must emit exactly the quadratic
-    pair set of each block, each unordered pair exactly once — including a
-    pair reachable through both a hot and a cold key."""
+    ceil(12/5) = 3 ways) AND cold blocks (salt count 1) must emit exactly
+    the quadratic pair set of each block, each unordered pair exactly
+    once — including a pair reachable through both a hot and a cold key."""
     members = (
         [("hotk", f"u{i:02d}") for i in range(12)]       # hot: 12 > threshold
         + [("coldk", "u00"), ("coldk", "u01"), ("coldk", "x9")]  # cold
@@ -175,7 +169,7 @@ def test_candidate_pairs_mixed_hot_cold_one_join(spark):
     blocks = spark.createDataFrame(members, "block_key string, url string")
     pairs = generate_candidate_pairs(
         blocks,
-        config=PairGenConfig(hot_block_threshold=5, n_salts=4),
+        config=PairGenConfig(hot_block_threshold=5),
         keep_block_key=False,
     )
     got = sorted((r["id_a"], r["id_b"]) for r in pairs.collect())
@@ -191,8 +185,8 @@ def test_size_annotation_head_join_boundaries(spark):
     block_size > min(hot_block_threshold, max_block_size) head of the size
     table (the full table is corpus-cardinality and must never broadcast).
     Keys exactly AT the hot threshold stay cold (absent from the head,
-    salt 1), keys exactly at max are kept, keys above max drop — and the
-    output is identical with and without the broadcast hint."""
+    salt 1), keys exactly at max are kept, keys above max drop.  Both
+    thresholds must be >= 1: the salt count divides by the hot one."""
 
     def quad(prefix, n):
         return {
@@ -217,17 +211,21 @@ def test_size_annotation_head_join_boundaries(spark):
         }
 
     want = quad("a", 5) | quad("s", 6) | quad("m", 8)
-    cfg = PairGenConfig(max_block_size=8, hot_block_threshold=5, n_salts=4)
+    cfg = PairGenConfig(max_block_size=8, hot_block_threshold=5)
     assert pairset(cfg) == want
-    no_hint = PairGenConfig(
-        max_block_size=8, hot_block_threshold=5, n_salts=4,
-        broadcast_hot_sizes=False,
-    )
-    assert pairset(no_hint) == want
     # max below hot: the head filter uses the SMALLER threshold, so the
     # cap still sees sizes for every key it must drop
-    tight = PairGenConfig(max_block_size=5, hot_block_threshold=50, n_salts=4)
+    tight = PairGenConfig(max_block_size=5, hot_block_threshold=50)
     assert pairset(tight) == quad("a", 5)
+    for bad in (
+        {"max_block_size": 0},
+        {"max_block_size": -1},
+        {"hot_block_threshold": 0},
+        {"hot_block_threshold": -5},
+    ):
+        with pytest.raises(ValueError, match=next(iter(bad))):
+            PairGenConfig(**bad)
+    assert PairGenConfig(max_block_size=1, hot_block_threshold=1)
 
 
 def test_pairgen_never_broadcasts_full_size_table(spark):
@@ -265,6 +263,66 @@ def test_pairgen_never_broadcasts_full_size_table(spark):
         )
     ]
     assert not offenders, f"unfiltered size-table broadcast at {offenders}"
+
+
+def test_cross_corpus_broadcasts_only_filtered_head(spark):
+    """cross_corpus_near_duplicates always broadcast-hints its per-key
+    size head.  Every BroadcastExchange in its plan must reach the per-side
+    ``_cn``/``_rn`` aggregates only through a Filter ``_cn``/``_rn > N``
+    (the Zipf head), never a raw per-side aggregate, and the head must in
+    fact be broadcast.  The tree is read from the formatted plan's
+    indentation: a child line's marker sits 3 columns right of its
+    parent's."""
+    import re
+
+    from semantic_entity_matching_spark.operators.dedup import (
+        cross_corpus_near_duplicates,
+    )
+
+    text = "the quick brown fox jumps over the lazy dog near the river"
+    corpus = spark.createDataFrame(
+        [(i, f"{text} w{i % 5}") for i in range(40)], "doc_id bigint, text string"
+    )
+    ref = spark.createDataFrame([(100, text)], "ref_id bigint, text string")
+    df = cross_corpus_near_duplicates(corpus, ref, jaccard_threshold=0.8)
+    explained = df._jdf.queryExecution().explainString(  # noqa: SLF001
+        spark._jvm.org.apache.spark.sql.execution.ExplainMode.fromString(
+            "formatted"
+        )
+    )
+    tree, _, details = explained.partition("\n\n")
+    children: dict[int, list[int]] = {}
+    stack: list[int] = []
+    for line in tree.splitlines():
+        m = re.search(r"\((\d+)\)\s*$", line)
+        if not m:
+            continue
+        marker = re.search(r"[+:]- ", line)
+        depth = marker.start() // 3 + 1 if marker else 0
+        del stack[depth:]
+        if stack:
+            children.setdefault(stack[-1], []).append(int(m.group(1)))
+        stack.append(int(m.group(1)))
+    detail = {}
+    for blk in details.split("\n\n"):
+        m = re.match(r"\((\d+)\)\s+(\S+)", blk.strip())
+        if m:
+            detail[int(m.group(1))] = (m.group(2), blk)
+
+    def reaches(n, raw: bool) -> bool:
+        # raw=True: an unfiltered _cn/_rn aggregate below n;
+        # raw=False: a head Filter below n
+        node, blk = detail[n]
+        if node == "Filter" and re.search(r"_[cr]n#\d+L? > \d+", blk):
+            return not raw
+        if raw and node == "HashAggregate" and re.search(r"AS _[cr]n#", blk):
+            return True
+        return any(reaches(c, raw) for c in children.get(n, []))
+
+    bx = [n for n, (node, _) in detail.items() if node == "BroadcastExchange"]
+    offenders = [n for n in bx if reaches(n, raw=True)]
+    assert not offenders, f"raw per-side size aggregate broadcast at {offenders}"
+    assert any(reaches(n, raw=False) for n in bx), "size head not broadcast"
 
 
 def test_block_cap_drops_mega_blocks(spark):

@@ -122,20 +122,30 @@ def test_vocabulary_cap_filters_universe(spark):
 
 
 def test_hot_token_salting_identical_output(spark):
-    # force every token hot (threshold 0) — salted fan-out must not change
-    # the result set
-    base = containment_near_duplicates(
-        _docs(spark, _ROWS), containment_threshold=0.9
+    # 'hub' is in 32 docs, over the hot-key threshold of 20, so its probe
+    # and index rows go through the salted join (ceil(32/20) = 2 salts).
+    # The docs are so short that 'hub' sits in the probe prefixes: every
+    # prefix at 0.5, and the one-token 'just' doc's at 1.0.  The result
+    # must still be the brute-force containment set, with exact values.
+    from semantic_entity_matching_spark.operators.pairs import (
+        HOT_KEY_THRESHOLD,
     )
-    salted = containment_near_duplicates(
-        _docs(spark, _ROWS),
-        containment_threshold=0.9,
-        hot_token_threshold=0,
-        n_salts=4,
-    )
-    assert {tuple(r) for r in base.collect()} == {
-        tuple(r) for r in salted.collect()
-    }
+
+    rows = [(f"h{i:02d}", f"hub u{i}") for i in range(30)]
+    rows += [("just", "hub"), ("big", "hub u0 u1 u2"), ("solo", "zzz")]
+    assert sum("hub" in _toks(t) for _, t in rows) > HOT_KEY_THRESHOLD
+    tk = {d: _toks(t) for d, t in rows}
+    for t in (0.5, 1.0):
+        out = {
+            (r.id_a, r.id_b): r.containment
+            for r in containment_near_duplicates(
+                _docs(spark, rows), containment_threshold=t
+            ).collect()
+        }
+        assert set(out) == _truth(rows, t), f"threshold {t}"
+        for (a, b), c in out.items():
+            want = len(tk[a] & tk[b]) / min(len(tk[a]), len(tk[b]))
+            assert c == want
 
 
 def test_threshold_validation(spark):

@@ -11,7 +11,7 @@ from semantic_entity_matching_spark.operators.dedup import (
 )
 from semantic_entity_matching_spark.operators.pairs import PairGenConfig
 
-_CFG = PairGenConfig(max_block_size=1_000_000, hot_block_threshold=4, n_salts=4)
+_CFG = PairGenConfig(max_block_size=1_000_000, hot_block_threshold=4)
 
 _BASE = (
     "the quick brown fox jumps over the lazy dog near the riverbank "
@@ -75,7 +75,7 @@ def test_block_cap_drops_boilerplate_keys_both_sides(spark):
         corpus,
         ref,
         jaccard_threshold=0.9,
-        pairgen=PairGenConfig(max_block_size=3, hot_block_threshold=2, n_salts=4),
+        pairgen=PairGenConfig(max_block_size=3, hot_block_threshold=2),
     )
     assert capped.count() == 0
     uncapped = cross_corpus_near_duplicates(
@@ -85,34 +85,40 @@ def test_block_cap_drops_boilerplate_keys_both_sides(spark):
 
 
 def test_partition_and_salt_invariance(spark):
+    # 30 corpus rows in 3 one-token variants of one page: their shared
+    # band keys hold 30 > 20 corpus rows, so the default config salts them
+    # (ceil(30/20) = 2 salts) by input size alone.  The matches must be
+    # the brute-force cross-Jaccard set under any partitioning and also
+    # with every key salted up to the parallelism cap.
     rows = [
-        (i, _BASE.replace("village", f"village{i % 3}")) for i in range(1, 21)
+        (i, _BASE.replace("village", f"village{i % 3}")) for i in range(1, 31)
     ]
+    refs = [(100 + i, _BASE) for i in range(3)]
+    truth = sorted(
+        (d, r, round(jaccard_py(dt, rt), 9))
+        for d, dt in rows
+        for r, rt in refs
+        if jaccard_py(dt, rt) >= 0.8
+    )
+    assert len(truth) == len(rows) * len(refs)
     corpus = _corpus(spark, rows)
-    ref = _corpus(
-        spark, [(100 + i, _BASE) for i in range(3)], idc="ref_id"
-    )
-    base = sorted(
-        (r.doc_id, r.ref_id, round(r.jaccard, 9))
-        for r in cross_corpus_near_duplicates(
-            corpus, ref, jaccard_threshold=0.8, pairgen=_CFG
-        ).collect()
-    )
-    assert base
-    for cfg in (
-        PairGenConfig(max_block_size=1_000_000, hot_block_threshold=1, n_salts=7),
-        PairGenConfig(max_block_size=1_000_000, hot_block_threshold=50, n_salts=2),
+    ref = _corpus(spark, refs, idc="ref_id")
+    for c, r, cfg in (
+        (corpus, ref, PairGenConfig()),
+        (corpus.repartition(5), ref.repartition(2), PairGenConfig()),
+        (
+            corpus.repartition(3),
+            ref,
+            PairGenConfig(max_block_size=1_000_000, hot_block_threshold=1),
+        ),
     ):
-        again = sorted(
-            (r.doc_id, r.ref_id, round(r.jaccard, 9))
-            for r in cross_corpus_near_duplicates(
-                corpus.repartition(5),
-                ref.repartition(2),
-                jaccard_threshold=0.8,
-                pairgen=cfg,
+        got = sorted(
+            (m.doc_id, m.ref_id, round(m.jaccard, 9))
+            for m in cross_corpus_near_duplicates(
+                c, r, jaccard_threshold=0.8, pairgen=cfg
             ).collect()
         )
-        assert again == base
+        assert got == truth
 
 
 def test_distinct_id_column_names(spark):

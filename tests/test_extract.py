@@ -64,22 +64,34 @@ def test_filter_nan_matches_reference():
 
 
 def test_canonical_text_udf_matches_python(spark):
+    # beyond strings: a nullable int (a pandas batch holding one of its
+    # nulls would turn it into floats), booleans, arrays (empty = valid)
+    # and doubles (NaN = invalid); one partition and four must agree, so
+    # no row's rendering depends on which other rows share its batch
     rows = [
-        ("https://a", "Blood sugar, fasting", "en"),
-        ("https://b", None, "en"),
-        ("https://c", "x", None),
-        ("https://e", "tabs\tand\nnewlines", "zh"),
+        ("https://a", "Blood sugar, fasting", "en", 3, True, ["x", "y"], 1.5),
+        ("https://b", None, "en", None, None, None, None),
+        ("https://c", "x", None, 7, False, [], float("nan")),
+        ("https://e", "tabs\tand\nnewlines", "zh", 0, True, ["o'k"], 1e-05),
+        ("https://f", "", "en", -12, None, [None, "z"], 100.0),
     ]
-    df = spark.createDataFrame(rows, "url string, text string, lang string")
-    got = {
-        r["url"]: r["out"]
-        for r in df.select(
-            "url", canonical_text_udf(["url", "text", "lang"]).alias("out")
-        ).collect()
-    }
-    for url, text, lang in rows:
-        expected = canonical_entity_text({"url": url, "text": text, "lang": lang})
-        assert got[url] == expected, f"mismatch for {url!r}"
+    cols = ["url", "text", "lang", "n", "flag", "tags", "score"]
+    df = spark.createDataFrame(
+        rows,
+        "url string, text string, lang string, n int, flag boolean, "
+        "tags array<string>, score double",
+    )
+    for parts in (1, 4):
+        got = {
+            r["url"]: r["out"]
+            for r in df.repartition(parts)
+            .select("url", canonical_text_udf(cols).alias("out"))
+            .collect()
+        }
+        for row in rows:
+            expected = canonical_entity_text(dict(zip(cols, row)))
+            assert got[row[0]] == expected, f"mismatch for {row[0]!r}"
+    assert "n: 3\n" in got["https://a"] and "tags: []" in got["https://c"]
 
 
 def test_query_text_nan_semantics():

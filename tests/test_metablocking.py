@@ -63,7 +63,7 @@ def test_block_size_cap_purges_stopword_blocks(spark):
     # pairs; 'rare' appears in 2 -> the only edge.
     rows = [(i, f"the rare{'x' if i > 2 else ''} w{i}") for i in range(1, 6)]
     df = _docs(spark, rows)
-    cfg = PairGenConfig(max_block_size=4, hot_block_threshold=2, n_salts=4)
+    cfg = PairGenConfig(max_block_size=4, hot_block_threshold=2)
     edges = {
         (r.id_a, r.id_b): r.weight
         for r in block_graph_edges(token_blocks(df), config=cfg).collect()

@@ -5,6 +5,9 @@ matching ``oracle_sql()`` on DuckDB, then compares row count + sorted-column
 sorted-row values (floats with 1e-9 tolerance).  Usage:
 
     python tools/check_contract.py [sf_dir] [query ...]
+
+A query is named in full (``q21_minhash_neardup``) or by its number
+(``q21``); a name that matches no query is an error.
 """
 
 from __future__ import annotations
@@ -83,9 +86,13 @@ def main() -> int:
 
     qs = entrymod.queries()
     oracles = entrymod.oracle_sql()
+    unknown = only - set(qs) - {name.split("_")[0] for name in qs}
+    if unknown:
+        print(f"unknown queries: {','.join(sorted(unknown))}")
+        return 2
     failed = []
     for name, fn in qs.items():
-        if only and name not in only:
+        if only and name not in only and name.split("_")[0] not in only:
             continue
         t0 = time.time()
         try:

@@ -251,15 +251,28 @@ def main() -> None:
         else "rangepartitioning exchange present — global sort leaked in",
     )
 
-    # 10. candidate-pair generation is ONE fused self-join: the per-key
-    # dynamic salt count routes cold and hot keys through a single
-    # (block_key, _salt) join — the plan must contain NO Union node (the
-    # signature of the old two-branch cold/hot formulation) and exactly
-    # one join of the block table with itself.
+    # 10. every hot-key join is ONE salted join: pairs.salted_join routes
+    # cold and hot keys through a single (key, _salt) join via the per-key
+    # derived salt count.  Pair generation, the q78 cross-corpus A×B join
+    # and the q84 containment probe×index join must each plan with NO
+    # Union node (the signature of the old two-branch cold/hot
+    # formulation) and exactly one join keyed on _salt; pair generation
+    # also has exactly one shuffle join (the block table with itself).
     from semantic_entity_matching_spark.operators.pairs import (
         PairGenConfig,
         generate_candidate_pairs,
     )
+
+    def salted_joins(explained: str) -> int:
+        return sum(
+            1
+            for blk in explained.split("\n\n")
+            if _pa_re.match(r"\(\d+\)\s+\S*Join", blk.strip())
+            and any(
+                ln.startswith("Left keys") and "_salt" in ln
+                for ln in blk.splitlines()
+            )
+        )
 
     blocks_df = docs.selectExpr(
         "doc_id AS id", "substring(lower(text), 1, 8) AS block_key"
@@ -270,15 +283,26 @@ def main() -> None:
         )
     )
     n_joins = e_pr.count("SortMergeJoin") + e_pr.count("ShuffledHashJoin")
-    no_union = "Union" not in e_pr
-    check(
-        "pairgen_single_fused_join",
-        no_union and n_joins <= 1,
-        f"no Union, shuffle self-joins x{n_joins}"
-        if no_union and n_joins <= 1
-        else f"union={not no_union} shuffle_joins={n_joins} — cold/hot "
-        "branches have un-fused",
-    )
+    for name, e_sj in (
+        ("pairgen_single_fused_join", e_pr),
+        ("pairgen_single_fused_join_q78",
+         explained_of(E.q78_cross_corpus_dedup(spark, SF))),
+        ("pairgen_single_fused_join_q84",
+         explained_of(E.q84_containment_neardup(spark, SF))),
+    ):
+        no_union = "Union" not in e_sj
+        n_salted = salted_joins(e_sj)
+        ok_fj = no_union and n_salted == 1
+        if e_sj is e_pr:
+            ok_fj = ok_fj and n_joins <= 1
+        check(
+            name,
+            ok_fj,
+            f"no Union, _salt-keyed joins x{n_salted}"
+            if ok_fj
+            else f"union={not no_union} salt_joins={n_salted} "
+            f"shuffle_joins={n_joins} — cold/hot branches have un-fused",
+        )
 
     # 10b. pair generation never broadcasts the FULL block-size table —
     # that table is corpus-cardinality (one row per distinct key; ~35
