@@ -1513,10 +1513,10 @@ def _docs_with_media(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q31_media_features(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Multimodal feature extraction contract: the mapInPandas decode ->
     mean-pool plumbing (byte-budgeted Arrow chunks, only the small
-    feature vector crosses back) run with the deterministic fake decoder
-    (md5-tiled 8x8 RGB — the real decoder needs Pillow and stays honestly
-    stubbed).  Bucket k mean-pools 3 consecutive tiled-digest bytes;
-    returning round(val*3) recovers the exact integer byte sum, so the
+    feature vector crosses back) run with the deterministic stand-in
+    decoder (md5-tiled 8x8 RGB — a real decoder needs Pillow).  Bucket k
+    mean-pools 3 consecutive tiled-digest bytes; returning round(val*3)
+    recovers the exact integer byte sum, so the
     DuckDB twin reproduces it bit-exactly via the md5 nibble-fold.  NULL
     payloads yield zero features (the operator's null contract)."""
     from semantic_entity_matching_spark.operators.multimodal import (
@@ -1524,7 +1524,7 @@ def q31_media_features(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     media = _docs_with_media(spark, sf_dir)
-    feats = media_features(media, fake_decode=True)
+    feats = media_features(media)
     return feats.select(
         "media_id", F.posexplode("feature").alias("bucket", "val")
     ).select(
@@ -4728,7 +4728,7 @@ def oracle_sql() -> dict[str, str]:
     """
 
     # ------------------------------------------------------------------
-    # q31 — multimodal feature plumbing: the fake decoder tiles the md5
+    # q31 — multimodal feature plumbing: the stand-in decoder tiles the md5
     # digest 12x into 192 bytes (byte j = digest[j % 16]); bucket k
     # mean-pools bytes 3k..3k+2, and round(val*3) recovers the exact
     # integer sum — reproduced here with the md5 nibble-fold.  NULL text

@@ -307,10 +307,3 @@ def blended_score(
         + F.coalesce(jw_col, F.lit(0.0)) * F.lit(w["jaro_winkler"])
         + F.coalesce(lev_col, F.lit(0.0)) * F.lit(w["levenshtein"])
     )
-
-
-def knn_l2_score_expr(dist_sq: Column) -> Column:
-    """OpenSearch l2 knn score transform 1/(1+d^2) (space_type l2,
-    lib/setup_opensearch.py:18) — provided for score-compat only; rank order
-    is what the gold tests check."""
-    return F.lit(1.0) / (F.lit(1.0) + dist_sq)

@@ -33,11 +33,6 @@ def url_host(col: str | Column) -> Column:
     return F.lower(F.try_parse_url(_c(col), F.lit("HOST")))
 
 
-def url_path(col: str | Column) -> Column:
-    """Path component of a URL (no query/fragment); NULL on garbage."""
-    return F.try_parse_url(_c(col), F.lit("PATH"))
-
-
 # Multi-label public suffixes for the registered-domain heuristic: the
 # common ccTLD second-level registries.  A full Public Suffix List lookup
 # is a broadcast-join against the published PSL table at scale; this
@@ -155,17 +150,6 @@ def canonical_url_dedup(
         .withColumn("_rn", F.row_number().over(w))
         .where(F.col("_rn") == 1)
         .drop("_rn")
-    )
-
-
-def with_host_columns(
-    df: DataFrame, url_col: str = "url",
-    host_col: str = "host", domain_col: str = "domain",
-) -> DataFrame:
-    """Append ``host`` + registered ``domain`` columns — pure projection."""
-    host = url_host(url_col)
-    return df.withColumn(host_col, host).withColumn(
-        domain_col, registered_domain(host)
     )
 
 

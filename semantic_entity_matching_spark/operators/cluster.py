@@ -8,9 +8,11 @@ propagation.
 
 Scale-safe formulation: both stars are expressed with groupBy(min) + join —
 NO collect_list (a hot node's neighborhood never has to fit in one task's
-memory) and no driver-side state.  Each superstep is optionally checkpointed
-(Parquet snapshot, resumable) which also truncates the lineage chain that
-iterative DataFrame jobs otherwise accumulate.
+memory) and no driver-side state.  Every superstep's edge set goes through
+:func:`plans.checkpoint.materialize`, which truncates the lineage chain that
+iterative DataFrame jobs otherwise accumulate: as a ``cc_edges`` snapshot
+(resumable) when a ``CheckpointManager`` is given, else as an in-memory
+local checkpoint.
 
 Node ids are compared with the column's natural ordering (strings:
 lexicographic) — any orderable id type works.
@@ -21,7 +23,10 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from semantic_entity_matching_spark.plans.checkpoint import CheckpointManager
+from semantic_entity_matching_spark.plans.checkpoint import (
+    CheckpointManager,
+    materialize,
+)
 
 
 def _symmetrize(edges: DataFrame) -> DataFrame:
@@ -101,6 +106,8 @@ def _signature(edges: DataFrame) -> tuple[int, int]:
 # order preserves codepoint order) — pinned by pytest equality on random
 # graphs.
 CC_DRIVER_EDGE_BOUND = 200_000
+# the snapshot table the supersteps commit to, and resume from
+CC_CHECKPOINT_TABLE = "cc_edges"
 
 
 def _driver_union_find(edges: DataFrame) -> DataFrame:
@@ -151,17 +158,15 @@ def connected_components(
     edges: DataFrame,
     max_iterations: int = 20,
     checkpoint: CheckpointManager | None = None,
-    checkpoint_table: str = "cc_edges",
     resume: bool = False,
     n_edges: int | None = None,
-    driver_edge_bound: int = CC_DRIVER_EDGE_BOUND,
 ) -> DataFrame:
     """edges(id_a, id_b) -> assignments(id, component) where component is the
     minimum id in each connected component.
 
     With ``checkpoint`` set, every superstep's edge set is committed as a
-    snapshot; ``resume=True`` restarts from the latest committed superstep
-    (kill-and-resume safe, per north_rule).
+    ``CC_CHECKPOINT_TABLE`` snapshot; ``resume=True`` restarts from the
+    latest committed superstep (kill-and-resume safe, per north_rule).
 
     ``n_edges`` (when the caller already knows the edge count — run_pipeline
     does, from the edges stage counter) enables the exact driver union-find
@@ -170,27 +175,21 @@ def connected_components(
     """
     spark = edges.sparkSession
     start_step = 0
-    if checkpoint is not None and resume and checkpoint.exists(checkpoint_table):
-        start_step = (checkpoint.latest_step(checkpoint_table) or 0) + 1
-        cur = checkpoint.read(checkpoint_table)
+    if checkpoint is not None and resume and checkpoint.exists(CC_CHECKPOINT_TABLE):
+        start_step = (checkpoint.latest_step(CC_CHECKPOINT_TABLE) or 0) + 1
+        cur = checkpoint.read(CC_CHECKPOINT_TABLE)
     else:
-        if n_edges is not None and n_edges <= driver_edge_bound:
+        if n_edges is not None and n_edges <= CC_DRIVER_EDGE_BOUND:
             return _driver_union_find(edges)
         cur = edges.select("id_a", "id_b").distinct()
 
     prev_sig: tuple[int, int] | None = None
     for step in range(start_step, start_step + max_iterations):
-        cur = _small_star(_large_star(cur))
+        cur = materialize(
+            _small_star(_large_star(cur)), CC_CHECKPOINT_TABLE, checkpoint, step
+        )
         if checkpoint is not None:
-            checkpoint.write(
-                checkpoint_table,
-                cur,
-                step=step,
-                counters={"cc_superstep": 1},
-            )
-            cur = checkpoint.read(checkpoint_table)  # cut lineage via disk
-        else:
-            cur = cur.localCheckpoint(eager=True)  # cut lineage in memory
+            checkpoint.add_counter("cc_superstep", 1)
         sig = _signature(cur)
         if sig == prev_sig:
             break

@@ -46,6 +46,7 @@ from semantic_entity_matching_spark.operators.tokensets import (
     overlap_verify,
     token_sets,
 )
+from semantic_entity_matching_spark.plans.checkpoint import materialize
 
 
 # ---------------------------------------------------------------------------
@@ -113,7 +114,8 @@ def minhash_near_duplicates(
     the block self-join as annotations and provably-below-threshold pairs
     are pruned BEFORE the pair-dedup shuffle ever carries them (at sf0.1:
     5.7M -> 2.9M rows) and before any token array is joined — zero recall
-    loss.  Eager at construction: see :func:`tokensets.token_sets`."""
+    loss.  Eager at construction: see
+    :func:`plans.checkpoint.materialize`."""
     lsh = lsh or LSHConfig()
     # single-split corpora would run the signature pass (and the shared
     # tokenization below) in one task; no-op when the scan is parallel
@@ -126,11 +128,11 @@ def minhash_near_duplicates(
     # whole upstream subtree: without a lineage cut the mapInPandas
     # signature pass (the most expensive Python stage of this operator)
     # ran FOUR times per query (4 MapInPandas nodes over the same scan in
-    # the physical plan).  An eager localCheckpoint materializes the
-    # narrow (id, block_key) rows once; every downstream consumer reads
-    # the cached RDD (freed by the ContextCleaner when the plan dies).
-    # run_pipeline gets the same effect from its stage checkpoints.
-    blocks = blocks.localCheckpoint(eager=True)
+    # the physical plan).  The eager cut materializes the narrow
+    # (id, block_key) rows once; every downstream consumer reads the
+    # cached RDD (freed by the ContextCleaner when the plan dies).
+    # run_pipeline gets the same effect from its stage cuts.
+    blocks = materialize(blocks, "minhash_blocks")
     # ONE token-set table serves the size annotations on both pair sides
     # and both verify sides
     sets = token_sets(df, id_col, _distinct_tokens(text_col))
@@ -197,7 +199,8 @@ def cross_corpus_near_duplicates(
     Verification is the kernel's true unigram Jaccard
     (:func:`tokensets.overlap_verify`); banding is candidate generation
     only, so at recall-1 thresholds the output is the exact cross-corpus
-    near-dup set.  Eager at construction: see :func:`tokensets.token_sets`.
+    near-dup set.  Eager at construction: see
+    :func:`plans.checkpoint.materialize`.
     """
     lsh = lsh or LSHConfig()
     cfg = pairgen or PairGenConfig()
@@ -213,19 +216,17 @@ def cross_corpus_near_duplicates(
     # each side's key table feeds its Zipf-head aggregate AND the block
     # join — cut lineage once per side so the Python signature pass runs
     # once, not once per consumer
-    cb = (
+    cb = materialize(
         minhash_block_keys(
             corpus, id_col=corpus_id, text_col=text_col, config=lsh
-        )
-        .select(F.col(corpus_id).alias("_ida"), "block_key")
-        .localCheckpoint(eager=True)
+        ).select(F.col(corpus_id).alias("_ida"), "block_key"),
+        "cross_corpus_blocks",
     )
-    rb = (
+    rb = materialize(
         minhash_block_keys(
             reference, id_col=ref_id, text_col=rtext, config=lsh
-        )
-        .select(F.col(ref_id).alias("_idb"), "block_key")
-        .localCheckpoint(eager=True)
+        ).select(F.col(ref_id).alias("_idb"), "block_key"),
+        "cross_reference_blocks",
     )
 
     annot_threshold = min(cfg.hot_block_threshold, cfg.max_block_size)
@@ -311,7 +312,7 @@ def cross_corpus_dedup(
     (schema = the corpus schema, untouched).  Matches -> one distinct id
     projection -> LEFT ANTI join; null/blank corpus rows emit no band
     keys, match nothing, and survive.  Eager at construction: see
-    :func:`tokensets.token_sets`."""
+    :func:`plans.checkpoint.materialize`."""
     matches = cross_corpus_near_duplicates(
         corpus,
         reference,
@@ -370,7 +371,8 @@ def ngram_jaccard_verify(
     only the cheap per-doc counts — their arrays are never joined, and no
     pair with jaccard >= min_jaccard is ever lost.  The pruned pairs are
     simply absent from the output (they could only ever carry jaccard <
-    min_jaccard).  Eager at construction: see :func:`tokensets.token_sets`."""
+    min_jaccard).  Eager at construction: see
+    :func:`plans.checkpoint.materialize`."""
     sets = token_sets(records, id_col, _distinct_tokens(text_col))
     if min_jaccard is not None and min_jaccard > 0.0:
         # counts-only prefilter join: (id, _n) is a handful of bytes per
@@ -474,7 +476,7 @@ def simhash_near_duplicates(
     hashed = with_simhash(df, id_col, text_col).select(id_col, "simhash")
     # the band self-join below re-executes its upstream once per side:
     # cut lineage so the Python simhash pass runs once, not twice
-    hashed = hashed.localCheckpoint(eager=True)
+    hashed = materialize(hashed, "simhash")
     width = 64 // n_bands
     bands = hashed.select(
         F.col(id_col),

@@ -10,7 +10,7 @@ from __future__ import annotations
 
 from dataclasses import dataclass
 
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 
@@ -202,21 +202,6 @@ def bcubed_metrics(
             6,
         ).alias("bcubed_f1"),
     )
-
-
-def rank_results(
-    scored: DataFrame,
-    query_col: str = "id_a",
-    score_col: str = "score",
-    candidate_col: str = "id_b",
-) -> DataFrame:
-    """1-based rank of candidates per query, reference semantics (W1):
-    score desc; tiebreak by candidate id asc — deterministic, unlike
-    OpenSearch's internal-doc-order ties (SURVEY §2.5)."""
-    w = Window.partitionBy(query_col).orderBy(
-        F.desc(score_col), F.asc(candidate_col)
-    )
-    return scored.withColumn("rank", F.row_number().over(w))
 
 
 def top_k_metric(ranked_gold: DataFrame, k: int, rank_col: str = "rank") -> float:

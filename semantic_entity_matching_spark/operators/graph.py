@@ -33,6 +33,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from semantic_entity_matching_spark.plans.checkpoint import materialize
+
 
 def pagerank(
     edges: DataFrame,
@@ -57,17 +59,17 @@ def pagerank(
     if not 0 < damping_num < damping_den:
         raise ValueError("need 0 < damping_num < damping_den")
 
-    e = (
+    e = materialize(
         edges.select(F.col(src).alias("src"), F.col(dst).alias("dst"))
         .where(F.col("src").isNotNull() & F.col("dst").isNotNull())
-        .distinct()
-        .localCheckpoint()
+        .distinct(),
+        "pagerank_edges",
     )
-    nodes = (
+    nodes = materialize(
         e.select(F.col("src").alias("node"))
         .unionByName(e.select(F.col("dst").alias("node")))
-        .distinct()
-        .localCheckpoint()
+        .distinct(),
+        "pagerank_nodes",
     )
     n = nodes.count()
     if n == 0:
@@ -76,7 +78,9 @@ def pagerank(
             F.lit(0).cast("bigint").alias("rank_scaled"),
             F.lit(0.0).alias("rank"),
         )
-    outdeg = e.groupBy("src").agg(F.count(F.lit(1)).alias("deg")).localCheckpoint()
+    outdeg = materialize(
+        e.groupBy("src").agg(F.count(F.lit(1)).alias("deg")), "pagerank_outdeg"
+    )
 
     teleport = ((scale * (damping_den - damping_num)) // damping_den) // n
     r = nodes.withColumn("r", F.lit(int(scale // n)).cast("bigint"))
@@ -97,9 +101,9 @@ def pagerank(
             .collect()[0]["d"]
         )
         share = int(dang) // n
-        r = (
-            nodes.join(inflow, "node", "left")
-            .select(
+        # cut superstep lineage, exactly like CC
+        r = materialize(
+            nodes.join(inflow, "node", "left").select(
                 "node",
                 (
                     F.lit(int(teleport))
@@ -108,8 +112,8 @@ def pagerank(
                         f" + CAST({share} AS BIGINT)) div {int(damping_den)}"
                     )
                 ).cast("bigint").alias("r"),
-            )
-            .localCheckpoint()  # cut superstep lineage, exactly like CC
+            ),
+            "pagerank_ranks",
         )
     return r.select(
         "node",

@@ -61,6 +61,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from semantic_entity_matching_spark.plans.checkpoint import materialize
 from .pairs import PairGenConfig, block_pair_stream, block_sizes
 
 ARCS_SCALE = 10**6
@@ -208,5 +209,5 @@ def meta_block(
     # the pruners consume the edge table 2-3 times (incident-weight union
     # sides + the final join); without a lineage cut each consumer re-runs
     # the whole salted pair stream and its aggregate
-    edges = edges.localCheckpoint(eager=True)
+    edges = materialize(edges, "block_graph_edges")
     return weighted_edge_prune(edges) if prune == "wep" else weighted_node_prune(edges)

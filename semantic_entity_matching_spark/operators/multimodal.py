@@ -1,10 +1,10 @@
 """Multimodal column plumbing: image/audio/video as opaque binary + metadata.
 
-The decode step itself is STUBBED (image/audio libs are not in this
-container — ``decode_image_batch`` raises NotImplementedError unless the
-deterministic fake is requested), but everything Spark-side is real and
-tested: schema, partition-parallel ``mapInPandas`` batching, UDF
-signatures, and byte-budget-aware batch shaping.
+The decode step is a deterministic stand-in (``decode_image_batch`` tiles
+each payload's md5 digest into an image; no image library is a
+dependency), but everything Spark-side is real and tested: schema,
+partition-parallel ``mapInPandas`` batching, UDF signatures, and
+byte-budget-aware batch shaping.
 
 At 100 TB the rules encoded here:
 * binary payloads ride in their own column and are NEVER a shuffle key;
@@ -52,15 +52,11 @@ class MediaBatchConfig:
     feature_dim: int = 64
 
 
-def decode_image_batch(payloads: pd.Series, fake: bool = False) -> np.ndarray:
-    """payload bytes -> (n, H, W, 3) uint8.  Real decode needs Pillow/cv2
-    (not installed here).  ``fake=True`` yields a deterministic 8x8 RGB
-    derived from the payload hash — stable plumbing for tests."""
-    if not fake:
-        raise NotImplementedError(
-            "image decode requires Pillow/opencv on the cluster; pass "
-            "fake=True for the deterministic test decoder"
-        )
+def decode_image_batch(payloads: pd.Series) -> np.ndarray:
+    """payload bytes -> (n, 8, 8, 3) uint8.  A STAND-IN for a real image
+    decoder (which needs Pillow/cv2): each image is the payload's md5
+    digest tiled into 8x8 RGB, so the same payload always yields the same
+    pixels.  NULL payloads yield all-zero images."""
     out = np.zeros((len(payloads), 8, 8, 3), dtype=np.uint8)
     for i, p in enumerate(payloads):
         if p is None:
@@ -73,7 +69,6 @@ def decode_image_batch(payloads: pd.Series, fake: bool = False) -> np.ndarray:
 def media_features(
     media: DataFrame,
     config: MediaBatchConfig | None = None,
-    fake_decode: bool = True,
 ) -> DataFrame:
     """-> (media_id, feature array<float>) via mapInPandas.
 
@@ -89,7 +84,7 @@ def media_features(
             rows_per_chunk = max(cfg.batch_budget_bytes // avg, 1)
             for lo in range(0, len(batch), rows_per_chunk):
                 chunk = batch.iloc[lo : lo + rows_per_chunk]
-                imgs = decode_image_batch(chunk["payload"], fake=fake_decode)
+                imgs = decode_image_batch(chunk["payload"])
                 flat = imgs.reshape(len(chunk), -1).astype(np.float32)
                 # mean-pool into feature_dim buckets (stand-in for a model)
                 pooled = np.stack(

@@ -42,6 +42,7 @@ import numpy as np
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from semantic_entity_matching_spark.plans.checkpoint import materialize
 
 # ---------------------------------------------------------------------------
 # Golden-record survivorship
@@ -582,7 +583,7 @@ def fs_edges_from_features(
     # over every candidate pair) and is consumed again by the scoring
     # pass and by everything downstream of the returned edges — without
     # this it would recompute per consumer.
-    feats = feats.localCheckpoint()
+    feats = materialize(feats, "fs_features")
 
     def _fit(src: DataFrame):
         return estimate_fs_params(
@@ -692,7 +693,7 @@ def fs_edges_deferred(
         return src
 
     cheap_cols = [c for c in feature_cols if c != deferred_col]
-    feats = add_g(feats, cheap_cols).localCheckpoint()
+    feats = materialize(add_g(feats, cheap_cols), "fs_cheap_features")
     empty_edges = feats.where(F.lit(False)).select(
         *id_cols, F.lit(0.0).alias("score")
     )
@@ -746,9 +747,10 @@ def fs_edges_deferred(
     w_cheap = F.lit(0.0)
     for c in cheap_cols:
         w_cheap = w_cheap + _binary_weight_expr(by_col[f"g_{c}"])
-    survivors = feats.where(
-        w_cheap + F.lit(w_def_max) >= F.lit(w_min - 1e-9)
-    ).localCheckpoint()
+    survivors = materialize(
+        feats.where(w_cheap + F.lit(w_def_max) >= F.lit(w_min - 1e-9)),
+        "fs_jw_survivors",
+    )
     if counters is not None:
         # pass n_pairs when the caller already counted the candidates
         # (the pipeline's reranked-stage counter) — saves one scan job
@@ -1003,19 +1005,18 @@ def one_to_one_match(
     """
     if max_rounds < 1:
         raise ValueError(f"max_rounds must be >= 1, got {max_rounds}")
-    remaining = (
+    remaining = materialize(
         pairs.select(
             F.col(id_a).alias("id_a"),
             F.col(id_b).alias("id_b"),
             F.col(score_col).cast("double").alias("score"),
-        )
-        .where(
+        ).where(
             F.col("id_a").isNotNull()
             & F.col("id_b").isNotNull()
             & F.col("score").isNotNull()
             & ~F.isnan("score")
-        )
-        .localCheckpoint(eager=False)
+        ),
+        "one_to_one_pool",
     )
     spark = pairs.sparkSession
     matched = spark.createDataFrame([], "id_a string, id_b string, score double")
@@ -1049,13 +1050,13 @@ def one_to_one_match(
             )
             .select("id_a", "id_b", F.col("r.score").alias("score"))
         )
-        matched = matched.unionByName(mutual).localCheckpoint(eager=True)
+        matched = materialize(matched.unionByName(mutual), "one_to_one_matched")
         taken = matched
-        remaining = (
+        remaining = materialize(
             remaining.join(taken.select("id_a"), "id_a", "left_anti")
             .join(taken.select("id_b"), "id_b", "left_anti")
-            .select("id_a", "id_b", "score")
-            .localCheckpoint(eager=True)
+            .select("id_a", "id_b", "score"),
+            "one_to_one_pool",
         )
     if not remaining.isEmpty():
         raise RuntimeError(

@@ -70,7 +70,7 @@ def prefix_filter_jaccard_join(
     Tokenization, order and verification are the token-set kernel's, so
     results are directly comparable with the MinHash path (q21) at the
     same threshold.  Eager at construction: see
-    :func:`tokensets.token_sets`.
+    :func:`plans.checkpoint.materialize`.
     """
     if not 0.0 < threshold <= 1.0:
         raise ValueError(f"threshold must be in (0, 1], got {threshold}")
@@ -186,7 +186,7 @@ def edit_distance_join(
     bounded by the alphabet only for the first population; a corpus heavy
     in long repetitive strings pays |stratum| x |±k length window| in
     candidates there.  Eager at construction: see
-    :func:`tokensets.token_sets`.
+    :func:`plans.checkpoint.materialize`.
     """
     if k < 0:
         raise ValueError(f"k must be >= 0, got {k}")

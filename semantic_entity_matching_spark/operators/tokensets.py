@@ -30,6 +30,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from semantic_entity_matching_spark.plans.checkpoint import materialize
+
 
 def _distinct_tokens(text_col: str) -> Column:
     """THE tokenization every jaccard path shares (token sets, ratio
@@ -97,19 +99,19 @@ def token_sets(
     many records from the UNIVERSE — sets, sizes and every downstream step see the filtered
     vocabulary, so results stay exact w.r.t. the filtered sets.
 
-    **Eager:** the table is cut with an eager local checkpoint when this
-    is called, so every operator built on it runs its tokenization
-    job at construction time, not when its result is consumed — and does
-    it once, however many join sides read the sets.  The cut is not
-    replicated: losing an executor loses its blocks and fails downstream
-    jobs instead of recomputing them."""
+    **Eager:** the table is cut by :func:`plans.checkpoint.materialize`
+    when this is called, so every operator built on it runs its
+    tokenization job at construction time, not when its result is
+    consumed — and does it once, however many join sides read the sets.
+    The cut's other properties (not replicated, not fault-tolerant) are
+    the helper's contract."""
     sets = df.select(
         F.col(id_col).alias("_id"),
         F.transform(tokens, lambda x: F.xxhash64(x)).alias("_tok"),
     )
     if rarest_first:
         sets = _rarest_first(sets, max_token_df)
-    return sets.withColumn("_n", F.size("_tok")).localCheckpoint(eager=True)
+    return materialize(sets.withColumn("_n", F.size("_tok")), "token_sets")
 
 
 def overlap_verify(

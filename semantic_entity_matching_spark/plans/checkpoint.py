@@ -1,18 +1,21 @@
-"""Snapshot-table checkpointing with lineage counters.
+"""Snapshot-table checkpointing with lineage counters, and the one
+lineage-cut helper (:func:`materialize`) every operator goes through.
 
 The north_rule requires every stage (and every CC superstep) to be
 resumable, with per-partition lineage and counters (pairs generated, pairs
-scored, edges emitted) recorded as table metadata.  On a cluster with the
-Iceberg runtime jar this maps to Iceberg tables + snapshot summary
-properties; that jar is not in this sandbox, so the default backend is a
-Parquet **snapshot directory**: each write lands in a new
-``step=<n>/data`` directory committed by atomically renaming a manifest —
-the same commit discipline (write-new-files, swap-pointer) Iceberg uses.
+scored, edges emitted) recorded as table metadata: each of those counters
+is the row count of a stage's snapshot, which its manifest records per
+data file and in total.  On a cluster with the Iceberg runtime jar this
+maps to Iceberg tables + snapshot summary properties; without that jar the
+default backend is a Parquet **snapshot directory**: each write lands in a
+new ``step=<n>/data`` directory committed by atomically renaming a
+manifest — the same commit discipline (write-new-files, swap-pointer)
+Iceberg uses.
 
 Layout::
 
     <base>/<table>/step=000003/data/*.parquet
-    <base>/<table>/step=000003/manifest.json   # counters, schema, rows
+    <base>/<table>/step=000003/manifest.json   # rows (total + per file), schema
     <base>/<table>/_latest.json                # atomic pointer to the
                                                # last committed step
 
@@ -75,17 +78,13 @@ class CheckpointManager:
         table: str,
         df: DataFrame,
         step: int | None = None,
-        counters: dict[str, int] | None = None,
-        count_as: str | None = None,
     ) -> dict[str, Any]:
         """Materialize ``df`` as the next snapshot of ``table``.
 
-        Returns the manifest.  ``counters`` are recorded in the manifest
-        (Iceberg analog: snapshot summary properties) and folded into the
-        run-level counter totals.  ``count_as`` names a counter that gets
-        the snapshot's own row count — the count comes from the already-
-        written parquet footers, so callers never need a separate
-        ``df.count()`` action (which would recompute the whole stage).
+        Returns the manifest.  Its ``rows`` is the snapshot's row count,
+        taken from the already-written parquet footers, so callers never
+        need a separate ``df.count()`` action (which would recompute the
+        whole stage).
         """
         prev = self.latest_step(table)
         if step is None:
@@ -110,25 +109,18 @@ class CheckpointManager:
         partition_rows = {
             os.path.basename(r["file"]): int(r["count"]) for r in per_file
         }
-        rows = sum(partition_rows.values())
-        counters = dict(counters or {})
-        if count_as:
-            counters[count_as] = rows
         manifest = {
             "table": table,
             "step": step,
-            "rows": rows,
+            "rows": sum(partition_rows.values()),
             "partition_rows": partition_rows,
             "schema": df.schema.jsonValue(),
-            "counters": dict(counters or {}),
             "committed_at": time.time(),
         }
         _atomic_write_json(os.path.join(step_dir, "manifest.json"), manifest)
         _atomic_write_json(
             os.path.join(self._table_dir(table), "_latest.json"), {"step": step}
         )
-        for k, v in (counters or {}).items():
-            self.add_counter(k, v)
         return manifest
 
     def read(self, table: str, step: int | None = None) -> DataFrame:
@@ -150,8 +142,58 @@ class CheckpointManager:
     def exists(self, table: str) -> bool:
         return self.latest_step(table) is not None
 
+    def drop(self, table: str) -> None:
+        """Forget every snapshot of ``table``.  The pointer goes first, so
+        a kill mid-delete leaves a table that no longer exists rather than
+        one that points at half-deleted files."""
+        ptr = os.path.join(self._table_dir(table), "_latest.json")
+        if os.path.exists(ptr):
+            os.remove(ptr)
+        shutil.rmtree(self._table_dir(table), ignore_errors=True)
+
     def write_run_summary(self) -> None:
         _atomic_write_json(
             os.path.join(self.base_dir, "_run_summary.json"),
             {"counters": self.counters, "written_at": time.time()},
         )
+
+
+def materialize(
+    df: DataFrame,
+    name: str,
+    checkpoint: CheckpointManager | None = None,
+    step: int | None = None,
+) -> DataFrame:
+    """Cut ``df``'s lineage: the one place the engine does so.
+
+    With ``checkpoint``, ``df`` is written as snapshot ``name`` (at
+    ``step`` when given) and the read-back is returned: durable, resumable
+    and bounded in executor memory, at one parquet round-trip.  Without
+    one, the result is an eager local checkpoint of ``df``.
+
+    The in-memory cut's contract, for every caller:
+
+    * **eager** — the job that computes ``df`` runs now, at the call, not
+      when the returned table is consumed, and runs once however many
+      consumers read the result;
+    * **not replicated** — the rows live in executor block storage
+      (memory, then disk) for the life of the plan that references them;
+    * **not fault-tolerant** — losing an executor loses its blocks, and
+      downstream jobs fail instead of recomputing them.  Fine for local
+      runs and benchmarks; on a cluster pass a ``CheckpointManager``.
+
+    Either way the cut's jobs carry ``name`` as their Spark job
+    description (the previous description is restored afterwards), so
+    every cut is a named job in the UI and event log.  The job group is
+    left alone.
+    """
+    sc = df.sparkSession.sparkContext
+    previous = sc.getLocalProperty("spark.job.description")
+    sc.setJobDescription(name)
+    try:
+        if checkpoint is None:
+            return df.localCheckpoint(eager=True)
+        manifest = checkpoint.write(name, df, step=step)
+        return checkpoint.read(name, manifest["step"])
+    finally:
+        sc.setLocalProperty("spark.job.description", previous)

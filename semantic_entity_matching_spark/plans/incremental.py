@@ -41,6 +41,7 @@ from dataclasses import dataclass
 from pyspark.sql import DataFrame, functions as F
 
 from semantic_entity_matching_spark.operators.cluster import update_components
+from semantic_entity_matching_spark.plans.checkpoint import materialize
 from semantic_entity_matching_spark.plans.pipeline import (
     MatchConfig,
     run_pipeline,
@@ -88,10 +89,9 @@ def run_incremental(
     try:
         # lineage cut: the cross-edge set feeds both the CC delta and a
         # counter job — don't score the batch twice
-        cross = (
-            match_edges(new_pages, index)
-            .select("id_a", "id_b")
-            .localCheckpoint(eager=True)
+        cross = materialize(
+            match_edges(new_pages, index).select("id_a", "id_b"),
+            "incremental_cross_edges",
         )
         intra_res = run_pipeline(new_pages, cfg, provider=provider)
         intra = intra_res.edges.select("id_a", "id_b")

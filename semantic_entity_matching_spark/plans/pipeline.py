@@ -38,12 +38,18 @@ from semantic_entity_matching_spark.functions.similarity import (
     levenshtein_similarity_expr,
 )
 from semantic_entity_matching_spark.operators.blocking import LSHConfig, all_block_keys
-from semantic_entity_matching_spark.operators.cluster import clusters_from_pairs
+from semantic_entity_matching_spark.operators.cluster import (
+    CC_CHECKPOINT_TABLE,
+    clusters_from_pairs,
+)
 from semantic_entity_matching_spark.operators.pairs import (
     PairGenConfig,
     generate_candidate_pairs,
 )
-from semantic_entity_matching_spark.plans.checkpoint import CheckpointManager
+from semantic_entity_matching_spark.plans.checkpoint import (
+    CheckpointManager,
+    materialize,
+)
 
 
 @dataclass
@@ -391,7 +397,10 @@ def rerank_pairs(
     )
 
 
-N_PIPELINE_STAGES = 7  # records, blocks, pairs, scored, reranked, edges, clusters
+PIPELINE_STAGES = (
+    "records", "blocks", "pairs", "scored", "reranked", "edges", "clusters",
+)
+N_PIPELINE_STAGES = len(PIPELINE_STAGES)
 
 
 def run_pipeline(
@@ -405,13 +414,15 @@ def run_pipeline(
     """Full pipeline.  With ``checkpoint``, each stage is committed and a
     re-run with ``resume=True`` skips every already-committed stage.
 
-    ALWAYS pass a ``CheckpointManager`` on a real cluster: the no-checkpoint
-    fallback cuts lineage with ``localCheckpoint(eager=True)``, which pins
-    every stage's output in executor storage (memory, then disk) for the
-    life of the job and is NOT fault-tolerant to executor loss — acceptable
-    for local tests and benchmarks, wrong at 100 TB.  The checkpointed path
-    costs one parquet round-trip per stage and buys resume + bounded
-    executor memory.
+    Every stage is cut by :func:`~.checkpoint.materialize`.  ALWAYS pass
+    a ``CheckpointManager`` on a real cluster: without one the cuts are
+    in-memory local checkpoints, which are eager, not replicated and not
+    fault-tolerant (the helper's contract) — acceptable for local tests and
+    benchmarks, wrong at 100 TB.  The checkpointed path costs one parquet
+    round-trip per stage and buys resume + bounded executor memory.  A
+    stage that is built rather than resumed drops every later stage's
+    snapshot (the CC supersteps included), so a resume never mixes two
+    runs' stages.
     """
     from semantic_entity_matching_spark.plans.reporting import NullReporter
 
@@ -441,40 +452,32 @@ def run_pipeline(
     counters: dict[str, int] = {}
     reporter = reporter or NullReporter()
     reporter.start_progress(total=N_PIPELINE_STAGES)
-    stage_idx = [0]
 
-    def _stage_inner(name: str, build, counter_of) -> DataFrame:
-        if checkpoint is not None:
-            if resume and checkpoint.exists(name):
-                df = checkpoint.read(name)
-                resumed = checkpoint.manifest(name).get("counters", {})
-                counters.update(resumed)
-                for k, v in resumed.items():  # keep run-summary totals complete
-                    checkpoint.add_counter(k, v)
-                reporter.on_message(f"stage {name}: resumed from checkpoint")
-                return df
-            df = build()
-            # ONE materialization: the snapshot write IS the action, and
-            # its row count comes from the written parquet footers — a
-            # separate df.count() here would recompute the whole stage
-            manifest = checkpoint.write(name, df, count_as=counter_of)
-            counters.update(manifest["counters"])
-            return checkpoint.read(name)
-        # no checkpoint dir: cut lineage in memory — each stage feeds several
-        # downstream consumers, so without this every stage recomputes its
-        # whole upstream chain (and the counter count() would double it).
-        df = build().localCheckpoint(eager=True)
-        if counter_of:
-            counters[counter_of] = df.count()
-        return df
-
-    def stage(name: str, build, counter_of=None) -> DataFrame:
-        stage_idx[0] += 1
+    def stage(name: str, build, counter: str) -> DataFrame:
         reporter.on_message(f"stage {name}")
-        df = _stage_inner(name, build, counter_of)
-        if counter_of and counter_of in counters:
-            reporter.on_message(f"stage {name}: {counter_of}={counters[counter_of]}")
-        reporter.on_progress(stage_idx[0])
+        if checkpoint is not None and resume and checkpoint.exists(name):
+            df = checkpoint.read(name)
+            reporter.on_message(f"stage {name}: resumed from checkpoint")
+        else:
+            if checkpoint is not None:
+                # a rebuilt stage makes every later snapshot stale (an
+                # earlier run's, on other input): drop them, so a kill
+                # before they are rewritten cannot resume from them
+                stale = PIPELINE_STAGES[PIPELINE_STAGES.index(name) + 1:]
+                if name != "clusters":  # which resumes from its supersteps
+                    stale += (CC_CHECKPOINT_TABLE,)
+                for table in stale:
+                    checkpoint.drop(table)
+            # each stage feeds several downstream consumers: without the
+            # cut every stage recomputes its whole upstream chain
+            df = materialize(build(), name, checkpoint)
+        if checkpoint is None:  # reads the cut blocks, not the stage's plan
+            counters[counter] = df.count()
+        else:  # the snapshot's count, from its parquet footers
+            counters[counter] = checkpoint.manifest(name)["rows"]
+            checkpoint.add_counter(counter, counters[counter])
+        reporter.on_message(f"stage {name}: {counter}={counters[counter]}")
+        reporter.on_progress(PIPELINE_STAGES.index(name) + 1)
         return df
 
     records = stage(

@@ -11,10 +11,10 @@ Two generators:
   variant process: positives = same-entity variant pairs, hard negatives =
   different entities sharing a block-ish prefix.
 
-* ``webpages_from_documents`` — Spark-side expansion of the driver's
-  ``documents`` parquet into the webpages shape at a multiplier, fully
-  distributed (explode + deterministic column transforms, no driver data) —
-  used by the benchmark so throughput numbers aren't bound by a driver loop.
+* ``synth_webpages_distributed`` — generated in Spark (mapInPandas, no
+  driver-side list) at web scale: near-duplicate variants of hashed-vocabulary
+  base texts, entity recoverable from the url — used by the benchmarks so
+  throughput numbers aren't bound by a driver loop.
 """
 
 from __future__ import annotations
@@ -24,7 +24,6 @@ from dataclasses import dataclass
 
 import numpy as np
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
 from pyspark.sql.types import (
     BinaryType,
     IntegerType,
@@ -163,47 +162,6 @@ def synth_webpages(
     return (
         spark.createDataFrame(pages, WEBPAGES_SCHEMA),
         spark.createDataFrame(gold, GOLD_PAIRS_SCHEMA),
-    )
-
-
-def webpages_from_documents(
-    spark: SparkSession,
-    sf_dir: str,
-    variants_per_doc: int = 4,
-) -> DataFrame:
-    """documents.parquet -> webpages shape, expanded ×variants, all in Spark.
-
-    Variant v=0 is the original text; v>0 apply deterministic, Catalyst-
-    expressible mutations (so the expansion itself is JVM-side and scales):
-    v%3==1 upper-cases the first 10 chars, v%3==2 drops the first word,
-    v%3==0 appends a marker token.  Duplicate structure is therefore known:
-    all variants of doc_id d belong to one true entity.
-    """
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
-    v = F.col("variant")
-    mutated = (
-        F.when(v == 0, F.col("text"))
-        .when(
-            v % 3 == 1,
-            F.concat(F.upper(F.substring("text", 1, 10)), F.expr("substring(text, 11)")),
-        )
-        .when(v % 3 == 2, F.regexp_replace(F.col("text"), r"^\S+\s*", ""))
-        .otherwise(F.concat(F.col("text"), F.lit(" rev"), v.cast("string")))
-    )
-    return (
-        docs.select(
-            "doc_id",
-            "text",
-            "lang",
-            F.explode(F.sequence(F.lit(0), F.lit(variants_per_doc - 1))).alias("variant"),
-        )
-        .select(
-            F.format_string("https://example.org/d%08d/v%d", F.col("doc_id"), v).alias("url"),
-            F.to_timestamp(F.lit("2024-01-01 00:00:00")).alias("warc_ts"),
-            F.encode(mutated, "utf-8").cast("binary").alias("html"),
-            mutated.alias("text"),
-            F.col("lang"),
-        )
     )
 
 

@@ -131,8 +131,9 @@ def test_checkpoint_resume(spark, corpus, tmp_path):
     assert resumed == baseline
     # resumed run reused the committed pair counts (lineage preserved)
     assert r2.counters["pairs_generated"] == r1.counters["pairs_generated"]
-    # manifests carry the counters (Iceberg snapshot-property analog)
-    assert cp2.manifest("pairs")["counters"]["pairs_generated"] > 0
+    # manifests carry the counters (Iceberg snapshot-property analog): a
+    # stage's counter is its snapshot's row count
+    assert cp2.manifest("pairs")["rows"] == r1.counters["pairs_generated"] > 0
 
 
 def test_checkpoint_resume_fs_mode(spark, corpus, tmp_path):
@@ -166,6 +167,40 @@ def test_checkpoint_resume_fs_mode(spark, corpus, tmp_path):
     r3 = run_pipeline(pages, cfg, checkpoint=cp3, resume=True)
     assert {(r["id"], r["component"]) for r in r3.clusters.collect()} == baseline
     assert r3.counters["edges_emitted"] == r1.counters["edges_emitted"]
+
+
+def test_resume_after_killed_fresh_run_ignores_older_snapshots(spark, tmp_path):
+    """A fresh (resume=False) run into a checkpoint dir that holds an
+    earlier run's snapshots, killed before its clusters commit, must not
+    leave that earlier run's later stages to be resumed: resume=True
+    returns exactly what an uninterrupted run on the new input returns."""
+    from semantic_entity_matching_spark.plans.reporting import NullReporter
+
+    class KillAt(NullReporter):
+        def on_message(self, *messages: str) -> None:
+            if messages == ("stage clusters",):
+                raise KeyboardInterrupt("killed before the clusters stage")
+
+    base = str(tmp_path / "run")
+    old_pages, _ = synth_webpages(spark, SynthConfig(n_entities=10, seed=1))
+    run_pipeline(old_pages, MatchConfig(), checkpoint=CheckpointManager(base, spark))
+
+    pages, _ = synth_webpages(spark, SynthConfig(n_entities=12, seed=2))
+    pages = pages.cache()
+    with pytest.raises(KeyboardInterrupt):
+        run_pipeline(
+            pages, MatchConfig(), checkpoint=CheckpointManager(base, spark),
+            reporter=KillAt(),
+        )
+    resumed = run_pipeline(
+        pages, MatchConfig(), checkpoint=CheckpointManager(base, spark),
+        resume=True,
+    )
+    fresh = run_pipeline(pages, MatchConfig())
+    got = sorted(tuple(r) for r in resumed.clusters.collect())
+    assert got == sorted(tuple(r) for r in fresh.clusters.collect())
+    assert {r[0] for r in got} == {r["url"] for r in pages.select("url").collect()}
+    pages.unpersist()
 
 
 def test_reporter_receives_stage_narrative(spark):

@@ -6,7 +6,6 @@ import pytest
 from pyspark.sql import functions as F
 
 from semantic_entity_matching_spark.operators.multimodal import (
-    decode_image_batch,
     frame_sample_plan,
     media_features,
 )
@@ -175,13 +174,6 @@ def test_media_features_plumbing(spark):
     assert {(r["media_id"], r["frame_ts_ms"]) for r in frames} == {
         ("m3", 0), ("m3", 1000), ("m3", 2000), ("m3", 3000)
     }
-
-
-def test_decode_stub_raises_without_fake():
-    import pandas as pd
-
-    with pytest.raises(NotImplementedError):
-        decode_image_batch(pd.Series([b"x"]), fake=False)
 
 
 # ---------------------------------------------------------------------------
