@@ -5,13 +5,14 @@ lib/opensearch/services/search_query_builder.py:46-62) with two Spark-native
 strategies:
 
 * ``brute_force_topk`` — exact cosine top-k: queries broadcast against the
-  corpus, one window per query.  Correctness baseline; O(|Q| x |C|) work
-  but embarrassingly parallel (corpus partitions never shuffle).
+  corpus, one pass over it that keeps a running per-query top-k in each
+  task, then one window per query.  Correctness baseline; O(|Q| x |C|)
+  work but embarrassingly parallel (corpus partitions never shuffle).
 * ``lsh_topk`` — scale path: random-hyperplane LSH buckets both sides;
   candidates only meet inside a bucket (equi-join), then exact cosine +
-  top-k.  Recall is tunable via (n_tables, n_bits); the reference's 2x
-  over-fetch knob (k = 2*size, search_query_builder.py:58) maps to
-  ``overfetch``.
+  top-k.  Recall is tunable via (n_tables, n_bits).  The reference's 2x
+  over-fetch (k = 2*size, search_query_builder.py:58) belongs to the
+  caller: ``search_and_rerank`` asks any retriever for size x overfetch.
 
 Both return (query_id, candidate_id, score, rank) with rank 1-based by
 (score desc, candidate_id asc) — deterministic tiebreak (SURVEY §2.5 W1).
@@ -26,7 +27,10 @@ import pandas as pd
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
-from semantic_entity_matching_spark.functions.similarity import cosine_udf
+from semantic_entity_matching_spark.functions.similarity import (
+    cosine_udf,
+    jaro_winkler_py,
+)
 
 
 def _rank_window(query_col: str) -> Window:
@@ -68,8 +72,22 @@ def ranked_topk(scored: DataFrame, k: int, query_col: str = "query_id") -> DataF
 # gates a driver-side collect the join form would broadcast anyway — 16k
 # queries x dim 1024 in float64 (exactness requires the wide accumulator
 # dtype) is a ~128 MB broadcast, within the join path's own broadcast
-# budget for the same table.
+# budget for the same table.  ``search.lexical_topk`` scores larger query
+# sides in chunks of this many queries.
 GROUPED_QUERY_BOUND = 16_384
+
+
+def _kth_per_query(q: np.ndarray, score: np.ndarray, nq: int, k: int) -> np.ndarray:
+    """The k-th best score of each query among the flat rows ``(q, score)``;
+    -inf for a query with fewer than k rows."""
+    kth = np.full(nq, -np.inf)
+    counts = np.bincount(q, minlength=nq)
+    has = counts >= k
+    if has.any():
+        ordered = score[np.lexsort((-score, q))]
+        starts = np.cumsum(counts) - counts
+        kth[has] = ordered[starts[has] + k - 1]
+    return kth
 
 
 def _grouped_brute_scores(
@@ -78,6 +96,10 @@ def _grouped_brute_scores(
     query_id: str,
     corpus_id: str,
     vec_col: str,
+    k: int | None = None,
+    exclude_self: bool = False,
+    score_round: int | None = None,
+    texts: tuple[str, str] | None = None,
 ) -> DataFrame | None:
     """(query_id, candidate_id, score) via ONE mapInPandas pass over the
     corpus, or None when the query side exceeds GROUPED_QUERY_BOUND.
@@ -86,64 +108,123 @@ def _grouped_brute_scores(
     through the cosine UDF — at 20 queries x 60k docs x dim 1024 that is
     ~5 GB crossing the JVM->Python boundary for ~250 MB of corpus vectors
     (measured: the dominant cost of the search/rerank bench query).  Here
-    the query matrix is sc.broadcast to every executor and each corpus
-    batch is scored against ALL queries with one float64
-    ``einsum("ij,kj->ik")`` — bit-identical to the per-pair
+    the query side is collected in one job and sc.broadcast to every
+    executor, and each corpus batch is scored against ALL queries with one
+    float64 ``einsum("ij,kj->ik")`` — bit-identical to the per-pair
     ``einsum("ij,ij->i")`` the pandas cosine UDF computes (verified
     empirically; same float64 dot/norm/divide per pair), so ranking and
     scores are unchanged.  Null corpus vectors are skipped exactly like
-    the join path's input null-filter; null query vectors likewise."""
-    q_rows = queries.select(
-        F.col(query_id).alias("query_id"), F.col(vec_col).alias("_qv")
-    ).take(GROUPED_QUERY_BOUND + 1)
+    the join path's input null-filter; null query vectors likewise.
+    ``exclude_self`` drops the rows whose ids are equal or null (the rows
+    Spark's ``query_id != candidate_id`` filter drops) inside the pass.
+
+    With ``k`` each scan task keeps, per query, only the rows whose raw
+    score is at least that task's k-th best minus a margin: 0 without
+    ``score_round``, ``2·10^-score_round`` with it (rounding moves a score
+    by at most half a unit, so no row the rounded (score desc,
+    candidate_id asc) top-k can pick falls below the margin).  The task
+    output is at most n_queries × (k + ties) rows, down from corpus ×
+    n_queries, and a superset of every row the final per-query top-k can
+    pick, whatever the partitioning.  Callers that remove rows AFTER the
+    scan (an ``exclude_pairs`` anti-join) must pass ``k=None``: the task
+    would otherwise hand over k rows that are all removed later and drop
+    the ones that should have taken their place.
+
+    ``texts=(query_text, corpus_text)`` adds ``rerank_score``, the
+    Jaro-Winkler similarity of the two texts (0.0 when either is null),
+    computed on each task's final survivors only: at most
+    n_queries × (k + ties) calls per task, whatever the task size."""
+    q_cols = [F.col(query_id).alias("query_id"), F.col(vec_col).alias("_qv")]
+    c_cols = [F.col(corpus_id).alias("candidate_id"), F.col(vec_col).alias("_cv")]
+    if texts is not None:
+        q_cols.append(F.col(texts[0]).alias("_qt"))
+        c_cols.append(F.col(texts[1]).alias("_ct"))
+    # coalesce(1) makes the limit read one partition: one job, where
+    # take() runs a series of incremental ones
+    q_rows = (
+        queries.select(*q_cols).coalesce(1).limit(GROUPED_QUERY_BOUND + 1).collect()
+    )
     if len(q_rows) > GROUPED_QUERY_BOUND:
         return None
     q_rows = [r for r in q_rows if r["_qv"] is not None]
     spark = corpus.sparkSession
-    c = corpus.select(
-        F.col(corpus_id).alias("candidate_id"), F.col(vec_col).alias("_cv")
-    )
     qid_type = queries.schema[query_id].dataType.simpleString()
     cid_type = corpus.schema[corpus_id].dataType.simpleString()
+    schema = f"query_id {qid_type}, candidate_id {cid_type}, score double"
+    if texts is not None:
+        schema += ", rerank_score double"
     if not q_rows:
-        return spark.createDataFrame(
-            [], f"query_id {qid_type}, candidate_id {cid_type}, score double"
-        )
+        return spark.createDataFrame([], schema)
     qids = [r["query_id"] for r in q_rows]
     qmat = np.array([r["_qv"] for r in q_rows], dtype=np.float64)
     qnorm = np.linalg.norm(qmat, axis=1)
-    bc = spark.sparkContext.broadcast((qids, qmat, qnorm))
+    qtexts = [r["_qt"] for r in q_rows] if texts is not None else None
+    bc = spark.sparkContext.broadcast((qids, qmat, qnorm, qtexts))
+    margin = 0.0 if score_round is None else 2.0 * 10.0 ** -score_round
 
     def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        b_qids, b_qmat, b_qnorm = bc.value
+        b_qids, b_qmat, b_qnorm, b_qtexts = bc.value
         nq = len(b_qids)
         qid_arr = np.asarray(b_qids, dtype=object)
-        for batch in batches:
-            vecs = batch["_cv"]
-            mask = vecs.notna()
-            if not mask.any():
-                yield pd.DataFrame(
-                    {"query_id": [], "candidate_id": [], "score": []}
+        qtext_arr = np.asarray(b_qtexts, dtype=object) if texts else None
+
+        def frame(qi, ids, score, ctexts) -> pd.DataFrame:
+            out = {"query_id": qid_arr[qi], "candidate_id": ids, "score": score}
+            if texts is not None:
+                out["rerank_score"] = np.array(
+                    [
+                        0.0 if a is None or b is None else jaro_winkler_py(a, b)
+                        for a, b in zip(qtext_arr[qi], ctexts)
+                    ],
+                    dtype=np.float64,
                 )
+            return pd.DataFrame(out)
+
+        # survivors so far: parallel flat arrays (query index, candidate id,
+        # score, candidate text), exactly the rows at or above kth - margin
+        kept = None
+        kth = np.full(nq, -np.inf)
+        for batch in batches:
+            if batch.empty:
                 continue
-            mat = np.vstack(vecs[mask].to_numpy()).astype(np.float64)
+            mat = np.vstack(batch["_cv"].to_numpy()).astype(np.float64)
             dots = np.einsum("ij,kj->ik", mat, b_qmat)  # (n, nq)
             norms = np.linalg.norm(mat, axis=1)[:, None] * b_qnorm[None, :]
             with np.errstate(divide="ignore", invalid="ignore"):
                 scores = np.where(norms > 0, dots / norms, 0.0)
-            ids = batch.loc[mask, "candidate_id"].to_numpy()
-            yield pd.DataFrame(
-                {
-                    "query_id": np.tile(qid_arr, len(ids)),
-                    "candidate_id": np.repeat(ids, nq),
-                    "score": scores.reshape(-1),
-                }
-            )
+            ids = batch["candidate_id"].to_numpy()
+            ctexts = batch["_ct"].to_numpy() if texts is not None else ids
+            valid = np.ones(scores.shape, dtype=bool)
+            if exclude_self:
+                valid = (
+                    (ids[:, None] != qid_arr[None, :])
+                    & ~pd.isna(ids)[:, None]
+                    & ~pd.isna(qid_arr)[None, :]
+                )
+            if k is None:
+                rows, qi = np.nonzero(valid)
+                yield frame(qi, ids[rows], scores[rows, qi], ctexts[rows])
+                continue
+            # prefilter the batch against a lower bound on the new k-th
+            # score: the old k-th or the batch's own, whichever is higher
+            masked = np.where(valid, scores, -np.inf)
+            n = len(ids)
+            if n >= k:
+                kth = np.maximum(kth, np.partition(masked, n - k, axis=0)[n - k])
+            rows, qi = np.nonzero(valid & (masked >= (kth - margin)[None, :]))
+            new = (qi, ids[rows], scores[rows, qi], ctexts[rows])
+            kept = new if kept is None else [
+                np.concatenate(pair) for pair in zip(kept, new)
+            ]
+            kth = _kth_per_query(kept[0], kept[2], nq, k)
+            survive = kept[2] >= (kth - margin)[kept[0]]
+            kept = [a[survive] for a in kept]
+        if k is not None:
+            none = np.empty(0, dtype=object)
+            yield frame(*(kept or (np.empty(0, dtype=np.int64), none, np.empty(0), none)))
 
-    return c.where(F.col("_cv").isNotNull()).mapInPandas(
-        gen,
-        schema=f"query_id {qid_type}, candidate_id {cid_type}, score double",
-    )
+    c = corpus.select(*c_cols).where(F.col("_cv").isNotNull())
+    return c.mapInPandas(gen, schema=schema)
 
 
 def brute_force_topk(
@@ -159,7 +240,10 @@ def brute_force_topk(
 ) -> DataFrame:
     """Exact cosine top-k.  The query side is small by construction (the
     join form broadcasts it; the grouped form collects + re-broadcasts it
-    under the same assumption); the corpus never shuffles.
+    under the same assumption); the corpus never shuffles.  The grouped
+    form keeps a running per-query top-k in each scan task (see
+    ``_grouped_brute_scores``), so only n_queries × (k + ties) rows per
+    task reach the final top-k.
 
     ``score_round``: round the cosine BEFORE ranking so near-ties (< 1 ulp
     apart) become exact ties broken by candidate_id — makes the top-k set
@@ -169,58 +253,51 @@ def brute_force_topk(
     off the candidate stream before RANKING (so excluded rows can never
     displace a result): the hook hard-negative mining uses to remove known
     positives.  Joined as an ordinary hash anti-join — the pair table may
-    be corpus-scale (one positive per record), never force-broadcast.
+    be corpus-scale (one positive per record), never force-broadcast.  The
+    anti-join runs after the scan, so with it the scan tasks do not prune.
     """
-    grouped = _grouped_brute_scores(queries, corpus, query_id, corpus_id, vec_col)
-    if grouped is not None:
-        scored = grouped
-        if exclude_self:
-            scored = scored.where(F.col("query_id") != F.col("candidate_id"))
-        if exclude_pairs is not None:
-            missing = {"query_id", "candidate_id"} - set(exclude_pairs.columns)
-            if missing:
-                raise ValueError(
-                    f"exclude_pairs needs columns query_id/candidate_id, missing {sorted(missing)}"
-                )
-            scored = scored.join(
-                exclude_pairs.select("query_id", "candidate_id"),
-                ["query_id", "candidate_id"],
-                "left_anti",
-            )
-        if score_round is not None:
-            scored = scored.withColumn(
-                "score", F.round(F.col("score"), score_round)
-            )
-        return ranked_topk(scored, k)
-    q = queries.select(
-        F.col(query_id).alias("query_id"), F.col(vec_col).alias("_qv")
-    )
-    c = corpus.select(
-        F.col(corpus_id).alias("candidate_id"), F.col(vec_col).alias("_cv")
-    )
-    joined = c.join(F.broadcast(q))
-    if exclude_self:
-        joined = joined.where(F.col("query_id") != F.col("candidate_id"))
     if exclude_pairs is not None:
         missing = {"query_id", "candidate_id"} - set(exclude_pairs.columns)
         if missing:
             raise ValueError(
                 f"exclude_pairs needs columns query_id/candidate_id, missing {sorted(missing)}"
             )
-        joined = joined.join(
-            exclude_pairs.select("query_id", "candidate_id"),
-            ["query_id", "candidate_id"],
-            "left_anti",
+        exclude_pairs = exclude_pairs.select("query_id", "candidate_id")
+
+    def drop_excluded(df: DataFrame) -> DataFrame:
+        if exclude_pairs is None:
+            return df
+        return df.join(exclude_pairs, ["query_id", "candidate_id"], "left_anti")
+
+    scored = _grouped_brute_scores(
+        queries, corpus, query_id, corpus_id, vec_col,
+        k=max(k, 1) if exclude_pairs is None else None,
+        exclude_self=exclude_self,
+        score_round=score_round,
+    )
+    if scored is not None:
+        scored = drop_excluded(scored)
+    else:
+        q = queries.select(
+            F.col(query_id).alias("query_id"), F.col(vec_col).alias("_qv")
         )
-    # a null embedding on either side cannot be scored: drop the row rather
-    # than rank it (engines disagree on NULL ordering in DESC windows).
-    # The filter runs on the INPUT columns, not on the UDF output —
-    # cosine_udf returns null exactly when an input is null, but filtering
-    # its output makes Catalyst evaluate the UDF twice (once under the
-    # pushed-down filter, once in the projection — guide §4.4), doubling
-    # the Python cosine work.  Same rows survive either way.
-    joined = joined.where(F.col("_qv").isNotNull() & F.col("_cv").isNotNull())
-    scored = joined.withColumn("score", cosine_udf(F.col("_qv"), F.col("_cv")))
+        c = corpus.select(
+            F.col(corpus_id).alias("candidate_id"), F.col(vec_col).alias("_cv")
+        )
+        joined = c.join(F.broadcast(q))
+        if exclude_self:
+            joined = joined.where(F.col("query_id") != F.col("candidate_id"))
+        joined = drop_excluded(joined)
+        # a null embedding on either side cannot be scored: drop the row
+        # rather than rank it (engines disagree on NULL ordering in DESC
+        # windows).  The filter runs on the INPUT columns, not on the UDF
+        # output — cosine_udf returns null exactly when an input is null,
+        # but filtering its output makes Catalyst evaluate the UDF twice
+        # (once under the pushed-down filter, once in the projection —
+        # guide §4.4), doubling the Python cosine work.  Same rows survive
+        # either way.
+        joined = joined.where(F.col("_qv").isNotNull() & F.col("_cv").isNotNull())
+        scored = joined.withColumn("score", cosine_udf(F.col("_qv"), F.col("_cv")))
     if score_round is not None:
         scored = scored.withColumn("score", F.round(F.col("score"), score_round))
     # salted two-phase top-k: the corpus-cardinality per-query candidate
@@ -304,16 +381,13 @@ def lsh_topk(
     n_bits: int = 12,
     dim: int | None = None,
     seed: int = 42,
-    overfetch: int = 2,
     exclude_self: bool = False,
     score_round: int | None = None,
 ) -> DataFrame:
     """LSH-bucketed approximate top-k (random hyperplane / SimHash family,
     Charikar'02).  Work is proportional to bucket collisions, not |Q|x|C|.
-
-    ``overfetch``: candidates are ranked and k*overfetch kept before the
-    final exact top-k — mirrors the reference's k=2xsize over-fetch then
-    caller-side truncation (search_query_builder.py:58).
+    Every candidate that shares a bucket with the query is scored exactly;
+    the top-k cut is the only truncation.
     """
     if dim is None:
         # schema-first: parquet/Arrow vector columns carry their width in
@@ -347,10 +421,6 @@ def lsh_topk(
     )
     if score_round is not None:
         scored = scored.withColumn("score", F.round(F.col("score"), score_round))
-    # over-fetch happens implicitly at candidate generation (each query's
-    # bucket set yields >= k*overfetch collisions when n_tables is sized
-    # right); the final exact rank truncates to k like the reference's
-    # caller-side cut.
     # hot buckets make a query's candidate set unbounded: salted
     # two-phase top-k, never one window task per query
     return ranked_topk(scored, k)

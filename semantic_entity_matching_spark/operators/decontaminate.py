@@ -5,7 +5,7 @@ Standard LLM-training-data hygiene (the n-gram overlap rule popularized by
 GPT-3 appendix C / PaLM / Llama data cards, all public): a training
 document is contaminated when it shares enough n-token spans with any eval
 document.  Same join shape as the gold-label match join (J3, reference
-lib/evaluate.py gold lookup — operators/search.py:247-269): the eval side
+lib/evaluate.py gold lookup — ``search.evaluate_gold_ranks``): the eval side
 is SMALL by definition, so its n-gram set is broadcast and the corpus side
 never shuffles — the whole operator is scan → flatMap → broadcast-semi-join
 → one per-doc hash aggregate.

@@ -34,7 +34,7 @@ join, its overlap verify.  Scale shape, by construction:
   the opposite failure mode of naive token blocking and the reason the
   prefix join needs no salting.
 * Every vocabulary- or corpus-cardinality join is pinned shuffle-hash —
-  NEVER broadcast (same rule as the BM25 IDF table, operators/search.py).
+  NEVER broadcast.
 * Verification joins fetch full token sets by id AFTER candidate dedup,
   so the wide payload crosses the wire once per surviving pair side.
 * Everything is DataFrame built-ins + ``F.levenshtein`` — zero Python.

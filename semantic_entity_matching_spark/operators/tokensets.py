@@ -22,7 +22,7 @@ three steps, and each lives here once:
 
 Every join against a corpus- or vocabulary-cardinality table is pinned
 ``shuffle_hash``: Catalyst would broadcast it off small-scale stats, and at
-web scale it cannot broadcast (the BM25 IDF rule, operators/search.py).
+web scale it cannot broadcast.
 """
 
 from __future__ import annotations

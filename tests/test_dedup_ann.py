@@ -530,3 +530,138 @@ def test_mix_corpus_quotas_and_stability(spark):
         mix_corpus(df, "lang", {}, 10, "doc_id")
     with pytest.raises(ValueError):
         mix_corpus(df, "lang", {"en": -1.0}, 10, "doc_id")
+
+
+def _tied_vectors(spark, n=60, dim=6, seed=11):
+    """Small-integer vectors: many exact cosine ties, so the k-th score of
+    a query is usually shared by several candidates."""
+    rng = np.random.RandomState(seed)
+    rows = [(i, [float(x) for x in rng.randint(-1, 2, dim)]) for i in range(n)]
+    rows.append((n, None))  # null vector: never scored
+    return spark.createDataFrame(rows, "vec_id long, embedding array<double>")
+
+
+@pytest.mark.parametrize("score_round", [None, 6])
+@pytest.mark.parametrize("exclude_self", [False, True])
+def test_pruned_brute_force_equals_join_form(spark, monkeypatch, score_round, exclude_self):
+    """The per-task running top-k of the grouped scorer changes no output
+    row: same rows as the broadcast-join form (forced by a zero query
+    bound), ties at the k-th score included."""
+    from semantic_entity_matching_spark.operators import ann
+
+    vecs = _tied_vectors(spark)
+    corpus = vecs.select(F.col("vec_id").alias("candidate_id"), "embedding").repartition(3)
+    queries = vecs.where((F.col("vec_id") % 7 == 0) | F.col("embedding").isNull()).select(
+        F.col("vec_id").alias("query_id"), "embedding"
+    )
+
+    def run():
+        return sorted(
+            tuple(r)
+            for r in brute_force_topk(
+                queries, corpus, k=4, exclude_self=exclude_self, score_round=score_round
+            ).collect()
+        )
+
+    pruned = run()
+    monkeypatch.setattr(ann, "GROUPED_QUERY_BOUND", 0)
+    assert run() == pruned
+    assert len(pruned) == 4 * queries.where(F.col("embedding").isNotNull()).count()
+
+
+def test_pruned_brute_force_keeps_rounding_near_ties(spark, monkeypatch):
+    """Candidates 1 and 2 score 0.80000001 and 0.80000004: raw, 2 is the
+    task's best, but both round to 0.8 and the tie goes to candidate 1.
+    The task must keep rows within the rounding margin of its k-th score."""
+    import math
+
+    from semantic_entity_matching_spark.operators import ann
+
+    def unit(cos):
+        return [cos, math.sqrt(1.0 - cos * cos)]
+
+    corpus = spark.createDataFrame(
+        [(1, unit(0.80000001)), (2, unit(0.80000004)), (3, unit(0.3))],
+        "candidate_id long, embedding array<double>",
+    ).coalesce(1)
+    queries = spark.createDataFrame([(0, [1.0, 0.0])], "query_id long, embedding array<double>")
+
+    def top1():
+        return [
+            (r["candidate_id"], r["score"])
+            for r in brute_force_topk(queries, corpus, k=1, score_round=6).collect()
+        ]
+
+    assert top1() == [(1, 0.8)]
+    monkeypatch.setattr(ann, "GROUPED_QUERY_BOUND", 0)
+    assert top1() == [(1, 0.8)]
+
+
+def test_exclude_pairs_removing_the_whole_topk(spark, monkeypatch):
+    """Pairs excluded after the scan must not cost a query its results:
+    with the first k candidates excluded, the next k take their place."""
+    from semantic_entity_matching_spark.operators import ann
+
+    vecs = _vec_table(spark, n=30)
+    corpus = vecs.select(F.col("vec_id").alias("candidate_id"), "embedding").coalesce(1)
+    queries = corpus.where(F.col("candidate_id") == 0).withColumnRenamed(
+        "candidate_id", "query_id"
+    )
+    top = brute_force_topk(queries, corpus, k=3)
+    excluded = top.select("query_id", "candidate_id")
+
+    def run():
+        return sorted(
+            tuple(r)
+            for r in brute_force_topk(queries, corpus, k=3, exclude_pairs=excluded).collect()
+        )
+
+    got = run()
+    assert len(got) == 3
+    assert not {r[1] for r in got} & {r["candidate_id"] for r in excluded.collect()}
+    monkeypatch.setattr(ann, "GROUPED_QUERY_BOUND", 0)
+    assert run() == got
+
+
+def test_grouped_scorer_task_output_is_topk_plus_ties(spark):
+    """Each scan task hands over, per query, exactly its rows at or above
+    its own k-th best score — at most n_queries × (k + ties) rows — never
+    its whole corpus slice."""
+    from semantic_entity_matching_spark.operators.ann import _grouped_brute_scores
+
+    vecs = _tied_vectors(spark, n=200)
+    corpus = vecs.select(F.col("vec_id").alias("candidate_id"), "embedding").repartition(3)
+    queries = vecs.where(F.col("vec_id") < 5).select(
+        F.col("vec_id").alias("query_id"), "embedding"
+    )
+    k = 3
+
+    def by_task(df):
+        out = {}
+        for r in df.withColumn("_task", F.spark_partition_id()).collect():
+            out.setdefault((r["_task"], r["query_id"]), []).append(
+                (r["score"], r["candidate_id"])
+            )
+        return out
+
+    args = (queries, corpus, "query_id", "candidate_id", "embedding")
+    full = by_task(_grouped_brute_scores(*args, exclude_self=True))
+    # several Arrow batches per task: the running top-k spans batches
+    spark.conf.set("spark.sql.execution.arrow.maxRecordsPerBatch", "16")
+    try:
+        pruned = by_task(_grouped_brute_scores(*args, k=k, exclude_self=True))
+    finally:
+        spark.conf.unset("spark.sql.execution.arrow.maxRecordsPerBatch")
+    assert set(pruned) == set(full)
+    n_ties = 0
+    for key, rows in full.items():
+        kth = sorted((s for s, _ in rows), reverse=True)[min(k, len(rows)) - 1]
+        want = sorted(r for r in rows if r[0] >= kth)
+        assert sorted(pruned[key]) == want, key
+        assert all(c != key[1] for _, c in pruned[key])  # exclude_self
+        n_ties = max(n_ties, len(want) - k)
+    assert n_ties > 0  # the fixture really has ties at the k-th score
+    per_task = {}
+    for (task, _), rows in pruned.items():
+        per_task[task] = per_task.get(task, 0) + len(rows)
+    assert max(per_task.values()) <= queries.count() * (k + n_ties)

@@ -185,3 +185,138 @@ def test_ranked_topk_partitioning_independent(spark):
             for r in ranked_topk(df.repartition(parts), 7).collect()
         )
         assert got == want, f"partitions={parts}"
+
+
+def _sf_documents(spark):
+    """sf0.01 documents with token-hash embeddings; every 7th text is
+    nulled AFTER embedding, so the rerank sees null texts on both sides."""
+    embed = TokenHashEmbeddingProvider(dim=64).udf()
+    from conftest import SF_MEDIUM
+
+    docs = spark.read.parquet(f"{SF_MEDIUM}/documents.parquet")
+    corpus = docs.select(
+        F.col("doc_id").alias("candidate_id"),
+        "lang",
+        embed(F.col("text")).alias("embedding"),
+        F.when(F.col("doc_id") % 7 != 0, F.col("text")).alias("text"),
+    ).repartition(3).cache()
+    queries = corpus.where(F.col("candidate_id") < 30).select(
+        F.col("candidate_id").alias("query_id"),
+        F.col("text").alias("query_text"),
+        "embedding",
+    )
+    return corpus, queries
+
+
+@pytest.mark.parametrize("score_round", [None, 6])
+def test_fused_search_and_rerank_equals_generic_path(spark, score_round):
+    """The default retriever reranks inside the kNN scan; the generic
+    path (any other retriever callable) retrieves, joins both texts back
+    and reranks in a separate stage.  Same rows, bit for bit."""
+    import functools
+
+    from semantic_entity_matching_spark.operators.ann import brute_force_topk
+
+    corpus, queries = _sf_documents(spark)
+
+    def run(**kw):
+        out = search_and_rerank(
+            queries, corpus, size=5, top_k=4, score_round=score_round,
+            corpus_filter=F.col("lang") == "en", **kw,
+        )
+        return sorted(tuple(r) for r in out.collect())
+
+    fused = run()
+    assert fused == run(retriever=functools.partial(brute_force_topk))
+    assert {r[1] for r in fused} <= {
+        r["candidate_id"] for r in corpus.where(F.col("lang") == "en").collect()
+    }
+    assert any(r[3] == 0.0 for r in fused)  # a null text on one side
+
+
+LEX_CORPUS = [
+    (1, "the cat sat on the mat"),
+    (2, "the dog sat on the log"),
+    (3, "cats and dogs"),
+    (4, ""),
+    (5, None),
+    (6, "the the the cat"),
+    (7, "a bird in the hand"),
+    (8, "mat mat mat dog"),
+    (9, "Cat; DOG!! bird."),
+    (10, "the quick brown fox"),
+]
+
+LEX_QUERIES = [
+    ("q1", "the cat"),
+    ("q2", "dog dog mat"),  # repeated query term counts once
+    ("q3", "zebra unicorn"),  # no corpus term
+    ("q4", None),
+    ("q5", ""),
+    ("q6", "bird the fox"),
+    ("q7", "hand"),
+]
+
+
+def _bm25_reference(queries, corpus, k, max_df_ratio, k1=1.2, b=0.75):
+    """Okapi BM25 in plain Python: N and avgdl over the documents with at
+    least one token, Java ``\\W+`` tokens, the same idf and tf saturation."""
+    import math
+    import re
+    from collections import Counter
+
+    def tokens(text):
+        return [t for t in re.split(r"[^a-zA-Z0-9_]+", (text or "").lower()) if t]
+
+    docs = {c: tokens(t) for c, t in corpus if tokens(t)}
+    n = len(docs)
+    avgdl = sum(len(ts) for ts in docs.values()) / n
+    df = Counter(t for ts in docs.values() for t in set(ts))
+    scores = {}
+    for qid, text in queries:
+        for cid, ts in docs.items():
+            tf = Counter(ts)
+            hit = [
+                t for t in set(tokens(text))
+                if t in tf and (max_df_ratio is None or df[t] <= max_df_ratio * n)
+            ]
+            if hit:
+                scores[(qid, cid)] = sum(
+                    math.log(1 + (n - df[t] + 0.5) / (df[t] + 0.5))
+                    * tf[t] * (k1 + 1)
+                    / (tf[t] + k1 * (1 - b + b * len(ts) / avgdl))
+                    for t in hit
+                )
+    top = {}
+    for (qid, cid), s in sorted(scores.items(), key=lambda x: (x[0][0], -x[1], x[0][1])):
+        top.setdefault(qid, [])
+        if len(top[qid]) < k:
+            top[qid].append((cid, s))
+    return top
+
+
+@pytest.mark.parametrize("max_df_ratio", [None, 0.5])
+def test_lexical_topk_matches_python_bm25(spark, monkeypatch, max_df_ratio):
+    from semantic_entity_matching_spark.operators import ann
+
+    corpus = spark.createDataFrame(LEX_CORPUS, "candidate_id int, text string")
+    queries = spark.createDataFrame(LEX_QUERIES, "query_id string, query_text string")
+
+    def run():
+        out = lexical_topk(queries, corpus, k=3, max_df_ratio=max_df_ratio)
+        return sorted(tuple(r) for r in out.collect())
+
+    rows = run()
+    want = _bm25_reference(LEX_QUERIES, LEX_CORPUS, 3, max_df_ratio)
+    got = {}
+    for qid, cid, score, rank in rows:
+        got.setdefault(qid, []).append((rank, cid, score))
+    assert set(got) == set(want) and "q3" not in got and "q4" not in got
+    for qid, ref in want.items():
+        mine = sorted(got[qid])
+        assert [c for _, c, _ in mine] == [c for c, _ in ref], qid
+        for (_, _, s), (_, r) in zip(mine, ref):
+            assert s == pytest.approx(r, rel=1e-12, abs=0.0)
+    # chunks of two queries: rank is per query, so the rows are identical
+    monkeypatch.setattr(ann, "GROUPED_QUERY_BOUND", 2)
+    assert run() == rows

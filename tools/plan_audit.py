@@ -6,9 +6,11 @@ if a property regresses.  Properties audited:
   1. column pruning  — the flagship pipeline never materializes the fat
      ``html`` binary column (ReadSchema excludes it at the parquet scan)
   2. filter pushdown — q29's pre-retrieval corpus filter reaches the scan
-     (PushedFilters contains the lang predicate)
+     (PushedFilters contains the lang predicate); q29 reranks inside its
+     kNN scan (no Jaro-Winkler UDF, no join above the MapInPandas scorer)
   3. index reuse     — q19's BM25 plan reads the persisted inverted index
-     (InMemoryTableScan) instead of re-tokenizing the corpus
+     (InMemoryTableScan) instead of re-tokenizing the corpus, and scores
+     over the query vocabulary only (one Window, the top-k; no Expand)
   4. broadcast       — q17's query side broadcasts (BroadcastExchange /
      BroadcastNestedLoopJoin), the corpus never shuffles
   5. codegen         — q01's agg pipeline runs inside WholeStageCodegen
@@ -106,6 +108,20 @@ def main() -> None:
         (pushed or ["<no lang PushedFilters>"])[0].strip()[:140],
     )
 
+    # q29 reranks inside the kNN scan: no Jaro-Winkler UDF stage, and
+    # nothing above the MapInPandas scorer joins back to the corpus or
+    # the queries (the formatted tree prints root-first, so "above" is the
+    # tree text BEFORE the scorer's line)
+    tree29 = e29.split("\n\n")[0].splitlines()
+    mip29 = [i for i, ln in enumerate(tree29) if "MapInPandas" in ln]
+    above29 = "\n".join(tree29[: mip29[0]]) if mip29 else ""
+    check(
+        "q29_rerank_in_scan",
+        bool(mip29) and "jaro_winkler_udf" not in e29 and "Join" not in above29,
+        f"MapInPandas x{len(mip29)}, joins above scorer: "
+        f"{above29.count('Join')}, jaro_winkler_udf x{e29.count('jaro_winkler_udf')}",
+    )
+
     # 3. q19 reuses the persisted inverted index (one tokenization pass)
     q19 = E.q19_lexical_bm25(spark, SF)
     e19 = explained_of(q19)
@@ -119,6 +135,15 @@ def main() -> None:
         "q19_single_tokenization",
         n_mem >= 1,
         f"InMemoryTableScan x{n_mem}, documents parquet scans x{n_docscan}",
+    )
+    # q19 scores over the query vocabulary only: the one Window is the
+    # per-query top-k (no document-length window), and no countDistinct
+    # Expand over the corpus (df arrives as a plan literal)
+    n_win19 = len(_pa_re.findall(r"\bWindow \(", e19.split("\n\n")[0]))
+    check(
+        "q19_query_vocab_plan",
+        n_win19 == 1 and "Expand" not in e19,
+        f"Window x{n_win19}, Expand x{e19.count('Expand')}",
     )
 
     # 4. q17: grouped brute-force scoring — the corpus crosses the Python
