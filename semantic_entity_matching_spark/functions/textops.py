@@ -771,6 +771,8 @@ def _lm_from_counts(counts, alpha: float):
     the reserved unseen row)."""
     from pyspark.sql import functions as F
 
+    from semantic_entity_matching_spark.session import driver_table
+
     totals = counts.agg(
         F.sum("cnt").alias("n"), F.count(F.lit(1)).alias("v")
     )
@@ -781,9 +783,7 @@ def _lm_from_counts(counts, alpha: float):
 
     with_unseen = counts.unionByName(
         # the reserved unseen row: cnt 0 under the impossible '' token
-        counts.sparkSession.createDataFrame(
-            [("", 0)], "token string, cnt bigint"
-        )
+        driver_table(counts.sparkSession, [("", 0)], "token string, cnt bigint")
     )
     return (
         with_unseen.crossJoin(broadcast(totals))

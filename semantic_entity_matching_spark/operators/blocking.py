@@ -27,7 +27,7 @@ from typing import Iterator
 
 import numpy as np
 import pandas as pd
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 # 64-bit universal hashing over a Mersenne prime
@@ -285,6 +285,20 @@ def minhash_block_keys(
     )
 
 
+def _sn_key(text_col: str, prefix_len: int, key_scan_chars: int) -> Column:
+    """The sorted-neighborhood key: the first ``prefix_len`` [a-z0-9] chars
+    of the lowercased first ``key_scan_chars`` chars of the text."""
+    return F.substring(
+        F.regexp_replace(
+            F.lower(F.substring(F.col(text_col), 1, key_scan_chars)),
+            "[^a-z0-9]",
+            "",
+        ),
+        1,
+        prefix_len,
+    )
+
+
 def sorted_neighborhood_keys(
     df: DataFrame,
     id_col: str = "url",
@@ -313,15 +327,7 @@ def sorted_neighborhood_keys(
     # MinHash char/word families (script-agnostic byte shingles).  Raise
     # ``key_scan_chars`` to restore the full-page scan where that trade
     # is wrong.
-    key = F.substring(
-        F.regexp_replace(
-            F.lower(F.substring(F.col(text_col), 1, key_scan_chars)),
-            "[^a-z0-9]",
-            "",
-        ),
-        1,
-        prefix_len,
-    )
+    key = _sn_key(text_col, prefix_len, key_scan_chars)
     base = (
         df.select(id_col, text_col)
         .where(F.col(text_col).isNotNull() & (F.trim(F.col(text_col)) != ""))
@@ -382,6 +388,24 @@ def all_block_keys(
     return mh.unionByName(sn)
 
 
+def sn_short_key(
+    text_col: str = "text", prefix_len: int = 12, key_scan_chars: int = 1024
+) -> Column:
+    """True for a non-blank text whose bounded-head SN key comes out
+    SHORTER than ``prefix_len`` (including empty) — the rows whose
+    sorted-neighborhood coverage the ``key_scan_chars`` bound reduces
+    relative to a full-page scan (they stay covered by the MinHash
+    families).  False for null and blank texts, which get no SN key at
+    any scan length.  ``run_pipeline`` counts it on the records cut's own
+    job (``audit_sn_keys``); :func:`sn_short_key_audit` lists the rows."""
+    text = F.col(text_col)
+    return (
+        text.isNotNull()
+        & (F.trim(text) != "")
+        & (F.length(_sn_key(text_col, prefix_len, key_scan_chars)) < prefix_len)
+    )
+
+
 def sn_short_key_audit(
     df: DataFrame,
     id_col: str = "url",
@@ -389,34 +413,8 @@ def sn_short_key_audit(
     prefix_len: int = 12,
     key_scan_chars: int = 1024,
 ) -> DataFrame:
-    """Docs whose bounded-head SN key comes out SHORTER than ``prefix_len``
-    (including empty) — the rows whose sorted-neighborhood coverage the
-    ``key_scan_chars`` bound reduces relative to a full-page scan.  One
-    aggregate-free projection + filter; count it to turn the silent recall
-    trade into a run counter (they stay covered by the MinHash families).
-
-    -> (id, sn_key_len)
-    """
-    key = F.substring(
-        F.regexp_replace(
-            F.lower(F.substring(F.col(text_col), 1, key_scan_chars)),
-            "[^a-z0-9]",
-            "",
-        ),
-        1,
-        prefix_len,
-    )
-    return (
-        df.where(F.col(text_col).isNotNull() & (F.trim(F.col(text_col)) != ""))
-        .select(F.col(id_col), F.length(key).alias("sn_key_len"))
-        .where(F.col("sn_key_len") < prefix_len)
-    )
-
-
-def block_size_audit(blocks: DataFrame, id_col: str = "url") -> DataFrame:
-    """Per-key block sizes, largest first — skew visibility (north_rule)."""
-    return (
-        blocks.groupBy("block_key")
-        .agg(F.count(id_col).alias("block_size"))
-        .orderBy(F.desc("block_size"))
+    """The :func:`sn_short_key` rows of ``df`` -> (id, sn_key_len)."""
+    return df.where(sn_short_key(text_col, prefix_len, key_scan_chars)).select(
+        F.col(id_col),
+        F.length(_sn_key(text_col, prefix_len, key_scan_chars)).alias("sn_key_len"),
     )

@@ -22,11 +22,13 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructField, StructType
 
 from semantic_entity_matching_spark.plans.checkpoint import (
     CheckpointManager,
     materialize,
 )
+from semantic_entity_matching_spark.session import driver_table
 
 
 def _symmetrize(edges: DataFrame) -> DataFrame:
@@ -98,13 +100,17 @@ def _signature(edges: DataFrame) -> tuple[int, int]:
 # star superstep is ~6 exchanges + a lineage cut + a convergence aggregate
 # — multiple scheduler round-trips that dwarf the actual work once the
 # edge set is small (measured: ~2.5 s for a few hundred edges at sf0.1).
-# 200k edges is ~10 MB on the driver (guide §5 bounded-collect budget, the
-# same class as the EM pattern tables); larger graphs take the superstep
-# path unchanged.  The fold is EXACT: same membership (self-loop-only
-# nodes excluded, as the symmetrize step drops them), same min-id label
-# (Python str ordering == Spark's UTF8 binary ordering, since UTF-8 byte
-# order preserves codepoint order) — pinned by pytest equality on random
-# graphs.
+# The fold runs one job, the edge collect; its (id, component) table goes
+# back through ``session.driver_table`` as an Arrow-built local relation,
+# so the plans that read it stay in the JVM (no pickled Python RDD for the
+# caller's cut to decode in Python workers).  200k edges is ~10 MB on the
+# driver (guide §5 bounded-collect budget, the same class as the EM
+# pattern tables) and at most 400k table rows; larger graphs take the
+# superstep path unchanged.  The fold is EXACT: same membership
+# (self-loop-only nodes excluded, as the symmetrize step drops them), same
+# min-id label (Python str ordering == Spark's UTF8 binary ordering, since
+# UTF-8 byte order preserves codepoint order) — pinned by pytest equality
+# on random graphs.
 CC_DRIVER_EDGE_BOUND = 200_000
 # the snapshot table the supersteps commit to, and resume from
 CC_CHECKPOINT_TABLE = "cc_edges"
@@ -112,7 +118,6 @@ CC_CHECKPOINT_TABLE = "cc_edges"
 
 def _driver_union_find(edges: DataFrame) -> DataFrame:
     """Exact (id, component) of a SMALL edge set via driver union-find."""
-    spark = edges.sparkSession
     parent: dict = {}
 
     def find(x):
@@ -146,12 +151,10 @@ def _driver_union_find(edges: DataFrame) -> DataFrame:
             comp_min[root] = node
     rows = [(node, comp_min[find(node)]) for node in parent]
     id_type = edges.schema["id_a"].dataType
-    from pyspark.sql.types import StructField, StructType
-
     schema = StructType(
         [StructField("id", id_type), StructField("component", id_type)]
     )
-    return spark.createDataFrame(rows, schema)
+    return driver_table(edges.sparkSession, rows, schema)
 
 
 def connected_components(

@@ -107,10 +107,13 @@ def salted_join(
 
 
 def block_sizes(blocks: DataFrame, id_col: str = "url") -> DataFrame:
-    """(block_key, block_size) — one row per key.  Callers that need both
-    the candidate pairs and the dropped-blocks audit should compute this
-    ONCE, ``persist()`` it, and pass it to both (run_pipeline does): the
-    aggregate is a full exchange of the block table otherwise paid twice.
+    """(block_key, block_size) — one row per key.  The aggregate is a full
+    exchange of the block table: callers that need both the candidate pairs
+    and the dropped-blocks count compute it once and share it.  Pair
+    generation reads only the ``block_size > min(hot_block_threshold,
+    max_block_size)`` head of it, so sharing that head suffices
+    (run_pipeline cuts the head once and observes the dropped count on
+    that cut).
     """
     return blocks.groupBy("block_key").agg(F.count(id_col).alias("block_size"))
 
@@ -144,6 +147,11 @@ def generate_candidate_pairs(
     ``keep_block_key=False`` skips the min(block_key) representative-key
     aggregate (the dedup becomes a plain distinct, no string rides the
     exchange) for callers that only need the id pairs.
+
+    ``sizes`` is a precomputed :func:`block_sizes` table, or only its
+    ``block_size > min(hot_block_threshold, max_block_size)`` head: the
+    generator reads no row below that threshold (see
+    :func:`block_pair_stream`).  ``None`` aggregates ``blocks`` here.
     """
     pairs = block_pair_stream(
         blocks,
@@ -179,6 +187,10 @@ def block_pair_stream(
     ``groupBy(id_a, id_b).count()`` over these rows
     (operators/metablocking.py).  Columns: ``block_key, id_a, id_b`` plus
     any ``annotations`` columns suffixed ``_a``/``_b``.
+
+    ``sizes`` as in :func:`generate_candidate_pairs`: the full size table
+    or its above-threshold head give the same stream, since keys absent
+    from the head count as cold.
     """
     cfg = config or PairGenConfig()
 
@@ -232,8 +244,11 @@ def dropped_blocks_audit(
 ) -> DataFrame:
     """Keys excluded by the block-size cap, with sizes (no silent caps).
 
-    Pass the persisted :func:`block_sizes` table to share the aggregate
-    with :func:`generate_candidate_pairs` instead of re-scanning blocks.
+    Pass a :func:`block_sizes` table (or a head of it that keeps every
+    key above ``max_block_size``) to share the aggregate with
+    :func:`generate_candidate_pairs` instead of re-scanning blocks.
+    run_pipeline needs only the count, which it observes on its size-head
+    cut instead of running this.
     """
     cfg = config or PairGenConfig()
     if sizes is None:

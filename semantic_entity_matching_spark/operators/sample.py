@@ -29,6 +29,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from semantic_entity_matching_spark.session import driver_table
+
 
 def _hash_fraction(id_col: str) -> F.Column:
     """Uniform-ish [0, 1) value from the first 8 md5 hex chars of the id
@@ -204,7 +206,7 @@ def mix_corpus(
         for k, q in sorted(quota.items(), key=lambda kv: str(kv[0]))
         if q > 0
     ]
-    qdf = df.sparkSession.createDataFrame(rows, "_sk string, _quota int")
+    qdf = driver_table(df.sparkSession, rows, "_sk string, _quota int")
     base = df.withColumn("_sk", _stratum_key(strata_col)).join(
         F.broadcast(qdf), "_sk"
     )

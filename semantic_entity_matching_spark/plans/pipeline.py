@@ -9,11 +9,12 @@
       → connected components                (large-star/small-star, checkpointed)
       → clusters(id, component)
 
-Counters (pairs_generated, pairs_scored, edges_emitted) are captured at each
-stage boundary and written with the stage checkpoint (Iceberg snapshot
-properties in production; manifest JSON here) — per-partition task metrics
-remain visible in the Spark UI/event log, and the stage counts make the run
-resumable AND auditable (north_rule).
+Counters (pairs_generated, pairs_scored, edges_emitted, ...) are captured at
+each stage boundary by the cut itself (no job runs only to count them) and
+written with the stage checkpoint (Iceberg snapshot properties in
+production; manifest JSON here) — per-partition task metrics remain visible
+in the Spark UI/event log, and the stage counts make the run resumable AND
+auditable (north_rule).
 
 Every stage reads its input from the previous stage's committed snapshot,
 so a killed run resumes at the first uncommitted stage (``resume=True``).
@@ -23,7 +24,7 @@ from __future__ import annotations
 
 from dataclasses import dataclass, field
 
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, Observation
 from pyspark.sql import functions as F
 
 from semantic_entity_matching_spark.functions.embed import (
@@ -37,13 +38,18 @@ from semantic_entity_matching_spark.functions.similarity import (
     jaro_winkler_udf,
     levenshtein_similarity_expr,
 )
-from semantic_entity_matching_spark.operators.blocking import LSHConfig, all_block_keys
+from semantic_entity_matching_spark.operators.blocking import (
+    LSHConfig,
+    all_block_keys,
+    sn_short_key,
+)
 from semantic_entity_matching_spark.operators.cluster import (
     CC_CHECKPOINT_TABLE,
     clusters_from_pairs,
 )
 from semantic_entity_matching_spark.operators.pairs import (
     PairGenConfig,
+    block_sizes,
     generate_candidate_pairs,
 )
 from semantic_entity_matching_spark.plans.checkpoint import (
@@ -397,6 +403,22 @@ def rerank_pairs(
     )
 
 
+def _cut_observed(
+    df: DataFrame,
+    name: str,
+    checkpoint: CheckpointManager | None,
+    metrics: dict,
+) -> tuple[DataFrame, dict]:
+    """:func:`~.checkpoint.materialize` ``df`` and return the cut with the
+    ``metrics`` (name -> aggregate Column) its own job computed: an
+    ``Observation`` rides the cut, so no second action re-reads it."""
+    if not metrics:
+        return materialize(df, name, checkpoint), {}
+    seen = Observation()
+    df = df.observe(seen, *[c.alias(k) for k, c in metrics.items()])
+    return materialize(df, name, checkpoint), seen.get
+
+
 PIPELINE_STAGES = (
     "records", "blocks", "pairs", "scored", "reranked", "edges", "clusters",
 )
@@ -423,6 +445,24 @@ def run_pipeline(
     stage that is built rather than resumed drops every later stage's
     snapshot (the CC supersteps included), so a resume never mixes two
     runs' stages.
+
+    Where each counter comes from (only FS scoring with deferred JW runs
+    jobs just to count):
+
+    * the seven stage counters (``records_prepared``, ``block_keys_emitted``,
+      ``pairs_generated``, ``pairs_scored``, ``pairs_reranked``,
+      ``edges_emitted``, ``records_clustered``) are the stage's row count:
+      with a ``CheckpointManager`` the snapshot manifest's, from its parquet
+      footers; without one, an ``Observation`` on the stage's cut, so the
+      cut's own job counts the rows;
+    * ``blocks_dropped`` (keys over ``max_block_size``) is observed on the
+      in-memory cut of the size table's head (the ``block_sizes`` job),
+      which the pair generator reads as its ``sizes``;
+    * ``sn_short_keyed`` (``audit_sn_keys``) is observed on the records
+      cut; a resumed records snapshot counts it with one action instead;
+    * ``fs_em_sample_mod`` (FS scoring) is derived from ``pairs_scored``;
+      the ``fs_*`` deferral counters are counted inside
+      ``resolve.fs_edges_deferred``.
     """
     from semantic_entity_matching_spark.plans.reporting import NullReporter
 
@@ -453,7 +493,10 @@ def run_pipeline(
     reporter = reporter or NullReporter()
     reporter.start_progress(total=N_PIPELINE_STAGES)
 
-    def stage(name: str, build, counter: str) -> DataFrame:
+    def stage(name: str, build, counter: str, metrics=None) -> DataFrame:
+        """Build (or resume) stage ``name`` and cut it.  ``metrics``
+        (counter -> aggregate Column) are observed on the cut's own job
+        when the stage is built, not on a resumed snapshot."""
         reporter.on_message(f"stage {name}")
         if checkpoint is not None and resume and checkpoint.exists(name):
             df = checkpoint.read(name)
@@ -468,22 +511,28 @@ def run_pipeline(
                     stale += (CC_CHECKPOINT_TABLE,)
                 for table in stale:
                     checkpoint.drop(table)
+            # without a snapshot manifest the cut's own job counts the rows
+            observe = {counter: F.count(F.lit(1))} if checkpoint is None else {}
+            observe.update(metrics or {})
             # each stage feeds several downstream consumers: without the
             # cut every stage recomputes its whole upstream chain
-            df = materialize(build(), name, checkpoint)
-        if checkpoint is None:  # reads the cut blocks, not the stage's plan
-            counters[counter] = df.count()
-        else:  # the snapshot's count, from its parquet footers
+            df, observed = _cut_observed(build(), name, checkpoint, observe)
+            counters.update(observed)
+        if checkpoint is not None:  # the snapshot's count, from its parquet footers
             counters[counter] = checkpoint.manifest(name)["rows"]
             checkpoint.add_counter(counter, counters[counter])
         reporter.on_message(f"stage {name}: {counter}={counters[counter]}")
         reporter.on_progress(PIPELINE_STAGES.index(name) + 1)
         return df
 
+    sn_short = sn_short_key(
+        config.text_col, key_scan_chars=config.sn_key_scan_chars
+    )
     records = stage(
         "records",
         lambda: prepare_records(pages, config, provider, with_entity_text=False),
         "records_prepared",
+        {"sn_short_keyed": F.count_if(sn_short)} if config.audit_sn_keys else None,
     )
     blocks = stage(
         "blocks",
@@ -498,44 +547,33 @@ def run_pipeline(
         "block_keys_emitted",
     )
     if config.audit_sn_keys:
-        from semantic_entity_matching_spark.operators.blocking import (
-            sn_short_key_audit,
-        )
-
-        n_short = sn_short_key_audit(
-            records,
-            id_col=config.id_col,
-            text_col=config.text_col,
-            key_scan_chars=config.sn_key_scan_chars,
-        ).count()
-        counters["sn_short_keyed"] = n_short
+        if "sn_short_keyed" not in counters:  # records resumed, not built
+            counters["sn_short_keyed"] = records.where(sn_short).count()
         if checkpoint is not None:
-            checkpoint.add_counter("sn_short_keyed", n_short)
-    # ONE block-sizes aggregate feeds both the pair generator's cap/salt
-    # logic and the dropped-blocks audit below: persisted so the audit
-    # count reuses the exchange instead of re-aggregating the block table.
-    from semantic_entity_matching_spark.operators.pairs import (
-        block_sizes,
-        dropped_blocks_audit,
+            checkpoint.add_counter("sn_short_keyed", counters["sn_short_keyed"])
+    # The pair generator reads only the block_size > min(hot_block_threshold,
+    # max_block_size) head of the size table: the keys it salts or drops
+    # (block_pair_stream).  Cut that head once, in memory: it is bounded by
+    # total block rows / threshold, the bound its broadcast relies on.  The
+    # same job counts the keys the cap drops, which must never be a silent
+    # cap (north_rule audit), so every run's counters surface them.
+    pg = config.pairgen
+    head, dropped = _cut_observed(
+        block_sizes(blocks, config.id_col).where(
+            F.col("block_size") > min(pg.hot_block_threshold, pg.max_block_size)
+        ),
+        "block_sizes",
+        None,
+        {"blocks_dropped": F.count_if(F.col("block_size") > pg.max_block_size)},
     )
-
-    sizes = block_sizes(blocks, config.id_col).persist()
     pairs = stage(
         "pairs",
-        lambda: generate_candidate_pairs(
-            blocks, config.id_col, config.pairgen, sizes=sizes
-        ),
+        lambda: generate_candidate_pairs(blocks, config.id_col, pg, sizes=head),
         "pairs_generated",
     )
-    # the block-size cap must never be a silent cap (north_rule audit):
-    # surface the number of dropped keys with every run's counters.
-    n_dropped = dropped_blocks_audit(
-        blocks, config.id_col, config.pairgen, sizes=sizes
-    ).count()
-    sizes.unpersist()
-    counters["blocks_dropped"] = n_dropped
+    counters.update(dropped)
     if checkpoint is not None:
-        checkpoint.add_counter("blocks_dropped", n_dropped)
+        checkpoint.add_counter("blocks_dropped", dropped["blocks_dropped"])
     scored = stage(
         "scored", lambda: score_pairs(pairs, records, config), "pairs_scored"
     )

@@ -54,6 +54,29 @@ def ensure_min_parallelism(df, min_fraction: float = 0.5):
     return df
 
 
+def driver_table(spark: SparkSession, rows: list, schema):
+    """A small driver-built table (``rows`` of tuples, ``schema`` a
+    StructType or DDL string) that Spark plans can read without Python.
+
+    The rows go to the JVM as one Arrow table and come back as a local
+    relation, scanned by the JVM.  ``spark.createDataFrame(rows)`` instead
+    pickles them into a Python RDD, and every plan that reads the table
+    runs a Python worker stage to decode it.  Building the Arrow table
+    here, typed from ``schema``, also keeps an empty ``rows`` on the Arrow
+    path (pandas input falls back to pickling when it is empty) and does
+    not depend on ``spark.sql.execution.arrow.pyspark.enabled``.
+    """
+    import pyarrow as pa
+    from pyspark.sql.pandas.types import to_arrow_schema
+    from pyspark.sql.types import StructType, _parse_datatype_string
+
+    if not isinstance(schema, StructType):
+        schema = _parse_datatype_string(schema)
+    arrow = to_arrow_schema(schema)
+    columns = [pa.array([r[i] for r in rows], type=f.type) for i, f in enumerate(arrow)]
+    return spark.createDataFrame(pa.Table.from_arrays(columns, schema=arrow), schema)
+
+
 def get_session(
     master: str | None = None,
     app_name: str = "semantic-entity-matching-spark",

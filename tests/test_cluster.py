@@ -106,6 +106,14 @@ def test_driver_fold_equals_superstep_path(spark):
     }
     assert got_f == got_d
 
+    # no edges at all: both paths return no rows, typed like the ids
+    for ddl in ("id_a string, id_b string", "id_a long, id_b long"):
+        empty = spark.createDataFrame([], ddl)
+        dist = connected_components(empty, n_edges=None)
+        fold = connected_components(empty, n_edges=0)
+        assert fold.collect() == dist.collect() == []
+        assert fold.dtypes == dist.dtypes
+
 
 def test_clusters_with_singletons(spark):
     pairs = spark.createDataFrame([("a", "b")], "id_a string, id_b string")

@@ -11,10 +11,15 @@ import random
 import pytest
 
 import semantic_entity_matching_spark
+from semantic_entity_matching_spark.operators.blocking import sn_short_key_audit
 from semantic_entity_matching_spark.operators.cluster import (
     CC_CHECKPOINT_TABLE,
     connected_components,
     update_components,
+)
+from semantic_entity_matching_spark.operators.pairs import (
+    PairGenConfig,
+    dropped_blocks_audit,
 )
 from semantic_entity_matching_spark.plans.checkpoint import (
     CheckpointManager,
@@ -133,3 +138,91 @@ def test_local_checkpoint_only_inside_materialize():
             if "eager=False" in line:
                 lazy.append((rel, lineno))
     assert outside == [] and lazy == [], (outside, lazy)
+
+
+STAGE_COUNTERS = {
+    "records": "records_prepared",
+    "blocks": "block_keys_emitted",
+    "pairs": "pairs_generated",
+    "scored": "pairs_scored",
+    "reranked": "pairs_reranked",
+    "edges": "edges_emitted",
+    "clusters": "records_clustered",
+}
+
+
+@pytest.fixture(scope="module")
+def hot_pages(spark):
+    """Entities plus 15 identical boilerplate pages: their shared keys make
+    blocks above a small ``max_block_size``."""
+    pages, _ = synth_webpages(
+        spark, SynthConfig(n_entities=12, seed=5, hot_boilerplate_rows=15)
+    )
+    return pages.cache()
+
+
+@pytest.mark.parametrize(
+    "config",
+    [
+        # the head (keys > 4) holds salted keys the cap keeps (5..10 rows)
+        MatchConfig(pairgen=PairGenConfig(max_block_size=10, hot_block_threshold=4)),
+        MatchConfig(scoring="fellegi_sunter"),
+    ],
+    ids=["blocks_dropped", "fellegi_sunter"],
+)
+def test_pipeline_counters_equal_direct_stage_counts(spark, tmp_path, hot_pages, config):
+    """Every counter is its stage's row count, whether the cut's own job
+    observed it (in memory) or the snapshot manifest recorded it."""
+    in_memory = run_pipeline(hot_pages, config)
+    cp = CheckpointManager(str(tmp_path), spark)
+    snapshots = run_pipeline(hot_pages, config, checkpoint=cp)
+    direct = {c: cp.read(s).count() for s, c in STAGE_COUNTERS.items()}
+    direct["blocks_dropped"] = dropped_blocks_audit(
+        cp.read("blocks"), config.id_col, config.pairgen
+    ).count()
+    for res in (in_memory, snapshots):
+        assert {k: res.counters[k] for k in direct} == direct
+        assert res.counters["edges_emitted"] == res.edges.count()
+        assert res.counters["records_clustered"] == res.clusters.count()
+    assert in_memory.counters == snapshots.counters
+    if config.pairgen.max_block_size == 10:
+        assert direct["blocks_dropped"] > 0
+
+
+def test_pipeline_runs_no_job_only_to_count(spark, hot_pages):
+    """Every job of a run is a stage cut or the block-size head cut, named
+    after it; the one other job is the driver CC fold's edge collect.  No
+    job exists only to produce a counter."""
+    sc = spark.sparkContext
+    group = "pipeline-jobs"
+    hot_pages.count()  # the input cache is not the pipeline's job
+    sc.setJobGroup(group, "outer")
+    try:
+        run_pipeline(hot_pages, MatchConfig())
+        descriptions = _job_descriptions(sc, group)
+    finally:
+        sc._jsc.clearJobGroup()
+    cuts = set(STAGE_COUNTERS) | {"block_sizes"}
+    assert [d for d in descriptions if d not in cuts] == ["outer"], descriptions
+
+
+def test_sn_short_key_counter_observed_on_records_cut(spark, tmp_path, hot_pages):
+    """``audit_sn_keys`` counts short SN keys on the records cut's job; the
+    count equals the audit's rows in memory, in snapshots and on resume."""
+    marked_up = spark.createDataFrame(
+        [
+            (f"https://example.org/markup/{i}", None, None,
+             "!@#$%^&*() " * 120 + f"latin tail {i}", "en")
+            for i in range(3)
+        ],
+        hot_pages.schema,
+    )
+    pages = hot_pages.unionByName(marked_up)
+    expected = sn_short_key_audit(pages).count()
+    assert expected == 3
+    config = MatchConfig(audit_sn_keys=True)
+    assert run_pipeline(pages, config).counters["sn_short_keyed"] == expected
+    cp = CheckpointManager(str(tmp_path), spark)
+    assert run_pipeline(pages, config, checkpoint=cp).counters["sn_short_keyed"] == expected
+    resumed = run_pipeline(pages, config, checkpoint=cp, resume=True)
+    assert resumed.counters["sn_short_keyed"] == expected

@@ -26,6 +26,8 @@ if a property regresses.  Properties audited:
      partial aggregation before the domain shuffle
   9. shard packing never range-partitions (no global sort) — the only
      exchange is the hash shuffle on the md5-prefix bucket
+ 10. the driver CC fold's (id, component) table is a JVM relation — no
+     PythonRDD in the clusters plan's RDD lineage
 
 Usage: python tools/plan_audit.py
 """
@@ -670,6 +672,35 @@ def main() -> None:
             if ok_sj
             else f"a broadcast/Cartesian leaked into the {qname} plan",
         )
+
+    # 24. q23's driver CC fold: a small edge set folds to a union-find on
+    # the driver, and its (id, component) table must come back as a JVM
+    # relation.  A pickled Python RDD there makes the clusters cut decode
+    # every row in Python workers.  Inputs are JVM-only, so any PythonRDD
+    # in the lineage is the fold's.
+    from semantic_entity_matching_spark.operators.cluster import (
+        clusters_from_pairs,
+    )
+
+    ids_cf = spark.range(40).select(
+        F.concat(F.lit("n"), F.col("id")).alias("url")
+    )
+    edges_cf = ids_cf.limit(10).select(
+        F.col("url").alias("id_a"),
+        F.concat(F.col("url"), F.lit("x")).alias("id_b"),
+    )
+    lineage_cf = (
+        clusters_from_pairs(edges_cf, all_ids=ids_cf, n_edges=10)
+        ._jdf.queryExecution().toRdd().toDebugString()
+    )
+    ok_cf = "PythonRDD" not in lineage_cf
+    check(
+        "q23_cluster_fold_jvm_only",
+        ok_cf,
+        "driver union-find table is an Arrow-built local relation"
+        if ok_cf
+        else "the driver CC fold's table is a pickled PythonRDD",
+    )
 
     if FAILURES:
         print(f"\n{len(FAILURES)} plan properties FAILED: {FAILURES}")
