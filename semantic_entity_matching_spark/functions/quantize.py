@@ -163,3 +163,22 @@ def binary_cosine_from_packed(a: Column, b: Column) -> Column:
     return binary_cosine_expr(
         binary_hamming_udf(a, b), F.octet_length(a) * F.lit(8)
     )
+
+
+def quantized_cosine(kind: str):
+    """The approximate cosine ``(Column, Column) -> Column`` that scores
+    two ``kind``-quantized vectors: int8 cosine, or the sign-sketch
+    estimate for packed bits.  Both are safe under a threshold filter
+    (the int8 UDF is the filter-safe instance; the sign-sketch estimate is
+    JVM codegen).  uint8 is a storage format (reference
+    EmbeddingType.UINT8), not a scoring one: its shifted-positive values
+    need centering before cosine, so it is refused with any unknown kind
+    rather than silently scored wrong."""
+    if kind == "int8":
+        return int8_cosine_udf_filter_safe
+    if kind in ("binary", "ubinary"):
+        return binary_cosine_from_packed
+    raise ValueError(
+        f"unsupported quantization for cosine scoring: {kind!r}"
+        " (use None/'float', 'int8', 'binary' or 'ubinary')"
+    )

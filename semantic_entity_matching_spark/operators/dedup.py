@@ -229,16 +229,15 @@ def cross_corpus_near_duplicates(
         "cross_reference_blocks",
     )
 
-    annot_threshold = min(cfg.hot_block_threshold, cfg.max_block_size)
     c_head = (
         cb.groupBy("block_key")
         .agg(F.count(F.lit(1)).alias("_cn"))
-        .where(F.col("_cn") > annot_threshold)
+        .where(F.col("_cn") > cfg.head_threshold)
     )
     r_head = (
         rb.groupBy("block_key")
         .agg(F.count(F.lit(1)).alias("_rn"))
-        .where(F.col("_rn") > annot_threshold)
+        .where(F.col("_rn") > cfg.head_threshold)
     )
     # keys needing annotation = the union of the two Zipf heads (bounded
     # by side_rows/threshold each); everything else is cold on BOTH sides
@@ -549,46 +548,28 @@ def embedding_near_duplicates(
     sign-sketch cosine estimate.  Both are approximate — use them as the
     pre-scoring pass at 100 TB and rerank survivors with exact float."""
     from semantic_entity_matching_spark.functions.quantize import (
-        binary_cosine_from_packed,
-        int8_cosine_udf_filter_safe,
         quantize,
+        quantized_cosine,
+    )
+    from semantic_entity_matching_spark.functions.similarity import (
+        cosine_udf_filter_safe,
     )
 
-    if quantization not in (None, "float", "int8", "binary", "ubinary"):
-        # uint8 is a storage format (reference EmbeddingType.UINT8), not a
-        # scoring format: its shifted-positive values need centering before
-        # cosine — refuse rather than silently compute the wrong similarity
-        raise ValueError(
-            f"unsupported quantization for near-dup scoring: {quantization!r}"
-            " (use None/'float', 'int8', 'binary' or 'ubinary')"
-        )
-    if quantization not in (None, "float"):
-        df = quantize(df, vec_col, quantization, out_col="_qv")
-        vec_col_eff = "_qv"
-    else:
-        vec_col_eff = vec_col
-    base = df.select(F.col(id_col), F.col(vec_col_eff), *( [F.col(bucket_col)] if bucket_col else [] ))
-    join_keys = [bucket_col] if bucket_col else []
-    a = base.select(*join_keys, F.col(id_col).alias("id_a"), F.col(vec_col_eff).alias("_va"))
-    b = base.select(*join_keys, F.col(id_col).alias("id_b"), F.col(vec_col_eff).alias("_vb"))
-    joined = a.join(b, join_keys) if join_keys else a.crossJoin(b)
     # Python-UDF scores use the filter-safe (non-deterministic-marked)
     # variants: the threshold filter below otherwise makes Catalyst
     # evaluate the UDF twice per row (guide §4.4; measured: 4
     # ArrowEvalPython nodes in the q20 plan, 2 after the fix)
-    if quantization in ("binary", "ubinary"):
-        # sign-sketch cosine estimate (shared expression; bit width comes
-        # from the column itself so the plan stays schema-driven) — JVM
-        # codegen, subexpression elimination already dedups it
-        cos = binary_cosine_from_packed(F.col("_va"), F.col("_vb"))
-    elif quantization == "int8":
-        cos = int8_cosine_udf_filter_safe(F.col("_va"), F.col("_vb"))
-    else:
-        from semantic_entity_matching_spark.functions.similarity import (
-            cosine_udf_filter_safe,
-        )
-
-        cos = cosine_udf_filter_safe(F.col("_va"), F.col("_vb"))
+    cosine = cosine_udf_filter_safe
+    if quantization not in (None, "float"):
+        cosine = quantized_cosine(quantization)
+        df = quantize(df, vec_col, quantization, out_col="_qv")
+        vec_col = "_qv"
+    base = df.select(F.col(id_col), F.col(vec_col), *( [F.col(bucket_col)] if bucket_col else [] ))
+    join_keys = [bucket_col] if bucket_col else []
+    a = base.select(*join_keys, F.col(id_col).alias("id_a"), F.col(vec_col).alias("_va"))
+    b = base.select(*join_keys, F.col(id_col).alias("id_b"), F.col(vec_col).alias("_vb"))
+    joined = a.join(b, join_keys) if join_keys else a.crossJoin(b)
+    cos = cosine(F.col("_va"), F.col("_vb"))
     if score_round is not None:
         cos = F.round(cos, score_round)
     return (

@@ -67,6 +67,12 @@ class PairGenConfig:
             if getattr(self, name) < 1:
                 raise ValueError(f"{name} must be >= 1, got {getattr(self, name)}")
 
+    @property
+    def head_threshold(self) -> int:
+        """Keys above this size are dropped or salted, so they are the
+        only keys whose size a join needs: the head of a size table."""
+        return min(self.hot_block_threshold, self.max_block_size)
+
 
 def salt_count(size: Column, threshold: int, parallelism: int) -> Column:
     """Salts for a key of ``size`` rows: ``least(ceil(size / threshold),
@@ -204,8 +210,7 @@ def block_pair_stream(
     # never broadcast at web scale; the > threshold head is bounded by
     # total_block_rows / threshold and is the table a broadcast hint is
     # actually safe on.  Keys absent from the head are cold: kept, salt=1.
-    annot_threshold = min(cfg.hot_block_threshold, cfg.max_block_size)
-    hot_sizes = F.broadcast(sizes.where(F.col("block_size") > annot_threshold))
+    hot_sizes = F.broadcast(sizes.where(F.col("block_size") > cfg.head_threshold))
     annotated = blocks.join(hot_sizes, "block_key", "left").where(
         F.col("block_size").isNull()
         | (F.col("block_size") <= cfg.max_block_size)

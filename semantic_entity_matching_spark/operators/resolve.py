@@ -39,10 +39,13 @@ import math
 from dataclasses import dataclass
 
 import numpy as np
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import Column, DataFrame, Observation
 from pyspark.sql import functions as F
 
-from semantic_entity_matching_spark.plans.checkpoint import materialize
+from semantic_entity_matching_spark.plans.checkpoint import (
+    materialize,
+    materialize_observed,
+)
 
 # ---------------------------------------------------------------------------
 # Golden-record survivorship
@@ -479,7 +482,7 @@ def fellegi_sunter_score(
         # NULL must be tested explicitly: a NULL `when` condition falls
         # through to `otherwise`, which would charge the disagree weight.
         # ONE weight expression shared with fs_edges_deferred's cheap-
-        # feature prefilter, so the upper bound and the final score are
+        # feature upper bound, so the upper bound and the final score are
         # built from bit-identical per-field terms.
         expr = expr + _binary_weight_expr(fld)
     return _with_posterior(
@@ -527,101 +530,6 @@ def estimate_fs_params(
     return fields, lam
 
 
-def fs_edges_from_features(
-    features: DataFrame,
-    agree_thresholds: tuple = (0.80, 0.90, 0.80),
-    posterior_threshold: float = 0.5,
-    feature_cols: tuple = ("cosine", "jaro_winkler", "levenshtein"),
-    id_cols: tuple = ("id_a", "id_b"),
-    prior_init: float = 0.3,
-    m_init: float = 0.9,
-    u_init: float = 0.1,
-    em_sample_mod: int = 1,
-) -> DataFrame:
-    """Unsupervised match edges from a scored candidate-pair table →
-    ``(id_a, id_b, score)`` where ``score`` is the FS posterior.
-
-    Each similarity feature becomes a 0/1 agreement at its threshold
-    (null feature → null agreement → zero weight), m/u/prior are EM-fit
-    on THIS candidate population (Splink's estimate-on-blocked-pairs
-    practice — blocking already discarded the hopeless non-matches, and
-    the EM prior absorbs the resulting match-enrichment), and pairs at or
-    above ``posterior_threshold`` become edges.
-
-    ``em_sample_mod > 1`` fits the EM on a deterministic 1/mod
-    hash-sample of the candidate pairs (``pmod(xxhash64(id_a, id_b),
-    mod) == 0``) instead of the full population: pattern-count EM is a
-    method-of-moments-style fit over <= 3^F cells, so cell FREQUENCIES —
-    not the pair count — carry all the information, and a
-    100k-pair sample pins m/u/prior to within Monte-Carlo noise of the
-    full fit (pinned by pytest).  The SCORING pass always sees every
-    pair.  Sampling is partitioning-independent and replayable; if the
-    sample lands empty (tiny inputs) the fit silently falls back to the
-    full population.
-
-    The EM collect is one aggregate over <= 3^F agreement patterns; the
-    scoring pass is pure codegen.  An empty candidate table yields an
-    empty edge table (no EM run)."""
-    if len(agree_thresholds) != len(feature_cols):
-        raise ValueError("one threshold per feature col")
-    if em_sample_mod < 1:
-        raise ValueError(f"em_sample_mod must be >= 1, got {em_sample_mod}")
-    g_cols = [f"g_{c}" for c in feature_cols]
-    feats = features
-    for c, g, t in zip(feature_cols, g_cols, agree_thresholds):
-        feats = feats.withColumn(
-            g,
-            F.when(F.col(c).isNull(), F.lit(None)).otherwise(
-                (F.col(c) >= F.lit(float(t))).cast("int")
-            ),
-        )
-    empty_edges = feats.where(F.lit(False)).select(
-        *id_cols, F.lit(0.0).alias("score")
-    )
-    # cut the lineage ONCE before the EM collect: the feature table sits
-    # on top of the pipeline's most expensive stage (unpruned Python JW
-    # over every candidate pair) and is consumed again by the scoring
-    # pass and by everything downstream of the returned edges — without
-    # this it would recompute per consumer.
-    feats = materialize(feats, "fs_features")
-
-    def _fit(src: DataFrame):
-        return estimate_fs_params(
-            src,
-            g_cols,
-            prior_init=prior_init,
-            m_init=m_init,
-            u_init=u_init,
-        )
-
-    fit_src = feats
-    if em_sample_mod > 1:
-        fit_src = feats.where(
-            F.pmod(
-                F.xxhash64(*[F.col(c) for c in id_cols]),
-                F.lit(int(em_sample_mod)),
-            )
-            == 0
-        )
-    try:
-        fields, prior = _fit(fit_src)
-    except ValueError as exc:
-        # a sample that landed empty falls back to the full population;
-        # any other failure (or an empty population) keeps the original
-        # empty-edges contract
-        if em_sample_mod > 1 and "empty" in str(exc):
-            try:
-                fields, prior = _fit(feats)
-            except ValueError:
-                return empty_edges
-        else:
-            return empty_edges
-    scored = fellegi_sunter_score(feats, fields, prior=prior)
-    return scored.where(
-        F.col("match_prob") >= F.lit(float(posterior_threshold))
-    ).select(*id_cols, F.col("match_prob").alias("score"))
-
-
 def _binary_weight_expr(fld: FSField) -> Column:
     """The per-field FS weight as a codegen when-chain (shared with
     :func:`fellegi_sunter_score`): null → 0, agree → log2(m/u),
@@ -646,34 +554,46 @@ def fs_edges_deferred(
     u_init: float = 0.1,
     em_sample_mod: int = 1,
     counters: dict | None = None,
-    n_pairs: int | None = None,
 ) -> DataFrame:
-    """:func:`fs_edges_from_features` with the EXPENSIVE feature deferred:
+    """Unsupervised match edges from a scored candidate-pair table →
+    ``(id_a, id_b, score)`` where ``score`` is the FS posterior.
+
     ``feats`` carries every feature except ``deferred_col``, and
     ``add_deferred`` (df → df) computes that column on demand — in the
     flagship this is the per-pair Python Jaro-Winkler, the engine's one
-    per-pair-Python stage.
+    per-pair-Python stage.  Each feature becomes a 0/1 agreement at its
+    threshold (null feature → null agreement → zero weight), m/u/prior are
+    EM-fit on THIS candidate population (Splink's estimate-on-blocked-pairs
+    practice — blocking already discarded the hopeless non-matches, and
+    the EM prior absorbs the resulting match-enrichment), and pairs at or
+    above ``posterior_threshold`` become edges.
 
-    Identical edges to the eager path at the same ``em_sample_mod``
-    (pytest-pinned), computed with the deferred feature evaluated on only
+    ``em_sample_mod > 1`` fits the EM on a deterministic 1/mod hash-sample
+    (``pmod(xxhash64(id_a, id_b), mod) == 0``): pattern-count EM over
+    <= 3^F cells needs cell FREQUENCIES, not the pair count, so a
+    100k-pair sample pins m/u/prior to within Monte-Carlo noise of the
+    full fit (pytest-pinned).  Sampling is partitioning-independent and
+    replayable; a sample that lands empty (tiny inputs) falls back to the
+    full population.  The scoring pass always sees every pair, and the
+    deferred feature runs on only
 
-    1. the EM SAMPLE (1/mod of the pairs — the fit genuinely needs all
-       three agreement bits), and
+    1. the EM sample (the fit genuinely needs all agreement bits), and
     2. pairs whose CHEAP-feature weight plus the deferred field's maximum
        possible weight still reaches the posterior threshold — an exact
        upper bound in weight space (posterior is monotone in the weight),
        so dropped pairs provably cannot be edges under ANY value of the
-       deferred feature.  On blocked webtext candidates the cheap
-       features are cosine and JVM-codegen Levenshtein, and the bulk of
-       candidates (g_cos = g_lev = 0 non-matches) never reaches Python.
+       deferred feature.
+
+    At ``em_sample_mod == 1`` the sample is every pair: the deferred
+    feature runs once per pair inside the feature cut and the bound has
+    nothing left to save, so it is skipped.  Either way the edges equal
+    the eager fit + score over all features (pytest-pinned).
 
     ``counters`` (optional dict) receives ``fs_pairs_total``,
-    ``fs_jw_pairs`` (pairs that ran the deferred feature because the
-    upper bound kept them) and ``fs_jw_sample_pairs`` (pairs that ran it
-    inside the EM sample) — the no-silent-pruning audit.  Total per-pair
-    Python work is sample + survivors: ~``fs_em_sample_target`` +
-    decision-relevant pairs, INDEPENDENT of candidate count once the
-    auto mod engages."""
+    ``fs_jw_sample_pairs`` (pairs that ran the deferred feature inside the
+    EM sample) and ``fs_jw_pairs`` (pairs that ran it in the scoring pass)
+    — the no-silent-pruning audit, observed on the jobs that compute them.
+    An empty candidate table yields an empty edge table."""
     if len(agree_thresholds) != len(feature_cols):
         raise ValueError("one threshold per feature col")
     if em_sample_mod < 1:
@@ -681,6 +601,10 @@ def fs_edges_deferred(
     if deferred_col not in feature_cols:
         raise ValueError(f"{deferred_col!r} not in feature_cols")
     thresh = dict(zip(feature_cols, agree_thresholds))
+    g_cols = [f"g_{c}" for c in feature_cols]
+    cheap_cols = [c for c in feature_cols if c != deferred_col]
+    counters = {} if counters is None else counters
+    n_rows = F.count(F.lit(1))
 
     def add_g(src: DataFrame, cols) -> DataFrame:
         for c in cols:
@@ -692,41 +616,60 @@ def fs_edges_deferred(
             )
         return src
 
-    cheap_cols = [c for c in feature_cols if c != deferred_col]
-    feats = materialize(add_g(feats, cheap_cols), "fs_cheap_features")
-    empty_edges = feats.where(F.lit(False)).select(
-        *id_cols, F.lit(0.0).alias("score")
-    )
-
     def with_all_g(src: DataFrame) -> DataFrame:
         return add_g(add_deferred(src), [deferred_col])
 
-    fit_src = feats
-    if em_sample_mod > 1:
-        fit_src = feats.where(
-            F.pmod(
-                F.xxhash64(*[F.col(c) for c in id_cols]),
-                F.lit(int(em_sample_mod)),
-            )
-            == 0
+    def fit(src: DataFrame):
+        return estimate_fs_params(
+            src, g_cols, prior_init=prior_init, m_init=m_init, u_init=u_init,
         )
-    g_cols = [f"g_{c}" for c in feature_cols]
-    try:
-        fields, prior = estimate_fs_params(
-            with_all_g(fit_src), g_cols,
-            prior_init=prior_init, m_init=m_init, u_init=u_init,
-        )
-    except ValueError as exc:
-        if em_sample_mod > 1 and "empty" in str(exc):
-            try:
-                fields, prior = estimate_fs_params(
-                    with_all_g(feats), g_cols,
-                    prior_init=prior_init, m_init=m_init, u_init=u_init,
+
+    def edges(scored: DataFrame) -> DataFrame:
+        return fellegi_sunter_score(scored, fields, prior=prior).where(
+            F.col("match_prob") >= F.lit(float(posterior_threshold))
+        ).select(*id_cols, F.col("match_prob").alias("score"))
+
+    full = em_sample_mod == 1
+    feats = add_g(feats, cheap_cols)
+    # the feature table feeds the EM fit and the scoring pass: cut it once
+    feats, seen = materialize_observed(
+        with_all_g(feats) if full else feats, "fs_features", None, {"n": n_rows}
+    )
+    counters.update(dict.fromkeys(
+        ("fs_pairs_total", "fs_jw_sample_pairs", "fs_jw_pairs"), seen["n"]
+    ))
+    empty_edges = feats.where(F.lit(False)).select(
+        *id_cols, F.lit(0.0).alias("score")
+    )
+    sample = feats
+    if not full:
+        sample_seen = Observation()
+        sample = with_all_g(
+            feats.where(
+                F.pmod(
+                    F.xxhash64(*[F.col(c) for c in id_cols]),
+                    F.lit(int(em_sample_mod)),
                 )
-            except ValueError:
-                return empty_edges
-        else:
+                == 0
+            )
+        ).observe(sample_seen, n_rows.alias("n"))
+    try:
+        fields, prior = fit(sample)
+        if not full:
+            counters["fs_jw_sample_pairs"] = sample_seen.get["n"]
+    except ValueError as exc:
+        # a sample that landed empty falls back to the full population;
+        # any other failure (or an empty population) yields no edges.  An
+        # empty sample delivers no observation: its count is 0.
+        if full or "empty" not in str(exc):
             return empty_edges
+        counters["fs_jw_sample_pairs"] = 0
+        try:
+            fields, prior = fit(with_all_g(feats))
+        except ValueError:
+            return empty_edges
+    if full:
+        return edges(feats)
 
     by_col = {f.col: f for f in fields}
     dfld = by_col[f"g_{deferred_col}"]
@@ -747,25 +690,12 @@ def fs_edges_deferred(
     w_cheap = F.lit(0.0)
     for c in cheap_cols:
         w_cheap = w_cheap + _binary_weight_expr(by_col[f"g_{c}"])
-    survivors = materialize(
+    survivors, seen = materialize_observed(
         feats.where(w_cheap + F.lit(w_def_max) >= F.lit(w_min - 1e-9)),
-        "fs_jw_survivors",
+        "fs_jw_survivors", None, {"n": n_rows},
     )
-    if counters is not None:
-        # pass n_pairs when the caller already counted the candidates
-        # (the pipeline's reranked-stage counter) — saves one scan job
-        counters["fs_pairs_total"] = (
-            n_pairs if n_pairs is not None else feats.count()
-        )
-        counters["fs_jw_pairs"] = survivors.count()
-        counters["fs_jw_sample_pairs"] = (
-            fit_src.count() if em_sample_mod > 1
-            else counters["fs_pairs_total"]
-        )
-    scored = fellegi_sunter_score(with_all_g(survivors), fields, prior=prior)
-    return scored.where(
-        F.col("match_prob") >= F.lit(float(posterior_threshold))
-    ).select(*id_cols, F.col("match_prob").alias("score"))
+    counters["fs_jw_pairs"] = seen["n"]
+    return edges(with_all_g(survivors))
 
 
 # ---------------------------------------------------------------------------

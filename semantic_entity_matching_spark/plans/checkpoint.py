@@ -34,7 +34,7 @@ import time
 from dataclasses import dataclass, field
 from typing import Any
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, Observation, SparkSession
 
 
 def _atomic_write_json(path: str, payload: dict[str, Any]) -> None:
@@ -197,3 +197,19 @@ def materialize(
         return checkpoint.read(name, manifest["step"])
     finally:
         sc.setLocalProperty("spark.job.description", previous)
+
+
+def materialize_observed(
+    df: DataFrame,
+    name: str,
+    checkpoint: CheckpointManager | None,
+    metrics: dict[str, Column],
+) -> tuple[DataFrame, dict]:
+    """:func:`materialize` ``df`` and return the cut with the ``metrics``
+    (name -> aggregate Column) its own job computed: an ``Observation``
+    rides the cut, so no second action re-reads it."""
+    if not metrics:
+        return materialize(df, name, checkpoint), {}
+    seen = Observation()
+    df = df.observe(seen, *[c.alias(k) for k, c in metrics.items()])
+    return materialize(df, name, checkpoint), seen.get

@@ -79,9 +79,19 @@ def run_incremental(
     block keys written by the previous run) — pass it and the delta fold
     never recomputes a single reference embedding; without it the index
     is built (and unpersisted) here, which re-embeds the reference
-    corpus and erases most of the delta-cost advantage."""
+    corpus and erases most of the delta-cost advantage.
+
+    Blended scoring only: the cross edges come from the blended
+    :class:`ReferenceIndex`, and FS parameters are fit per population,
+    so any other ``config.scoring`` raises before any job."""
     cfg = config or MatchConfig()
     id_col = cfg.id_col
+    if cfg.scoring != "blended":
+        # the cross edges are scored by the (blended-only) ReferenceIndex:
+        # an FS delta run would mix two edge rules in one clustering
+        raise ValueError(
+            f"run_incremental supports scoring='blended' only, got {cfg.scoring!r}"
+        )
 
     own_index = index is None
     if own_index:

@@ -24,7 +24,7 @@ from __future__ import annotations
 
 from dataclasses import dataclass, field
 
-from pyspark.sql import DataFrame, Observation
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from semantic_entity_matching_spark.functions.embed import (
@@ -54,7 +54,7 @@ from semantic_entity_matching_spark.operators.pairs import (
 )
 from semantic_entity_matching_spark.plans.checkpoint import (
     CheckpointManager,
-    materialize,
+    materialize_observed,
 )
 
 
@@ -109,36 +109,23 @@ class MatchConfig:
     # population (Splink's estimate-on-blocked-pairs practice), and a
     # pair becomes an edge when its posterior match probability reaches
     # fs_posterior.  No labels, no hand-set match_threshold.  The blended
-    # rerank bounds don't apply, but the cost is still bounded: the EM fit
-    # sees a hash-sample (fs_em_sample_*) and, with fs_defer_jw, the
-    # per-pair Python JW runs only on that sample plus the pairs whose
+    # rerank bounds don't apply, but the cost is still bounded: the
+    # per-pair Python JW runs only on the EM sample plus the pairs whose
     # cheap-feature weight upper bound can still reach fs_posterior —
-    # both exact, identical edges to the eager form.
+    # exact, identical edges to scoring every pair
+    # (resolve.fs_edges_deferred).
     scoring: str = "blended"
     fs_agree_thresholds: tuple = (0.80, 0.90, 0.80)  # cosine, jw, lev
     fs_posterior: float = 0.5
-    # EM-fit sampling (FS mode): fit m/u/prior on a deterministic 1/mod
-    # hash-sample of the candidate pairs — pattern-count EM needs cell
-    # frequencies, not the full pair table, so a ~fs_em_sample_target-pair
-    # sample reproduces the full fit to Monte-Carlo noise (pytest-pinned).
-    # None = auto: mod chosen from the measured candidate count so the fit
-    # sees ~fs_em_sample_target pairs (1 — full population — when the
-    # candidates are already small).  The scoring pass always sees every
-    # pair.
-    fs_em_sample_mod: int | None = None
+    # EM-fit sampling (FS mode): the EM fits m/u/prior on a deterministic
+    # 1/mod hash-sample of the candidate pairs, mod derived from the
+    # measured candidate count so the fit sees ~fs_em_sample_target pairs
+    # (mod 1, the full population, when the candidates are already
+    # small; reported as counter fs_em_sample_mod).  Pattern-count EM
+    # needs cell frequencies, not the full pair table, so the sample
+    # reproduces the full fit to Monte-Carlo noise (pytest-pinned).  The
+    # scoring pass always sees every pair.
     fs_em_sample_target: int = 100_000
-    # Defer the per-pair Python Jaro-Winkler in FS mode: compute it only
-    # on the EM sample plus the pairs whose cheap-feature (cosine +
-    # codegen Levenshtein) weight upper bound still reaches fs_posterior
-    # — an exact prune (identical edges, pytest-pinned), so the engine's
-    # one per-pair-Python stage runs on ~fs_em_sample_target +
-    # decision-relevant pairs instead of every candidate.  Deferral costs
-    # ~3 s of fixed overhead (two lineage cuts, audit counts, a second
-    # UDF stage — measured at sf0.1, BASELINE.md), so None (default) =
-    # AUTO: defer exactly when the EM sample mod engages (candidates >
-    # fs_em_sample_target — when there is something to save).  True/False
-    # force it.
-    fs_defer_jw: bool | None = None
 
 
 @dataclass
@@ -232,57 +219,32 @@ def score_pairs(
     # scored stage ANTI-scaled 30s -> 160s from 1 to 4 executors; the
     # explicit shuffle join halved it in one JVM and splits the vector
     # traffic across executors on a cluster).
-    if config.quantization in (None, "float"):
-        a = feat.select(
-            F.col("_rid").alias("id_a"), F.col("_emb").alias("emb_a")
-        ).hint("shuffle_hash")
-        b = feat.select(
-            F.col("_rid").alias("id_b"), F.col("_emb").alias("emb_b")
-        ).hint("shuffle_hash")
-        return (
-            pairs.join(a, "id_a")
-            .join(b, "id_b")
-            .withColumn("cosine", cosine_udf(F.col("emb_a"), F.col("emb_b")))
-            .select("id_a", "id_b", "block_key", "cosine")
+    if config.quantization not in (None, "float"):
+        from semantic_entity_matching_spark.functions.quantize import (
+            quantize,
+            quantized_cosine,
         )
 
-    from semantic_entity_matching_spark.functions.quantize import (
-        binary_cosine_from_packed,
-        int8_cosine_udf_filter_safe,
-        quantize,
-    )
-
-    if config.quantization not in ("int8", "binary", "ubinary"):
-        raise ValueError(
-            f"unsupported pre-scoring quantization {config.quantization!r}"
-            " (use None/'float', 'int8', 'binary' or 'ubinary')"
+        approx = quantized_cosine(config.quantization)
+        margin = config.quantize_margin
+        if margin is None:
+            margin = 0.08 if config.quantization == "int8" else 0.25
+        approx_cutoff = rerank_cosine_cutoff(config) - margin - 1e-6
+        q = quantize(feat, "_emb", config.quantization, out_col="_q").select(
+            "_rid", "_q"
         )
-    margin = config.quantize_margin
-    if margin is None:
-        margin = 0.08 if config.quantization == "int8" else 0.25
-    approx_cutoff = rerank_cosine_cutoff(config) - margin - 1e-6
-
-    q = quantize(feat, "_emb", config.quantization, out_col="_q").select(
-        "_rid", "_q"
-    )
-    qa = q.select(
-        F.col("_rid").alias("id_a"), F.col("_q").alias("_qa")
-    ).hint("shuffle_hash")
-    qb = q.select(
-        F.col("_rid").alias("id_b"), F.col("_q").alias("_qb")
-    ).hint("shuffle_hash")
-    if config.quantization == "int8":
-        # filter-safe marker: the approx-cutoff filter below would
-        # otherwise double-evaluate the UDF (guide §4.4)
-        approx = int8_cosine_udf_filter_safe(F.col("_qa"), F.col("_qb"))
-    else:
-        approx = binary_cosine_from_packed(F.col("_qa"), F.col("_qb"))
-    kept = (
-        pairs.join(qa, "id_a")
-        .join(qb, "id_b")
-        .where(approx >= F.lit(approx_cutoff))
-        .select("id_a", "id_b", "block_key")
-    )
+        qa = q.select(
+            F.col("_rid").alias("id_a"), F.col("_q").alias("_qa")
+        ).hint("shuffle_hash")
+        qb = q.select(
+            F.col("_rid").alias("id_b"), F.col("_q").alias("_qb")
+        ).hint("shuffle_hash")
+        pairs = (
+            pairs.join(qa, "id_a")
+            .join(qb, "id_b")
+            .where(approx(F.col("_qa"), F.col("_qb")) >= F.lit(approx_cutoff))
+            .select("id_a", "id_b", "block_key")
+        )
     a = feat.select(
         F.col("_rid").alias("id_a"), F.col("_emb").alias("emb_a")
     ).hint("shuffle_hash")
@@ -290,7 +252,7 @@ def score_pairs(
         F.col("_rid").alias("id_b"), F.col("_emb").alias("emb_b")
     ).hint("shuffle_hash")
     return (
-        kept.join(a, "id_a")
+        pairs.join(a, "id_a")
         .join(b, "id_b")
         .withColumn("cosine", cosine_udf(F.col("emb_a"), F.col("emb_b")))
         .select("id_a", "id_b", "block_key", "cosine")
@@ -320,8 +282,6 @@ def rerank_pairs(
     scored: DataFrame,
     records: DataFrame,
     config: MatchConfig,
-    prune: bool = True,
-    with_jw: bool = True,
 ) -> DataFrame:
     """Stage 2 of scoring: expensive string metrics + blended score, only on
     pairs whose upper bound can still reach the threshold.  Joins the
@@ -331,11 +291,49 @@ def rerank_pairs(
 
     1. cosine bound (stage 1 already computed it): prune when even
        jw = lev = 1 cannot reach the threshold;
-    2. Levenshtein bound: Levenshtein is a JVM built-in (whole-stage
-       codegen) while Jaro-Winkler is per-pair Python — so compute lev
-       FIRST and prune with jw = 1 before any Python runs.  On near-dup-
-       heavy corpora the cosine bound alone keeps ~70% of candidates; the
-       lev bound cuts the Python JW set to roughly the eventual edge set.
+    2. Levenshtein bound (:func:`_blended_cascade`): Levenshtein is a JVM
+       built-in (whole-stage codegen) while Jaro-Winkler is per-pair
+       Python — so compute lev FIRST and prune with jw = 1 before any
+       Python runs.  On near-dup-heavy corpora the cosine bound alone
+       keeps ~70% of candidates; the lev bound cuts the Python JW set to
+       roughly the eventual edge set.
+    """
+    survivors = scored.where(
+        F.col("cosine") >= F.lit(rerank_cosine_cutoff(config))
+    )
+    return _blended_cascade(_text_heads(survivors, records, config), config).select(
+        "id_a", "id_b", "block_key", "cosine", "jaro_winkler",
+        "levenshtein", "score",
+    )
+
+
+def _text_heads(
+    pairs: DataFrame, records: DataFrame, config: MatchConfig
+) -> DataFrame:
+    """``pairs`` + ``text_a``/``text_b``: the first ``rerank_max_chars``
+    of each side's text, the only text the string metrics read."""
+    txt = records.select(
+        F.col(config.id_col).alias("_rid"),
+        F.substring(F.col(config.text_col), 1, config.rerank_max_chars).alias(
+            "_text"
+        ),
+    )
+    return pairs.join(
+        txt.select(F.col("_rid").alias("id_a"), F.col("_text").alias("text_a")),
+        "id_a",
+    ).join(
+        txt.select(F.col("_rid").alias("id_b"), F.col("_text").alias("text_b")),
+        "id_b",
+    )
+
+
+def _blended_cascade(pairs: DataFrame, config: MatchConfig) -> DataFrame:
+    """The blended rule over pairs that carry ``cosine``, ``text_a`` and
+    ``text_b``: codegen Levenshtein, then the exact Jaro-Winkler upper
+    bound (jw = 1) prunes pairs that cannot reach ``match_threshold``,
+    then the per-pair Python Jaro-Winkler and the blended ``score``
+    (rounded to ``score_round``) on the rest.  Shared by
+    :func:`rerank_pairs` and incremental matching.
 
     The ``- 1e-6`` margin keeps the bound conservative under
     ``score_round`` (round(score, 6) >= T only requires score >= T - 5e-7).
@@ -343,27 +341,6 @@ def rerank_pairs(
     from semantic_entity_matching_spark.functions.similarity import DEFAULT_WEIGHTS
 
     w = config.score_weights or DEFAULT_WEIGHTS
-    # prune=False (FS scoring): every candidate pair gets all three
-    # features — the blended-threshold bounds don't apply to FS edges and
-    # EM's u estimate needs the non-match population intact.
-    survivors = (
-        scored.where(F.col("cosine") >= F.lit(rerank_cosine_cutoff(config)))
-        if prune
-        else scored
-    )
-    txt = records.select(
-        F.col(config.id_col).alias("_rid"),
-        F.substring(F.col(config.text_col), 1, config.rerank_max_chars).alias(
-            "_text"
-        ),
-    )
-    survivors = survivors.join(
-        txt.select(F.col("_rid").alias("id_a"), F.col("_text").alias("text_a")),
-        "id_a",
-    ).join(
-        txt.select(F.col("_rid").alias("id_b"), F.col("_text").alias("text_b")),
-        "id_b",
-    )
     jw_upper_bound = (
         F.col("cosine") * F.lit(w["cosine"])
         + F.lit(w["jaro_winkler"])
@@ -377,46 +354,16 @@ def rerank_pairs(
     )
     if config.score_round is not None:
         score_col = F.round(score_col, config.score_round)
-    out = survivors.withColumn(
-        "levenshtein", levenshtein_similarity_expr("text_a", "text_b")
-    )
-    if prune:
-        out = out.where(jw_upper_bound >= F.lit(config.match_threshold - 1e-6))
-    if not with_jw:
-        # FS deferred-JW mode: every feature except the per-pair-Python
-        # Jaro-Winkler; the truncated text heads ride along so the
-        # deferred stage needs no second corpus join (<= 2*rerank_max_chars
-        # bytes/pair — the prefilter reads none of it)
-        return out.select(
-            "id_a", "id_b", "block_key", "cosine", "levenshtein",
-            "text_a", "text_b",
-        )
     return (
-        out.withColumn(
+        pairs.withColumn(
+            "levenshtein", levenshtein_similarity_expr("text_a", "text_b")
+        )
+        .where(jw_upper_bound >= F.lit(config.match_threshold - 1e-6))
+        .withColumn(
             "jaro_winkler", jaro_winkler_udf(F.col("text_a"), F.col("text_b"))
         )
         .withColumn("score", score_col)
-        .select(
-            "id_a", "id_b", "block_key", "cosine", "jaro_winkler",
-            "levenshtein", "score",
-        )
     )
-
-
-def _cut_observed(
-    df: DataFrame,
-    name: str,
-    checkpoint: CheckpointManager | None,
-    metrics: dict,
-) -> tuple[DataFrame, dict]:
-    """:func:`~.checkpoint.materialize` ``df`` and return the cut with the
-    ``metrics`` (name -> aggregate Column) its own job computed: an
-    ``Observation`` rides the cut, so no second action re-reads it."""
-    if not metrics:
-        return materialize(df, name, checkpoint), {}
-    seen = Observation()
-    df = df.observe(seen, *[c.alias(k) for k, c in metrics.items()])
-    return materialize(df, name, checkpoint), seen.get
 
 
 PIPELINE_STAGES = (
@@ -446,8 +393,7 @@ def run_pipeline(
     snapshot (the CC supersteps included), so a resume never mixes two
     runs' stages.
 
-    Where each counter comes from (only FS scoring with deferred JW runs
-    jobs just to count):
+    Where each counter comes from (no job runs only to count):
 
     * the seven stage counters (``records_prepared``, ``block_keys_emitted``,
       ``pairs_generated``, ``pairs_scored``, ``pairs_reranked``,
@@ -461,8 +407,9 @@ def run_pipeline(
     * ``sn_short_keyed`` (``audit_sn_keys``) is observed on the records
       cut; a resumed records snapshot counts it with one action instead;
     * ``fs_em_sample_mod`` (FS scoring) is derived from ``pairs_scored``;
-      the ``fs_*`` deferral counters are counted inside
-      ``resolve.fs_edges_deferred``.
+      ``fs_pairs_total``, ``fs_jw_sample_pairs`` and ``fs_jw_pairs`` are
+      observed on the jobs of ``resolve.fs_edges_deferred`` (a resumed
+      edges snapshot re-emits none of them).
     """
     from semantic_entity_matching_spark.plans.reporting import NullReporter
 
@@ -481,10 +428,6 @@ def run_pipeline(
         # silently skew the FS u estimate (EM needs the candidate
         # population intact)
         raise ValueError("scoring='fellegi_sunter' requires quantization=None")
-    if config.fs_em_sample_mod is not None and config.fs_em_sample_mod < 1:
-        raise ValueError(
-            f"fs_em_sample_mod must be >= 1 or None, got {config.fs_em_sample_mod}"
-        )
     if config.fs_em_sample_target < 1:
         raise ValueError(
             f"fs_em_sample_target must be >= 1, got {config.fs_em_sample_target}"
@@ -516,7 +459,7 @@ def run_pipeline(
             observe.update(metrics or {})
             # each stage feeds several downstream consumers: without the
             # cut every stage recomputes its whole upstream chain
-            df, observed = _cut_observed(build(), name, checkpoint, observe)
+            df, observed = materialize_observed(build(), name, checkpoint, observe)
             counters.update(observed)
         if checkpoint is not None:  # the snapshot's count, from its parquet footers
             counters[counter] = checkpoint.manifest(name)["rows"]
@@ -551,16 +494,16 @@ def run_pipeline(
             counters["sn_short_keyed"] = records.where(sn_short).count()
         if checkpoint is not None:
             checkpoint.add_counter("sn_short_keyed", counters["sn_short_keyed"])
-    # The pair generator reads only the block_size > min(hot_block_threshold,
-    # max_block_size) head of the size table: the keys it salts or drops
+    # The pair generator reads only the block_size > head_threshold head
+    # of the size table: the keys it salts or drops
     # (block_pair_stream).  Cut that head once, in memory: it is bounded by
     # total block rows / threshold, the bound its broadcast relies on.  The
     # same job counts the keys the cap drops, which must never be a silent
     # cap (north_rule audit), so every run's counters surface them.
     pg = config.pairgen
-    head, dropped = _cut_observed(
+    head, dropped = materialize_observed(
         block_sizes(blocks, config.id_col).where(
-            F.col("block_size") > min(pg.hot_block_threshold, pg.max_block_size)
+            F.col("block_size") > pg.head_threshold
         ),
         "block_sizes",
         None,
@@ -580,64 +523,45 @@ def run_pipeline(
     if config.scoring == "fellegi_sunter":
         from semantic_entity_matching_spark.operators.resolve import (
             fs_edges_deferred,
-            fs_edges_from_features,
         )
 
-        # the scored stage already counted the candidate population
-        # (prune=False keeps every scored pair through rerank): size the
-        # EM sample mod and the auto defer decision from it BEFORE the
-        # rerank stage builds, so with_jw is known up front
-        n_cand = counters.get("pairs_scored", 0)
-        em_mod = config.fs_em_sample_mod
-        if em_mod is None:
-            em_mod = max(1, -(-n_cand // config.fs_em_sample_target))
-        defer = config.fs_defer_jw
-        if defer is None:
-            defer = em_mod > 1
+        # every scored pair is an FS candidate: its text heads and the
+        # codegen Levenshtein; the per-pair Python JW is deferred to the
+        # edges stage, which runs it only where the fit or an edge needs it
         reranked = stage(
             "reranked",
-            lambda: rerank_pairs(
-                scored, records, config, prune=False, with_jw=not defer,
+            lambda: _text_heads(scored, records, config)
+            .withColumn(
+                "levenshtein", levenshtein_similarity_expr("text_a", "text_b")
+            )
+            .select(
+                "id_a", "id_b", "block_key", "cosine", "levenshtein",
+                "text_a", "text_b",
             ),
             "pairs_reranked",
         )
-        if defer:
-            fs_counters: dict[str, int] = {}
-
-            def build_edges_deferred() -> DataFrame:
-                return fs_edges_deferred(
-                    reranked,
-                    lambda df: df.withColumn(
-                        "jaro_winkler",
-                        jaro_winkler_udf(F.col("text_a"), F.col("text_b")),
-                    ),
-                    agree_thresholds=config.fs_agree_thresholds,
-                    posterior_threshold=config.fs_posterior,
-                    em_sample_mod=em_mod,
-                    counters=fs_counters,
-                    n_pairs=counters.get("pairs_reranked"),
-                )
-
-            edges = stage("edges", build_edges_deferred, "edges_emitted")
-            # filled during the build (empty on checkpoint resume)
-            counters.update(fs_counters)
-            if checkpoint is not None:
-                for k, v in fs_counters.items():
-                    checkpoint.add_counter(k, v)
-        else:
-            edges = stage(
-                "edges",
-                lambda: fs_edges_from_features(
-                    reranked,
-                    agree_thresholds=config.fs_agree_thresholds,
-                    posterior_threshold=config.fs_posterior,
-                    em_sample_mod=em_mod,
+        # the EM sample mod, from the counted candidate population
+        em_mod = max(1, -(-counters["pairs_scored"] // config.fs_em_sample_target))
+        fs_counters = {"fs_em_sample_mod": em_mod}
+        edges = stage(
+            "edges",
+            lambda: fs_edges_deferred(
+                reranked,
+                lambda df: df.withColumn(
+                    "jaro_winkler",
+                    jaro_winkler_udf(F.col("text_a"), F.col("text_b")),
                 ),
-                "edges_emitted",
-            )
-        counters["fs_em_sample_mod"] = em_mod
+                agree_thresholds=config.fs_agree_thresholds,
+                posterior_threshold=config.fs_posterior,
+                em_sample_mod=em_mod,
+                counters=fs_counters,
+            ),
+            "edges_emitted",
+        )
+        counters.update(fs_counters)
         if checkpoint is not None:
-            checkpoint.add_counter("fs_em_sample_mod", em_mod)
+            for k, v in fs_counters.items():
+                checkpoint.add_counter(k, v)
     else:  # 'blended' — validated at entry
         reranked = stage(
             "reranked",

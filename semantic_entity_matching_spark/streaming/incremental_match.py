@@ -12,8 +12,9 @@ for stream-to-batch incremental jobs.  Per micro-batch:
                    ─► equi-join against the PRECOMPUTED reference block
                       table (computed once, cached — the stream side never
                       rescans the corpus)
-                   ─► cosine → Levenshtein → Jaro-Winkler cascade (the
-                      flagship's exact pruning bounds)
+                   ─► cosine cutoff, then the flagship's blended
+                      cascade (pipeline._blended_cascade: Levenshtein →
+                      exact JW upper-bound prune → Jaro-Winkler → blend)
                    ─► best reference match per incoming id (deterministic
                       tiebreak), below-threshold ⇒ unmatched (null)
                    ─► idempotent append to a TableSink keyed on the
@@ -32,15 +33,11 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from semantic_entity_matching_spark.functions.similarity import (
-    blended_score,
-    cosine_udf,
-    jaro_winkler_udf,
-    levenshtein_similarity_expr,
-)
+from semantic_entity_matching_spark.functions.similarity import cosine_udf
 from semantic_entity_matching_spark.operators.blocking import all_block_keys
 from semantic_entity_matching_spark.plans.pipeline import (
     MatchConfig,
+    _blended_cascade,
     prepare_records,
     rerank_cosine_cutoff,
 )
@@ -48,7 +45,12 @@ from semantic_entity_matching_spark.plans.pipeline import (
 
 class ReferenceIndex:
     """The precomputed side of incremental matching: records (id, text,
-    embedding) + block keys for a fixed corpus, cached once."""
+    embedding) + block keys for a fixed corpus, cached once.
+
+    Incremental matching scores with the blended rule only: Fellegi-Sunter
+    parameters are fit per candidate population, so an FS edge between a
+    new page and the reference cannot be decided from the new batch
+    alone.  Any other ``config.scoring`` raises here, before any job."""
 
     def __init__(
         self,
@@ -57,6 +59,11 @@ class ReferenceIndex:
         provider=None,
     ):
         self.config = config or MatchConfig()
+        if self.config.scoring != "blended":
+            raise ValueError(
+                "incremental matching supports scoring='blended' only, got "
+                f"{self.config.scoring!r}"
+            )
         self.provider = provider
         self.records = prepare_records(
             reference_pages, self.config, provider
@@ -160,10 +167,11 @@ def _qualified_pairs(
     incoming_pages: DataFrame, index: ReferenceIndex
 ) -> DataFrame:
     """Shared scoring core: blocked candidate pairs between the incoming
-    batch and the reference index, scored through the flagship cascade
-    (cosine cutoff → Levenshtein → JW upper-bound prune → exact JW →
-    blend → threshold).  Returns ``(_in, _ref, score)`` — every pair at
-    or above ``match_threshold``."""
+    batch and the reference index, cut at the rerank cosine bound and
+    scored through the flagship's blended cascade
+    (:func:`~semantic_entity_matching_spark.plans.pipeline._blended_cascade`).
+    Returns ``(_in, _ref, score)`` — every pair at or above
+    ``match_threshold``."""
     cfg = index.config
     id_col = cfg.id_col
     inc = prepare_records(incoming_pages, cfg, index.provider)
@@ -184,40 +192,21 @@ def _qualified_pairs(
     a = inc.select(
         F.col(id_col).alias("_in"),
         F.col("embedding").alias("_ea"),
-        F.substring(F.col(cfg.text_col), 1, cfg.rerank_max_chars).alias("_ta"),
+        F.substring(F.col(cfg.text_col), 1, cfg.rerank_max_chars).alias("text_a"),
     )
     b = index.records.select(
         F.col(id_col).alias("_ref"),
         F.col("embedding").alias("_eb"),
-        F.substring(F.col(cfg.text_col), 1, cfg.rerank_max_chars).alias("_tb"),
+        F.substring(F.col(cfg.text_col), 1, cfg.rerank_max_chars).alias("text_b"),
     ).hint("shuffle_hash")
     scored = (
         pairs.join(a, "_in")
         .join(b, "_ref")
         .withColumn("cosine", cosine_udf(F.col("_ea"), F.col("_eb")))
         .where(F.col("cosine") >= F.lit(rerank_cosine_cutoff(cfg)))
-        .withColumn("levenshtein", levenshtein_similarity_expr("_ta", "_tb"))
     )
-    from semantic_entity_matching_spark.functions.similarity import (
-        DEFAULT_WEIGHTS,
-    )
-
-    w = cfg.score_weights or DEFAULT_WEIGHTS
-    jw_upper = (
-        F.col("cosine") * F.lit(w["cosine"])
-        + F.lit(w["jaro_winkler"])
-        + F.col("levenshtein") * F.lit(w["levenshtein"])
-    )
-    score_col = blended_score(
-        F.col("cosine"), F.col("jaro_winkler"), F.col("levenshtein"),
-        cfg.score_weights,
-    )
-    if cfg.score_round is not None:
-        score_col = F.round(score_col, cfg.score_round)
     return (
-        scored.where(jw_upper >= F.lit(cfg.match_threshold - 1e-6))
-        .withColumn("jaro_winkler", jaro_winkler_udf(F.col("_ta"), F.col("_tb")))
-        .withColumn("score", score_col)
+        _blended_cascade(scored, cfg)
         .where(F.col("score") >= F.lit(cfg.match_threshold))
         .select("_in", "_ref", "score")
     )

@@ -84,3 +84,37 @@ def test_incremental_empty_delta(spark):
     assert inc.counters["incremental_cross_edges"] == 0
     assert inc.counters["incremental_intra_edges"] == 0
     pages.unpersist()
+
+
+def test_incremental_rejects_fellegi_sunter_before_any_job(spark):
+    """FS parameters are fit per candidate population, so new-vs-reference
+    edges cannot be FS-exact: the reference index refuses any scoring but
+    'blended' instead of silently scoring cross edges with the blended
+    rule, and it refuses before running a job; so does the day-2 loop,
+    even with a prebuilt blended index."""
+    import pytest
+
+    from semantic_entity_matching_spark.streaming.incremental_match import (
+        ReferenceIndex,
+    )
+
+    pages, _ = synth_webpages(spark, SynthConfig(n_entities=4, seed=3))
+    cfg = MatchConfig(scoring="fellegi_sunter")
+    blended_index = ReferenceIndex(pages, MatchConfig())
+    sc = spark.sparkContext
+    group = "reference-index-fs"
+    sc.setJobGroup(group, "reference index")
+    try:
+        with pytest.raises(ValueError, match="blended"):
+            ReferenceIndex(pages, cfg)
+        with pytest.raises(ValueError, match="blended"):
+            run_incremental(pages, pages.select("url"), pages, cfg)
+        # a prebuilt blended index does not let an FS delta run through
+        with pytest.raises(ValueError, match="blended"):
+            run_incremental(
+                pages, pages.select("url"), pages, cfg, index=blended_index
+            )
+        assert list(sc.statusTracker().getJobIdsForGroup(group)) == []
+    finally:
+        sc._jsc.clearJobGroup()
+        blended_index.unpersist()

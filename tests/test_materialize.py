@@ -140,6 +140,18 @@ def test_local_checkpoint_only_inside_materialize():
     assert outside == [] and lazy == [], (outside, lazy)
 
 
+def test_blended_score_has_one_call_site():
+    """The blended rule is written once: the only ``blended_score(`` call
+    in the package is the shared cascade's (pipeline._blended_cascade)."""
+    calls = [
+        (path.relative_to(PACKAGE).as_posix(), lineno)
+        for path in sorted(PACKAGE.rglob("*.py"))
+        for lineno, line in enumerate(path.read_text().splitlines(), 1)
+        if "blended_score(" in line and not line.lstrip().startswith("def ")
+    ]
+    assert [rel for rel, _ in calls] == ["plans/pipeline.py"], calls
+
+
 STAGE_COUNTERS = {
     "records": "records_prepared",
     "blocks": "block_keys_emitted",
@@ -167,8 +179,10 @@ def hot_pages(spark):
         # the head (keys > 4) holds salted keys the cap keeps (5..10 rows)
         MatchConfig(pairgen=PairGenConfig(max_block_size=10, hot_block_threshold=4)),
         MatchConfig(scoring="fellegi_sunter"),
+        # a sampled EM fit (mod > 1): JW on the sample + bound survivors
+        MatchConfig(scoring="fellegi_sunter", fs_em_sample_target=200),
     ],
-    ids=["blocks_dropped", "fellegi_sunter"],
+    ids=["blocks_dropped", "fellegi_sunter", "fellegi_sunter_sampled"],
 )
 def test_pipeline_counters_equal_direct_stage_counts(spark, tmp_path, hot_pages, config):
     """Every counter is its stage's row count, whether the cut's own job
@@ -184,9 +198,66 @@ def test_pipeline_counters_equal_direct_stage_counts(spark, tmp_path, hot_pages,
         assert {k: res.counters[k] for k in direct} == direct
         assert res.counters["edges_emitted"] == res.edges.count()
         assert res.counters["records_clustered"] == res.clusters.count()
+    if config.scoring == "fellegi_sunter":
+        direct.update(_fs_direct_counts(
+            cp.read("reranked"), config, in_memory.counters["fs_em_sample_mod"]
+        ))
+        for res in (in_memory, snapshots):
+            assert {k: res.counters[k] for k in direct} == direct
     assert in_memory.counters == snapshots.counters
     if config.pairgen.max_block_size == 10:
         assert direct["blocks_dropped"] > 0
+    if config.fs_em_sample_target == 200:
+        assert 1 < in_memory.counters["fs_em_sample_mod"]
+        assert direct["fs_jw_pairs"] < direct["fs_pairs_total"]
+
+
+def _fs_direct_counts(reranked, config, mod: int) -> dict:
+    """The ``fs_*`` counters recounted from the reranked snapshot: every
+    pair, the EM hash-sample, and the pairs whose cheap-feature weight
+    plus the largest Jaro-Winkler weight reaches the posterior threshold
+    under the sample's fit (every pair at mod 1, where nothing is
+    deferred)."""
+    import math
+
+    from pyspark.sql import functions as F
+
+    from semantic_entity_matching_spark.functions.similarity import (
+        jaro_winkler_udf,
+    )
+    from semantic_entity_matching_spark.operators.resolve import (
+        estimate_fs_params,
+        fellegi_sunter_score,
+    )
+
+    feats = reranked.withColumn(
+        "jaro_winkler", jaro_winkler_udf(F.col("text_a"), F.col("text_b"))
+    )
+    cols = ("cosine", "jaro_winkler", "levenshtein")
+    for c, t in zip(cols, config.fs_agree_thresholds):
+        feats = feats.withColumn(f"g_{c}", (F.col(c) >= t).cast("int"))
+    sample = feats.where(F.pmod(F.xxhash64("id_a", "id_b"), F.lit(mod)) == 0)
+    total = feats.count()
+    if mod == 1:
+        return dict.fromkeys(
+            ("fs_pairs_total", "fs_jw_sample_pairs", "fs_jw_pairs"), total
+        )
+    (f_cos, f_jw, f_lev), prior = estimate_fs_params(
+        sample, [f"g_{c}" for c in cols], prior_init=0.3, m_init=0.9, u_init=0.1
+    )
+    jw_max = max(
+        math.log2(f_jw.m / f_jw.u), math.log2((1 - f_jw.m) / (1 - f_jw.u)), 0.0
+    )
+    t = config.fs_posterior
+    w_min = math.log2(t / (1 - t) / (prior / (1 - prior)))
+    cheap = fellegi_sunter_score(feats, [f_cos, f_lev], prior=prior)
+    return {
+        "fs_pairs_total": total,
+        "fs_jw_sample_pairs": sample.count(),
+        "fs_jw_pairs": cheap.where(
+            F.col("match_weight") + jw_max >= w_min - 1e-9
+        ).count(),
+    }
 
 
 def test_pipeline_runs_no_job_only_to_count(spark, hot_pages):

@@ -137,21 +137,20 @@ def test_checkpoint_resume(spark, corpus, tmp_path):
 
 
 def test_checkpoint_resume_fs_mode(spark, corpus, tmp_path):
-    """Kill-and-resume must also hold in FS mode with the deferred-JW
-    path forced on: the edges stage (EM fit + deferred JW) re-runs from
-    the committed reranked snapshot, and resuming from a COMPLETE run
-    replays every stage from disk without re-fitting (counters intact,
-    no fs_* counters re-emitted — documented resume behavior)."""
+    """Kill-and-resume must also hold in FS mode with a sampled EM fit
+    (mod > 1, so JW runs on the sample + bound survivors only): the edges
+    stage (EM fit + deferred JW) re-runs from the committed reranked
+    snapshot, and resuming from a COMPLETE run replays every stage from
+    disk without re-fitting (counters intact, no fs_* counters re-emitted
+    — documented resume behavior)."""
     import shutil
 
     pages, _ = corpus
-    cfg = MatchConfig(
-        scoring="fellegi_sunter", fs_defer_jw=True, fs_em_sample_target=200
-    )
+    cfg = MatchConfig(scoring="fellegi_sunter", fs_em_sample_target=200)
     cp1 = CheckpointManager(str(tmp_path / "fsrun"), spark)
     r1 = run_pipeline(pages, cfg, checkpoint=cp1)
     baseline = {(r["id"], r["component"]) for r in r1.clusters.collect()}
-    assert r1.counters["fs_em_sample_mod"] > 1  # deferral engaged
+    assert r1.counters["fs_em_sample_mod"] > 1  # sampled fit engaged
 
     # kill after 'reranked': edges + clusters re-run, EM re-fits on the
     # identical hash-sample -> identical edges -> identical clusters
@@ -278,41 +277,42 @@ def test_fs_scoring_empty_input(spark, corpus):
 
 
 def test_fs_defer_jw_identical_clusters_and_prunes(spark, corpus):
-    """Deferred-JW FS must produce the same clusters as the eager path,
-    the counters must prove Python JW ran on a strict subset of the
-    candidates, and the auto default defers exactly when the EM sample
-    mod engages."""
+    """FS scoring has one shape on both sides of the derived EM sample
+    mod: the same scored-pair columns and counter keys.  At mod 1 (the
+    default target on this corpus) JW runs on every pair, once; with a
+    small target (mod > 1) Python JW runs on a strict subset of the
+    candidates, and both sides hold the F1 gate with the same clusters."""
     pages, gold = corpus
-    res_d = run_pipeline(
-        pages, MatchConfig(scoring="fellegi_sunter", fs_defer_jw=True)
+    full = run_pipeline(pages, MatchConfig(scoring="fellegi_sunter"))
+    sampled = run_pipeline(
+        pages, MatchConfig(scoring="fellegi_sunter", fs_em_sample_target=200)
     )
-    res_e = run_pipeline(
-        pages, MatchConfig(scoring="fellegi_sunter", fs_defer_jw=False)
+    assert full.counters["fs_em_sample_mod"] == 1
+    assert sampled.counters["fs_em_sample_mod"] > 1
+    assert full.scored_pairs.columns == sampled.scored_pairs.columns == [
+        "id_a", "id_b", "block_key", "cosine", "levenshtein", "text_a", "text_b",
+    ]
+    assert set(full.counters) == set(sampled.counters)
+    fs = {k: v for k, v in full.counters.items() if k.startswith("fs_jw")}
+    assert fs == {
+        "fs_jw_pairs": full.counters["fs_pairs_total"],
+        "fs_jw_sample_pairs": full.counters["fs_pairs_total"],
+    }
+    assert sampled.counters["fs_jw_pairs"] < sampled.counters["fs_pairs_total"], (
+        sampled.counters
     )
-    d = {(r["id"], r["component"]) for r in res_d.clusters.collect()}
-    e = {(r["id"], r["component"]) for r in res_e.clusters.collect()}
-    assert d == e
-    assert res_d.counters["fs_jw_pairs"] < res_d.counters["fs_pairs_total"], (
-        res_d.counters
-    )
-    m = pairwise_metrics(predicted_pairs_from_clusters(res_d.clusters), gold)
+    clusters = [
+        {(r["id"], r["component"]) for r in res.clusters.collect()}
+        for res in (full, sampled)
+    ]
+    assert clusters[0] == clusters[1]
+    m = pairwise_metrics(predicted_pairs_from_clusters(sampled.clusters), gold)
     assert m.f1 >= 0.99
-    # auto (None): small corpus -> mod 1 -> eager (no defer counters);
-    # tiny sample target -> mod > 1 -> deferred
-    res_auto = run_pipeline(pages, MatchConfig(scoring="fellegi_sunter"))
-    assert res_auto.counters["fs_em_sample_mod"] == 1
-    assert "fs_jw_pairs" not in res_auto.counters
-    res_auto2 = run_pipeline(
-        pages,
-        MatchConfig(scoring="fellegi_sunter", fs_em_sample_target=200),
-    )
-    assert res_auto2.counters["fs_em_sample_mod"] > 1
-    assert "fs_jw_pairs" in res_auto2.counters
 
 
 def test_fs_scoring_f1_with_em_sampling(spark, corpus):
     """Forcing the EM fit onto a small hash-sample (fs_em_sample_target
-    far below the candidate count → auto mod > 1) must not move the F1
+    far below the candidate count → derived mod > 1) must not move the F1
     gate: the fit needs pattern frequencies, not the full pair table."""
     pages, gold = corpus
     result = run_pipeline(
@@ -324,9 +324,9 @@ def test_fs_scoring_f1_with_em_sampling(spark, corpus):
     assert m.f1 >= 0.99, (
         f"sampled-EM FS F1={m.f1:.4f} (p={m.precision:.4f} r={m.recall:.4f})"
     )
-    with pytest.raises(ValueError, match="fs_em_sample_mod"):
+    with pytest.raises(ValueError, match="fs_em_sample_target"):
         run_pipeline(pages, MatchConfig(scoring="fellegi_sunter",
-                                        fs_em_sample_mod=0))
+                                        fs_em_sample_target=0))
 
 
 @pytest.mark.parametrize("seed", [13, 99])

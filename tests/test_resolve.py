@@ -166,14 +166,18 @@ def test_estimate_fs_params_recovers_planted(spark):
 
 
 def test_fs_em_sampled_fit_matches_full(spark):
-    """fs_edges_from_features with em_sample_mod fits m/u/prior on a 1/mod
+    """fs_edges_deferred with em_sample_mod fits m/u/prior on a 1/mod
     deterministic hash-sample; pattern-count EM is frequency-driven, so
     the sampled parameters must land within Monte-Carlo noise of the full
     fit AND the resulting edge set must be near-identical."""
     from semantic_entity_matching_spark.operators.resolve import (
         estimate_fs_params,
-        fs_edges_from_features,
+        fs_edges_deferred,
     )
+
+    def fs_edges(df, **kw):
+        # every feature is already there: nothing to defer
+        return fs_edges_deferred(df, lambda d: d, **kw)
 
     rng = np.random.RandomState(7)
     m_true = np.array([0.95, 0.85, 0.90])
@@ -221,11 +225,11 @@ def test_fs_em_sampled_fit_matches_full(spark):
 
     edges_full = {
         (r["id_a"], r["id_b"])
-        for r in fs_edges_from_features(feats).collect()
+        for r in fs_edges(feats).collect()
     }
     edges_samp = {
         (r["id_a"], r["id_b"])
-        for r in fs_edges_from_features(feats, em_sample_mod=4).collect()
+        for r in fs_edges(feats, em_sample_mod=4).collect()
     }
     sym = edges_full ^ edges_samp
     assert len(sym) <= max(5, len(edges_full) // 100), (
@@ -234,21 +238,23 @@ def test_fs_em_sampled_fit_matches_full(spark):
     # a mod larger than the population: empty sample falls back to the
     # full-population fit instead of emitting no edges
     tiny = feats.limit(20)
-    assert fs_edges_from_features(
+    assert fs_edges(
         tiny, em_sample_mod=10_000_000
-    ).count() == fs_edges_from_features(tiny).count()
+    ).count() == fs_edges(tiny).count()
     feats.unpersist()
 
 
 def test_fs_edges_deferred_matches_eager(spark):
     """fs_edges_deferred computes the expensive feature only on the EM
     sample + the pairs whose cheap-feature weight upper bound reaches the
-    posterior threshold — the edge set must be IDENTICAL to the eager
-    path at the same em_sample_mod, and the counters must show the
-    prefilter actually pruned."""
+    posterior threshold — the edge set must be IDENTICAL to an eager fit
+    + score over all features at the same em_sample_mod, and the counters
+    must show what ran the deferred feature: every pair at mod 1, the
+    sample plus the bound's survivors (a strict minority) at mod 4."""
     from semantic_entity_matching_spark.operators.resolve import (
+        estimate_fs_params,
+        fellegi_sunter_score,
         fs_edges_deferred,
-        fs_edges_from_features,
     )
 
     rng = np.random.RandomState(11)
@@ -269,13 +275,23 @@ def test_fs_edges_deferred_matches_eager(spark):
         "levenshtein double"
     ).cache()
     feats.count()
+    g_feats = feats
+    for c, t in (("cosine", 0.8), ("jaro_winkler", 0.9), ("levenshtein", 0.8)):
+        g_feats = g_feats.withColumn(f"g_{c}", (F.col(c) >= t).cast("int"))
 
     for mod in (1, 4):
+        sample = g_feats.where(
+            F.pmod(F.xxhash64("id_a", "id_b"), F.lit(mod)) == 0
+        )
+        fields, prior = estimate_fs_params(
+            sample, ["g_cosine", "g_jaro_winkler", "g_levenshtein"],
+            prior_init=0.3, m_init=0.9, u_init=0.1,
+        )
         eager = {
-            (r["id_a"], r["id_b"], round(r["score"], 9))
-            for r in fs_edges_from_features(
-                feats, em_sample_mod=mod
-            ).collect()
+            (r["id_a"], r["id_b"], round(r["match_prob"], 9))
+            for r in fellegi_sunter_score(g_feats, fields, prior=prior)
+            .where("match_prob >= 0.5")
+            .collect()
         }
         counters: dict = {}
         deferred = {
@@ -293,10 +309,14 @@ def test_fs_edges_deferred_matches_eager(spark):
         }
         assert deferred == eager, f"mod={mod}: edge sets differ"
         assert counters["fs_pairs_total"] == len(g)
-        # the bulk (g_cos=0 non-matches) never reaches the deferred stage
-        assert counters["fs_jw_pairs"] < counters["fs_pairs_total"] * 0.5, (
-            counters
-        )
+        assert counters["fs_jw_sample_pairs"] == sample.count()
+        if mod == 1:
+            assert counters["fs_jw_pairs"] == len(g)
+        else:
+            # the bulk (g_cos=0 non-matches) never reaches the deferred stage
+            assert len(eager) <= counters["fs_jw_pairs"] < len(g) * 0.5, (
+                counters
+            )
     feats.unpersist()
 
 
