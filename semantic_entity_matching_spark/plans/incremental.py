@@ -20,14 +20,28 @@ A 10^12-page corpus is not re-clustered nightly; each crawl delta is.
    :func:`~semantic_entity_matching_spark.operators.resolve.stable_entity_ids`
    carries the previous run's entity ids onto the updated clustering.
 
-Exactness: block keys, features and score cutoffs are all PER-DOC or
-PER-PAIR, so the candidate/edge set over day1 ∪ day2 decomposes exactly
-into (old-old: already inside the previous components) ∪ (new-vs-ref) ∪
-(new-vs-new) — the incremental clustering is byte-identical to a
-from-scratch ``run_pipeline`` over the union (pytest-pinned), PROVIDED
-block caps don't bind differently across the two runs (a capped hot
-block drops pairs population-dependently; at production scale caps are
-an explicit recall trade either way — audit via ``blocks_dropped``).
+Exactness: features and score cutoffs are per-doc or per-pair, and so
+are the ``mh*:`` (MinHash band) and ``snp:`` (sorted-neighborhood
+prefix) block keys.  The two ``sn:`` window keys are NOT:
+``sorted_neighborhood_keys`` numbers each doc with ``row_number`` over
+its input population, so the reference's windows are numbered over the
+previous corpus and the delta's over the delta, not over the union.
+The block-size cap depends on the population too:
+
+* new-vs-reference pairs are capped on the UNION block size (reference +
+  delta rows), which is the cap a from-scratch run over the union applies;
+* new-vs-new pairs come from ``run_pipeline`` on the delta alone, so they
+  are capped on the delta's block size;
+* old-old pairs stay inside the previous components, capped on the
+  previous run's block size.
+
+So the candidate/edge set over day1 ∪ day2 decomposes into (old-old) ∪
+(new-vs-ref) ∪ (new-vs-new) exactly only where no ``sn:`` window pair
+and no capped key differ between the runs.  On the pinned corpora (the
+pytest day-2 tests and the q93 oracle) the incremental clustering is
+byte-identical to a from-scratch ``run_pipeline`` over the union; a
+capped hot block is an explicit recall trade either way (audit via
+``blocks_dropped``).
 
 Wall-clock scales with the DELTA (delta², really, bounded by blocking)
 plus one semi/anti-join pass over the previous assignment — never with
@@ -41,7 +55,7 @@ from dataclasses import dataclass
 from pyspark.sql import DataFrame, functions as F
 
 from semantic_entity_matching_spark.operators.cluster import update_components
-from semantic_entity_matching_spark.plans.checkpoint import materialize
+from semantic_entity_matching_spark.plans.checkpoint import materialize_observed
 from semantic_entity_matching_spark.plans.pipeline import (
     MatchConfig,
     run_pipeline,
@@ -78,8 +92,8 @@ def run_incremental(
     In production this is YESTERDAY'S persisted artifact (features +
     block keys written by the previous run) — pass it and the delta fold
     never recomputes a single reference embedding; without it the index
-    is built (and unpersisted) here, which re-embeds the reference
-    corpus and erases most of the delta-cost advantage.
+    is built here, which re-embeds the reference corpus and erases most
+    of the delta-cost advantage.
 
     Blended scoring only: the cross edges come from the blended
     :class:`ReferenceIndex`, and FS parameters are fit per population,
@@ -93,30 +107,25 @@ def run_incremental(
             f"run_incremental supports scoring='blended' only, got {cfg.scoring!r}"
         )
 
-    own_index = index is None
-    if own_index:
+    if index is None:
         index = ReferenceIndex(prev_pages, cfg, provider)
-    try:
-        # lineage cut: the cross-edge set feeds both the CC delta and a
-        # counter job — don't score the batch twice
-        cross = materialize(
-            match_edges(new_pages, index).select("id_a", "id_b"),
-            "incremental_cross_edges",
-        )
-        intra_res = run_pipeline(new_pages, cfg, provider=provider)
-        intra = intra_res.edges.select("id_a", "id_b")
-        delta = cross.unionByName(intra)
-        new_ids = new_pages.select(F.col(id_col).alias("id"))
-        assignments = update_components(
-            prev_clusters, delta, new_ids=new_ids
-        )
-    finally:
-        if own_index:
-            index.unpersist()
-
-    counters = dict(intra_res.counters)
-    counters["incremental_cross_edges"] = cross.count()
-    counters["incremental_intra_edges"] = intra.count()
+    cross, seen = materialize_observed(
+        match_edges(new_pages, index).select("id_a", "id_b"),
+        "incremental_cross_edges",
+        None,
+        {"incremental_cross_edges": F.count(F.lit(1))},
+    )
+    intra_res = run_pipeline(new_pages, cfg, provider=provider)
+    assignments = update_components(
+        prev_clusters,
+        cross.unionByName(intra_res.edges.select("id_a", "id_b")),
+        new_ids=new_pages.select(F.col(id_col).alias("id")),
+    )
+    counters = {
+        **intra_res.counters,
+        **seen,
+        "incremental_intra_edges": intra_res.counters["edges_emitted"],
+    }
 
     entities = None
     if prev_entities is not None:

@@ -24,7 +24,7 @@ from __future__ import annotations
 
 from dataclasses import dataclass, field
 
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from semantic_entity_matching_spark.functions.embed import (
@@ -180,6 +180,7 @@ def score_pairs(
     pairs: DataFrame,
     records: DataFrame,
     config: MatchConfig,
+    records_b: DataFrame | None = None,
 ) -> DataFrame:
     """Stage 1 of scoring: attach texts/embeddings and the CHEAP feature
     (batched BLAS cosine) to every candidate pair.
@@ -206,11 +207,15 @@ def score_pairs(
     fraction on realistic corpora — are re-scored with exact float cosine
     via a second narrow join.  Cluster output is identical to the float
     path whenever the margin assumption holds (pinned by pytest).
+
+    ``id_a`` resolves in ``records`` and ``id_b`` in ``records_b``
+    (default: the same table), so one scorer serves a self-join's pairs
+    and cross pairs between two tables.  The output is ``pairs``' own
+    columns + ``cosine``.  Cut it before :func:`rerank_pairs`: Catalyst
+    pushes the rerank's cosine filter below the cosine projection, which
+    evaluates the cosine UDF twice.
     """
-    feat = records.select(
-        F.col(config.id_col).alias("_rid"),
-        F.col("embedding").alias("_emb"),
-    )
+    records_b = records if records_b is None else records_b
     # The records side is the CORPUS — hint it to a hash-partitioned
     # shuffle join, never a broadcast: at 10^12 docs a corpus broadcast is
     # impossible, and even at bench scale Catalyst/AQE mis-estimates of
@@ -230,32 +235,36 @@ def score_pairs(
         if margin is None:
             margin = 0.08 if config.quantization == "int8" else 0.25
         approx_cutoff = rerank_cosine_cutoff(config) - margin - 1e-6
-        q = quantize(feat, "_emb", config.quantization, out_col="_q").select(
-            "_rid", "_q"
-        )
-        qa = q.select(
-            F.col("_rid").alias("id_a"), F.col("_q").alias("_qa")
-        ).hint("shuffle_hash")
-        qb = q.select(
-            F.col("_rid").alias("id_b"), F.col("_q").alias("_qb")
-        ).hint("shuffle_hash")
+
+        def q(recs: DataFrame, s: str) -> DataFrame:
+            recs = quantize(recs, "embedding", config.quantization, out_col="_q")
+            return _side(recs, config, s, F.col("_q"), "_q").hint("shuffle_hash")
+
         pairs = (
-            pairs.join(qa, "id_a")
-            .join(qb, "id_b")
-            .where(approx(F.col("_qa"), F.col("_qb")) >= F.lit(approx_cutoff))
-            .select("id_a", "id_b", "block_key")
+            pairs.join(q(records, "a"), "id_a")
+            .join(q(records_b, "b"), "id_b")
+            .where(approx(F.col("_q_a"), F.col("_q_b")) >= F.lit(approx_cutoff))
+            .select(*pairs.columns)
         )
-    a = feat.select(
-        F.col("_rid").alias("id_a"), F.col("_emb").alias("emb_a")
-    ).hint("shuffle_hash")
-    b = feat.select(
-        F.col("_rid").alias("id_b"), F.col("_emb").alias("emb_b")
-    ).hint("shuffle_hash")
+
+    def emb(recs: DataFrame, s: str) -> DataFrame:
+        return _side(recs, config, s, F.col("embedding"), "emb").hint("shuffle_hash")
+
     return (
-        pairs.join(a, "id_a")
-        .join(b, "id_b")
+        pairs.join(emb(records, "a"), "id_a")
+        .join(emb(records_b, "b"), "id_b")
         .withColumn("cosine", cosine_udf(F.col("emb_a"), F.col("emb_b")))
-        .select("id_a", "id_b", "block_key", "cosine")
+        .select(*pairs.columns, "cosine")
+    )
+
+
+def _side(
+    records: DataFrame, config: MatchConfig, s: str, value: Column, name: str
+) -> DataFrame:
+    """One pair side's lookup table over ``records``: ``id_<s>`` and
+    ``<name>_<s>`` = ``value``."""
+    return records.select(
+        F.col(config.id_col).alias(f"id_{s}"), value.alias(f"{name}_{s}")
     )
 
 
@@ -282,6 +291,7 @@ def rerank_pairs(
     scored: DataFrame,
     records: DataFrame,
     config: MatchConfig,
+    records_b: DataFrame | None = None,
 ) -> DataFrame:
     """Stage 2 of scoring: expensive string metrics + blended score, only on
     pairs whose upper bound can still reach the threshold.  Joins the
@@ -291,52 +301,22 @@ def rerank_pairs(
 
     1. cosine bound (stage 1 already computed it): prune when even
        jw = lev = 1 cannot reach the threshold;
-    2. Levenshtein bound (:func:`_blended_cascade`): Levenshtein is a JVM
-       built-in (whole-stage codegen) while Jaro-Winkler is per-pair
-       Python — so compute lev FIRST and prune with jw = 1 before any
-       Python runs.  On near-dup-heavy corpora the cosine bound alone
-       keeps ~70% of candidates; the lev bound cuts the Python JW set to
-       roughly the eventual edge set.
-    """
-    survivors = scored.where(
-        F.col("cosine") >= F.lit(rerank_cosine_cutoff(config))
-    )
-    return _blended_cascade(_text_heads(survivors, records, config), config).select(
-        "id_a", "id_b", "block_key", "cosine", "jaro_winkler",
-        "levenshtein", "score",
-    )
+    2. Levenshtein bound: Levenshtein is a JVM built-in (whole-stage
+       codegen) while Jaro-Winkler is per-pair Python — so compute lev
+       FIRST and prune with jw = 1 before any Python runs.  On
+       near-dup-heavy corpora the cosine bound alone keeps ~70% of
+       candidates; the lev bound cuts the Python JW set to roughly the
+       eventual edge set.  The ``- 1e-6`` margin keeps it conservative
+       under ``score_round`` (round(score, 6) >= T only requires
+       score >= T - 5e-7).
 
+    Cut the result before filtering on ``score``: Catalyst pushes a
+    filter on the (deterministic) JW UDF down into the bound's filter,
+    which runs JW on every pair the bound would have pruned, and again
+    above it.
 
-def _text_heads(
-    pairs: DataFrame, records: DataFrame, config: MatchConfig
-) -> DataFrame:
-    """``pairs`` + ``text_a``/``text_b``: the first ``rerank_max_chars``
-    of each side's text, the only text the string metrics read."""
-    txt = records.select(
-        F.col(config.id_col).alias("_rid"),
-        F.substring(F.col(config.text_col), 1, config.rerank_max_chars).alias(
-            "_text"
-        ),
-    )
-    return pairs.join(
-        txt.select(F.col("_rid").alias("id_a"), F.col("_text").alias("text_a")),
-        "id_a",
-    ).join(
-        txt.select(F.col("_rid").alias("id_b"), F.col("_text").alias("text_b")),
-        "id_b",
-    )
-
-
-def _blended_cascade(pairs: DataFrame, config: MatchConfig) -> DataFrame:
-    """The blended rule over pairs that carry ``cosine``, ``text_a`` and
-    ``text_b``: codegen Levenshtein, then the exact Jaro-Winkler upper
-    bound (jw = 1) prunes pairs that cannot reach ``match_threshold``,
-    then the per-pair Python Jaro-Winkler and the blended ``score``
-    (rounded to ``score_round``) on the rest.  Shared by
-    :func:`rerank_pairs` and incremental matching.
-
-    The ``- 1e-6`` margin keeps the bound conservative under
-    ``score_round`` (round(score, 6) >= T only requires score >= T - 5e-7).
+    ``records_b`` as in :func:`score_pairs`.  The output is ``scored``'s
+    columns + ``jaro_winkler``, ``levenshtein`` and ``score``.
     """
     from semantic_entity_matching_spark.functions.similarity import DEFAULT_WEIGHTS
 
@@ -354,8 +334,12 @@ def _blended_cascade(pairs: DataFrame, config: MatchConfig) -> DataFrame:
     )
     if config.score_round is not None:
         score_col = F.round(score_col, config.score_round)
+    survivors = scored.where(
+        F.col("cosine") >= F.lit(rerank_cosine_cutoff(config))
+    )
     return (
-        pairs.withColumn(
+        _text_heads(survivors, records, config, records_b)
+        .withColumn(
             "levenshtein", levenshtein_similarity_expr("text_a", "text_b")
         )
         .where(jw_upper_bound >= F.lit(config.match_threshold - 1e-6))
@@ -363,6 +347,36 @@ def _blended_cascade(pairs: DataFrame, config: MatchConfig) -> DataFrame:
             "jaro_winkler", jaro_winkler_udf(F.col("text_a"), F.col("text_b"))
         )
         .withColumn("score", score_col)
+        .select(*scored.columns, "jaro_winkler", "levenshtein", "score")
+    )
+
+
+def _text_heads(
+    pairs: DataFrame,
+    records: DataFrame,
+    config: MatchConfig,
+    records_b: DataFrame | None = None,
+) -> DataFrame:
+    """``pairs`` + ``text_a``/``text_b``: the first ``rerank_max_chars``
+    of each side's text, the only text the string metrics read.  ``id_a``
+    resolves in ``records`` and ``id_b`` in ``records_b`` (default: the
+    same table)."""
+    head = F.substring(F.col(config.text_col), 1, config.rerank_max_chars)
+    records_b = records if records_b is None else records_b
+    return pairs.join(_side(records, config, "a", head, "text"), "id_a").join(
+        _side(records_b, config, "b", head, "text"), "id_b"
+    )
+
+
+def _block_keys(records: DataFrame, config: MatchConfig) -> DataFrame:
+    """``config``'s blocking keys over ``records``: (id, block_key)."""
+    return all_block_keys(
+        records,
+        id_col=config.id_col,
+        text_col=config.text_col,
+        lsh=config.lsh,
+        sn_window=config.sn_window,
+        sn_key_scan_chars=config.sn_key_scan_chars,
     )
 
 
@@ -478,16 +492,7 @@ def run_pipeline(
         {"sn_short_keyed": F.count_if(sn_short)} if config.audit_sn_keys else None,
     )
     blocks = stage(
-        "blocks",
-        lambda: all_block_keys(
-            records,
-            id_col=config.id_col,
-            text_col=config.text_col,
-            lsh=config.lsh,
-            sn_window=config.sn_window,
-            sn_key_scan_chars=config.sn_key_scan_chars,
-        ),
-        "block_keys_emitted",
+        "blocks", lambda: _block_keys(records, config), "block_keys_emitted"
     )
     if config.audit_sn_keys:
         if "sn_short_keyed" not in counters:  # records resumed, not built

@@ -4,17 +4,21 @@ ingest-then-search loop — new rows arrive, each is resolved against the
 already-indexed entities; reference lib/ingest.py + lib/search_and_rerank.py).
 
 Architecture: ``foreachBatch`` — the standard Structured Streaming pattern
-for stream-to-batch incremental jobs.  Per micro-batch:
+for stream-to-batch incremental jobs.  A micro-batch runs the flagship's
+own stage functions (:mod:`~semantic_entity_matching_spark.plans.pipeline`)
+on the delta:
 
-    incoming pages ─► prepare (extract + embed, same provider as the batch
-                      pipeline — byte-identical features)
-                   ─► blocking keys (same LSH/SN families)
-                   ─► equi-join against the PRECOMPUTED reference block
-                      table (computed once, cached — the stream side never
-                      rescans the corpus)
-                   ─► cosine cutoff, then the flagship's blended
-                      cascade (pipeline._blended_cascade: Levenshtein →
-                      exact JW upper-bound prune → Jaro-Winkler → blend)
+    incoming pages ─► records (prepare_records: the same embedding
+                      provider as the batch pipeline — byte-identical
+                      features), cut once
+                   ─► blocking keys (the same LSH/SN families)
+                   ─► candidate pairs: the salted join
+                      (pairs.salted_join) against the reference block
+                      table, capped at max_block_size on the union block
+                      size — the stream side never rescans the corpus
+                   ─► score_pairs (exact cosine) and rerank_pairs (cosine
+                      bound → Levenshtein → JW upper-bound prune → JW →
+                      blend), cut before the threshold filter
                    ─► best reference match per incoming id (deterministic
                       tiebreak), below-threshold ⇒ unmatched (null)
                    ─► idempotent append to a TableSink keyed on the
@@ -22,30 +26,37 @@ for stream-to-batch incremental jobs.  Per micro-batch:
                       crash, at-least-once source) inserts NOTHING twice,
                       which upgrades the pipeline to effectively-once.
 
-At 10^12 reference docs the reference block/feature tables are Iceberg
-tables bucketed by block_key/id instead of ``.cache()``; the per-batch
-plan is unchanged (stream side is small by definition — that is the point
-of incremental matching).
+The reference index is three tables cut once at build time by
+:func:`~semantic_entity_matching_spark.plans.checkpoint.materialize`:
+records, block keys and block sizes.  At 10^12 reference docs they are
+Iceberg tables bucketed by block_key/id; the per-batch plan is unchanged
+(stream side is small by definition — that is the point of incremental
+matching).
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
-from semantic_entity_matching_spark.functions.similarity import cosine_udf
-from semantic_entity_matching_spark.operators.blocking import all_block_keys
+from semantic_entity_matching_spark.operators.pairs import (
+    block_sizes,
+    salted_join,
+)
+from semantic_entity_matching_spark.plans.checkpoint import materialize
 from semantic_entity_matching_spark.plans.pipeline import (
     MatchConfig,
-    _blended_cascade,
+    _block_keys,
     prepare_records,
-    rerank_cosine_cutoff,
+    rerank_pairs,
+    score_pairs,
 )
 
 
 class ReferenceIndex:
-    """The precomputed side of incremental matching: records (id, text,
-    embedding) + block keys for a fixed corpus, cached once.
+    """The precomputed side of incremental matching over a fixed corpus:
+    ``records`` (id, text, embedding), ``blocks`` (id, block_key) and
+    ``block_sizes`` (block_key, block_size), each cut at construction.
 
     Incremental matching scores with the blended rule only: Fellegi-Sunter
     parameters are fit per candidate population, so an FS edge between a
@@ -65,21 +76,22 @@ class ReferenceIndex:
                 f"{self.config.scoring!r}"
             )
         self.provider = provider
-        self.records = prepare_records(
-            reference_pages, self.config, provider
-        ).cache()
-        self.blocks = all_block_keys(
-            self.records,
-            id_col=self.config.id_col,
-            text_col=self.config.text_col,
-            lsh=self.config.lsh,
-            sn_window=self.config.sn_window,
-            sn_key_scan_chars=self.config.sn_key_scan_chars,
-        ).cache()
+        self.records = self.prepare(reference_pages, "reference_records")
+        self.blocks = materialize(
+            _block_keys(self.records, self.config), "reference_blocks"
+        )
+        self.block_sizes = materialize(
+            block_sizes(self.blocks, self.config.id_col), "reference_block_sizes"
+        )
 
-    def unpersist(self) -> None:
-        self.blocks.unpersist()
-        self.records.unpersist()
+    def prepare(self, pages: DataFrame, name: str) -> DataFrame:
+        """``pages``' records, prepared as the index's and cut."""
+        return materialize(
+            prepare_records(
+                pages, self.config, self.provider, with_entity_text=False
+            ),
+            name,
+        )
 
 
 def match_edges(
@@ -96,12 +108,7 @@ def match_edges(
     edges) to
     :func:`~semantic_entity_matching_spark.operators.cluster.update_components`.
     """
-    qualified = _qualified_pairs(incoming_pages, index)
-    return qualified.select(
-        F.col("_in").alias("id_a"),
-        F.col("_ref").alias("id_b"),
-        "score",
-    )
+    return _qualified_pairs(index.prepare(incoming_pages, "incoming_records"), index)
 
 
 def match_batch(
@@ -120,95 +127,71 @@ def match_batch(
     :func:`~semantic_entity_matching_spark.operators.resolve.one_to_one_match`
     (greedy-equivalent; a losing page falls back to its next-best
     qualified reference before going unmatched)."""
-    cfg = index.config
-    id_col = cfg.id_col
-    qualified = _qualified_pairs(incoming_pages, index)
+    id_col = index.config.id_col
+    records = index.prepare(incoming_pages, "incoming_records")
+    qualified = _qualified_pairs(records, index)
     if one_to_one:
         from semantic_entity_matching_spark.operators.resolve import (
             one_to_one_match,
         )
 
-        best = one_to_one_match(
-            qualified.select("_in", "_ref", "score"),
-            id_a="_in",
-            id_b="_ref",
-            score_col="score",
-        ).select(
-            F.col("id_a").alias(id_col),
-            F.col("id_b").alias("matched_id"),
-            "score",
-        )
+        best = one_to_one_match(qualified)
     else:
-        from pyspark.sql import Window
-
-        best = (
-            qualified.withColumn(
-                "_rk",
-                F.row_number().over(
-                    Window.partitionBy("_in").orderBy(
-                        F.desc("score"), F.asc("_ref")
-                    )
-                ),
-            )
-            .where(F.col("_rk") == 1)
-            .select(
-                F.col("_in").alias(id_col),
-                F.col("_ref").alias("matched_id"),
-                "score",
-            )
+        rank = Window.partitionBy("id_a").orderBy(F.desc("score"), F.asc("id_b"))
+        best = qualified.withColumn("_rk", F.row_number().over(rank)).where(
+            F.col("_rk") == 1
         )
-    all_in = prepare_records(incoming_pages, cfg, index.provider).select(
-        F.col(id_col)
+    best = best.select(
+        F.col("id_a").alias(id_col), F.col("id_b").alias("matched_id"), "score"
     )
-    return all_in.join(best, id_col, "left")
+    return records.select(id_col).join(best, id_col, "left")
 
 
-def _qualified_pairs(
-    incoming_pages: DataFrame, index: ReferenceIndex
-) -> DataFrame:
-    """Shared scoring core: blocked candidate pairs between the incoming
-    batch and the reference index, cut at the rerank cosine bound and
-    scored through the flagship's blended cascade
-    (:func:`~semantic_entity_matching_spark.plans.pipeline._blended_cascade`).
-    Returns ``(_in, _ref, score)`` — every pair at or above
-    ``match_threshold``."""
+def _qualified_pairs(records: DataFrame, index: ReferenceIndex) -> DataFrame:
+    """``(id_a=incoming id, id_b=reference id, score)`` for every blocked
+    pair between the incoming ``records`` (a cut) and the reference
+    index that reaches ``match_threshold``, scored by the batch stages."""
     cfg = index.config
+    pg = cfg.pairgen
     id_col = cfg.id_col
-    inc = prepare_records(incoming_pages, cfg, index.provider)
-    inc_blocks = all_block_keys(
-        inc, id_col=id_col, text_col=cfg.text_col,
-        lsh=cfg.lsh, sn_window=cfg.sn_window,
-        sn_key_scan_chars=cfg.sn_key_scan_chars,
-    )
-    pairs = (
-        inc_blocks.select(F.col(id_col).alias("_in"), "block_key")
-        .join(
-            index.blocks.select(F.col(id_col).alias("_ref"), "block_key"),
+    # The batch's block keys with each key's UNION size (reference + batch
+    # rows); a key over max_block_size is dropped, as a from-scratch run
+    # over the union drops it for the new pairs.  Cut, because both join
+    # sides below read it and the block-key pass runs Python.
+    # cross_corpus_near_duplicates' head logic is not reused: it drops a
+    # key only when EITHER side is over the cap, which keeps keys whose
+    # sides fit but whose union does not.
+    new = materialize(
+        _block_keys(records, cfg)
+        .select(
+            F.col(id_col).alias("id_a"),
             "block_key",
+            F.count(F.lit(1)).over(Window.partitionBy("block_key")).alias("_n"),
         )
-        .select("_in", "_ref")
-        .dropDuplicates(["_in", "_ref"])
+        .join(index.block_sizes, "block_key")
+        .withColumn("_n", F.col("_n") + F.col("block_size"))
+        .where(F.col("_n") <= pg.max_block_size)
+        .drop("block_size"),
+        "incoming_blocks",
     )
-    a = inc.select(
-        F.col(id_col).alias("_in"),
-        F.col("embedding").alias("_ea"),
-        F.substring(F.col(cfg.text_col), 1, cfg.rerank_max_chars).alias("text_a"),
+    # the reference rows of the kept keys spread over their key's salts;
+    # the incoming rows are replicated to each
+    ref = index.blocks.select(F.col(id_col).alias("id_b"), "block_key").join(
+        F.broadcast(new.select("block_key", "_n").distinct()), "block_key"
     )
-    b = index.records.select(
-        F.col(id_col).alias("_ref"),
-        F.col("embedding").alias("_eb"),
-        F.substring(F.col(cfg.text_col), 1, cfg.rerank_max_chars).alias("text_b"),
-    ).hint("shuffle_hash")
-    scored = (
-        pairs.join(a, "_in")
-        .join(b, "_ref")
-        .withColumn("cosine", cosine_udf(F.col("_ea"), F.col("_eb")))
-        .where(F.col("cosine") >= F.lit(rerank_cosine_cutoff(cfg)))
+    pairs = salted_join(
+        ref, new, "block_key", "id_b", "_n", pg.hot_block_threshold
+    ).select("id_a", "id_b").distinct()
+    # each cut keeps a filter on a UDF's output from being pushed below
+    # the UDF (score_pairs, rerank_pairs), so each UDF runs once per row
+    scored = materialize(
+        score_pairs(pairs, records, cfg, index.records), "incremental_scored"
     )
-    return (
-        _blended_cascade(scored, cfg)
-        .where(F.col("score") >= F.lit(cfg.match_threshold))
-        .select("_in", "_ref", "score")
+    reranked = materialize(
+        rerank_pairs(scored, records, cfg, index.records), "incremental_reranked"
+    )
+    return reranked.where(F.col("score") >= cfg.match_threshold).select(
+        "id_a", "id_b", "score"
     )
 
 

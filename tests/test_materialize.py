@@ -140,9 +140,23 @@ def test_local_checkpoint_only_inside_materialize():
     assert outside == [] and lazy == [], (outside, lazy)
 
 
+def test_no_cache_or_persist_in_package():
+    """Tables the engine keeps are cuts, not storage-level caches: no
+    ``.cache()`` or ``.persist(`` in the package, except the lexical
+    search registry (operators/search.py) that a lexical index handle
+    is to replace."""
+    found = [
+        (path.relative_to(PACKAGE).as_posix(), lineno)
+        for path in sorted(PACKAGE.rglob("*.py"))
+        for lineno, line in enumerate(path.read_text().splitlines(), 1)
+        if ".cache()" in line or ".persist(" in line
+    ]
+    assert [rel for rel, _ in found] == ["operators/search.py"], found
+
+
 def test_blended_score_has_one_call_site():
     """The blended rule is written once: the only ``blended_score(`` call
-    in the package is the shared cascade's (pipeline._blended_cascade)."""
+    in the package is the rerank stage's (pipeline.rerank_pairs)."""
     calls = [
         (path.relative_to(PACKAGE).as_posix(), lineno)
         for path in sorted(PACKAGE.rglob("*.py"))

@@ -455,7 +455,6 @@ def test_incremental_match_stream(spark, tmp_path):
     assert got["in/1"] == "ref/acme"
     assert got["in/2"] is None
     assert got["in/3"] == "ref/globex"
-    index.unpersist()
 
 
 def test_jsonl_roundtrip_and_corrupt_capture(spark, tmp_path):

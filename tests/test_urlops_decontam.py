@@ -164,7 +164,6 @@ def test_incremental_stream_equals_batch(spark, tmp_path):
     }
     assert got == expected
     assert len(got) == incoming.count()
-    index.unpersist()
 
 
 def test_gopher_quality_flags(spark):
@@ -307,4 +306,3 @@ def test_match_batch_one_to_one_resolves_reference_conflicts(spark):
     # 1:1: the exact copy (higher score) keeps it; the other goes unmatched
     assert o2o[1] == 100 and o2o[2] is None and o2o[3] is None
     assert set(o2o) == {1, 2, 3}
-    index.unpersist()

@@ -19,13 +19,14 @@ to 3×; use --repeats 3 (interleaved, median) for quotable numbers.
 
 Usage:
     python tools/incremental_bench.py [--pages 60000] [--repeats 1]
-        [--input /tmp/incr_bench_corpus] [--delta-pct 10]
+        [--input /tmp/incr_bench_corpus] [--delta-pct 10] [--cpus N]
 """
 
 from __future__ import annotations
 
 import argparse
 import json
+import os
 import statistics
 import sys
 import time
@@ -40,7 +41,7 @@ def main() -> None:
     ap.add_argument("--repeats", type=int, default=1)
     ap.add_argument("--delta-pct", type=int, default=10)
     ap.add_argument("--input", default="/tmp/incr_bench_corpus")
-    ap.add_argument("--cpus", type=int, default=32)
+    ap.add_argument("--cpus", type=int, default=os.cpu_count())
     args = ap.parse_args()
 
     from pyspark.sql import functions as F
@@ -58,8 +59,6 @@ def main() -> None:
         master=f"local[{args.cpus}]", shuffle_partitions=args.cpus
     )
     spark.sparkContext.setLogLevel("ERROR")
-
-    import os
 
     if not os.path.isdir(args.input):
         from semantic_entity_matching_spark.sources.synth import (
@@ -96,21 +95,19 @@ def main() -> None:
         runs["base"].append(time.time() - t0)
 
         # the reference index is YESTERDAY'S persisted artifact (features
-        # + block keys written by the base run) — build it outside the
-        # timed delta window, as production would read it from Iceberg
+        # + block keys written by the base run) — build it (eagerly)
+        # outside the timed delta window, as production would read it
+        # from Iceberg
         from semantic_entity_matching_spark.streaming.incremental_match import (
             ReferenceIndex,
         )
 
         idx = ReferenceIndex(day1, cfg)
-        idx.blocks.count()
-        idx.records.count()
 
         t0 = time.time()
         inc = run_incremental(day1, base.clusters, day2, cfg, index=idx)
         inc.clusters.count()
         runs["incremental"].append(time.time() - t0)
-        idx.unpersist()
 
         diff = (
             inc.clusters.exceptAll(full.clusters).count()
