@@ -2762,9 +2762,8 @@ def q104_simjoin_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
     """LOSSLESS jaccard >= 0.7 self-join via AllPairs/PPJoin prefix
     filtering — the exact counterpart of the probabilistic MinHash path
     (q21) at the same tokenization.  Signatures are each doc's rarest
-    tokens under the global df order, so candidate-join keys are anti-Zipf
-    by construction (no salting needed); the oracle is the quadratic
-    ground truth."""
+    tokens under the global df order, and the candidate join is salted
+    per token by its df; the oracle is the quadratic ground truth."""
     from semantic_entity_matching_spark.operators.simjoin import (
         prefix_filter_jaccard_join,
     )

@@ -155,7 +155,8 @@ class LSHConfig:
     near-duplicate web pages (the reference's HNSW ef_search=512 plays the
     same recall-vs-cost role, lib/setup_opensearch.py:10-19).
 
-    Two complementary families (each pair only needs ONE shared key):
+    Two complementary families, both always keyed (each pair only needs
+    ONE shared key):
     * char byte-shingles ("mh:")  — robust to word substitutions/abbrevs,
       weak to token reordering near the text head;
     * word unigrams ("mhw:")      — invariant under reordering, weaker to
@@ -166,8 +167,6 @@ class LSHConfig:
     rows_per_band: int = 8
     shingle_k: int = 5
     seed: int = 42
-    use_char_family: bool = True
-    use_word_family: bool = True
 
     @property
     def num_perm(self) -> int:
@@ -190,11 +189,10 @@ def minhash_block_keys(
         "mh": _permutations(cfg.num_perm, cfg.seed),
         "mhw": _permutations(cfg.num_perm, cfg.seed + 101),
     }
-    families = []
-    if cfg.use_char_family:
-        families.append(("mh", lambda t: _shingle_hashes(t, cfg.shingle_k)))
-    if cfg.use_word_family:
-        families.append(("mhw", _word_hashes))
+    families = (
+        ("mh", lambda t: _shingle_hashes(t, cfg.shingle_k)),
+        ("mhw", _word_hashes),
+    )
 
     def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for batch in batches:

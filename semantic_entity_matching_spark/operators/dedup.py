@@ -37,7 +37,7 @@ from semantic_entity_matching_spark.operators.blocking import (
 from semantic_entity_matching_spark.operators.pairs import (
     PairGenConfig,
     generate_candidate_pairs,
-    salted_join,
+    key_pairs,
 )
 from semantic_entity_matching_spark.operators.tokensets import (
     _distinct_tokens,
@@ -111,7 +111,7 @@ def minhash_near_duplicates(
 
     The exact size-ratio bound (:func:`_size_ratio_keep`) is pushed all
     the way into CANDIDATE GENERATION: per-doc distinct-token counts ride
-    the block self-join as annotations and provably-below-threshold pairs
+    the block rows into the self-join and provably-below-threshold pairs
     are pruned BEFORE the pair-dedup shuffle ever carries them (at sf0.1:
     5.7M -> 2.9M rows) and before any token array is joined — zero recall
     loss.  Eager at construction: see
@@ -122,33 +122,32 @@ def minhash_near_duplicates(
     from semantic_entity_matching_spark.session import ensure_min_parallelism
 
     df = ensure_min_parallelism(df)
-    blocks = minhash_block_keys(df, id_col=id_col, text_col=text_col, config=lsh)
-    # The pair generator SELF-JOINS the block table, and each join side —
-    # plus each side's block-size annotation aggregate — re-executes the
-    # whole upstream subtree: without a lineage cut the mapInPandas
-    # signature pass (the most expensive Python stage of this operator)
-    # ran FOUR times per query (4 MapInPandas nodes over the same scan in
-    # the physical plan).  The eager cut materializes the narrow
-    # (id, block_key) rows once; every downstream consumer reads the
-    # cached RDD (freed by the ContextCleaner when the plan dies).
-    # run_pipeline gets the same effect from its stage cuts.
-    blocks = materialize(blocks, "minhash_blocks")
-    # ONE token-set table serves the size annotations on both pair sides
-    # and both verify sides
+    # ONE token-set table serves the size counts on both pair sides and
+    # both verify sides
     sets = token_sets(df, id_col, _distinct_tokens(text_col))
-    prune = {}
+    blocks = minhash_block_keys(df, id_col=id_col, text_col=text_col, config=lsh)
+    pair_filter = None
     if jaccard_threshold > 0.0:
         # no pruning is sound at threshold 0
-        prune = dict(
-            annotations=sets.select(
-                F.col("_id").alias(id_col), F.col("_n").alias("_ntok")
-            ),
-            pair_filter=_size_ratio_keep(
-                F.col("_ntok_a"), F.col("_ntok_b"), jaccard_threshold
-            ),
+        blocks = blocks.join(
+            sets.select(F.col("_id").alias(id_col), F.col("_n").alias("_ntok")),
+            id_col,
         )
+        pair_filter = _size_ratio_keep(
+            F.col("_ntok_a"), F.col("_ntok_b"), jaccard_threshold
+        )
+    # The pair generator SELF-JOINS the block table, and each join side —
+    # plus each side's block-size aggregate — re-executes the whole
+    # upstream subtree: without a lineage cut the mapInPandas signature
+    # pass (the most expensive Python stage of this operator) ran FOUR
+    # times per query.  The eager cut materializes the narrow
+    # (id, block_key[, _ntok]) rows once; every downstream consumer reads
+    # the cached RDD.  run_pipeline gets the same effect from its stage
+    # cuts.
+    blocks = materialize(blocks, "minhash_blocks")
     pairs = generate_candidate_pairs(
-        blocks, id_col=id_col, config=pairgen, keep_block_key=False, **prune
+        blocks, id_col=id_col, config=pairgen, keep_block_key=False,
+        pair_filter=pair_filter,
     )
     return (
         overlap_verify(pairs, sets)
@@ -188,9 +187,9 @@ def cross_corpus_near_duplicates(
     only keys over the threshold on EITHER side ride a (full-outer,
     broadcast-hinted) head table — a key is dropped when either side
     exceeds ``max_block_size`` (boilerplate bands), and the A×B join is
-    :func:`pairs.salted_join` with the larger side's size: a key over
-    ``hot_block_threshold`` spreads its corpus rows across
-    ``pairs.salt_count`` reducers and replicates its reference rows to
+    the two-table :func:`pairs.key_pairs` sized by the larger side: a key
+    over ``hot_block_threshold`` spreads its reference rows across
+    ``pairs.salt_count`` reducers and replicates its corpus rows to
     each.  Cold keys (absent from the head) never ride any annotation
     join and take one salt.  The exact size-ratio bound prunes
     candidates AT the block join, before the (corpus_id, ref_id) dedup
@@ -219,13 +218,13 @@ def cross_corpus_near_duplicates(
     cb = materialize(
         minhash_block_keys(
             corpus, id_col=corpus_id, text_col=text_col, config=lsh
-        ).select(F.col(corpus_id).alias("_ida"), "block_key"),
+        ).select(F.col(corpus_id).alias("_id"), "block_key"),
         "cross_corpus_blocks",
     )
     rb = materialize(
         minhash_block_keys(
             reference, id_col=ref_id, text_col=rtext, config=lsh
-        ).select(F.col(ref_id).alias("_idb"), "block_key"),
+        ).select(F.col(ref_id).alias("_id"), "block_key"),
         "cross_reference_blocks",
     )
 
@@ -249,9 +248,9 @@ def cross_corpus_near_duplicates(
         )
     )
 
-    def annotate(side: DataFrame) -> DataFrame:
-        # keep keys within the cap on both sides; the salted join reads
-        # the larger side's size (null = cold)
+    def annotate(side: DataFrame, sets: DataFrame) -> DataFrame:
+        # keep keys within the cap on both sides, sized by the larger side
+        # (null = cold), with each row's token count for the ratio bound
         return (
             side.join(head, "block_key", "left")
             .where(
@@ -261,30 +260,21 @@ def cross_corpus_near_duplicates(
                     & (F.col("_rn") <= cfg.max_block_size)
                 )
             )
-            .withColumn("_size", F.greatest("_cn", "_rn"))
-            .drop("_cn", "_rn")
+            .select("_id", "block_key", F.greatest("_cn", "_rn").alias("_size"))
+            .join(sets.select("_id", F.col("_n").alias("_ntok")), "_id")
         )
 
-    # one token-set table per side: its sizes serve the ratio-bound
-    # annotations here and its sets the verify joins below
+    # one token-set table per side: its sizes serve the ratio bound here
+    # and its sets the verify joins below
     ta = token_sets(corpus, corpus_id, _distinct_tokens(text_col))
     tb = token_sets(reference, ref_id, _distinct_tokens(rtext))
-    ca = ta.select(F.col("_id").alias("_ida"), F.col("_n").alias("_ntok_a"))
-    rcounts = tb.select(F.col("_id").alias("_idb"), F.col("_n").alias("_ntok_b"))
-    cand = salted_join(
-        annotate(cb).join(ca, "_ida"),
-        annotate(rb).join(rcounts, "_idb"),
-        "block_key", "_ida", "_size", cfg.hot_block_threshold,
-    )
-    if jaccard_threshold > 0.0:
-        cand = cand.where(
-            _size_ratio_keep(
-                F.col("_ntok_a"), F.col("_ntok_b"), jaccard_threshold
-            )
-        )
-    cand = cand.select(
-        F.col("_ida").alias("id_a"), F.col("_idb").alias("id_b")
-    ).dropDuplicates(["id_a", "id_b"])
+    cand = key_pairs(
+        annotate(cb, ta), annotate(rb, tb), id_col="_id", size="_size",
+        pair_filter=_size_ratio_keep(
+            F.col("_ntok_a"), F.col("_ntok_b"), jaccard_threshold
+        ) if jaccard_threshold > 0.0 else None,
+        threshold=cfg.hot_block_threshold,
+    ).select("id_a", "id_b").dropDuplicates(["id_a", "id_b"])
     return (
         overlap_verify(cand, ta, tb)
         .select(
@@ -498,24 +488,13 @@ def simhash_near_duplicates(
             )
         ).alias("block_key"),
     )
-    left = bands.select(
-        F.col("block_key"), F.col(id_col).alias("id_a"), F.col("simhash").alias("_sa")
+    # band keys carry no size: every band is cold (one salt)
+    hamming = F.bit_count(F.col("simhash_a").bitwiseXOR(F.col("simhash_b")))
+    return (
+        key_pairs(bands, id_col=id_col, pair_filter=hamming <= max_hamming)
+        .select("id_a", "id_b", hamming.alias("hamming"))
+        .distinct()
     )
-    right = bands.select(
-        F.col("block_key"), F.col(id_col).alias("id_b"), F.col("simhash").alias("_sb")
-    )
-    pairs = (
-        left.join(right, "block_key")
-        .where(F.col("id_a") < F.col("id_b"))
-        .select("id_a", "id_b", "_sa", "_sb")
-        .dropDuplicates(["id_a", "id_b"])
-        .withColumn(
-            "hamming", F.bit_count(F.col("_sa").bitwiseXOR(F.col("_sb")))
-        )
-        .where(F.col("hamming") <= max_hamming)
-        .drop("_sa", "_sb")
-    )
-    return pairs
 
 
 # ---------------------------------------------------------------------------
@@ -534,7 +513,8 @@ def embedding_near_duplicates(
     """Cosine near-dup pairs over an array<float> column.
 
     With ``bucket_col`` the self-join is per-bucket (an LSH bucket, a label,
-    a shard key...) — the scale path.  Without it, a full self-join: only
+    a shard key...) through :func:`pairs.key_pairs` (buckets carry no size,
+    so each is cold) — the scale path.  Without it, a full self-join: only
     for small/test inputs.
 
     ``score_round`` rounds the cosine BEFORE thresholding (round-before-rank
@@ -564,17 +544,23 @@ def embedding_near_duplicates(
         cosine = quantized_cosine(quantization)
         df = quantize(df, vec_col, quantization, out_col="_qv")
         vec_col = "_qv"
-    base = df.select(F.col(id_col), F.col(vec_col), *( [F.col(bucket_col)] if bucket_col else [] ))
-    join_keys = [bucket_col] if bucket_col else []
-    a = base.select(*join_keys, F.col(id_col).alias("id_a"), F.col(vec_col).alias("_va"))
-    b = base.select(*join_keys, F.col(id_col).alias("id_b"), F.col(vec_col).alias("_vb"))
-    joined = a.join(b, join_keys) if join_keys else a.crossJoin(b)
-    cos = cosine(F.col("_va"), F.col("_vb"))
+    if bucket_col:
+        joined = key_pairs(
+            df.select(id_col, bucket_col, F.col(vec_col).alias("_v")),
+            id_col=id_col, key=bucket_col,
+        )
+    else:
+        base = df.select(id_col, F.col(vec_col).alias("_v"))
+        joined = base.select(
+            F.col(id_col).alias("id_a"), F.col("_v").alias("_v_a")
+        ).crossJoin(
+            base.select(F.col(id_col).alias("id_b"), F.col("_v").alias("_v_b"))
+        ).where(F.col("id_a") < F.col("id_b"))
+    cos = cosine(F.col("_v_a"), F.col("_v_b"))
     if score_round is not None:
         cos = F.round(cos, score_round)
     return (
-        joined.where(F.col("id_a") < F.col("id_b"))
-        .withColumn("cosine", cos)
+        joined.withColumn("cosine", cos)
         .where(F.col("cosine") >= cosine_threshold)
         .select("id_a", "id_b", "cosine")
     )
@@ -1091,12 +1077,12 @@ def containment_near_duplicates(
       (:func:`tokensets.token_sets` with ``rarest_first``): one token hash
       aggregate and one doc-keyed ``array_sort`` aggregate whose group
       size is bounded by doc length, never corpus-shaped;
-    * the probe×index token join is :func:`pairs.salted_join`, the same
-      salted join as ``pairs.block_pair_stream``: each row KNOWS its
-      token's df, which is the key size, so no size-table join is needed.
-      A token in more than ``pairs.HOT_KEY_THRESHOLD`` docs spreads the
-      big INDEX side across ``pairs.salt_count`` reducers while the small
-      probe side replicates to each;
+    * the probe×index token join is the two-table :func:`pairs.key_pairs`,
+      the same salted join as ``pairs.block_pair_stream``: each row KNOWS
+      its token's df, which is the key size, so no size-table join is
+      needed.  A token in more than ``pairs.HOT_KEY_THRESHOLD`` docs
+      spreads the big INDEX side across ``pairs.salt_count`` reducers
+      while the small probe side replicates to each;
     * ``max_token_df`` is the vocabulary cap for web scale: tokens in more
       than that many docs (stopwords/boilerplate) are removed from the
       UNIVERSE — sets, prefixes, index and the verify step all see the
@@ -1128,25 +1114,24 @@ def containment_near_duplicates(
         F.col("_n"),
     )
 
-    def postings(id_out: str, upto: Column) -> DataFrame:
+    def postings(upto: Column) -> DataFrame:
         # (id, token, token df) for the first `upto` rarest-first tokens
         return sets.select(
-            F.col("_id").alias(id_out),
+            "_id",
             F.explode(F.slice(F.arrays_zip("_tok", "_dfs"), 1, upto)).alias("_e"),
-        ).select(id_out, F.col("_e._tok").alias("_t"), F.col("_e._dfs").alias("_df"))
+        ).select("_id", F.col("_e._tok").alias("_t"), F.col("_e._dfs").alias("_df"))
 
-    # the probe side (prefixes only) builds; the corpus-cardinality index
-    # streams and is never broadcast
+    # the probe side (prefixes only) is replicated and builds; the
+    # corpus-cardinality index spreads and is never broadcast
     cand = (
-        salted_join(
-            postings("id_i", F.col("_n")),
-            postings("id_p", prefix_len).hint("shuffle_hash"),
-            "_t", "id_i", "_df",
+        key_pairs(
+            postings(prefix_len).hint("shuffle_hash"), postings(F.col("_n")),
+            id_col="_id", key="_t", size="_df",
+            pair_filter=F.col("id_a") != F.col("id_b"),
         )
-        .where(F.col("id_p") != F.col("id_i"))
         .select(
-            F.least("id_p", "id_i").alias("id_a"),
-            F.greatest("id_p", "id_i").alias("id_b"),
+            F.least("id_a", "id_b").alias("id_a"),
+            F.greatest("id_a", "id_b").alias("id_b"),
         )
         .dropDuplicates(["id_a", "id_b"])
     )

@@ -1,28 +1,41 @@
-"""Candidate-pair generation: salted equi self-join on block keys.
+"""Candidate-pair generation: the one salted key join, and block pairs on it.
 
 Replaces the reference's kNN candidate retrieval (J1 — reference
-lib/opensearch/services/search_query_builder.py:46-62).  Given
-``blocks(id, block_key)`` the candidates are all unordered pairs sharing a
-key, with:
+lib/opensearch/services/search_query_builder.py:46-62).
+
+:func:`key_pairs` is the engine's one candidate emitter: key rows
+``(id, key[, size], extra...)`` from one table (a self-join keeping
+``id_a < id_b``) or two (a directed A×B join), joined on ``(key, _salt)``
+with a per-key salt count derived from the rows' own size column
+(:func:`salt_count`: ``least(ceil(size / threshold),
+defaultParallelism)``, 1 for a cold or size-less key).  One side keeps
+one salt per row, the other is replicated across all of its key's salts,
+so a hot key fans out over that many reducers and every pair still meets
+exactly once.  AQE skew-join remains on as a second line of defense.
+Its callers, each with its own key and size:
+
+* block pairs here (:func:`block_pair_stream`, under
+  :func:`generate_candidate_pairs` and meta-blocking) — block keys sized
+  by the block-size head;
+* MinHash, cross-corpus and containment near-dup (operators/dedup.py) —
+  band keys sized by the head, prefix tokens sized by their df;
+* SimHash bands and bucketed embedding near-dup — no size, cold;
+* the prefix-filter Jaccard join and the edit-distance join
+  (operators/simjoin.py) — prefix tokens and q-grams sized by their df,
+  the short-string length window cold;
+* incremental matching (streaming/incremental_match.py) — block keys
+  sized by the union of batch and reference.
+
+Cap rules stay with each caller.  Block pairs add:
 
 * **block-size cap** — keys whose block exceeds ``max_block_size`` are
   dropped (boilerplate mega-blocks at web scale produce O(n^2) garbage
   pairs; the drop is logged via the returned audit).
-* **explicit salting** for hot keys (north_rule) through
-  :func:`salted_join`, the one salted hot-key join of the engine (the
-  cross-corpus and containment near-dup joins use it too).  A key of
-  ``size`` rows gets ``least(ceil(size / threshold), defaultParallelism)``
-  salts (:func:`salt_count`): 1 at or below the threshold, more as the
-  key grows, never more than the session has cores to spread it over.
-  One side keeps one salt per row, the other is replicated across all of
-  its key's salts, so a hot key fans out over that many reducers.  The
-  salt count never changes the pair set: each unordered pair meets
-  exactly once.  AQE skew-join remains on as a second line of defense.
 * **canonical ordering** id_a < id_b (J5) — suppresses self-pairs and
   (a,b)/(b,a) duplicates before the cross-key dropDuplicates.
 
-Shuffle inventory (the whole operator): one hash shuffle on (block_key,
-salt) for the join + one on (id_a, id_b) for dedup.  Nothing else.  The
+Shuffle inventory (block pairs): one hash shuffle on (block_key, salt)
+for the join + one on (id_a, id_b) for dedup.  Nothing else.  The
 block-size annotation join never moves the block table: it is a LEFT join
 against only the ``block_size > min(hot_block_threshold, max_block_size)``
 head of the size table (keys at or below that threshold need no
@@ -38,8 +51,8 @@ from dataclasses import dataclass
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-# Keys with more rows than this are salted (the containment join uses it
-# as is; PairGenConfig.hot_block_threshold defaults to it).
+# Keys with more rows than this are salted (the token-set joins use it as
+# is; PairGenConfig.hot_block_threshold defaults to it).
 HOT_KEY_THRESHOLD = 20
 
 
@@ -83,33 +96,57 @@ def salt_count(size: Column, threshold: int, parallelism: int) -> Column:
     return F.least(F.ceil(rows / F.lit(threshold)), F.lit(parallelism)).cast("int")
 
 
-def salted_join(
-    own: DataFrame,
-    rep: DataFrame,
-    key: str,
-    own_id: str,
-    size: str,
+def key_pairs(
+    rows: DataFrame,
+    other: DataFrame | None = None,
+    id_col: str = "id",
+    key: str = "block_key",
+    size: str | None = None,
+    pair_filter: Column | None = None,
     threshold: int = HOT_KEY_THRESHOLD,
 ) -> DataFrame:
-    """Inner join of ``own`` and ``rep`` on ``key``, salted per key.
+    """Pairs of key rows that share a key: the engine's one candidate join.
 
-    Both sides carry the key's measured row count in column ``size``
-    (null = cold).  Each ``own`` row takes the one salt
-    ``pmod(xxhash64(own_id), n)`` and each ``rep`` row is replicated to
-    all ``n`` salts of its key (``n`` = :func:`salt_count`), so every
-    (own, rep) row pair of a key meets in exactly one ``(key, _salt)``
-    group: the result is the plain join's, for any salt count.  ``size``
-    and ``_salt`` are dropped from the output.  Put the side that should
-    spread across reducers as ``own``; a join hint on ``rep`` carries over.
+    Key rows are ``(id_col, key[, size], extra...)``.  Without ``other``
+    this is a self-join of ``rows`` that keeps ``id_a < id_b``; with it, a
+    directed join whose ``id_a`` comes from ``rows`` and ``id_b`` from
+    ``other`` (both tables name their columns alike).  Output: ``key``,
+    ``id_a``, ``id_b`` and every extra column suffixed ``_a``/``_b``;
+    ``pair_filter``, a Column over those names, prunes at the join.
+
+    Salting: ``size`` is the key's row count, or an upper bound on it,
+    and the same on both tables (null, or no ``size`` at all, = a cold key
+    with one salt).  Each
+    ``other`` row takes the one salt ``pmod(xxhash64(id), n)`` and each
+    ``rows`` row is replicated to all ``n`` salts of its key
+    (:func:`salt_count`), so every row pair of a key meets in exactly one
+    ``(key, _salt)`` group: the pairs are the plain join's for any salt
+    count.  ``other`` is the side that spreads over reducers.  A join
+    hint on an input carries over to its side: the token-set callers pin
+    ``shuffle_hash`` there, because their sides are corpus-sized and must
+    never broadcast.
     """
-    n = salt_count(
-        F.col(size), threshold, own.sparkSession.sparkContext.defaultParallelism
+    par = rows.sparkSession.sparkContext.defaultParallelism
+    n = salt_count(F.col(size) if size else F.lit(None), threshold, par)
+
+    def side(df: DataFrame, s: str, salt: Column) -> DataFrame:
+        extras = [c for c in df.columns if c not in (id_col, key, size)]
+        return df.select(
+            key,
+            F.col(id_col).alias(f"id_{s}"),
+            salt.alias("_salt"),
+            *[F.col(c).alias(f"{c}_{s}") for c in extras],
+        )
+
+    a = side(rows, "a", F.explode(F.sequence(F.lit(0), n - 1)))
+    b = side(
+        rows if other is None else other, "b",
+        F.pmod(F.xxhash64(F.col(id_col)), n).cast("int"),
     )
-    own = own.withColumn(
-        "_salt", F.pmod(F.xxhash64(F.col(own_id)), n).cast("int")
-    ).drop(size)
-    rep = rep.withColumn("_salt", F.explode(F.sequence(F.lit(0), n - 1))).drop(size)
-    return own.join(rep, [key, "_salt"]).drop("_salt")
+    pairs = a.join(b, [key, "_salt"]).drop("_salt")
+    if other is None:
+        pairs = pairs.where(F.col("id_a") < F.col("id_b"))
+    return pairs if pair_filter is None else pairs.where(pair_filter)
 
 
 def block_sizes(blocks: DataFrame, id_col: str = "url") -> DataFrame:
@@ -128,8 +165,7 @@ def generate_candidate_pairs(
     blocks: DataFrame,
     id_col: str = "url",
     config: PairGenConfig | None = None,
-    annotations: DataFrame | None = None,
-    pair_filter=None,
+    pair_filter: Column | None = None,
     keep_block_key: bool = True,
     sizes: DataFrame | None = None,
 ) -> DataFrame:
@@ -138,17 +174,14 @@ def generate_candidate_pairs(
     The same pair found via several keys keeps the lexicographically first
     key (deterministic) after the (id_a, id_b) dedup.
 
-    ``annotations`` + ``pair_filter`` push a per-pair predicate BELOW the
-    dedup shuffle: ``annotations(id, extra...)`` columns are attached to
-    both join sides (suffixed ``_a``/``_b``) and ``pair_filter`` — a
-    Column over those suffixed columns — prunes each candidate AT the
-    block join, before the (id_a, id_b) exchange ever carries it.  The
-    annotations table is CORPUS-cardinality (one row per doc), so it is
-    joined like any other corpus-side table — hash join on the id, never
-    a forced broadcast (the planner may still broadcast it at small
-    scale).  Used by the near-dup verifier's exact size-ratio bound: at
-    sf0.1 it halves the dedup shuffle (5.7M -> 2.9M rows) with zero
-    recall loss.
+    ``pair_filter`` pushes a per-pair predicate BELOW the dedup shuffle:
+    every column of ``blocks`` besides the id and ``block_key`` rides both
+    join sides (suffixed ``_a``/``_b``, see :func:`key_pairs`), and the
+    filter — a Column over those suffixed columns — prunes each candidate
+    AT the block join, before the (id_a, id_b) exchange ever carries it.
+    Callers join their per-id columns onto the block rows first.  Used by
+    the near-dup verifier's exact size-ratio bound: at sf0.1 it halves the
+    dedup shuffle (5.7M -> 2.9M rows) with zero recall loss.
 
     ``keep_block_key=False`` skips the min(block_key) representative-key
     aggregate (the dedup becomes a plain distinct, no string rides the
@@ -163,7 +196,6 @@ def generate_candidate_pairs(
         blocks,
         id_col=id_col,
         config=config,
-        annotations=annotations,
         pair_filter=pair_filter,
         sizes=sizes,
     ).select("block_key", "id_a", "id_b")
@@ -181,8 +213,7 @@ def block_pair_stream(
     blocks: DataFrame,
     id_col: str = "url",
     config: PairGenConfig | None = None,
-    annotations: DataFrame | None = None,
-    pair_filter=None,
+    pair_filter: Column | None = None,
     sizes: DataFrame | None = None,
 ) -> DataFrame:
     """The PRE-dedup per-block pair stream: one row per (block_key, pair)
@@ -192,7 +223,7 @@ def block_pair_stream(
     the dedup — meta-blocking's common-blocks edge weight is
     ``groupBy(id_a, id_b).count()`` over these rows
     (operators/metablocking.py).  Columns: ``block_key, id_a, id_b`` plus
-    any ``annotations`` columns suffixed ``_a``/``_b``.
+    the other ``blocks`` columns suffixed ``_a``/``_b``.
 
     ``sizes`` as in :func:`generate_candidate_pairs`: the full size table
     or its above-threshold head give the same stream, since keys absent
@@ -211,34 +242,14 @@ def block_pair_stream(
     # total_block_rows / threshold and is the table a broadcast hint is
     # actually safe on.  Keys absent from the head are cold: kept, salt=1.
     hot_sizes = F.broadcast(sizes.where(F.col("block_size") > cfg.head_threshold))
-    annotated = blocks.join(hot_sizes, "block_key", "left").where(
+    kept = blocks.join(hot_sizes, "block_key", "left").where(
         F.col("block_size").isNull()
         | (F.col("block_size") <= cfg.max_block_size)
     )
-
-    extra_cols = []
-    if annotations is not None:
-        annotated = annotated.join(annotations, id_col)
-        extra_cols = [c for c in annotations.columns if c != id_col]
-
-    def side(id_alias: str, suffix: str) -> DataFrame:
-        return annotated.select(
-            "block_key",
-            F.col(id_col).alias(id_alias),
-            "block_size",
-            *[F.col(c).alias(f"{c}_{suffix}") for c in extra_cols],
-        )
-
-    # cold and hot keys go through ONE self-join on (block_key, _salt): a
-    # cold key (block_size null) has one salt, so its block lands on one
-    # reducer exactly as an unsalted join would
-    pairs = salted_join(
-        side("id_a", "a"), side("id_b", "b"), "block_key", "id_a",
-        "block_size", cfg.hot_block_threshold,
-    ).where(F.col("id_a") < F.col("id_b"))
-    if pair_filter is not None:
-        pairs = pairs.where(pair_filter)
-    return pairs
+    return key_pairs(
+        kept, id_col=id_col, key="block_key", size="block_size",
+        pair_filter=pair_filter, threshold=cfg.hot_block_threshold,
+    )
 
 
 def dropped_blocks_audit(

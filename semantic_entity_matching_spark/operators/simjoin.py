@@ -29,10 +29,12 @@ Both run on the token-set kernel (operators/tokensets.py): its hashed
 token / q-gram sets, its global rarest-first order and, for the Jaccard
 join, its overlap verify.  Scale shape, by construction:
 * Join keys are the RAREST tokens/grams in the corpus (lowest df under the
-  global order), so the signature join's key distribution is the inverse of
-  the Zipf head — hot boilerplate tokens never become join keys.  This is
-  the opposite failure mode of naive token blocking and the reason the
-  prefix join needs no salting.
+  global order), so hot boilerplate tokens rarely become join keys.  Rare
+  is relative, though: on a fixed vocabulary, token df grows with the
+  corpus and prefix tokens stop being rare.  Every candidate join is
+  therefore :func:`pairs.key_pairs`, salted per key by the token's or
+  gram's df (an upper bound on its postings, so no aggregate runs for
+  it): a hot prefix token spreads over reducers like a hot block key.
 * Every vocabulary- or corpus-cardinality join is pinned shuffle-hash —
   NEVER broadcast.
 * Verification joins fetch full token sets by id AFTER candidate dedup,
@@ -45,6 +47,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from semantic_entity_matching_spark.operators.pairs import key_pairs
 from semantic_entity_matching_spark.operators.tokensets import (
     _distinct_tokens,
     _size_ratio_keep,
@@ -87,18 +90,13 @@ def prefix_filter_jaccard_join(
     )
     # posexplode: each prefix token carries its 0-based position in the
     # doc's df-ordered token list — the input to PPJoin's positional
-    # filter below
+    # filter below — and its df, the key size that salts a hot token
     pref = sets.select(
-        "_id", "_n", F.posexplode(F.slice("_tok", F.lit(1), plen)).alias("_p", "_t")
-    )
-    a = pref.select(
-        F.col("_id").alias("id_a"), F.col("_n").alias("_na"),
-        F.col("_p").alias("_pa"), "_t",
-    )
-    b = pref.select(
-        F.col("_id").alias("id_b"), F.col("_n").alias("_nb"),
-        F.col("_p").alias("_pb"), "_t",
-    )
+        "_id", "_n",
+        F.posexplode(F.slice(F.arrays_zip("_tok", "_dfs"), F.lit(1), plen)).alias(
+            "_p", "_e"
+        ),
+    ).select("_id", "_n", "_p", F.col("_e._tok").alias("_t"), F.col("_e._dfs").alias("_df"))
     # Two lossless filters folded into the join:
     # * length filter: jaccard >= t forces min(|x|,|y|)/max(|x|,|y|) >= t;
     # * POSITIONAL filter (PPJoin, Xiao et al. WWW'08): both token lists
@@ -111,30 +109,22 @@ def prefix_filter_jaccard_join(
     #   pair passes — keeping pairs that pass on ANY token loses nothing
     #   (the 1e-9 slack keeps float ceil from over-rounding the
     #   requirement; under-rounding only admits extra candidates).
-    required = F.ceil(
-        F.lit(t / (1.0 + t)) * (F.col("a._na") + F.col("b._nb")) - F.lit(1e-9)
-    )
-    pos_bound = (
-        F.least("a._pa", "b._pb")
-        + F.lit(1)
-        + F.least(
-            F.col("a._na") - F.col("a._pa") - F.lit(1),
-            F.col("b._nb") - F.col("b._pb") - F.lit(1),
-        )
-    )
-    # signature self-join: both sides are exploded corpus prefixes —
-    # pinned shuffle_hash like every kernel join
+    na, nb, pa, pb = (F.col(c) for c in ("_n_a", "_n_b", "_p_a", "_p_b"))
+    required = F.ceil(F.lit(t / (1.0 + t)) * (na + nb) - F.lit(1e-9))
+    pos_bound = F.least(pa, pb) + F.lit(1) + F.least(na - pa - 1, nb - pb - 1)
+    # Both join sides are exploded corpus prefixes: pinned shuffle_hash
+    # like every kernel join.  A pair sharing several prefix tokens is
+    # emitted once per token; the dedup groups by id_a, so its exchange is
+    # also the one the verify join on id_a reads (the salted join shuffles
+    # its two sides apart, where an unsalted self-join shuffles once).
     cand = (
-        a.alias("a")
-        .join(
-            b.alias("b").hint("shuffle_hash"),
-            (F.col("a._t") == F.col("b._t"))
-            & (F.col("a.id_a") < F.col("b.id_b"))
-            & _size_ratio_keep(F.col("a._na"), F.col("b._nb"), t)
-            & (pos_bound >= required),
+        key_pairs(
+            pref.hint("shuffle_hash"), id_col="_id", key="_t", size="_df",
+            pair_filter=_size_ratio_keep(na, nb, t) & (pos_bound >= required),
         )
-        .select("id_a", "id_b")
-        .distinct()
+        .groupBy("id_a")
+        .agg(F.collect_set("id_b").alias("_b"))
+        .select("id_a", F.explode("_b").alias("id_b"))
     )
     return (
         overlap_verify(cand, sets)
@@ -199,40 +189,31 @@ def edit_distance_join(
     # the one rarest-first q-gram set table
     ordered = token_sets(strs, "_id", _qgram_set(F.col("_s"), q), rarest_first=True)
     lens = strs.select("_id", F.length("_s").alias("_len"))
+    # prefix grams sized by their df; the length filter rides the join
     pref = (
         ordered.where(F.col("_n") > k * q)
         .select(
             "_id",
-            F.explode(F.slice("_tok", F.lit(1), F.lit(k * q + 1))).alias("_g"),
+            F.explode(
+                F.slice(F.arrays_zip("_tok", "_dfs"), F.lit(1), F.lit(k * q + 1))
+            ).alias("_e"),
         )
+        .select("_id", F.col("_e._tok").alias("_g"), F.col("_e._dfs").alias("_df"))
         .join(lens.hint("shuffle_hash"), "_id")
     )
-    a = pref.select(
-        F.col("_id").alias("id_a"), F.col("_len").alias("_la"), "_g"
-    )
-    b = pref.select(
-        F.col("_id").alias("id_b"), F.col("_len").alias("_lb"), "_g"
-    )
-    cand = (
-        a.alias("a")
-        .join(
-            b.alias("b").hint("shuffle_hash"),
-            (F.col("a._g") == F.col("b._g"))
-            & (F.col("a.id_a") < F.col("b.id_b"))
-            & (F.abs(F.col("a._la") - F.col("b._lb")) <= k),
-        )
-        .select("id_a", "id_b")
-    )
+    cand = key_pairs(
+        pref.hint("shuffle_hash"), id_col="_id", key="_g", size="_df",
+        pair_filter=F.abs(F.col("_len_a") - F.col("_len_b")) <= k,
+    ).select("id_a", "id_b")
     # EDJoin short-string corner case: <= k*q grams is too little gram
     # evidence for the prefix bound ("a" vs "" is distance 1 with zero
     # shared grams), so these rows — alphabet-bounded at web scale — join
     # EVERY string in their +-k length window and rely on verification
     # alone.  Exploding the short side to its 2k+1 candidate lengths keeps
-    # the join an equi-join (no range condition).  Statically the join is
-    # pinned shuffle_hash like everything else here — Catalyst's static
-    # size estimate could pick the corpus-cardinality `lens` side as the
-    # build; AQE converts the shuffle to a runtime broadcast of the short
-    # side when it measures it tiny, which is the only trustworthy signal.
+    # the join an equi-join (no range condition); the length keys carry no
+    # size, so each is cold (one salt).  Statically the join is pinned
+    # shuffle_hash like everything else here: Catalyst's static size
+    # estimate could broadcast the corpus-cardinality `lens` side.
     short = (
         ordered.where(F.col("_n") <= k * q)
         .join(lens.hint("shuffle_hash"), "_id")
@@ -240,21 +221,16 @@ def edit_distance_join(
             "_id",
             F.explode(
                 F.sequence(F.col("_len") - k, F.col("_len") + k)
-            ).alias("_len2"),
+            ).alias("_len"),
         )
-        .where(F.col("_len2") >= 0)
+        .where(F.col("_len") >= 0)
     )
-    short_cand = (
-        short.alias("s")
-        .join(
-            lens.alias("l").hint("shuffle_hash"),
-            (F.col("s._len2") == F.col("l._len"))
-            & (F.col("s._id") != F.col("l._id")),
-        )
-        .select(
-            F.least("s._id", "l._id").alias("id_a"),
-            F.greatest("s._id", "l._id").alias("id_b"),
-        )
+    short_cand = key_pairs(
+        short, lens.hint("shuffle_hash"), id_col="_id", key="_len",
+        pair_filter=F.col("id_a") != F.col("id_b"),
+    ).select(
+        F.least("id_a", "id_b").alias("id_a"),
+        F.greatest("id_a", "id_b").alias("id_b"),
     )
     cand = cand.unionAll(short_cand).distinct()
     sa = strs.select(F.col("_id").alias("id_a"), F.col("_s").alias("_sa"))

@@ -20,6 +20,12 @@ three steps, and each lives here once:
    set union: the union size is ``|A| + |B| - |A∩B|``), and the one
    :func:`jaccard` expression over them.
 
+Between steps 2 and 3 the candidates come from the engine's one salted key
+join, :func:`pairs.key_pairs`, whatever the key: MinHash bands, prefix
+tokens or q-grams.  Prefix tokens and q-grams carry their ``_dfs`` entry
+from step 2 as the key size, so a hot token is salted with no extra
+aggregate.
+
 Every join against a corpus- or vocabulary-cardinality table is pinned
 ``shuffle_hash``: Catalyst would broadcast it off small-scale stats, and at
 web scale it cannot broadcast.

@@ -96,12 +96,6 @@ class MatchConfig:
     # cutoff are re-scored with EXACT float cosine, so every downstream
     # stage (rerank bound, threshold, edges, clusters) sees true scores.
     quantization: str | None = None
-    # how far below the rerank cosine cutoff the approximate score may sit
-    # before a pair is dropped unscored.  Must upper-bound the quantization
-    # error of the chosen scheme (measured on token-hash embeddings at dim
-    # 256: int8 error < 0.02, sign-sketch error < 0.12); None = scheme
-    # default (0.08 int8, 0.25 binary).
-    quantize_margin: float | None = None
     # 'blended' (default): weighted cosine+JW+lev vs match_threshold —
     # the reference-parity path.  'fellegi_sunter': UNSUPERVISED edges —
     # the three similarities become 0/1 agreement features at
@@ -201,7 +195,8 @@ def score_pairs(
 
     With ``config.quantization`` the pair join carries the QUANTIZED
     vectors (int8 4× / packed-bit 32× smaller payload); pairs whose
-    approximate cosine sits more than ``quantize_margin`` below the rerank
+    approximate cosine sits more than the scheme's error margin
+    (:func:`functions.quantize.quantized_cosine_margin`) below the rerank
     cutoff are dropped unscored (they could never become edges as long as
     the margin bounds the quantization error), and the survivors — a small
     fraction on realistic corpora — are re-scored with exact float cosine
@@ -228,12 +223,11 @@ def score_pairs(
         from semantic_entity_matching_spark.functions.quantize import (
             quantize,
             quantized_cosine,
+            quantized_cosine_margin,
         )
 
         approx = quantized_cosine(config.quantization)
-        margin = config.quantize_margin
-        if margin is None:
-            margin = 0.08 if config.quantization == "int8" else 0.25
+        margin = quantized_cosine_margin(config.quantization)
         approx_cutoff = rerank_cosine_cutoff(config) - margin - 1e-6
 
         def q(recs: DataFrame, s: str) -> DataFrame:

@@ -12,8 +12,8 @@ on the delta:
                       provider as the batch pipeline — byte-identical
                       features), cut once
                    ─► blocking keys (the same LSH/SN families)
-                   ─► candidate pairs: the salted join
-                      (pairs.salted_join) against the reference block
+                   ─► candidate pairs: the two-table salted key join
+                      (pairs.key_pairs) against the reference block
                       table, capped at max_block_size on the union block
                       size — the stream side never rescans the corpus
                    ─► score_pairs (exact cosine) and rerank_pairs (cosine
@@ -39,10 +39,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
-from semantic_entity_matching_spark.operators.pairs import (
-    block_sizes,
-    salted_join,
-)
+from semantic_entity_matching_spark.operators.pairs import block_sizes, key_pairs
 from semantic_entity_matching_spark.plans.checkpoint import materialize
 from semantic_entity_matching_spark.plans.pipeline import (
     MatchConfig,
@@ -164,7 +161,7 @@ def _qualified_pairs(records: DataFrame, index: ReferenceIndex) -> DataFrame:
     new = materialize(
         _block_keys(records, cfg)
         .select(
-            F.col(id_col).alias("id_a"),
+            id_col,
             "block_key",
             F.count(F.lit(1)).over(Window.partitionBy("block_key")).alias("_n"),
         )
@@ -176,11 +173,11 @@ def _qualified_pairs(records: DataFrame, index: ReferenceIndex) -> DataFrame:
     )
     # the reference rows of the kept keys spread over their key's salts;
     # the incoming rows are replicated to each
-    ref = index.blocks.select(F.col(id_col).alias("id_b"), "block_key").join(
+    ref = index.blocks.select(id_col, "block_key").join(
         F.broadcast(new.select("block_key", "_n").distinct()), "block_key"
     )
-    pairs = salted_join(
-        ref, new, "block_key", "id_b", "_n", pg.hot_block_threshold
+    pairs = key_pairs(
+        new, ref, id_col=id_col, size="_n", threshold=pg.hot_block_threshold
     ).select("id_a", "id_b").distinct()
     # each cut keeps a filter on a UDF's output from being pushed below
     # the UDF (score_pairs, rerank_pairs), so each UDF runs once per row

@@ -12,10 +12,12 @@ from semantic_entity_matching_spark.operators.blocking import (
     sorted_neighborhood_keys,
 )
 from semantic_entity_matching_spark.operators.pairs import (
+    HOT_KEY_THRESHOLD,
     PairGenConfig,
     block_sizes,
     dropped_blocks_audit,
     generate_candidate_pairs,
+    key_pairs,
     salt_count,
 )
 
@@ -492,3 +494,69 @@ def test_all_block_keys_emits_no_duplicate_id_key_rows(spark):
     total = blocks.count()
     distinct = blocks.dropDuplicates(["url", "block_key"]).count()
     assert total == distinct
+
+
+def _key_rows(seed: int) -> list[tuple]:
+    """(id, key, size, w) rows: two keys above HOT_KEY_THRESHOLD (so they
+    take several salts), a cold key and a one-row key, ids drawn from one
+    pool so pairs recur across keys.  ``size`` is the key's row count for
+    hot keys and null for cold ones."""
+    import random
+
+    rng = random.Random(seed)
+    rows = []
+    for key, n in (("hot", 55), ("warm", 30), ("cold", 8), ("solo", 1)):
+        size = n if n > HOT_KEY_THRESHOLD else None
+        for i in rng.sample(range(80), n):
+            rows.append((i, key, size, rng.randrange(10)))
+    return rows
+
+
+@pytest.mark.parametrize("form", ["self", "two_sided"])
+def test_key_pairs_equals_bruteforce_with_salted_hot_keys(spark, form):
+    """The candidate emitter against a pandas brute force of the plain
+    key join: the same (id_a, id_b) multiset (one row per shared key),
+    extras suffixed _a/_b, and a pair filter that prunes exactly as a
+    post-join where does — with hot keys split over several salts."""
+    from collections import Counter
+
+    import pandas as pd
+
+    schema = "id long, key string, size long, w long"
+    a_rows = _key_rows(1)
+    rows = spark.createDataFrame(a_rows, schema)
+    a_pdf = pd.DataFrame(a_rows, columns=["id", "key", "size", "w"])
+    if form == "self":
+        other, b_pdf = None, a_pdf
+    else:
+        # the other side: fresh ids per key, the same per-key size
+        b_rows = [
+            (i + 1000, key, size, w) for i, key, size, w in _key_rows(2)
+        ]
+        other = spark.createDataFrame(b_rows, schema)
+        b_pdf = pd.DataFrame(b_rows, columns=["id", "key", "size", "w"])
+    par = spark.sparkContext.defaultParallelism
+    n_salts = rows.select(
+        F.max(salt_count(F.col("size"), HOT_KEY_THRESHOLD, par))
+    ).first()[0]
+    assert n_salts > 1, "no key was salted"
+
+    joined = a_pdf.merge(b_pdf, on="key", suffixes=("_a", "_b"))
+    if form == "self":
+        joined = joined[joined["id_a"] < joined["id_b"]]
+    keep = (joined["w_a"] + joined["w_b"]) % 3 != 0
+
+    def multiset(df) -> Counter:
+        return Counter((r["id_a"], r["id_b"]) for r in df.collect())
+
+    out = key_pairs(rows, other, id_col="id", key="key", size="size")
+    assert sorted(out.columns) == sorted(["key", "id_a", "id_b", "w_a", "w_b"])
+    assert multiset(out) == Counter(zip(joined["id_a"], joined["id_b"]))
+
+    pair_filter = (F.col("w_a") + F.col("w_b")) % 3 != 0
+    filtered = key_pairs(
+        rows, other, id_col="id", key="key", size="size", pair_filter=pair_filter
+    )
+    want = Counter(zip(joined["id_a"][keep], joined["id_b"][keep]))
+    assert want and len(want) < len(Counter(zip(joined["id_a"], joined["id_b"])))
+    assert multiset(filtered) == want == multiset(out.where(pair_filter))

@@ -100,7 +100,15 @@ def test_prefix_jaccard_join_equals_bruteforce(spark, threshold):
         (r["id_a"], r["id_b"]): r["jaccard"]
         for r in prefix_filter_jaccard_join(docs, "id", "text", threshold).collect()
     }
-    # brute force in Spark over the same tokenization
+    want = _jaccard_bruteforce(docs, threshold)
+    assert got == want
+    if threshold <= 0.8:
+        assert want, "degenerate test: brute force found no pairs"
+
+
+def _jaccard_bruteforce(docs, threshold: float) -> dict:
+    """{(id_a, id_b): jaccard} of every pair at or above ``threshold``,
+    quadratic in Spark over the join's tokenization."""
     from semantic_entity_matching_spark.operators.tokensets import _distinct_tokens
 
     toks = docs.select(
@@ -112,16 +120,34 @@ def test_prefix_jaccard_join_equals_bruteforce(spark, threshold):
     jac = inter.cast("double") / (
         F.size("ta") + F.size("tb") - inter
     ).cast("double")
-    want = {
+    return {
         (r["id_a"], r["id_b"]): r["j"]
         for r in a.join(b, F.col("id_a") < F.col("id_b"))
         .select("id_a", "id_b", jac.alias("j"))
         .where(F.col("j") >= threshold)
         .collect()
     }
+
+
+def test_prefix_jaccard_join_salts_a_hot_prefix_token(spark):
+    """A prefix token in more than HOT_KEY_THRESHOLD docs is salted over
+    several reducers; the join must still equal the brute force.  Thirty
+    docs share 'hot' (df 30), which sits second in each one's rarest-first
+    order behind an f-token (df 5) and ahead of three s-tokens (df 45), so
+    it is in every one of their prefixes at t = 0.6."""
+    from semantic_entity_matching_spark.operators.pairs import HOT_KEY_THRESHOLD
+
+    rows = [(i, f"f{i % 6} hot s0 s1 s2") for i in range(30)]
+    rows += [(100 + j, f"z{j} s0 s1 s2") for j in range(15)]
+    assert sum("hot" in t for _, t in rows) > HOT_KEY_THRESHOLD
+    docs = spark.createDataFrame(rows, "id long, text string")
+    got = {
+        (r["id_a"], r["id_b"]): r["jaccard"]
+        for r in prefix_filter_jaccard_join(docs, "id", "text", 0.6).collect()
+    }
+    want = _jaccard_bruteforce(docs, 0.6)
+    assert len(want) == 30 * 29 // 2 + 15 * 14 // 2
     assert got == want
-    if threshold <= 0.8:
-        assert want, "degenerate test: brute force found no pairs"
 
 
 def test_prefix_jaccard_join_keeps_pair_at_exact_threshold(spark):

@@ -28,6 +28,10 @@ if a property regresses.  Properties audited:
      exchange is the hash shuffle on the md5-prefix bucket
  10. the driver CC fold's (id, component) table is a JVM relation — no
      PythonRDD in the clusters plan's RDD lineage
+ 11. every candidate join is the one salted key join (pairs.key_pairs):
+     pair generation, q78, q84, q104 and q87 plan exactly one
+     ``_salt``-keyed join and no Union; q105 plans exactly two (the
+     q-gram prefix join and the short-string length-window join)
 
 Usage: python tools/plan_audit.py
 """
@@ -278,13 +282,16 @@ def main() -> None:
         else "rangepartitioning exchange present — global sort leaked in",
     )
 
-    # 10. every hot-key join is ONE salted join: pairs.salted_join routes
+    # 10. every candidate join is ONE salted join: pairs.key_pairs routes
     # cold and hot keys through a single (key, _salt) join via the per-key
-    # derived salt count.  Pair generation, the q78 cross-corpus A×B join
-    # and the q84 containment probe×index join must each plan with NO
-    # Union node (the signature of the old two-branch cold/hot
-    # formulation) and exactly one join keyed on _salt; pair generation
-    # also has exactly one shuffle join (the block table with itself).
+    # derived salt count.  Pair generation, the q78 cross-corpus A×B join,
+    # the q84 containment probe×index join, the q104 prefix join and the
+    # q87 SimHash band join must each plan with NO Union node (the
+    # signature of the old two-branch cold/hot formulation) and exactly
+    # one join keyed on _salt; pair generation also has exactly one
+    # shuffle join (the block table with itself).  q105 unions its two
+    # candidate joins (q-gram prefixes and the short-string length
+    # window), so it must plan exactly two _salt-keyed joins.
     from semantic_entity_matching_spark.operators.pairs import (
         PairGenConfig,
         generate_candidate_pairs,
@@ -310,16 +317,23 @@ def main() -> None:
         )
     )
     n_joins = e_pr.count("SortMergeJoin") + e_pr.count("ShuffledHashJoin")
-    for name, e_sj in (
-        ("pairgen_single_fused_join", e_pr),
+    for name, e_sj, want in (
+        ("pairgen_single_fused_join", e_pr, 1),
         ("pairgen_single_fused_join_q78",
-         explained_of(E.q78_cross_corpus_dedup(spark, SF))),
+         explained_of(E.q78_cross_corpus_dedup(spark, SF)), 1),
         ("pairgen_single_fused_join_q84",
-         explained_of(E.q84_containment_neardup(spark, SF))),
+         explained_of(E.q84_containment_neardup(spark, SF)), 1),
+        ("pairgen_single_fused_join_q104",
+         explained_of(E.q104_simjoin_jaccard(spark, SF)), 1),
+        ("pairgen_single_fused_join_q87",
+         explained_of(E.q87_simhash_neardup(spark, SF)), 1),
+        ("pairgen_salted_joins_q105",
+         explained_of(E.q105_edit_distance_join(spark, SF)), 2),
     ):
-        no_union = "Union" not in e_sj
+        # q105's Union is its two candidate joins, not a cold/hot split
+        no_union = want == 2 or "Union" not in e_sj
         n_salted = salted_joins(e_sj)
-        ok_fj = no_union and n_salted == 1
+        ok_fj = no_union and n_salted == want
         if e_sj is e_pr:
             ok_fj = ok_fj and n_joins <= 1
         check(
