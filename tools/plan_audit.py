@@ -288,10 +288,11 @@ def main() -> None:
     # the q84 containment probe×index join, the q104 prefix join and the
     # q87 SimHash band join must each plan with NO Union node (the
     # signature of the old two-branch cold/hot formulation) and exactly
-    # one join keyed on _salt; pair generation also has exactly one
-    # shuffle join (the block table with itself).  q105 unions its two
-    # candidate joins (q-gram prefixes and the short-string length
-    # window), so it must plan exactly two _salt-keyed joins.
+    # one join keyed on _salt; pair generation also has at most one
+    # shuffled join (the block table with itself; none while it is
+    # broadcast).  q105 unions its two candidate joins (q-gram prefixes
+    # and the short-string length window), so it must plan exactly two
+    # _salt-keyed joins.
     from semantic_entity_matching_spark.operators.pairs import (
         PairGenConfig,
         generate_candidate_pairs,
@@ -308,6 +309,14 @@ def main() -> None:
             )
         )
 
+    def shuffled_joins(explained: str) -> int:
+        # one numbered detail block per join node; the tree lines name it too
+        return sum(
+            1
+            for blk in explained.split("\n\n")
+            if _pa_re.match(r"\(\d+\)\s+(SortMergeJoin|ShuffledHashJoin)\b", blk.strip())
+        )
+
     blocks_df = docs.selectExpr(
         "doc_id AS id", "substring(lower(text), 1, 8) AS block_key"
     ).where("block_key IS NOT NULL AND block_key <> ''")
@@ -316,7 +325,7 @@ def main() -> None:
             blocks_df, id_col="id", config=PairGenConfig(), keep_block_key=False
         )
     )
-    n_joins = e_pr.count("SortMergeJoin") + e_pr.count("ShuffledHashJoin")
+    n_joins = shuffled_joins(e_pr)
     for name, e_sj, want in (
         ("pairgen_single_fused_join", e_pr, 1),
         ("pairgen_single_fused_join_q78",

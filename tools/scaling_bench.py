@@ -19,7 +19,9 @@ Usage:
     python tools/scaling_bench.py --worker --execs 4 --input DIR   # internal
 
 Timing covers the full pipeline (extract → embed → block → pair → score →
-rerank → CC), not session startup or data generation.
+rerank → CC), not session startup or data generation.  The tool changes no
+machine setting between legs: the VM-state noise (BASELINE.md) is handled by
+interleaving the N and 4N legs and reporting medians (--repeats).
 """
 
 from __future__ import annotations
@@ -40,28 +42,6 @@ SPARK_HOME = os.environ.get("SPARK_HOME", "/opt/spark")
 MASTER_URL = "spark://127.0.0.1:7077"
 EXEC_CORES = 8  # overridable via --exec-cores (see main)
 LEG_TIMEOUT = 1800  # seconds per leg before the watchdog kills + retries
-
-
-SETTLE = False
-
-
-def settle_vm() -> None:
-    """Best-effort VM memory settle before a leg.
-
-    This Firecracker guest accumulates physical-memory fragmentation across
-    benchmark legs (khugepaged/THP compaction stalls are the measured source
-    of the ±3x leg variance — see BASELINE.md).  Forcing a full compaction
-    run between legs resets fragmentation without also cold-flushing the
-    input's page cache (drop_caches was tried and only added cold-read
-    noise).  No-ops without root."""
-    if not SETTLE:
-        return
-    try:
-        with open("/proc/sys/vm/compact_memory", "w") as fh:
-            fh.write("1")
-    except OSError:
-        return
-    time.sleep(3)
 
 
 def _port_open(port: int) -> bool:
@@ -334,7 +314,6 @@ def run_level(
         "--rp-depth",
         str(rp_depth),
     ]
-    settle_vm()
     if local_cores:
         cmd += ["--local-cores", str(local_cores)]
         if pin:
@@ -403,7 +382,7 @@ def run_level(
 
 
 def main() -> None:
-    global EXEC_CORES, SETTLE, LEG_TIMEOUT
+    global EXEC_CORES, LEG_TIMEOUT
     ap = argparse.ArgumentParser()
     ap.add_argument("--worker", action="store_true")
     ap.add_argument("--generate-only", action="store_true")
@@ -471,12 +450,6 @@ def main() -> None:
         "PLAN's scalability instead of single-host syscall contention.",
     )
     ap.add_argument(
-        "--settle",
-        action="store_true",
-        help="force a memory-compaction pass before each leg (resets "
-        "khugepaged/THP fragmentation between legs; needs root)",
-    )
-    ap.add_argument(
         "--leg-timeout",
         type=int,
         default=LEG_TIMEOUT,
@@ -486,7 +459,6 @@ def main() -> None:
     )
     args = ap.parse_args()
     EXEC_CORES = args.exec_cores
-    SETTLE = args.settle
     LEG_TIMEOUT = args.leg_timeout
 
     if args.worker:
