@@ -837,8 +837,9 @@ def q38_hash_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q66_repetition_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Gopher-style repetition quality signals (distinct-token ratio +
     top-bigram fraction) — the exact-mode-frequency operator a web-corpus
-    cleaning pipeline thresholds on.  Tokenize once, bigrams via zip_with
-    of two array slices, one (id, bigram) hash aggregate."""
+    cleaning pipeline thresholds on.  The bigram-only projection of
+    ``extended_repetition_stats``: tokenize once, one (id, bigram) hash
+    aggregate."""
     from semantic_entity_matching_spark.functions.textops import (
         token_repetition_stats,
     )

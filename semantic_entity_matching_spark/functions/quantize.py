@@ -32,10 +32,11 @@ from pyspark.sql.types import (
     ArrayType,
     ByteType,
     BinaryType,
-    DoubleType,
     IntegerType,
     ShortType,
 )
+
+from semantic_entity_matching_spark.functions.similarity import cosine_udf_filter_safe
 
 EMBEDDING_TYPES = ("float", "int8", "uint8", "binary", "ubinary")
 
@@ -99,33 +100,6 @@ def quantize(df, vec_col: str, kind: str, out_col: str | None = None):
     return df.withColumn(out_col, udf(F.col(vec_col)))
 
 
-def _int8_cosine_batch(a: pd.Series, b: pd.Series) -> pd.Series:
-    """Cosine over int8-quantized vectors, float64 accumulation.  Rank order
-    tracks the float cosine (quantization noise ~1/127 per component)."""
-    mask = a.notna() & b.notna()
-    out = np.zeros(len(a), dtype=np.float64)
-    if mask.any():
-        ma = np.vstack(a[mask].to_numpy()).astype(np.float64)
-        mb = np.vstack(b[mask].to_numpy()).astype(np.float64)
-        dots = np.einsum("ij,ij->i", ma, mb)
-        norms = np.linalg.norm(ma, axis=1) * np.linalg.norm(mb, axis=1)
-        with np.errstate(divide="ignore", invalid="ignore"):
-            vals = np.where(norms > 0, dots / norms, 0.0)
-        out[mask.to_numpy()] = vals
-    return pd.Series(out).where(mask, other=None)
-
-
-int8_cosine_udf = pandas_udf(DoubleType())(_int8_cosine_batch)
-
-# independent non-deterministic-marked instance for threshold-filter sites
-# (guide §4.4) — see similarity.cosine_udf_filter_safe for why this must
-# NOT be `int8_cosine_udf.asNondeterministic()` (that mutates the shared
-# underlying UserDefinedFunction for every call site)
-int8_cosine_udf_filter_safe = pandas_udf(DoubleType())(
-    _int8_cosine_batch
-).asNondeterministic()
-
-
 _POPCOUNT = np.unpackbits(np.arange(256, dtype=np.uint8)[:, None], axis=1).sum(
     axis=1
 )
@@ -167,15 +141,17 @@ def binary_cosine_from_packed(a: Column, b: Column) -> Column:
 
 def quantized_cosine(kind: str):
     """The approximate cosine ``(Column, Column) -> Column`` that scores
-    two ``kind``-quantized vectors: int8 cosine, or the sign-sketch
-    estimate for packed bits.  Both are safe under a threshold filter
-    (the int8 UDF is the filter-safe instance; the sign-sketch estimate is
+    two ``kind``-quantized vectors: the float cosine kernel over the int8
+    components (float64 accumulation; rank order tracks the float cosine,
+    quantization noise ~1/127 per component), or the sign-sketch estimate
+    for packed bits.  Both are safe under a threshold filter (the int8
+    score is the filter-safe cosine instance; the sign-sketch estimate is
     JVM codegen).  uint8 is a storage format (reference
     EmbeddingType.UINT8), not a scoring one: its shifted-positive values
     need centering before cosine, so it is refused with any unknown kind
     rather than silently scored wrong."""
     if kind == "int8":
-        return int8_cosine_udf_filter_safe
+        return cosine_udf_filter_safe
     if kind in ("binary", "ubinary"):
         return binary_cosine_from_packed
     raise ValueError(

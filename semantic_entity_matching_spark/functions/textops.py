@@ -228,51 +228,17 @@ def token_repetition_stats(
       bigram / total bigrams (high = boilerplate / template spam)
 
     Null-text rows are excluded (no tokens to measure); ratios are NULL
-    when undefined (0 tokens / fewer than 2 tokens).  Fully JVM until the
-    bigram aggregation: tokenize once, bigrams via ``zip_with`` over two
-    array slices, one (id, bigram) hash aggregate — the per-token shuffle
-    rows are the natural cost of exact mode-frequency at scale (a sketch
-    variant would trade exactness; this is the exact operator).
+    when undefined (0 tokens / fewer than 2 tokens).  A projection of
+    :func:`extended_repetition_stats` with bigrams only: one tokenize, one
+    (id, bigram) hash aggregate — the per-token shuffle rows are the
+    natural cost of exact mode-frequency at scale (a sketch variant would
+    trade exactness; this is the exact operator).
     """
-    from pyspark.sql import functions as F
-
-    toks = whitespace_tokens(text_col)
-    base = (
-        df.where(F.col(text_col).isNotNull())
-        .select(F.col(id_col), toks.alias("_t"))
-        .withColumn("_n", F.size("_t"))
-        .withColumn("_nd", F.size(F.array_distinct("_t")))
-    )
-    bigrams = F.when(
-        F.col("_n") >= 2,
-        F.zip_with(
-            F.slice("_t", 1, F.col("_n") - 1),
-            F.slice("_t", 2, F.col("_n") - 1),
-            lambda a, b: F.concat(a, F.lit(" "), b),
-        ),
-    ).otherwise(F.array().cast("array<string>"))
-    ex = base.select(
-        id_col, "_n", "_nd", F.explode_outer(bigrams).alias("_bg")
-    )
-    per_bg = ex.groupBy(id_col, "_n", "_nd", "_bg").agg(
-        F.count(F.lit(1)).alias("_c")
-    )
-    agg = per_bg.groupBy(id_col, "_n", "_nd").agg(
-        F.max(F.when(F.col("_bg").isNotNull(), F.col("_c"))).alias("_mx"),
-        F.sum(F.when(F.col("_bg").isNotNull(), F.col("_c"))).alias("_tot"),
-    )
-    return agg.select(
-        F.col(id_col),
-        F.col("_n").cast("bigint").alias("n_tokens"),
-        F.round(
-            F.when(
-                F.col("_n") > 0, F.col("_nd").cast("double") / F.col("_n")
-            ),
-            6,
-        ).alias("distinct_token_ratio"),
-        F.round(F.col("_mx").cast("double") / F.col("_tot"), 6).alias(
-            "top_bigram_ratio"
-        ),
+    return extended_repetition_stats(df, id_col, text_col, (2,)).select(
+        id_col,
+        "n_tokens",
+        "distinct_token_ratio",
+        F.col("top_2gram_ratio").alias("top_bigram_ratio"),
     )
 
 
@@ -298,8 +264,8 @@ def extended_repetition_stats(
     tokenize + line-split ONCE per doc (pure map), every n-gram family
     rides ONE tagged explode → one (id, n, gram) hash aggregate → one
     per-doc conditional aggregate — a single shuffle pays for all the
-    mode-frequency signals; the line stats never shuffle at all (per-row
-    array exprs).
+    mode-frequency signals; the line stat is per-row array exprs that
+    ride the aggregates as one value per doc.
     """
     from pyspark.sql import functions as F
 
@@ -316,7 +282,16 @@ def extended_repetition_stats(
         .withColumn("_nd", F.size(F.array_distinct("_t")))
         .withColumn("_nl", F.size("_l"))
         .withColumn("_nld", F.size(F.array_distinct("_l")))
-        .drop("_l")
+        .select(
+            id_col, "_t", "_n", "_nd",
+            F.round(
+                F.when(
+                    F.col("_nl") > 0,
+                    (F.col("_nl") - F.col("_nld")).cast("double") / F.col("_nl"),
+                ),
+                6,
+            ).alias("_dup"),
+        )
     )
 
     def grams_of(n: int):
@@ -334,12 +309,14 @@ def extended_repetition_stats(
         )
 
     tagged = F.concat(*[grams_of(n) for n in ngram_ns])
-    keys = [id_col, "_n", "_nd", "_nl", "_nld"]
-    ex = base.select(*keys, F.explode_outer(tagged).alias("_g"))
+    keys = [id_col, "_n", "_nd"]
+    ex = base.select(*keys, "_dup", F.explode_outer(tagged).alias("_g"))
+    # the line stat is one value per doc: an aggregate, not a grouping key,
+    # so a caller that drops it prunes its computation
     per_gram = ex.groupBy(
         *keys, F.col("_g.g_n").alias("_gn"), F.col("_g.gram").alias("_gram")
-    ).agg(F.count(F.lit(1)).alias("_c"))
-    aggs = []
+    ).agg(F.count(F.lit(1)).alias("_c"), F.max("_dup").alias("_dup"))
+    aggs = [F.max("_dup").alias("_dup")]
     for n in ngram_ns:
         hit = F.col("_gn") == n
         aggs.append(F.max(F.when(hit, F.col("_c"))).alias(f"_mx{n}"))
@@ -359,15 +336,7 @@ def extended_repetition_stats(
                 F.col(f"_mx{n}").cast("double") / F.col(f"_tot{n}"), 6
             ).alias(f"top_{n}gram_ratio")
         )
-    out_cols.append(
-        F.round(
-            F.when(
-                F.col("_nl") > 0,
-                (F.col("_nl") - F.col("_nld")).cast("double") / F.col("_nl"),
-            ),
-            6,
-        ).alias("dup_line_fraction")
-    )
+    out_cols.append(F.col("_dup").alias("dup_line_fraction"))
     return agg.select(*out_cols)
 
 

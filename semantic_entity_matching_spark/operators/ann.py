@@ -1,25 +1,33 @@
 """Approximate nearest-neighbor search over an embedding column.
 
 Replaces the reference's OpenSearch HNSW kNN retrieval (reference
-lib/opensearch/services/search_query_builder.py:46-62) with two Spark-native
-strategies:
+lib/opensearch/services/search_query_builder.py:46-62) with three
+Spark-native strategies:
 
-* ``brute_force_topk`` — exact cosine top-k: queries broadcast against the
-  corpus, one pass over it that keeps a running per-query top-k in each
-  task, then one window per query.  Correctness baseline; O(|Q| x |C|)
-  work but embarrassingly parallel (corpus partitions never shuffle).
+* ``brute_force_topk`` — exact cosine top-k: the query side is broadcast
+  in chunks of ``GROUPED_QUERY_BOUND`` queries, one pass over the corpus
+  per chunk keeps a running per-query top-k in each task, then one window
+  per query.  Correctness baseline; O(|Q| x |C|) work but embarrassingly
+  parallel (corpus partitions never shuffle).
 * ``lsh_topk`` — scale path: random-hyperplane LSH buckets both sides;
-  candidates only meet inside a bucket (equi-join), then exact cosine +
-  top-k.  Recall is tunable via (n_tables, n_bits).  The reference's 2x
-  over-fetch (k = 2*size, search_query_builder.py:58) belongs to the
-  caller: ``search_and_rerank`` asks any retriever for size x overfetch.
+  candidates only meet inside a bucket (equi-join).  Recall is tunable via
+  (n_tables, n_bits).
+* ``ivf_topk`` — scale path: a k-means coarse quantizer; each query probes
+  its ``nprobe`` nearest cells.
 
-Both return (query_id, candidate_id, score, rank) with rank 1-based by
+LSH and IVF differ only in how they emit ``(query_id, candidate_id)``
+candidates; both score them through one tail (join both vectors, exact
+cosine, top-k).  The reference's 2x over-fetch (k = 2*size,
+search_query_builder.py:58) belongs to the caller: ``search_and_rerank``
+asks any retriever for size x overfetch.
+
+All return (query_id, candidate_id, score, rank) with rank 1-based by
 (score desc, candidate_id asc) — deterministic tiebreak (SURVEY §2.5 W1).
 """
 
 from __future__ import annotations
 
+import functools
 from typing import Iterator
 
 import numpy as np
@@ -31,12 +39,6 @@ from semantic_entity_matching_spark.functions.similarity import (
     cosine_udf,
     jaro_winkler_py,
 )
-
-
-def _rank_window(query_col: str) -> Window:
-    return Window.partitionBy(query_col).orderBy(
-        F.desc("score"), F.asc("candidate_id")
-    )
 
 
 def ranked_topk(scored: DataFrame, k: int, query_col: str = "query_id") -> DataFrame:
@@ -59,21 +61,29 @@ def ranked_topk(scored: DataFrame, k: int, query_col: str = "query_id") -> DataF
     tools/plan_audit.py; ties resolve identically because both phases use
     the same (score desc, candidate_id asc) total order, so output is
     partitioning-independent."""
+    rank = Window.partitionBy(query_col).orderBy(F.desc("score"), F.asc("candidate_id"))
     return (
-        scored.withColumn("rank", F.row_number().over(_rank_window(query_col)))
+        scored.withColumn("rank", F.row_number().over(rank))
         .where(F.col("rank") <= k)
         .select(query_col, "candidate_id", "score", "rank")
     )
 
 
-# Query batches up to this size score via the grouped one-pass scorer
-# (query matrix broadcast, corpus crosses the Python boundary ONCE);
-# larger query sides fall back to the broadcast-join form.  The bound only
-# gates a driver-side collect the join form would broadcast anyway — 16k
-# queries x dim 1024 in float64 (exactness requires the wide accumulator
-# dtype) is a ~128 MB broadcast, within the join path's own broadcast
-# budget for the same table.  ``search.lexical_topk`` scores larger query
-# sides in chunks of this many queries.
+def _rounded_topk(scored: DataFrame, k: int, score_round: int | None) -> DataFrame:
+    """``ranked_topk`` after rounding the score: rounding BEFORE ranking
+    turns float near-ties (< 1 ulp apart) into exact ties broken by
+    candidate_id, so the top-k set is reproducible across
+    engines/partitionings (SURVEY §7.3 hard part (c))."""
+    if score_round is not None:
+        scored = scored.withColumn("score", F.round(F.col("score"), score_round))
+    return ranked_topk(scored, k)
+
+
+# Queries per chunk of the brute-force scan: each chunk's query matrix is
+# one broadcast and one pass over the corpus.  16k queries x dim 1024 in
+# float64 (exactness requires the wide accumulator dtype) is a ~128 MB
+# broadcast.  ``search.lexical_topk`` chunks its query side by the same
+# bound.  Rank is per query, so chunking is exact in both.
 GROUPED_QUERY_BOUND = 16_384
 
 
@@ -100,23 +110,23 @@ def _grouped_brute_scores(
     exclude_self: bool = False,
     score_round: int | None = None,
     texts: tuple[str, str] | None = None,
-) -> DataFrame | None:
-    """(query_id, candidate_id, score) via ONE mapInPandas pass over the
-    corpus, or None when the query side exceeds GROUPED_QUERY_BOUND.
+) -> DataFrame:
+    """(query_id, candidate_id, score) via one mapInPandas pass over the
+    corpus per chunk of ``GROUPED_QUERY_BOUND`` queries.
 
-    The broadcast-join form replicates every corpus vector once PER QUERY
+    A per-pair join would replicate every corpus vector once PER QUERY
     through the cosine UDF — at 20 queries x 60k docs x dim 1024 that is
-    ~5 GB crossing the JVM->Python boundary for ~250 MB of corpus vectors
-    (measured: the dominant cost of the search/rerank bench query).  Here
-    the query side is collected in one job and sc.broadcast to every
-    executor, and each corpus batch is scored against ALL queries with one
-    float64 ``einsum("ij,kj->ik")`` — bit-identical to the per-pair
-    ``einsum("ij,ij->i")`` the pandas cosine UDF computes (verified
-    empirically; same float64 dot/norm/divide per pair), so ranking and
-    scores are unchanged.  Null corpus vectors are skipped exactly like
-    the join path's input null-filter; null query vectors likewise.
-    ``exclude_self`` drops the rows whose ids are equal or null (the rows
-    Spark's ``query_id != candidate_id`` filter drops) inside the pass.
+    ~5 GB crossing the JVM->Python boundary for ~250 MB of corpus vectors.
+    Here the query side is collected in one job, each chunk of it is
+    sc.broadcast to every executor, and each corpus batch is scored
+    against all of the chunk's queries with one float64
+    ``einsum("ij,kj->ik")`` — bit-identical to the per-pair
+    ``einsum("ij,ij->i")`` the pandas cosine UDF computes (same float64
+    dot/norm/divide per pair).  The chunks' rows are unioned; the caller's
+    rank is per query, so chunking changes no output row.  Null corpus and
+    null query vectors are never scored.  ``exclude_self`` drops the rows
+    whose ids are equal or null (the rows Spark's ``query_id !=
+    candidate_id`` filter drops) inside the pass.
 
     With ``k`` each scan task keeps, per query, only the rows whose raw
     score is at least that task's k-th best minus a margin: 0 without
@@ -139,92 +149,92 @@ def _grouped_brute_scores(
     if texts is not None:
         q_cols.append(F.col(texts[0]).alias("_qt"))
         c_cols.append(F.col(texts[1]).alias("_ct"))
-    # coalesce(1) makes the limit read one partition: one job, where
-    # take() runs a series of incremental ones
-    q_rows = (
-        queries.select(*q_cols).coalesce(1).limit(GROUPED_QUERY_BOUND + 1).collect()
-    )
-    if len(q_rows) > GROUPED_QUERY_BOUND:
-        return None
-    q_rows = [r for r in q_rows if r["_qv"] is not None]
+    q_rows = [r for r in queries.select(*q_cols).collect() if r["_qv"] is not None]
     spark = corpus.sparkSession
     qid_type = queries.schema[query_id].dataType.simpleString()
     cid_type = corpus.schema[corpus_id].dataType.simpleString()
     schema = f"query_id {qid_type}, candidate_id {cid_type}, score double"
     if texts is not None:
         schema += ", rerank_score double"
-    if not q_rows:
-        return spark.createDataFrame([], schema)
-    qids = [r["query_id"] for r in q_rows]
-    qmat = np.array([r["_qv"] for r in q_rows], dtype=np.float64)
-    qnorm = np.linalg.norm(qmat, axis=1)
-    qtexts = [r["_qt"] for r in q_rows] if texts is not None else None
-    bc = spark.sparkContext.broadcast((qids, qmat, qnorm, qtexts))
+    c = corpus.select(*c_cols).where(F.col("_cv").isNotNull())
     margin = 0.0 if score_round is None else 2.0 * 10.0 ** -score_round
 
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        b_qids, b_qmat, b_qnorm, b_qtexts = bc.value
-        nq = len(b_qids)
-        qid_arr = np.asarray(b_qids, dtype=object)
-        qtext_arr = np.asarray(b_qtexts, dtype=object) if texts else None
+    def scan(chunk: list) -> DataFrame:
+        qids = [r["query_id"] for r in chunk]
+        qmat = np.array([r["_qv"] for r in chunk], dtype=np.float64)
+        qnorm = np.linalg.norm(qmat, axis=1)
+        qtexts = [r["_qt"] for r in chunk] if texts is not None else None
+        bc = spark.sparkContext.broadcast((qids, qmat, qnorm, qtexts))
 
-        def frame(qi, ids, score, ctexts) -> pd.DataFrame:
-            out = {"query_id": qid_arr[qi], "candidate_id": ids, "score": score}
-            if texts is not None:
-                out["rerank_score"] = np.array(
-                    [
-                        0.0 if a is None or b is None else jaro_winkler_py(a, b)
-                        for a, b in zip(qtext_arr[qi], ctexts)
-                    ],
-                    dtype=np.float64,
-                )
-            return pd.DataFrame(out)
+        def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+            b_qids, b_qmat, b_qnorm, b_qtexts = bc.value
+            nq = len(b_qids)
+            qid_arr = np.asarray(b_qids, dtype=object)
+            qtext_arr = np.asarray(b_qtexts, dtype=object) if texts else None
 
-        # survivors so far: parallel flat arrays (query index, candidate id,
-        # score, candidate text), exactly the rows at or above kth - margin
-        kept = None
-        kth = np.full(nq, -np.inf)
-        for batch in batches:
-            if batch.empty:
-                continue
-            mat = np.vstack(batch["_cv"].to_numpy()).astype(np.float64)
-            dots = np.einsum("ij,kj->ik", mat, b_qmat)  # (n, nq)
-            norms = np.linalg.norm(mat, axis=1)[:, None] * b_qnorm[None, :]
-            with np.errstate(divide="ignore", invalid="ignore"):
-                scores = np.where(norms > 0, dots / norms, 0.0)
-            ids = batch["candidate_id"].to_numpy()
-            ctexts = batch["_ct"].to_numpy() if texts is not None else ids
-            valid = np.ones(scores.shape, dtype=bool)
-            if exclude_self:
-                valid = (
-                    (ids[:, None] != qid_arr[None, :])
-                    & ~pd.isna(ids)[:, None]
-                    & ~pd.isna(qid_arr)[None, :]
-                )
-            if k is None:
-                rows, qi = np.nonzero(valid)
-                yield frame(qi, ids[rows], scores[rows, qi], ctexts[rows])
-                continue
-            # prefilter the batch against a lower bound on the new k-th
-            # score: the old k-th or the batch's own, whichever is higher
-            masked = np.where(valid, scores, -np.inf)
-            n = len(ids)
-            if n >= k:
-                kth = np.maximum(kth, np.partition(masked, n - k, axis=0)[n - k])
-            rows, qi = np.nonzero(valid & (masked >= (kth - margin)[None, :]))
-            new = (qi, ids[rows], scores[rows, qi], ctexts[rows])
-            kept = new if kept is None else [
-                np.concatenate(pair) for pair in zip(kept, new)
-            ]
-            kth = _kth_per_query(kept[0], kept[2], nq, k)
-            survive = kept[2] >= (kth - margin)[kept[0]]
-            kept = [a[survive] for a in kept]
-        if k is not None:
-            none = np.empty(0, dtype=object)
-            yield frame(*(kept or (np.empty(0, dtype=np.int64), none, np.empty(0), none)))
+            def frame(qi, ids, score, ctexts) -> pd.DataFrame:
+                out = {"query_id": qid_arr[qi], "candidate_id": ids, "score": score}
+                if texts is not None:
+                    out["rerank_score"] = np.array(
+                        [
+                            0.0 if a is None or b is None else jaro_winkler_py(a, b)
+                            for a, b in zip(qtext_arr[qi], ctexts)
+                        ],
+                        dtype=np.float64,
+                    )
+                return pd.DataFrame(out)
 
-    c = corpus.select(*c_cols).where(F.col("_cv").isNotNull())
-    return c.mapInPandas(gen, schema=schema)
+            # survivors so far: parallel flat arrays (query index, candidate
+            # id, score, candidate text), exactly the rows at or above
+            # kth - margin
+            kept = None
+            kth = np.full(nq, -np.inf)
+            for batch in batches:
+                if batch.empty:
+                    continue
+                mat = np.vstack(batch["_cv"].to_numpy()).astype(np.float64)
+                dots = np.einsum("ij,kj->ik", mat, b_qmat)  # (n, nq)
+                norms = np.linalg.norm(mat, axis=1)[:, None] * b_qnorm[None, :]
+                with np.errstate(divide="ignore", invalid="ignore"):
+                    scores = np.where(norms > 0, dots / norms, 0.0)
+                ids = batch["candidate_id"].to_numpy()
+                ctexts = batch["_ct"].to_numpy() if texts is not None else ids
+                valid = np.ones(scores.shape, dtype=bool)
+                if exclude_self:
+                    valid = (
+                        (ids[:, None] != qid_arr[None, :])
+                        & ~pd.isna(ids)[:, None]
+                        & ~pd.isna(qid_arr)[None, :]
+                    )
+                if k is None:
+                    rows, qi = np.nonzero(valid)
+                    yield frame(qi, ids[rows], scores[rows, qi], ctexts[rows])
+                    continue
+                # prefilter the batch against a lower bound on the new k-th
+                # score: the old k-th or the batch's own, whichever is higher
+                masked = np.where(valid, scores, -np.inf)
+                n = len(ids)
+                if n >= k:
+                    kth = np.maximum(kth, np.partition(masked, n - k, axis=0)[n - k])
+                rows, qi = np.nonzero(valid & (masked >= (kth - margin)[None, :]))
+                new = (qi, ids[rows], scores[rows, qi], ctexts[rows])
+                kept = new if kept is None else [
+                    np.concatenate(pair) for pair in zip(kept, new)
+                ]
+                kth = _kth_per_query(kept[0], kept[2], nq, k)
+                survive = kept[2] >= (kth - margin)[kept[0]]
+                kept = [a[survive] for a in kept]
+            if k is not None:
+                none = np.empty(0, dtype=object)
+                yield frame(*(kept or (np.empty(0, dtype=np.int64), none, np.empty(0), none)))
+
+        return c.mapInPandas(gen, schema=schema)
+
+    bound = GROUPED_QUERY_BOUND
+    parts = [scan(q_rows[i : i + bound]) for i in range(0, len(q_rows), bound)]
+    if not parts:
+        return spark.createDataFrame([], schema)
+    return functools.reduce(DataFrame.unionByName, parts)
 
 
 def brute_force_topk(
@@ -238,12 +248,10 @@ def brute_force_topk(
     score_round: int | None = None,
     exclude_pairs: DataFrame | None = None,
 ) -> DataFrame:
-    """Exact cosine top-k.  The query side is small by construction (the
-    join form broadcasts it; the grouped form collects + re-broadcasts it
-    under the same assumption); the corpus never shuffles.  The grouped
-    form keeps a running per-query top-k in each scan task (see
-    ``_grouped_brute_scores``), so only n_queries × (k + ties) rows per
-    task reach the final top-k.
+    """Exact cosine top-k.  The query side is collected and broadcast in
+    chunks (see ``_grouped_brute_scores``); the corpus never shuffles.
+    Each scan task keeps a running per-query top-k, so only
+    n_queries × (k + ties) rows per task reach the final top-k.
 
     ``score_round``: round the cosine BEFORE ranking so near-ties (< 1 ulp
     apart) become exact ties broken by candidate_id — makes the top-k set
@@ -262,52 +270,83 @@ def brute_force_topk(
             raise ValueError(
                 f"exclude_pairs needs columns query_id/candidate_id, missing {sorted(missing)}"
             )
-        exclude_pairs = exclude_pairs.select("query_id", "candidate_id")
-
-    def drop_excluded(df: DataFrame) -> DataFrame:
-        if exclude_pairs is None:
-            return df
-        return df.join(exclude_pairs, ["query_id", "candidate_id"], "left_anti")
-
     scored = _grouped_brute_scores(
         queries, corpus, query_id, corpus_id, vec_col,
         k=max(k, 1) if exclude_pairs is None else None,
         exclude_self=exclude_self,
         score_round=score_round,
     )
-    if scored is not None:
-        scored = drop_excluded(scored)
-    else:
-        q = queries.select(
-            F.col(query_id).alias("query_id"), F.col(vec_col).alias("_qv")
+    if exclude_pairs is not None:
+        scored = scored.join(
+            exclude_pairs.select("query_id", "candidate_id"),
+            ["query_id", "candidate_id"], "left_anti",
         )
-        c = corpus.select(
-            F.col(corpus_id).alias("candidate_id"), F.col(vec_col).alias("_cv")
-        )
-        joined = c.join(F.broadcast(q))
-        if exclude_self:
-            joined = joined.where(F.col("query_id") != F.col("candidate_id"))
-        joined = drop_excluded(joined)
-        # a null embedding on either side cannot be scored: drop the row
-        # rather than rank it (engines disagree on NULL ordering in DESC
-        # windows).  The filter runs on the INPUT columns, not on the UDF
-        # output — cosine_udf returns null exactly when an input is null,
-        # but filtering its output makes Catalyst evaluate the UDF twice
-        # (once under the pushed-down filter, once in the projection —
-        # guide §4.4), doubling the Python cosine work.  Same rows survive
-        # either way.
-        joined = joined.where(F.col("_qv").isNotNull() & F.col("_cv").isNotNull())
-        scored = joined.withColumn("score", cosine_udf(F.col("_qv"), F.col("_cv")))
-    if score_round is not None:
-        scored = scored.withColumn("score", F.round(F.col("score"), score_round))
-    # salted two-phase top-k: the corpus-cardinality per-query candidate
-    # set must never sort in one window task
-    return ranked_topk(scored, k)
+    return _rounded_topk(scored, k, score_round)
+
+
+def _knn_tail(
+    cand: DataFrame,
+    queries: DataFrame,
+    corpus: DataFrame,
+    k: int,
+    query_id: str,
+    corpus_id: str,
+    vec_col: str,
+    exclude_self: bool,
+    score_round: int | None,
+    broadcast_queries: bool = False,
+) -> DataFrame:
+    """Exact cosine top-k over a ``(query_id, candidate_id)`` candidate
+    table: join both vectors (the query side under a broadcast hint when
+    ``broadcast_queries``), drop rows with a null vector, cosine, top-k.
+    The candidate emitter's hot buckets/cells make a query's candidate set
+    unbounded, so the rank is ``ranked_topk``'s two-phase one."""
+    if exclude_self:
+        cand = cand.where(F.col("query_id") != F.col("candidate_id"))
+    q = queries.select(F.col(query_id).alias("query_id"), F.col(vec_col).alias("_qv"))
+    c = corpus.select(F.col(corpus_id).alias("candidate_id"), F.col(vec_col).alias("_cv"))
+    scored = (
+        cand.join(F.broadcast(q) if broadcast_queries else q, "query_id")
+        .join(c, "candidate_id")
+        # null-filter the inputs, not the UDF output (guide §4.4: an
+        # output filter re-evaluates the UDF below the pushed filter)
+        .where(F.col("_qv").isNotNull() & F.col("_cv").isNotNull())
+        .withColumn("score", cosine_udf(F.col("_qv"), F.col("_cv")))
+    )
+    return _rounded_topk(scored, k, score_round)
 
 
 def _hyperplanes(n_tables: int, n_bits: int, dim: int, seed: int) -> np.ndarray:
     rng = np.random.RandomState(seed)
     return rng.standard_normal((n_tables, n_bits, dim)).astype(np.float32)
+
+
+def _vector_keys(
+    df: DataFrame, id_col: str, vec_col: str, out_id: str, keys_of, key_ddl: str
+) -> DataFrame:
+    """(id, _slot, _key) rows in one mapInPandas pass: ``keys_of`` maps a
+    batch's (n, dim) vector matrix to an (n, m) key matrix, and vector i
+    becomes the m rows (id_i, j, key_ij).  Null vectors emit no row."""
+
+    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        for batch in batches:
+            mask = batch[vec_col].notna()
+            if not mask.any():
+                continue
+            keys = keys_of(np.vstack(batch.loc[mask, vec_col].to_numpy()))
+            n, m = keys.shape
+            yield pd.DataFrame(
+                {
+                    out_id: np.repeat(batch.loc[mask, batch.columns[0]].to_numpy(), m),
+                    "_slot": np.tile(np.arange(m, dtype=np.int32), n),
+                    "_key": keys.reshape(-1),
+                }
+            )
+
+    id_type = df.schema[id_col].dataType.simpleString()
+    return df.select(F.col(id_col), F.col(vec_col)).mapInPandas(
+        gen, schema=f"{out_id} {id_type}, _slot int, _key {key_ddl}"
+    )
 
 
 def _bucket_keys_df(
@@ -318,54 +357,27 @@ def _bucket_keys_df(
     out_id: str,
 ) -> DataFrame:
     """(id, bucket) rows: one bucket key per LSH table — sign pattern of the
-    vector against n_bits random hyperplanes.  Single mapInPandas pass."""
+    vector against n_bits random hyperplanes."""
     n_tables, n_bits, dim = planes.shape
     flat = planes.reshape(n_tables * n_bits, dim)
+    weights = np.uint64(1) << np.arange(n_bits, dtype=np.uint64)
 
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        weights = np.uint64(1) << np.arange(n_bits, dtype=np.uint64)
-        for batch in batches:
-            vecs = batch[vec_col]
-            mask = vecs.notna()
-            if not mask.any():
-                yield pd.DataFrame(
-                    {
-                        out_id: pd.Series([], dtype=object),
-                        "_tab": pd.Series([], dtype="int32"),
-                        "_code": pd.Series([], dtype="int64"),
-                    }
-                )
-                continue
-            mat = np.vstack(vecs[mask].to_numpy()).astype(np.float32)
-            proj = mat @ flat.T  # (n, n_tables*n_bits)
-            bits = (proj > 0).reshape(len(mat), n_tables, n_bits)
-            codes = (bits.astype(np.uint64) * weights[None, None, :]).sum(axis=2)
-            ids = batch.loc[mask, batch.columns[0]].to_numpy()
-            # typed (id, table, code) columns; the 't<t>:<hex>' string is
-            # assembled in JVM codegen below (no per-row Python formatting)
-            yield pd.DataFrame(
-                {
-                    out_id: np.repeat(ids, n_tables),
-                    "_tab": np.tile(
-                        np.arange(n_tables, dtype=np.int32), len(mat)
-                    ),
-                    # two's-complement view: JVM hex(bigint) prints the
-                    # same digits Python's f"{code:x}" prints for uint64
-                    "_code": codes.reshape(-1).view(np.int64),
-                }
-            )
+    def codes(mat: np.ndarray) -> np.ndarray:
+        proj = mat.astype(np.float32) @ flat.T  # (n, n_tables*n_bits)
+        bits = (proj > 0).reshape(len(mat), n_tables, n_bits)
+        # two's-complement view: JVM hex(bigint) prints the same digits
+        # Python's f"{code:x}" prints for uint64
+        return (bits.astype(np.uint64) * weights[None, None, :]).sum(axis=2).view(np.int64)
 
-    id_type = df.schema[id_col].dataType.simpleString()
-    raw = df.select(F.col(id_col), F.col(vec_col)).mapInPandas(
-        gen, schema=f"{out_id} {id_type}, _tab int, _code bigint"
-    )
-    return raw.select(
+    # typed (id, table, code) columns; the 't<t>:<hex>' string is
+    # assembled in JVM codegen (no per-row Python formatting)
+    return _vector_keys(df, id_col, vec_col, out_id, codes, "bigint").select(
         F.col(out_id),
         F.concat(
             F.lit("t"),
-            F.col("_tab").cast("string"),
+            F.col("_slot").cast("string"),
             F.lit(":"),
-            F.lower(F.hex(F.col("_code"))),
+            F.lower(F.hex(F.col("_key"))),
         ).alias("bucket"),
     )
 
@@ -406,24 +418,9 @@ def lsh_topk(
     cb = _bucket_keys_df(corpus, corpus_id, vec_col, planes, "candidate_id")
 
     cand = qb.join(cb, "bucket").select("query_id", "candidate_id").distinct()
-    if exclude_self:
-        cand = cand.where(F.col("query_id") != F.col("candidate_id"))
-
-    q = queries.select(F.col(query_id).alias("query_id"), F.col(vec_col).alias("_qv"))
-    c = corpus.select(F.col(corpus_id).alias("candidate_id"), F.col(vec_col).alias("_cv"))
-    scored = (
-        cand.join(q, "query_id")
-        .join(c, "candidate_id")
-        # null-filter the inputs, not the UDF output (guide §4.4: an
-        # output filter re-evaluates the UDF below the pushed filter)
-        .where(F.col("_qv").isNotNull() & F.col("_cv").isNotNull())
-        .withColumn("score", cosine_udf(F.col("_qv"), F.col("_cv")))
+    return _knn_tail(
+        cand, queries, corpus, k, query_id, corpus_id, vec_col, exclude_self, score_round
     )
-    if score_round is not None:
-        scored = scored.withColumn("score", F.round(F.col("score"), score_round))
-    # hot buckets make a query's candidate set unbounded: salted
-    # two-phase top-k, never one window task per query
-    return ranked_topk(scored, k)
 
 
 # ---------------------------------------------------------------------------
@@ -436,6 +433,20 @@ def _ivf_sample_plan(src: DataFrame, n_vecs: int, sample_n: int) -> DataFrame:
     filter (no Sort/TakeOrdered), sized so ~2×sample_n rows survive."""
     mod = max(1, n_vecs // max(1, 2 * sample_n))
     return src.where(F.pmod(F.col("_h"), F.lit(mod)) == 0)
+
+
+def centroid_cosines(mat, centroids) -> np.ndarray:
+    """(n, nlist) cosine of every row of ``mat`` against every centroid:
+    both sides in float64, unit-normalized (norms floored at 1e-12), one
+    ``mat @ cn.T``.  The IVF trainer and both centroid assigners (this
+    module's ``_cell_assign_df``, ``dedup.assign_nearest_centroid``) score
+    with it; each keeps its own argmax/argsort."""
+
+    def unit(m) -> np.ndarray:
+        m = np.asarray(m, dtype=np.float64)
+        return m / np.maximum(np.linalg.norm(m, axis=1, keepdims=True), 1e-12)
+
+    return unit(mat) @ unit(centroids).T
 
 
 def parquet_footer_row_count(df: DataFrame) -> int | None:
@@ -522,18 +533,15 @@ def train_ivf_centroids(
     rng = np.random.RandomState(seed)
     centroids = mat[rng.choice(len(mat), size=nlist, replace=False)]
     for _ in range(iters):
-        # cosine assignment: normalize both sides, argmax dot
-        cn = centroids / np.maximum(
-            np.linalg.norm(centroids, axis=1, keepdims=True), 1e-12
-        )
-        mn = mat / np.maximum(np.linalg.norm(mat, axis=1, keepdims=True), 1e-12)
-        assign = (mn @ cn.T).argmax(axis=1)
+        # cosines against this iteration's centroids, before any moves
+        sims = centroid_cosines(mat, centroids)
+        assign = sims.argmax(axis=1)
         for c in range(nlist):
             members = mat[assign == c]
             if len(members):
                 centroids[c] = members.mean(axis=0)
             else:
-                dists = 1.0 - (mn @ cn.T).max(axis=1)
+                dists = 1.0 - sims.max(axis=1)
                 centroids[c] = mat[int(dists.argmax())]
     return centroids.astype(np.float32)
 
@@ -545,33 +553,13 @@ def _cell_assign_df(
     """(id, cell) rows — top-``nprobe`` nearest centroids per vector (cosine).
     Centroids ride inside the UDF closure (broadcast by Spark's task
     serialization — nlist × dim floats, KBs)."""
-    cn = centroids.astype(np.float64)
-    cn = cn / np.maximum(np.linalg.norm(cn, axis=1, keepdims=True), 1e-12)
 
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for batch in batches:
-            vecs = batch[vec_col]
-            mask = vecs.notna()
-            if not mask.any():
-                yield pd.DataFrame({out_id: [], "cell": []})
-                continue
-            mat = np.vstack(vecs[mask].to_numpy()).astype(np.float64)
-            mat = mat / np.maximum(
-                np.linalg.norm(mat, axis=1, keepdims=True), 1e-12
-            )
-            sims = mat @ cn.T  # (n, nlist)
-            top = np.argsort(-sims, axis=1, kind="stable")[:, :nprobe]
-            ids = batch.loc[mask, batch.columns[0]].to_numpy()
-            yield pd.DataFrame(
-                {
-                    out_id: np.repeat(ids, top.shape[1]),
-                    "cell": top.reshape(-1).astype(np.int32),
-                }
-            )
+    def top(mat: np.ndarray) -> np.ndarray:
+        sims = centroid_cosines(mat, centroids)
+        return np.argsort(-sims, axis=1, kind="stable")[:, :nprobe].astype(np.int32)
 
-    id_type = df.schema[id_col].dataType.simpleString()
-    return df.select(F.col(id_col), F.col(vec_col)).mapInPandas(
-        gen, schema=f"{out_id} {id_type}, cell int"
+    return _vector_keys(df, id_col, vec_col, out_id, top, "int").select(
+        out_id, F.col("_key").alias("cell")
     )
 
 
@@ -610,23 +598,10 @@ def ivf_topk(
         corpus, corpus_id, vec_col, centroids, "candidate_id", nprobe=1
     )
     cand = qcells.join(ccells, "cell").select("query_id", "candidate_id").distinct()
-    if exclude_self:
-        cand = cand.where(F.col("query_id") != F.col("candidate_id"))
-    q = queries.select(F.col(query_id).alias("query_id"), F.col(vec_col).alias("_qv"))
-    c = corpus.select(F.col(corpus_id).alias("candidate_id"), F.col(vec_col).alias("_cv"))
-    scored = (
-        cand.join(F.broadcast(q), "query_id")
-        .join(c, "candidate_id")
-        # null-filter the inputs, not the UDF output (guide §4.4: an
-        # output filter re-evaluates the UDF below the pushed filter)
-        .where(F.col("_qv").isNotNull() & F.col("_cv").isNotNull())
-        .withColumn("score", cosine_udf(F.col("_qv"), F.col("_cv")))
+    return _knn_tail(
+        cand, queries, corpus, k, query_id, corpus_id, vec_col, exclude_self,
+        score_round, broadcast_queries=True,
     )
-    if score_round is not None:
-        scored = scored.withColumn("score", F.round(F.col("score"), score_round))
-    # a hot probed cell makes the candidate set unbounded: salted
-    # two-phase top-k, never one window task per query
-    return ranked_topk(scored, k)
 
 
 def mine_hard_negatives(

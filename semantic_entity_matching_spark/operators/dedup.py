@@ -30,6 +30,7 @@ from semantic_entity_matching_spark.functions.textops import (
     fingerprint_hex,
     whitespace_tokens,
 )
+from semantic_entity_matching_spark.operators.ann import centroid_cosines
 from semantic_entity_matching_spark.operators.blocking import (
     LSHConfig,
     minhash_block_keys,
@@ -512,10 +513,10 @@ def embedding_near_duplicates(
 ) -> DataFrame:
     """Cosine near-dup pairs over an array<float> column.
 
-    With ``bucket_col`` the self-join is per-bucket (an LSH bucket, a label,
-    a shard key...) through :func:`pairs.key_pairs` (buckets carry no size,
-    so each is cold) — the scale path.  Without it, a full self-join: only
-    for small/test inputs.
+    The self-join is :func:`pairs.key_pairs` (buckets carry no size, so
+    each is cold).  With ``bucket_col`` it is per-bucket (an LSH bucket, a
+    label, a shard key...) — the scale path.  Without it every row shares
+    one key, a full self-join: only for small/test inputs.
 
     ``score_round`` rounds the cosine BEFORE thresholding (round-before-rank
     convention): a pair within 1 ulp of the threshold then resolves
@@ -544,18 +545,15 @@ def embedding_near_duplicates(
         cosine = quantized_cosine(quantization)
         df = quantize(df, vec_col, quantization, out_col="_qv")
         vec_col = "_qv"
-    if bucket_col:
-        joined = key_pairs(
-            df.select(id_col, bucket_col, F.col(vec_col).alias("_v")),
-            id_col=id_col, key=bucket_col,
-        )
-    else:
-        base = df.select(id_col, F.col(vec_col).alias("_v"))
-        joined = base.select(
-            F.col(id_col).alias("id_a"), F.col("_v").alias("_v_a")
-        ).crossJoin(
-            base.select(F.col(id_col).alias("id_b"), F.col("_v").alias("_v_b"))
-        ).where(F.col("id_a") < F.col("id_b"))
+    key = bucket_col or "_all"
+    joined = key_pairs(
+        df.select(
+            id_col,
+            (F.col(bucket_col) if bucket_col else F.lit(0)).alias(key),
+            F.col(vec_col).alias("_v"),
+        ),
+        id_col=id_col, key=key,
+    )
     cos = cosine(F.col("_v_a"), F.col("_v_b"))
     if score_round is not None:
         cos = F.round(cos, score_round)
@@ -873,17 +871,12 @@ def assign_nearest_centroid(
     if len(centroids) == 0:
         raise ValueError("centroids must be non-empty")
     cn = np.asarray(centroids, dtype=np.float64)
-    cn = cn / np.maximum(np.linalg.norm(cn, axis=1, keepdims=True), 1e-12)
 
     def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for batch in batches:
             if batch.empty:
                 continue
-            mat = np.vstack(batch[vec_col].to_numpy()).astype(np.float64)
-            mat = mat / np.maximum(
-                np.linalg.norm(mat, axis=1, keepdims=True), 1e-12
-            )
-            sims = mat @ cn.T  # (n, nlist)
+            sims = centroid_cosines(np.vstack(batch[vec_col].to_numpy()), cn)
             if score_round is not None:
                 # half-away-from-zero (Spark F.round / DuckDB round), NOT
                 # numpy's half-even

@@ -290,14 +290,11 @@ def lexical_topk(
         return corpus.sparkSession.createDataFrame(
             [], f"query_id {qid_type}, candidate_id {cid_type}, score double, rank int"
         )
-    scored = functools.reduce(DataFrame.unionByName, parts)
-    if score_round is not None:
-        # round BEFORE ranking: float near-ties become exact ties broken by
-        # candidate_id — reproducible top-k across engines/partitionings
-        scored = scored.withColumn("score", F.round(F.col("score"), score_round))
     # a common query term matches an unbounded slice of the corpus —
     # salted two-phase top-k, never one window task per query
-    return ann.ranked_topk(scored, k)
+    return ann._rounded_topk(
+        functools.reduce(DataFrame.unionByName, parts), k, score_round
+    )
 
 
 def search_and_rerank(
@@ -323,27 +320,23 @@ def search_and_rerank(
     Returns (query_id, candidate_id, knn_score, rerank_score, rank) with
     rank from the rerank score, deterministic tiebreak.
 
-    With the default retriever and a query side within
-    ``ann.GROUPED_QUERY_BOUND``, retrieval and rerank are one corpus pass:
-    the query texts ride the query-matrix broadcast, the scan reads each
-    candidate's own text, and Jaro-Winkler runs on each scan task's
-    surviving kNN rows only (at most n_queries × (k + ties) per task) —
-    no join back to the corpus, no separate rerank stage, and both rank
-    windows share one exchange.  Then ``corpus_id`` must be a key of
-    ``corpus``.  Any other retriever, or a larger query side, takes the
-    generic path: retrieve, join both texts back, rerank.
+    With the default retriever, retrieval and rerank are one corpus pass
+    per chunk of ``ann.GROUPED_QUERY_BOUND`` queries: the query texts ride
+    the query-matrix broadcast, the scan reads each candidate's own text,
+    and Jaro-Winkler runs on each scan task's surviving kNN rows only (at
+    most n_queries × (k + ties) per task) — no join back to the corpus, no
+    separate rerank stage, and both rank windows share one exchange.  Then
+    ``corpus_id`` must be a key of ``corpus``.  Any other retriever takes
+    the generic path: retrieve, join both texts back, rerank.
     """
     if corpus_filter is not None:
         corpus = corpus.filter(corpus_filter)
     k = size * overfetch
-    fused = None
     if retriever is ann.brute_force_topk:
-        fused = ann._grouped_brute_scores(
+        reranked = ann._grouped_brute_scores(
             queries, corpus, query_id, corpus_id, vec_col,
             k=max(k, 1), score_round=score_round, texts=(query_text, corpus_text),
-        )
-    if fused is not None:
-        reranked = fused.withColumnRenamed("score", "knn_score")
+        ).withColumnRenamed("score", "knn_score")
         if score_round is not None:
             reranked = reranked.withColumn(
                 "knn_score", F.round(F.col("knn_score"), score_round)

@@ -541,14 +541,59 @@ def _tied_vectors(spark, n=60, dim=6, seed=11):
     return spark.createDataFrame(rows, "vec_id long, embedding array<double>")
 
 
+def _numpy_topk(queries, corpus, k, exclude_self=False, score_round=None, exclude=()):
+    """The join form of exact top-k, in numpy: every (query, candidate)
+    pair with both vectors non-null scored by the cosine UDF's own kernel,
+    rounded like Spark's ``round`` (HALF_UP on the shortest decimal repr),
+    ranked by (score desc, candidate_id asc)."""
+    from decimal import ROUND_HALF_UP, Decimal
+
+    import pandas as pd
+
+    from semantic_entity_matching_spark.functions.similarity import _cosine_batch
+
+    c_rows = [tuple(r) for r in corpus.collect() if r[1] is not None]
+    pairs = [
+        (q, qv, c, cv)
+        for q, qv in (tuple(r) for r in queries.collect() if r[1] is not None)
+        for c, cv in c_rows
+        if not (exclude_self and q == c) and (q, c) not in exclude
+    ]
+    scores = _cosine_batch(
+        pd.Series([p[1] for p in pairs], dtype=object),
+        pd.Series([p[3] for p in pairs], dtype=object),
+    ).tolist()
+    if score_round is not None:
+        unit = Decimal(1).scaleb(-score_round)
+        scores = [float(Decimal(repr(s)).quantize(unit, ROUND_HALF_UP)) for s in scores]
+    ranked = sorted(zip((p[0] for p in pairs), (p[2] for p in pairs), scores),
+                    key=lambda r: (r[0], -r[2], r[1]))
+    out, rank = [], {}
+    for q, c, score in ranked:
+        rank[q] = rank.get(q, 0) + 1
+        if rank[q] <= k:
+            out.append((q, c, score, rank[q]))
+    return sorted(out)
+
+
+def _chunked_runs(monkeypatch, run):
+    """``run()`` with the brute-force scan chunked to 1 and to 2 queries."""
+    from semantic_entity_matching_spark.operators import ann
+
+    out = []
+    for bound in (1, 2):
+        monkeypatch.setattr(ann, "GROUPED_QUERY_BOUND", bound)
+        out.append(run())
+    return out
+
+
 @pytest.mark.parametrize("score_round", [None, 6])
 @pytest.mark.parametrize("exclude_self", [False, True])
 def test_pruned_brute_force_equals_join_form(spark, monkeypatch, score_round, exclude_self):
     """The per-task running top-k of the grouped scorer changes no output
-    row: same rows as the broadcast-join form (forced by a zero query
-    bound), ties at the k-th score included."""
-    from semantic_entity_matching_spark.operators import ann
-
+    row: same rows as the join form (every pair scored, in numpy), ties
+    at the k-th score included, whether the query side is scanned in one
+    chunk or in chunks of 1 or 2 queries."""
     vecs = _tied_vectors(spark)
     corpus = vecs.select(F.col("vec_id").alias("candidate_id"), "embedding").repartition(3)
     queries = vecs.where((F.col("vec_id") % 7 == 0) | F.col("embedding").isNull()).select(
@@ -564,8 +609,8 @@ def test_pruned_brute_force_equals_join_form(spark, monkeypatch, score_round, ex
         )
 
     pruned = run()
-    monkeypatch.setattr(ann, "GROUPED_QUERY_BOUND", 0)
-    assert run() == pruned
+    assert pruned == _numpy_topk(queries, corpus, 4, exclude_self, score_round)
+    assert _chunked_runs(monkeypatch, run) == [pruned, pruned]
     assert len(pruned) == 4 * queries.where(F.col("embedding").isNotNull()).count()
 
 
@@ -575,8 +620,6 @@ def test_pruned_brute_force_keeps_rounding_near_ties(spark, monkeypatch):
     The task must keep rows within the rounding margin of its k-th score."""
     import math
 
-    from semantic_entity_matching_spark.operators import ann
-
     def unit(cos):
         return [cos, math.sqrt(1.0 - cos * cos)]
 
@@ -584,24 +627,24 @@ def test_pruned_brute_force_keeps_rounding_near_ties(spark, monkeypatch):
         [(1, unit(0.80000001)), (2, unit(0.80000004)), (3, unit(0.3))],
         "candidate_id long, embedding array<double>",
     ).coalesce(1)
-    queries = spark.createDataFrame([(0, [1.0, 0.0])], "query_id long, embedding array<double>")
+    queries = spark.createDataFrame(
+        [(0, [1.0, 0.0]), (4, [0.0, 1.0])], "query_id long, embedding array<double>"
+    )
 
     def top1():
-        return [
-            (r["candidate_id"], r["score"])
-            for r in brute_force_topk(queries, corpus, k=1, score_round=6).collect()
-        ]
+        return sorted(
+            tuple(r) for r in brute_force_topk(queries, corpus, k=1, score_round=6).collect()
+        )
 
-    assert top1() == [(1, 0.8)]
-    monkeypatch.setattr(ann, "GROUPED_QUERY_BOUND", 0)
-    assert top1() == [(1, 0.8)]
+    got = top1()
+    assert got[0][:3] == (0, 1, 0.8)
+    assert got == _numpy_topk(queries, corpus, 1, score_round=6)
+    assert _chunked_runs(monkeypatch, top1) == [got, got]
 
 
 def test_exclude_pairs_removing_the_whole_topk(spark, monkeypatch):
     """Pairs excluded after the scan must not cost a query its results:
     with the first k candidates excluded, the next k take their place."""
-    from semantic_entity_matching_spark.operators import ann
-
     vecs = _vec_table(spark, n=30)
     corpus = vecs.select(F.col("vec_id").alias("candidate_id"), "embedding").coalesce(1)
     queries = corpus.where(F.col("candidate_id") == 0).withColumnRenamed(
@@ -618,9 +661,10 @@ def test_exclude_pairs_removing_the_whole_topk(spark, monkeypatch):
 
     got = run()
     assert len(got) == 3
-    assert not {r[1] for r in got} & {r["candidate_id"] for r in excluded.collect()}
-    monkeypatch.setattr(ann, "GROUPED_QUERY_BOUND", 0)
-    assert run() == got
+    gone = {tuple(r) for r in excluded.collect()}
+    assert not {r[1] for r in got} & {c for _, c in gone}
+    assert got == _numpy_topk(queries, corpus, 3, exclude=gone)
+    assert _chunked_runs(monkeypatch, run) == [got, got]
 
 
 def test_grouped_scorer_task_output_is_topk_plus_ties(spark):

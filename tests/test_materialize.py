@@ -166,6 +166,26 @@ def test_blended_score_has_one_call_site():
     assert [rel for rel, _ in calls] == ["plans/pipeline.py"], calls
 
 
+def test_cosine_udf_has_two_call_sites():
+    """The per-pair cosine UDF is called in two places: the pair scorer
+    (pipeline.score_pairs) and the kNN tail that LSH and IVF share
+    (ann._knn_tail).  Brute-force kNN scores inside its own corpus scan."""
+    import inspect
+
+    from semantic_entity_matching_spark.operators import ann
+    from semantic_entity_matching_spark.plans import pipeline
+
+    calls = [
+        (path.relative_to(PACKAGE).as_posix(), lineno)
+        for path in sorted(PACKAGE.rglob("*.py"))
+        for lineno, line in enumerate(path.read_text().splitlines(), 1)
+        if "cosine_udf(" in line and not line.lstrip().startswith("def ")
+    ]
+    assert [rel for rel, _ in calls] == ["operators/ann.py", "plans/pipeline.py"], calls
+    for fn in (ann._knn_tail, pipeline.score_pairs):
+        assert "cosine_udf(" in inspect.getsource(fn), fn.__name__
+
+
 STAGE_COUNTERS = {
     "records": "records_prepared",
     "blocks": "block_keys_emitted",

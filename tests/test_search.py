@@ -234,6 +234,38 @@ def test_fused_search_and_rerank_equals_generic_path(spark, score_round):
     assert any(r[3] == 0.0 for r in fused)  # a null text on one side
 
 
+def test_fused_search_and_rerank_chunks_a_large_query_side(spark, monkeypatch):
+    """A query side above ``ann.GROUPED_QUERY_BOUND`` still reranks inside
+    the kNN scan, one scan per chunk of queries: the same rows, bit for
+    bit, as the one-chunk run and as the generic path, and no per-pair
+    Python UDF for cosine or Jaro-Winkler in the plan."""
+    import functools
+
+    from semantic_entity_matching_spark.operators import ann
+
+    corpus, queries = _sf_documents(spark)
+
+    def search(**kw):
+        return search_and_rerank(queries, corpus, size=5, top_k=4, **kw)
+
+    def rows(df):
+        return sorted(tuple(r) for r in df.collect())
+
+    one_chunk = rows(search())
+    monkeypatch.setattr(ann, "GROUPED_QUERY_BOUND", 7)  # 30 queries: 5 chunks
+    chunked = search()
+    assert rows(chunked) == one_chunk
+    assert rows(search(retriever=functools.partial(ann.brute_force_topk))) == one_chunk
+    assert len({r[0] for r in one_chunk}) == 30
+    plan = chunked._jdf.queryExecution().sparkPlan().toString().splitlines()
+    assert sum("MapInPandas" in line for line in plan) == 5, plan
+    per_pair = [
+        line for line in plan
+        if "ArrowEvalPython" in line and ("jaro_winkler" in line or "_cosine_batch" in line)
+    ]
+    assert per_pair == [], per_pair
+
+
 LEX_CORPUS = [
     (1, "the cat sat on the mat"),
     (2, "the dog sat on the log"),

@@ -20,7 +20,6 @@ from semantic_entity_matching_spark.functions.embed import (
 from semantic_entity_matching_spark.functions.quantize import (
     binary_hamming_udf,
     binary_quantize_udf,
-    int8_cosine_udf,
     quantize,
 )
 from semantic_entity_matching_spark.functions.similarity import cosine_py

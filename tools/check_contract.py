@@ -12,6 +12,7 @@ A query is named in full (``q21_minhash_neardup``) or by its number
 
 from __future__ import annotations
 
+import os
 import sys
 import time
 
@@ -19,7 +20,7 @@ import duckdb
 import numpy as np
 import pandas as pd
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 TABLES = (
     "region nation customer supplier part orders lineitem events "

@@ -1,8 +1,9 @@
 """Debug harness for the gold-pair F1 — prints per-stage stats and FP/FN samples."""
 
+import os
 import sys
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from pyspark.sql import functions as F
 

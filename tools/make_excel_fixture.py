@@ -20,8 +20,9 @@ from __future__ import annotations
 import os
 import zipfile
 
-OUT_XLSX = "/root/repo/fixtures/q30_catalog.xlsx"
-OUT_CSV = "/root/repo/fixtures/q30_catalog_utf8.csv"
+FIXTURES = os.path.join(os.path.dirname(os.path.dirname(os.path.abspath(__file__))), "fixtures")
+OUT_XLSX = os.path.join(FIXTURES, "q30_catalog.xlsx")
+OUT_CSV = os.path.join(FIXTURES, "q30_catalog_utf8.csv")
 
 NAMES = ["alpha", "beta", "café", "delta", "epsilon"]
 CITIES = ["lyon", "osaka", "quito"]

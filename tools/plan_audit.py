@@ -39,10 +39,11 @@ Usage: python tools/plan_audit.py
 from __future__ import annotations
 
 import re as _pa_re
+import os
 import sys
 import tempfile
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 SF = "/root/testdata/sf0.01"
 FAILURES: list[str] = []

@@ -6,10 +6,10 @@ script imports the engine ONLY from the submitted zip, runs the flagship
 pipeline over a deterministic synthetic corpus, and prints pairwise F1 +
 counters — the smoke a cluster operator runs after deploying.
 
-    cd /root/repo
+    # from the repository root
     python - <<'PY'
     import shutil; shutil.make_archive('/tmp/sem_spark', 'zip',
-        '/root/repo', 'semantic_entity_matching_spark')
+        '.', 'semantic_entity_matching_spark')
     PY
     /opt/spark/bin/spark-submit --master local[4] \
         --py-files /tmp/sem_spark.zip tools/submit_flagship.py
