@@ -15,6 +15,18 @@ only an archive that changed (0.1-0.3 ms per task), and prepends the
 package's parent dir to ``spark.executorEnv.PYTHONPATH`` (merged with the
 caller's value) so the workers can import it.  Other masters keep
 ``pyspark.daemon``: their executors need not see the driver's filesystem.
+
+Generated code is compiled once per session.  Spark keeps the classes that
+Janino compiled from whole-stage-codegen and expression sources in a
+JVM-global LRU keyed by source text, capped by the static
+``spark.sql.codegen.cache.maxEntries`` (default 100).  One full-size
+``corpus`` operation of the benchmark needs 181 distinct sources, so at the
+default each warm run evicted the classes the next one needed and compiled
+177-179 of them again (1.6-2.2 s of Janino time, plus the JIT warm-up of
+the new classes; on 4 vCPUs a steady-state op took 12.4-13.1 s against
+8.8-9.8 s with the classes kept).  ``get_session`` sizes the cache to the
+engine's working set (``CODEGEN_CACHE_MAX_ENTRIES``); ``codegen_stats()``
+reads the compile counters that show it.
 """
 
 from __future__ import annotations
@@ -35,6 +47,15 @@ from pyspark.sql import SparkSession
 # dispatch overhead negligible (>=millisecond-scale batches).  Override with
 # SPARK_GRAFT_ARROW_BATCH.
 ARROW_MAX_RECORDS_PER_BATCH = int(os.environ.get("SPARK_GRAFT_ARROW_BATCH", 2_048))
+
+# Working set of generated classes, counted with codegen_stats() on 4 vCPUs:
+# one full-size perfbench `corpus` op compiles 181 distinct sources (mean
+# 2.1 KB of class bytecode), one `search` request 68, and a
+# tools/check_contract.py session over q17 q19 q21 q23 q29 q84 q104 q105
+# 313.  2,000 entries hold the largest with headroom, ~4 MB of bytecode in
+# the driver JVM.  A tier-1 pytest session runs hundreds of distinct plans:
+# it compiled 17,871 sources at the default 100 and 6,252 at 2,000.
+CODEGEN_CACHE_MAX_ENTRIES = 2_000
 
 WORKER_DAEMON_MODULE = "semantic_entity_matching_spark.worker_daemon"
 PACKAGE_PARENT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
@@ -91,6 +112,23 @@ def driver_table(spark: SparkSession, rows: list, schema):
     return spark.createDataFrame(pa.Table.from_arrays(columns, schema=arrow), schema)
 
 
+def codegen_stats(spark: SparkSession) -> tuple[int, float]:
+    """(Janino compiles, compile milliseconds) since this JVM started.
+
+    The count is the sample count of
+    ``org.apache.spark.metrics.source.CodegenMetrics``' ``compilationTime``
+    histogram: one per generated source that missed Spark's codegen class
+    cache.  The milliseconds come from ``CodeGenerator.compileTime``, which
+    the same cache loader adds to; the histogram's own values are a
+    decaying sample of 1028, not a total.  Both counters are JVM-global
+    and never reset, so callers take differences.
+    """
+    jvm = spark.sparkContext._jvm
+    compiles = jvm.org.apache.spark.metrics.source.CodegenMetrics.METRIC_COMPILATION_TIME()
+    codegen = jvm.org.apache.spark.sql.catalyst.expressions.codegen.CodeGenerator
+    return compiles.getCount(), codegen.compileTime() / 1e6
+
+
 def get_session(
     master: str | None = None,
     app_name: str = "semantic-entity-matching-spark",
@@ -101,8 +139,12 @@ def get_session(
 
     AQE is on so skewed blocking-key joins are split at runtime even before
     our explicit salting kicks in, and so tiny post-filter shuffles coalesce.
-    On a real cluster this function is a no-op pass-through (spark-submit
-    provides master/conf); locally it pins ``local[N]``.
+    ``master`` defaults to ``local[N]``; ``extra_conf`` entries override
+    every setting here.  When a session already exists (spark-submit, a
+    notebook, an earlier call) ``getOrCreate`` returns it and applies only
+    the runtime SQL settings; static ones (the codegen cache size, the
+    driver memory, the worker daemon) hold only for a session that this
+    call creates.
     """
     cpus = default_parallelism()
     if master is None:
@@ -150,6 +192,10 @@ def get_session(
         # 964.9k-pair q21 contract and 120k-page legs fit in 12g.
         .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "12g"))
         .config("spark.ui.enabled", "false")
+        # Static and JVM-global: the codegen class cache holds the engine's
+        # whole working set of generated classes (CODEGEN_CACHE_MAX_ENTRIES),
+        # so a repeated plan reuses its classes instead of recompiling them.
+        .config("spark.sql.codegen.cache.maxEntries", str(CODEGEN_CACHE_MAX_ENTRIES))
     )
     # Local mode: shuffle spill files on the default /tmp disk serialize the
     # whole job behind one spindle once >8 threads write at once (measured

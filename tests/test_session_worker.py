@@ -1,5 +1,7 @@
 """The engine's Python worker daemon: change-checked zipimport invalidation
-(``worker_daemon``) and the session rules that select it (``get_session``)."""
+(``worker_daemon``) and the session rules that select it (``get_session``);
+the codegen class cache that ``get_session`` sizes to the engine's working
+set of generated classes."""
 
 from __future__ import annotations
 
@@ -116,6 +118,67 @@ def test_daemon_selected_for_local_masters_only(tmp_path, monkeypatch):
         master="local[2]", extra_conf={"spark.python.daemon.module": "pyspark.daemon"}
     )
     assert own["spark.python.daemon.module"] == "pyspark.daemon"
+
+
+def test_codegen_cache_sized_by_get_session(monkeypatch):
+    monkeypatch.setattr(SparkSession.Builder, "getOrCreate", lambda b: dict(b._options))
+    key = "spark.sql.codegen.cache.maxEntries"
+
+    for master in ("local[2]", "spark://127.0.0.1:7077"):
+        conf = session.get_session(master=master)
+        assert conf[key] == str(session.CODEGEN_CACHE_MAX_ENTRIES)
+    assert session.CODEGEN_CACHE_MAX_ENTRIES >= 1_000
+
+    # a caller's value wins, as every other extra_conf key does
+    assert session.get_session(master="local[2]", extra_conf={key: "100"})[key] == "100"
+
+
+def test_warm_rerun_compiles_no_generated_classes(spark):
+    """A long-lived session compiles each generated class once.  Spark's
+    codegen cache is an LRU; at its default of 100 entries this set's ~220
+    classes evict each other and every pass recompiles all of them.
+
+    AQE is off for the passes: its join rewrites depend on which query
+    stage finishes first, so a repeat of the same job can plan a join with
+    the other build side and compile a class it never needed before.  With
+    static plans every pass runs the same classes, and a compile is a
+    recompile."""
+    from semantic_entity_matching_spark.operators.dedup import minhash_near_duplicates
+    from semantic_entity_matching_spark.operators.search import lexical_topk
+    from semantic_entity_matching_spark.operators.simjoin import (
+        prefix_filter_jaccard_join,
+    )
+    from semantic_entity_matching_spark.plans.pipeline import MatchConfig, run_pipeline
+    from semantic_entity_matching_spark.sources.synth import SynthConfig, synth_webpages
+
+    pages, _ = synth_webpages(spark, SynthConfig(n_entities=12, seed=3))
+    docs = pages.select(F.col("url").alias("doc_id"), "text")
+    corpus = pages.select(
+        F.monotonically_increasing_id().alias("candidate_id"), "text"
+    ).localCheckpoint(eager=True)
+    queries = spark.createDataFrame(
+        [("q1", "acme widget"), ("q2", "blue river trading")],
+        "query_id string, query_text string",
+    )
+
+    def compiles_in_one_pass() -> int:
+        before, _ = session.codegen_stats(spark)
+        run_pipeline(pages, MatchConfig()).clusters.collect()
+        minhash_near_duplicates(docs, jaccard_threshold=0.9).collect()
+        prefix_filter_jaccard_join(docs, "doc_id", "text", 0.9).collect()
+        lexical_topk(queries, corpus, k=3).collect()
+        return session.codegen_stats(spark)[0] - before
+
+    aqe = spark.conf.get("spark.sql.adaptive.enabled")
+    spark.conf.set("spark.sql.adaptive.enabled", "false")
+    try:
+        passes = [compiles_in_one_pass()]
+        while passes[-1] and len(passes) < 3:
+            passes.append(compiles_in_one_pass())
+        passes.append(compiles_in_one_pass())
+    finally:
+        spark.conf.set("spark.sql.adaptive.enabled", aqe)
+    assert passes[-2:] == [0, 0], f"compiles per pass: {passes}"
 
 
 def test_pandas_udf_runs_when_workers_cannot_import_engine_from_cwd(tmp_path):

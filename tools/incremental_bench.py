@@ -15,7 +15,11 @@ session:
 
 and verifies incremental clusters == full clusters exactly (exceptAll
 both ways) before printing ONE JSON line.  VM wall-clock here drifts up
-to 3×; use --repeats 3 (interleaved, median) for quotable numbers.
+to 3×; use --repeats 3 (interleaved, median) for quotable numbers.  Each
+leg also reports its median Janino compile count (``*_compiles``, from
+``session.codegen_stats``): the repeats share one session, so a leg that
+recompiles its generated classes on every repeat shows there, not only
+as a slower repeat.
 
 Usage:
     python tools/incremental_bench.py [--pages 60000] [--repeats 1]
@@ -53,7 +57,7 @@ def main() -> None:
         MatchConfig,
         run_pipeline,
     )
-    from semantic_entity_matching_spark.session import get_session
+    from semantic_entity_matching_spark.session import codegen_stats, get_session
 
     spark = get_session(
         master=f"local[{args.cpus}]", shuffle_partitions=args.cpus
@@ -82,17 +86,20 @@ def main() -> None:
     cfg = MatchConfig()
 
     runs = {"full": [], "base": [], "incremental": []}
+    compiles = {k: [] for k in runs}
     equal = True
-    for rep in range(args.repeats):
-        t0 = time.time()
-        full = run_pipeline(pages, cfg)
-        full.clusters.count()
-        runs["full"].append(time.time() - t0)
 
-        t0 = time.time()
-        base = run_pipeline(day1, cfg)
-        base.clusters.count()
-        runs["base"].append(time.time() - t0)
+    def timed(leg, fn):
+        c0, t0 = codegen_stats(spark)[0], time.time()
+        out = fn()
+        out.clusters.count()
+        runs[leg].append(time.time() - t0)
+        compiles[leg].append(codegen_stats(spark)[0] - c0)
+        return out
+
+    for rep in range(args.repeats):
+        full = timed("full", lambda: run_pipeline(pages, cfg))
+        base = timed("base", lambda: run_pipeline(day1, cfg))
 
         # the reference index is YESTERDAY'S persisted artifact (features
         # + block keys written by the base run) — build it (eagerly)
@@ -104,10 +111,10 @@ def main() -> None:
 
         idx = ReferenceIndex(day1, cfg)
 
-        t0 = time.time()
-        inc = run_incremental(day1, base.clusters, day2, cfg, index=idx)
-        inc.clusters.count()
-        runs["incremental"].append(time.time() - t0)
+        inc = timed(
+            "incremental",
+            lambda: run_incremental(day1, base.clusters, day2, cfg, index=idx),
+        )
 
         diff = (
             inc.clusters.exceptAll(full.clusters).count()
@@ -118,7 +125,7 @@ def main() -> None:
             f"rep {rep}: full {runs['full'][-1]:.1f}s"
             f" base {runs['base'][-1]:.1f}s"
             f" incremental {runs['incremental'][-1]:.1f}s"
-            f" diff_rows {diff}",
+            f" diff_rows {diff} compiles {[c[-1] for c in compiles.values()]}",
             file=sys.stderr,
         )
 
@@ -137,6 +144,10 @@ def main() -> None:
                 )
                 if med["incremental"]
                 else None,
+                **{
+                    f"{k}_compiles": statistics.median(v)
+                    for k, v in compiles.items()
+                },
                 "clusters_equal": equal,
                 "repeats": args.repeats,
             }

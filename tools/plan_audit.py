@@ -32,6 +32,9 @@ if a property regresses.  Properties audited:
      pair generation, q78, q84, q104 and q87 plan exactly one
      ``_salt``-keyed join and no Union; q105 plans exactly two (the
      q-gram prefix join and the short-string length-window join)
+ 12. a warm rerun compiles nothing — q21 and q23 run twice in the session,
+     and the second run compiles no generated class (``codegen_stats``):
+     Spark's codegen class cache holds both queries' classes
 
 Usage: python tools/plan_audit.py
 """
@@ -724,6 +727,32 @@ def main() -> None:
         "driver union-find table is an Arrow-built local relation"
         if ok_cf
         else "the driver CC fold's table is a pickled PythonRDD",
+    )
+
+    # Property 12 of the module docstring: a warm rerun compiles nothing.
+    # get_session sizes Spark's codegen class cache to the engine's working
+    # set, so a second run of q21 and q23 reuses every class the first run
+    # compiled.  AQE is off for both runs: its join rewrites depend on which
+    # query stage finishes first, and a rewrite the first run did not plan
+    # compiles a new class, not a recompile.
+    from semantic_entity_matching_spark.session import codegen_stats
+
+    def compiles_q21_q23() -> int:
+        before = codegen_stats(spark)[0]
+        E.q21_minhash_neardup(spark, SF).collect()
+        E.q23_entity_clusters(spark, SF).collect()
+        return codegen_stats(spark)[0] - before
+
+    aqe = spark.conf.get("spark.sql.adaptive.enabled")
+    spark.conf.set("spark.sql.adaptive.enabled", "false")
+    try:
+        cold, warm = compiles_q21_q23(), compiles_q21_q23()
+    finally:
+        spark.conf.set("spark.sql.adaptive.enabled", aqe)
+    check(
+        "warm_rerun_compiles_nothing",
+        warm == 0,
+        f"q21+q23 compiled {cold} classes, then {warm} on the rerun",
     )
 
     if FAILURES:
